@@ -226,14 +226,9 @@ object Dedup {
     // neighbor join reuses it instead of re-shuffling the edges — the
     // "two operations keyed the same way share one exchange" rule
     // (optimization guide §2.4), applied across all O(log d) rounds.
-    // The round partition count is SCALE-ADAPTIVE (guide §2 — derive from
-    // input size, not a constant): materialize the distinct edge set
-    // first and reuse the partition count AQE's byte-based coalescing
-    // chose for it. A 256-pair dedup graph then runs its rounds as
-    // 1-task chains (r19's fixed session-width count made every round a
-    // 32-task stage — pure scheduling overhead at that size), while a
-    // corpus-scale edge set keeps the full session width because AQE
-    // leaves its shuffle uncoalesced.
+    // The round partition count is the fixed session width `shufPart`:
+    // an explicit repartition is exempt from AQE coalescing, so even a
+    // small dedup graph runs every round at full width.
     val sym = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       .distinct().repartition(shufPart, col("v")).sortWithinPartitions("v").lineageCut
     var labels = sym.select(col("u").as("id")).distinct()

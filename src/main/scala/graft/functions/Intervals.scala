@@ -44,14 +44,7 @@ object Intervals {
       b.select(col(bId).as("__b_id"), col(bStart).as("__b_start"), col(bEnd).as("__b_end")),
       "__b_start", "__b_end")
     val (outA, outB) = if (aId == bId) (s"${aId}_a", s"${bId}_b") else (aId, bId)
-    // explicit bucket exchanges: the join needs a __bk shuffle anyway, and
-    // the pair expansion + exact predicate are CPU-heavy while the shuffled
-    // BYTES are tiny — AQE's byte-based coalescing collapsed the join stage
-    // to one task (r20 profile: 583 ms single-task stage). An explicit
-    // count is exempt from coalescing and the join reuses both exchanges;
-    // the count is the session knob, so cluster runs keep their width.
-    val n = a.sparkSession.sessionState.conf.numShufflePartitions
-    ab.repartition(n, col("__bk")).join(bb.repartition(n, col("__bk")), Seq("__bk"))
+    ab.join(bb, Seq("__bk"))
       .filter(col("__a_start") <= col("__b_end") && col("__b_start") <= col("__a_end"))
       .select(col("__a_id").as(outA), col("__b_id").as(outB)).distinct()
   }

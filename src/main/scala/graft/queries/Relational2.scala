@@ -582,11 +582,10 @@ object Relational2 {
         .select(col("node"),
           (lit(150000000L / n) + expr("(85 * sc) div 100")).as("score_ppb"))
         // LAZY cut per iteration (keeps the tree O(1) per round): there is
-        // no convergence action here, so the next round's exchange
-        // materialization — a full scan of this round's RDD — is the
-        // folding action (LineageCut.cutAtNextAction contract); the last
-        // round folds into the final TakeOrdered. Five dedicated
-        // materialization jobs removed (guide §1.2)
+        // no convergence action here, so every round's cut is materialized
+        // by the single terminal full-scan action (the final TakeOrdered),
+        // which satisfies the LineageCut.cutAtNextAction full-partition
+        // contract. Five dedicated materialization jobs removed (guide §1.2)
         .lineageCutLazy
     }
     pr.orderBy(col("score_ppb").desc, col("node")).limit(10)

@@ -52,9 +52,10 @@ object Relational5 {
         .select(col("dst").as("node")).distinct()
         .join(dist.select(col("node").as("seen")), col("node") === col("seen"), "left_anti")
         .select(col("node"), lit(k).as("dist"))
-        // LAZY cut: round k+1's join/anti-join exchanges (full scans of
-        // this RDD) materialize it — the final groupBy folds the last
-        // round in. Six dedicated materialization jobs removed.
+        // LAZY cut: no per-round action runs, so every round's cut is
+        // materialized by the single terminal full-scan action (the final
+        // groupBy), which satisfies the cutAtNextAction full-partition
+        // contract. Six dedicated materialization jobs removed.
         .lineageCutLazy
       // no cut on the union: it only stacks already-checkpointed rounds
       // (a linear tree of checkpoint scans — re-planning is O(rounds),

@@ -290,9 +290,11 @@ object Relational6 {
         .groupBy(col("dst"))
         .agg(max_by(col("lab"), struct(col("cnt"), (-col("lab")).as("neg"))).as("lab"))
         .select(col("dst").as("node"), col("lab"))
-        // LAZY cut: the next round's join exchange (a full scan of this
-        // RDD) materializes it; the final community groupBy folds the
-        // last round in. Three dedicated materialization jobs removed.
+        // LAZY cut: no per-round action runs, so every round's cut is
+        // materialized by the single terminal full-scan action (the final
+        // community groupBy), which satisfies the cutAtNextAction
+        // full-partition contract. Three dedicated materialization jobs
+        // removed.
         .lineageCutLazy
     }
     labels.groupBy(col("lab").as("community"))

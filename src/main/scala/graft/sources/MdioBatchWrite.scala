@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.zarr.{ChunkCodec, ZarrMeta}
+import graft.zarr.{ChunkCodec, ChunkSource, ZarrMeta}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.SortOrder
@@ -224,7 +224,7 @@ final case class MdioBatchWrite(path: String, dims: Seq[String],
     touched.foreach { v =>
       val m = metas(v)
       val varDir = root.resolve(v)
-      val capable = m.fields.isEmpty && !MdioPartitionReader.isComplex(m.dtype)
+      val capable = m.fields.isEmpty && !m.isComplex
       if (!capable) MdioChunkStats.bump(varDir)
       else {
         val grid = m.chunkGrid.toArray
@@ -262,11 +262,7 @@ final case class MdioBatchWrite(path: String, dims: Seq[String],
           val rows = inline ++ frags.flatMap(f =>
             MdioStatsPublish.readFragment(varDir.resolve(f)))
           val entries = rows.iterator.flatMap { sr =>
-            val cc = new Array[Long](grid.length)
-            var rem = sr.cid
-            var i = grid.length - 1
-            while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-            MdioWriter.statEntry(sr).map(ZarrMeta.chunkKey(cc.toSeq) -> _)
+            MdioWriter.statEntry(sr).map(ZarrMeta.chunkKey(m.chunkCoords(sr.cid).toSeq) -> _)
           }.toMap
           MdioChunkStats.refresh(varDir, entries)
         }
@@ -387,29 +383,16 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
 
   private def kindOf(m: ZarrMeta.ArrayMeta): Char =
     if (m.fields.isDefined) 'V'
-    else if (MdioPartitionReader.isComplex(m.dtype)) 'c'
+    else if (m.isComplex) 'c'
     else m.dtype.charAt(m.dtype.length - 2)
 
-  private def chunkPath(name: String, m: ZarrMeta.ArrayMeta, cid: Long) = {
-    val cc = new Array[Long](rank)
-    var rem = cid
-    var i = rank - 1
-    while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-    m.chunkFile(ZarrMeta.path(path).resolve(name), cc.toSeq)
-  }
+  private def varDir(v: Int) = ZarrMeta.path(path).resolve(vars(v)._1)
 
   // ---- sharding_indexed geometry per variable: a sharded variable's
   // chunk FILES are shard objects holding `innerCount` inner chunks behind
   // a footer index; the task owns whole shards (ownershipSizes), buffers
   // inner chunks exactly like plain chunks, and assembles shard objects
   // at commit with untouched inner chunks carried over byte-for-byte.
-  private def decompose(cid: Long): Array[Long] = {
-    val cc = new Array[Long](rank)
-    var rem = cid
-    var i = rank - 1
-    while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-    cc
-  }
   private def shardIdOf(m: ZarrMeta.ArrayMeta, cc: Array[Long]): Long = {
     val ips = m.innerPerShard
     val sGrid = m.shardGrid
@@ -418,78 +401,36 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     while (i < rank) { sid = sid * sGrid(i) + cc(i) / ips(i); i += 1 }
     sid
   }
-  private def shardVPath(name: String, m: ZarrMeta.ArrayMeta, sid: Long) = {
-    val sGrid = m.shardGrid
-    val sc = new Array[Long](rank)
-    var rem = sid
-    var i = rank - 1
-    while (i >= 0) { sc(i) = rem % sGrid(i); rem /= sGrid(i); i -= 1 }
-    m.chunkFile(ZarrMeta.path(path).resolve(name),
-      sc.toSeq.zip(m.innerPerShard).map { case (c, ips) => c * ips })
-  }
-  // raw shard object bytes, cached per (variable, shard); empty = absent
-  private val shardBytes = scala.collection.mutable.Map[(Int, Long), Array[Byte]]()
-  private def shardRaw(v: Int, sid: Long): Array[Byte] =
-    shardBytes.getOrElseUpdate((v, sid), {
-      val b = shardVPath(vars(v)._1, vars(v)._2, sid).readBytesOrNull()
-      if (b == null) Array.emptyByteArray else b
-    })
-  /** One inner chunk's compressed bytes out of an existing shard object
-    * (footer index: innerCount × (offset, nbytes) LE longs + crc32), or
-    * null when the shard or the inner chunk is absent. */
-  private def existingInner(v: Int, sid: Long, idx: Int): Array[Byte] = {
-    val bytes = shardRaw(v, sid)
-    if (bytes.isEmpty) return null
-    val innerCount = vars(v)._2.innerPerShard.product.toInt
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val idxBase = bytes.length - (16 * innerCount + 4)
-    val off = bb.getLong(idxBase + idx * 16)
-    val nb = bb.getLong(idxBase + idx * 16 + 8)
-    if (off == -1L && nb == -1L) null
-    else java.util.Arrays.copyOfRange(bytes, off.toInt, (off + nb).toInt)
-  }
-  private def innerIdxOf(m: ZarrMeta.ArrayMeta, cc: Array[Long]): Int = {
-    val ips = m.innerPerShard
-    var idx = 0L
-    var i = 0
-    while (i < rank) { idx = idx * ips(i) + cc(i) % ips(i); i += 1 }
-    idx.toInt
+  private def shardVPath(v: Int, sid: Long) = {
+    val m = vars(v)._2
+    m.chunkFile(varDir(v), m.shardCoords(sid).toSeq.zip(m.innerPerShard).map { case (c, ips) => c * ips })
   }
 
   // read-modify-write seeds: a partial write through the sink preserves
   // the untouched cells of an existing chunk (fill only where no chunk
   // file exists), matching MdioWriter.writeVariable and the reference's
-  // merging accessor writes. For a sharded variable the seed is the inner
-  // chunk carved out of its shard object's footer index.
-  private def existingRaw(v: Int, cid: Long, rawSize: Int): Array[Byte] = {
-    val (name, m) = vars(v)
-    val bytes =
-      if (m.shard.isEmpty) chunkPath(name, m, cid).readBytesOrNull()
-      else {
-        val cc = decompose(cid)
-        existingInner(v, shardIdOf(m, cc), innerIdxOf(m, cc))
-      }
-    if (bytes == null) null else ChunkCodec.decompress(bytes, m.compressor, rawSize)
-  }
+  // merging accessor writes. A sharded variable's shard object is read
+  // once and serves both the seeds and the carried-over inner chunks.
+  private val source = new ChunkSource(wholeShards = true)
+  private def existing(v: Int, cid: Long): Array[Byte] =
+    source.fetch(vars(v)._2, varDir(v), anchor.chunkCoords(cid).toSeq)
 
   private def seedD(v: Int, cid: Long, fill: Double, width: Int): Array[Double] = {
-    val m = vars(v)._2
-    val raw = existingRaw(v, cid, chunkLen * m.elemSize)
-    if (raw == null) Array.fill(chunkLen * width)(fill)
-    else if (width == 2) ChunkCodec.decodeComplex(raw, m.dtype)
-    else ChunkCodec.decodeDoubles(raw, m.dtype)
+    val bytes = existing(v, cid)
+    if (bytes == null) Array.fill(chunkLen * width)(fill)
+    else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Double]]
   }
 
   private def seedL(v: Int, cid: Long, longFill: Long): Array[Long] = {
-    val m = vars(v)._2
-    val raw = existingRaw(v, cid, chunkLen * m.elemSize)
-    if (raw == null) Array.fill(chunkLen)(longFill)
-    else ChunkCodec.decodeLongs(raw, m.dtype)
+    val bytes = existing(v, cid)
+    if (bytes == null) Array.fill(chunkLen)(longFill)
+    else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Long]]
   }
 
   private def seedB(v: Int, cid: Long, recSize: Int): Array[Byte] = {
-    val raw = existingRaw(v, cid, chunkLen * recSize)
-    if (raw == null) new Array[Byte](chunkLen * recSize) else raw
+    val bytes = existing(v, cid)
+    if (bytes == null) new Array[Byte](chunkLen * recSize)
+    else ChunkSource.decompress(vars(v)._2, bytes)
   }
 
   // record-dtype layout per variable (null when not a record dtype)
@@ -532,7 +473,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       // assembly is not wired). Checked here, on the first actual value,
       // so a sharded variable merely PRESENT in the table (null-expanded)
       // never blocks its unsharded peers.
-      require(m.shard.isEmpty || (m.fields.isEmpty && !MdioPartitionReader.isComplex(m.dtype)),
+      require(m.shard.isEmpty || (m.fields.isEmpty && !m.isComplex),
         s"sharded write supports float/integral dtypes, not '${m.dtype}' " +
           s"(variable '${vars(v)._1}')")
       val fill = m.fillValue.getOrElse(Double.NaN)
@@ -648,26 +589,27 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       }
       val cids = (bufD(v).keysIterator ++ bufL(v).keysIterator ++ bufB(v).keysIterator).toSet
       if (m.shard.isEmpty) {
-        cids.foreach(cid => chunkPath(name, m, cid).write(encoded(cid)))
+        cids.foreach(cid => m.chunkFile(varDir(v), anchor.chunkCoords(cid).toSeq).write(encoded(cid)))
       } else {
         // sharded: assemble each owned shard object whole — touched inner
         // chunks from the buffers, untouched ones carried over
         // byte-for-byte from the existing shard (exactly
         // MdioWriter.writeShardedVariable's merge)
         val innerCount = m.innerPerShard.product.toInt
-        val bySid = cids.groupBy(cid => shardIdOf(m, decompose(cid)))
+        val bySid = cids.groupBy(cid => shardIdOf(m, anchor.chunkCoords(cid)))
         bySid.foreach { case (sid, owned) =>
-          val byIdx = owned.iterator.map(cid => innerIdxOf(m, decompose(cid)) -> cid).toMap
+          val file = shardVPath(v, sid)
+          val byIdx = owned.iterator.map(cid => m.innerIndex(anchor.chunkCoords(cid).toSeq) -> cid).toMap
           val parts = Array.tabulate(innerCount) { idx =>
-            byIdx.get(idx).map(encoded).getOrElse(existingInner(v, sid, idx))
+            byIdx.get(idx).map(encoded).getOrElse(source.innerChunk(m, file, idx))
           }
-          shardVPath(name, m, sid).write(ZarrMeta.buildShard(parts))
+          file.write(ZarrMeta.buildShard(parts))
         }
         if (bySid.nonEmpty) shardIds += name -> bySid.keysIterator.toArray
       }
       if (cids.nonEmpty) touched += name
       def validOf(cid: Long): Array[Int] =
-        MdioWriter.validExtents(decompose(cid), chunks, shape)
+        MdioWriter.validExtents(anchor.chunkCoords(cid), chunks, shape)
       if (kind == 'f')
         emit(name, bufD(v).iterator.map { case (cid, buf) =>
           MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }.toArray)
@@ -686,5 +628,5 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     spilledFrags.foreach { p =>
       try p.delete() catch { case scala.util.control.NonFatal(_) => () }
     }
-  override def close(): Unit = ()
+  override def close(): Unit = source.close()
 }

@@ -1,26 +1,26 @@
 package graft.sources
 
-import graft.zarr.{ChunkCodec, ZarrMeta}
+import graft.zarr.{ChunkSource, ZarrMeta}
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Vectorized chunk reader: decodes each variable's chunk once, then fills
-  * OnHeapColumnVectors in batches of up to [[MdioColumnarReader.BatchRows]]
-  * cells (C-order over the pushed cell ranges, same iteration as the row
-  * reader). Covers the FULL dtype matrix — primitives, complex (struct
+/** Vectorized chunk reader: decodes each variable's chunk once through the
+  * task's [[ChunkSource]], then fills OnHeapColumnVectors in batches of up
+  * to [[MdioColumnarReader.BatchRows]] cells (C-order over the pushed cell
+  * ranges). Covers the FULL dtype matrix — primitives, complex (struct
   * re/im), record ("void") structs, and u64 (Decimal(20,0)) — so every
   * scan feeds whole-stage codegen batches; struct children are filled
   * through the parent vector's child columns. */
 final class MdioColumnarReader(p: MdioInputPartition, dims: Array[String], schema: StructType,
-                               sharedCache: graft.zarr.ShardCache = null)
+                               sharedSource: ChunkSource = null)
     extends PartitionReader[ColumnarBatch] {
 
   // shard handles reused across inner-chunk reads; owned here only when
   // not provided by an enclosing chunk-range reader
-  private val shardCache = if (sharedCache != null) sharedCache else new graft.zarr.ShardCache
-  private val ownsCache = sharedCache == null
+  private val source = if (sharedSource != null) sharedSource else new ChunkSource
+  private val ownsSource = sharedSource == null
 
   private val rank = dims.length
   private val meta0 = p.metas.headOption.getOrElse(
@@ -34,31 +34,13 @@ final class MdioColumnarReader(p: MdioInputPartition, dims: Array[String], schem
     s
   }
 
+  // decoded per-variable buffers (null => whole chunk missing -> fill)
   private val buffers: Array[AnyRef] = p.vars.indices.map { vi =>
-    val m = p.metas(vi)
     MdioColumnarReader.chunkReads.incrementAndGet()
-    val file = m.chunkFile(ZarrMeta.path(p.path).resolve(p.vars(vi)), p.chunk.toSeq)
-    // sharded v3 arrays: the file is the shard object; range-read the
-    // inner chunk through the footer index
-    val bytes =
-      if (m.shard.isDefined) shardCache.readInnerChunk(file, m, p.chunk.toSeq)
-      else file.readBytesOrNull()
-    if (bytes == null) null
-    else {
-      val rawSize = (m.chunks.product * m.elemSize).toInt
-      val raw = ChunkCodec.decompress(bytes, m.compressor, rawSize)
-      m.fields match {
-        case Some(fs) => ChunkCodec.decodeFields(raw, fs)
-        case None =>
-          if (MdioPartitionReader.isComplex(m.dtype)) ChunkCodec.decodeComplex(raw, m.dtype)
-          else if (m.dtype.charAt(m.dtype.length - 2) == 'f') ChunkCodec.decodeDoubles(raw, m.dtype)
-          else ChunkCodec.decodeLongs(raw, m.dtype)
-      }
-    }
+    source.load(p.metas(vi), ZarrMeta.path(p.path).resolve(p.vars(vi)), p.chunk.toSeq)
   }.toArray
 
-  private val varIsComplex: Array[Boolean] =
-    p.metas.map(m => MdioPartitionReader.isComplex(m.dtype))
+  private val varIsComplex: Array[Boolean] = p.metas.map(_.isComplex)
 
   private val fieldIsDim: Array[Int] = schema.fieldNames.map(f => dims.indexOf(f))
   private val fieldVarIdx: Array[Int] =
@@ -211,7 +193,7 @@ final class MdioColumnarReader(p: MdioInputPartition, dims: Array[String], schem
   override def get(): ColumnarBatch = batch
   override def close(): Unit = {
     batch.close()
-    if (ownsCache) shardCache.close()
+    if (ownsSource) source.close()
   }
 }
 

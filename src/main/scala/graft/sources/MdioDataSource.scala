@@ -185,7 +185,7 @@ object MdioTableUtil {
   /** Connector dtype → Spark type (same widening policy as MdioSpec:
     * u64 → decimal(20,0); complex → struct(re, im)). */
   def sparkTypeOf(dtype: String): DataType = {
-    if (MdioPartitionReader.isComplex(dtype)) {
+    if (ZarrMeta.isComplex(dtype)) {
       val half = if (dtype.endsWith("16")) DoubleType else FloatType
       return StructType(Seq(StructField("re", half), StructField("im", half)))
     }
@@ -640,7 +640,7 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
     if (dimSet(a)) return None
     val v = a.stripSuffix("__value")
     metas.get(v).filter { m =>
-      m.fields.isEmpty && !MdioPartitionReader.isComplex(m.dtype)
+      m.fields.isEmpty && !m.isComplex
     }.map(_ => v)
   }
 
@@ -2066,13 +2066,8 @@ final case class MdioScan(path: String, dims: Seq[String],
       // order as the stats sidecar itself, i.e. the parquet-footer
       // trade: chunk-level stats are only ever as cheap as one
       // entry per chunk.
-      def ccOf(flat: Long): Seq[Long] = {
-        val cc = new Array[Long](dims.size)
-        var rem = flat
-        var i = dims.size - 1
-        while (i >= 0) { cc(i) = chunkLo(i) + rem % extents(i); rem /= extents(i); i -= 1 }
-        cc.toSeq
-      }
+      def ccOf(flat: Long): Seq[Long] =
+        ZarrMeta.unflatten(flat, extents).toSeq.zip(chunkLo).map { case (c, lo) => c + lo }
       val out = Vector.newBuilder[InputPartition]
       var runStart = -1L
       var flat = 0L
@@ -2187,7 +2182,7 @@ final case class MdioChunkGroupPartition(path: String,
   * survivor list when pruning thinned it. */
 final class MdioChunkGroupReader[T](gp: MdioChunkGroupPartition,
                                     mk: MdioInputPartition => PartitionReader[T],
-                                    cache: graft.zarr.ShardCache = null)
+                                    source: graft.zarr.ChunkSource)
     extends PartitionReader[T] {
   private val rank = gp.boundLo.length
   private val extents: Array[Long] =
@@ -2201,14 +2196,12 @@ final class MdioChunkGroupReader[T](gp: MdioChunkGroupPartition,
     else { if (i >= gp.survivors.length) -1L else { val f = gp.survivors(i.toInt); i += 1; f } }
 
   private def chunkPartition(flat: Long): MdioInputPartition = {
-    val cc = new Array[Long](rank)
-    var rem = flat
-    var d = rank - 1
-    while (d >= 0) { cc(d) = gp.memberLo(d) + rem % extents(d); rem /= extents(d); d -= 1 }
+    val cc = ZarrMeta.unflatten(flat, extents)
     val lo = new Array[Long](rank)
     val hi = new Array[Long](rank)
-    d = 0
+    var d = 0
     while (d < rank) {
+      cc(d) += gp.memberLo(d)
       lo(d) = math.max(gp.boundLo(d), cc(d) * gp.chunkShape(d))
       hi(d) = math.min(gp.boundHi(d), (cc(d) + 1) * gp.chunkShape(d))
       d += 1
@@ -2233,7 +2226,7 @@ final class MdioChunkGroupReader[T](gp: MdioChunkGroupPartition,
   override def get(): T = cur.get()
   override def close(): Unit = {
     if (cur != null) { cur.close(); cur = null }
-    if (cache != null) cache.close()
+    source.close()
   }
 }
 
@@ -2251,26 +2244,24 @@ final case class MdioChunkRangePartition(path: String,
                                          metas: Array[ZarrMeta.ArrayMeta]) extends InputPartition
 
 /** Sequentially drives one per-chunk reader over a [[MdioChunkRangePartition]]
-  * (row or columnar, via `mk`): decode chunk coords from the flat C-order
-  * index, clamp cell bounds, delegate. Owns the task's [[ShardCache]] so
-  * shard handles persist across the chunks of the range. */
+  * (via `mk`): decode chunk coords from the flat C-order index, clamp cell
+  * bounds, delegate. Owns the task's [[graft.zarr.ChunkSource]] so shard
+  * handles persist across the chunks of the range. */
 final class MdioChunkRangeReader[T](rp: MdioChunkRangePartition,
                                     mk: MdioInputPartition => PartitionReader[T],
-                                    cache: graft.zarr.ShardCache = null)
+                                    source: graft.zarr.ChunkSource)
     extends PartitionReader[T] {
   private val rank = rp.chunkLo.length
   private var idx = rp.startIdx
   private var cur: PartitionReader[T] = null
 
   private def chunkPartition(flat: Long): MdioInputPartition = {
-    val cc = new Array[Long](rank)
-    var rem = flat
-    var i = rank - 1
-    while (i >= 0) { cc(i) = rp.chunkLo(i) + rem % rp.extents(i); rem /= rp.extents(i); i -= 1 }
+    val cc = ZarrMeta.unflatten(flat, rp.extents)
     val lo = new Array[Long](rank)
     val hi = new Array[Long](rank)
-    i = 0
+    var i = 0
     while (i < rank) {
+      cc(i) += rp.chunkLo(i)
       lo(i) = math.max(rp.boundLo(i), cc(i) * rp.chunkShape(i))
       hi(i) = math.min(rp.boundHi(i), (cc(i) + 1) * rp.chunkShape(i))
       i += 1
@@ -2295,27 +2286,15 @@ final class MdioChunkRangeReader[T](rp: MdioChunkRangePartition,
   override def get(): T = cur.get()
   override def close(): Unit = {
     if (cur != null) { cur.close(); cur = null }
-    if (cache != null) cache.close()
+    source.close()
   }
 }
 
 final case class MdioReaderFactory(dims: Array[String], schema: StructType,
                                    hconf: HConf)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    VPath.install(hconf.value) // executor JVMs have no SparkSession
-    p match {
-      case cp: MdioInputPartition => new MdioPartitionReader(cp, dims, schema)
-      case gp: MdioChunkGroupPartition =>
-        val cache = new graft.zarr.ShardCache
-        new MdioChunkGroupReader[InternalRow](gp,
-          cp => new MdioPartitionReader(cp, dims, schema, cache), cache)
-      case rp: MdioChunkRangePartition =>
-        val cache = new graft.zarr.ShardCache
-        new MdioChunkRangeReader[InternalRow](rp,
-          cp => new MdioPartitionReader(cp, dims, schema, cache), cache)
-    }
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("mdio scans are columnar-only")
 
   // vectorized path: decoded chunks land directly in column vectors, so the
   // scan feeds whole-stage codegen batches instead of row-at-a-time
@@ -2331,197 +2310,13 @@ final case class MdioReaderFactory(dims: Array[String], schema: StructType,
     p match {
       case cp: MdioInputPartition => new MdioColumnarReader(cp, dims, schema)
       case gp: MdioChunkGroupPartition =>
-        val cache = new graft.zarr.ShardCache
+        val source = new graft.zarr.ChunkSource
         new MdioChunkGroupReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          gp, cp => new MdioColumnarReader(cp, dims, schema, cache), cache)
+          gp, cp => new MdioColumnarReader(cp, dims, schema, source), source)
       case rp: MdioChunkRangePartition =>
-        val cache = new graft.zarr.ShardCache
+        val source = new graft.zarr.ChunkSource
         new MdioChunkRangeReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          rp, cp => new MdioColumnarReader(cp, dims, schema, cache), cache)
+          rp, cp => new MdioColumnarReader(cp, dims, schema, source), source)
     }
   }
-}
-
-/** Decodes one chunk per variable, then iterates the in-chunk cell ranges in
-  * C-order emitting long-form rows. Missing chunk files materialize the fill
-  * value (reference fill semantics, mdio/dataset_factory.h:500-545). */
-final class MdioPartitionReader(p: MdioInputPartition, dims: Array[String], schema: StructType,
-                                sharedCache: graft.zarr.ShardCache = null)
-    extends PartitionReader[InternalRow] {
-
-  // shard handles reused across inner-chunk reads; owned here only when
-  // not provided by an enclosing chunk-range reader
-  private val shardCache = if (sharedCache != null) sharedCache else new graft.zarr.ShardCache
-  private val ownsCache = sharedCache == null
-
-  private val rank = dims.length
-  private val meta0 = p.metas.headOption.getOrElse(
-    ZarrMeta.ArrayMeta(Seq.fill(rank)(0L), Seq.fill(rank)(1L), "<f8", None, None))
-  private val chunkShape: Array[Long] = meta0.chunks.toArray
-  // in-chunk strides (C-order, based on full chunk shape)
-  private val strides: Array[Long] = {
-    val s = new Array[Long](rank)
-    var acc = 1L
-    var i = rank - 1
-    while (i >= 0) { s(i) = acc; acc *= chunkShape(i); i -= 1 }
-    s
-  }
-
-  // decoded per-variable buffers (null => whole chunk missing -> fill)
-  private val buffers: Array[AnyRef] = p.vars.indices.map { vi =>
-    val m = p.metas(vi)
-    val file = m.chunkFile(ZarrMeta.path(p.path).resolve(p.vars(vi)), p.chunk.toSeq)
-    // sharded v3 arrays: the file is the shard object; range-read the
-    // inner chunk through the footer index
-    val bytes =
-      if (m.shard.isDefined) shardCache.readInnerChunk(file, m, p.chunk.toSeq)
-      else file.readBytesOrNull()
-    if (bytes == null) null
-    else {
-      val rawSize = (m.chunks.product * m.elemSize).toInt
-      val raw = ChunkCodec.decompress(bytes, m.compressor, rawSize)
-      m.fields match {
-        case Some(fs) => ChunkCodec.decodeFields(raw, fs)
-        case None =>
-          if (MdioPartitionReader.isComplex(m.dtype)) ChunkCodec.decodeComplex(raw, m.dtype)
-          else if (m.dtype.charAt(m.dtype.length - 2) == 'f') ChunkCodec.decodeDoubles(raw, m.dtype)
-          else ChunkCodec.decodeLongs(raw, m.dtype)
-      }
-    }
-  }.toArray
-
-  private val varIsComplex: Array[Boolean] =
-    p.metas.map(m => MdioPartitionReader.isComplex(m.dtype))
-
-  // current global coords; start just "before" the first cell
-  private val cur: Array[Long] = new Array[Long](rank)
-  private var started = false
-  private var done = false
-  locally {
-    var i = 0
-    while (i < rank) {
-      cur(i) = p.cellLo(i)
-      if (p.cellLo(i) >= p.cellHi(i)) done = true // empty range => nothing to read
-      i += 1
-    }
-  }
-
-  private val row = new GenericInternalRow(schema.length)
-  private val fieldIsDim: Array[Int] = schema.fieldNames.map(f => dims.indexOf(f))
-  private val fieldVarIdx: Array[Int] =
-    schema.fieldNames.map(f => p.vars.indexOf(f.stripSuffix("__value")))
-
-  override def next(): Boolean = {
-    if (done) return false
-    if (!started) { started = true; return true }
-    // odometer over [cellLo, cellHi) in C-order (last dim fastest)
-    var i = rank - 1
-    while (i >= 0) {
-      cur(i) += 1
-      if (cur(i) < p.cellHi(i)) return true
-      cur(i) = p.cellLo(i)
-      i -= 1
-    }
-    done = true
-    false
-  }
-
-  override def get(): InternalRow = {
-    // flat offset within the chunk
-    var off = 0L
-    var i = 0
-    while (i < rank) {
-      off += (cur(i) - p.chunk(i) * chunkShape(i)) * strides(i)
-      i += 1
-    }
-    var f = 0
-    while (f < schema.length) {
-      val di = fieldIsDim(f)
-      if (di >= 0) row.update(f, cur(di))
-      else {
-        val vi = fieldVarIdx(f)
-        val m = p.metas(vi)
-        val buf = buffers(vi)
-        val dt = schema.fields(f).dataType
-        val value: Any =
-          if (m.fields.isDefined) {
-            // record dtype: build struct(field0, field1, …) from per-field arrays
-            val sdt = dt.asInstanceOf[StructType]
-            val out = new Array[Any](sdt.length)
-            buf match {
-              case null => // reference struct fill = zero bytes -> zero per field
-                var k = 0
-                while (k < sdt.length) { out(k) = castLongTo(0L, sdt.fields(k).dataType); k += 1 }
-              case arrs: Array[AnyRef] =>
-                var k = 0
-                while (k < sdt.length) {
-                  out(k) = arrs(k) match {
-                    case d: Array[Double] => castTo(d(off.toInt), sdt.fields(k).dataType)
-                    case l: Array[Long] => castLongTo(l(off.toInt), sdt.fields(k).dataType)
-                  }
-                  k += 1
-                }
-            }
-            new GenericInternalRow(out)
-          } else if (varIsComplex(vi)) {
-            val elemDt = dt.asInstanceOf[StructType].fields(0).dataType
-            buf match {
-              case null =>
-                val fill = m.fillValue.getOrElse(Double.NaN)
-                new GenericInternalRow(Array[Any](castTo(fill, elemDt), castTo(fill, elemDt)))
-              case d: Array[Double] =>
-                new GenericInternalRow(Array[Any](
-                  castTo(d(off.toInt * 2), elemDt), castTo(d(off.toInt * 2 + 1), elemDt)))
-            }
-          } else buf match {
-            case null =>
-              val fill = m.fillValue.getOrElse(Double.NaN)
-              dt match {
-                case _: DecimalType => // u64 fill = type max
-                  org.apache.spark.sql.types.Decimal(BigDecimal("18446744073709551615"), 20, 0)
-                case _ => castTo(fill, dt)
-              }
-            case d: Array[Double] => castTo(d(off.toInt), dt)
-            case l: Array[Long] => castLongTo(l(off.toInt), dt)
-          }
-        row.update(f, value)
-      }
-      f += 1
-    }
-    row
-  }
-
-  private def castTo(v: Double, dt: DataType): Any = dt match {
-    case FloatType => v.toFloat
-    case DoubleType => v
-    case LongType => v.toLong
-    case IntegerType => v.toInt
-    case ShortType => v.toShort
-    case ByteType => v.toByte
-    case BooleanType => v != 0.0
-    case _ => v
-  }
-  private def castLongTo(v: Long, dt: DataType): Any = dt match {
-    case LongType => v
-    case IntegerType => v.toInt
-    case ShortType => v.toShort
-    case ByteType => v.toByte
-    case BooleanType => v != 0L
-    case FloatType => v.toFloat
-    case DoubleType => v.toDouble
-    case _: DecimalType => // u64: unwrap two's complement to [0, 2^64)
-      if (v >= 0) org.apache.spark.sql.types.Decimal(BigDecimal(v), 20, 0)
-      else org.apache.spark.sql.types.Decimal(
-        BigDecimal(v) + BigDecimal("18446744073709551616"), 20, 0)
-    case _ => v
-  }
-
-  override def close(): Unit = if (ownsCache) shardCache.close()
-}
-
-object MdioPartitionReader {
-  /** "<c8" ('c' at len-2) or "<c16" ('c' at len-3). */
-  def isComplex(dtype: String): Boolean =
-    dtype.length >= 3 &&
-      (dtype.charAt(dtype.length - 2) == 'c' || dtype.charAt(dtype.length - 3) == 'c')
 }

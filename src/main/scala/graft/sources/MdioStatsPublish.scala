@@ -38,14 +38,8 @@ object MdioStatsPublish {
   /** Decode a stat row's flat C-order chunk id into its sidecar key and
     * entry; None when the chunk is unprunable (±Inf bounds). */
   private def entryOf(sr: MdioWriter.ChunkStatRow, grid: Array[Long])
-      : Option[(String, MdioChunkStats.Entry)] = {
-    val rank = grid.length
-    val cc = new Array[Long](rank)
-    var rem = sr.cid
-    var i = rank - 1
-    while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-    MdioWriter.statEntry(sr).map(ZarrMeta.chunkKey(cc.toSeq) -> _)
-  }
+      : Option[(String, MdioChunkStats.Entry)] =
+    MdioWriter.statEntry(sr).map(ZarrMeta.chunkKey(ZarrMeta.unflatten(sr.cid, grid).toSeq) -> _)
 
   /** The span a FRESH full publish derives without materializing entries:
     * full coverage has exactly `grid.tail.product` entries per leading

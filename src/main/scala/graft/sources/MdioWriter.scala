@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.spec.MdioSpec
-import graft.zarr.{ChunkCodec, ZarrMeta}
+import graft.zarr.{ChunkCodec, ChunkSource, ZarrMeta}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -661,9 +661,7 @@ object MdioWriter {
     if (meta.shard.isDefined)
       return writeShardedVariable(spark, df, path, variable, meta, dims)
 
-    val kindChar =
-      if (MdioPartitionReader.isComplex(dtype)) 'c'
-      else dtype.charAt(dtype.length - 2)
+    val kindChar = if (meta.isComplex) 'c' else dtype.charAt(dtype.length - 2)
     val isU64 = kindChar == 'u' && dtype.endsWith("8")
     val dimCols = dims.map(d => col(d).cast("long").as(d))
     val valueCols: Seq[org.apache.spark.sql.Column] = kindChar match {
@@ -707,32 +705,23 @@ object MdioWriter {
         val byChunkD = scala.collection.mutable.Map[Long, Array[Double]]()
         val byChunkL = scala.collection.mutable.Map[Long, Array[Long]]()
         val chunkLen = chunks.product.toInt * valueWidth
-        def chunkPath(cid: Long) = {
-          val cc = new Array[Long](rank)
-          var rem = cid
-          var i = rank - 1
-          while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-          meta.chunkFile(ZarrMeta.path(pathStr).resolve(variable), cc.toSeq)
-        }
+        val arrayDir = ZarrMeta.path(pathStr).resolve(variable)
+        def chunkPath(cid: Long) = meta.chunkFile(arrayDir, meta.chunkCoords(cid).toSeq)
         // READ-MODIFY-WRITE seed: a partial write must preserve the
         // untouched cells of an existing chunk (the reference's accessor
         // writes merge through tensorstore; whole-chunk-with-fill would
         // clobber them). Absent chunk -> fill-initialized buffer.
-        def seedD(cid: Long): Array[Double] = {
-          val bytes = chunkPath(cid).readBytesOrNull()
-          if (bytes == null) Array.fill(chunkLen)(fill)
-          else {
-            val raw = ChunkCodec.decompress(bytes, compressor, chunks.product.toInt * elemSz)
-            if (isComplex) ChunkCodec.decodeComplex(raw, dtype)
-            else ChunkCodec.decodeDoubles(raw, dtype)
+        val source = new ChunkSource
+        def seedD(cid: Long): Array[Double] =
+          source.load(meta, arrayDir, meta.chunkCoords(cid).toSeq) match {
+            case null => Array.fill(chunkLen)(fill)
+            case d: Array[Double] => d
           }
-        }
-        def seedL(cid: Long): Array[Long] = {
-          val bytes = chunkPath(cid).readBytesOrNull()
-          if (bytes == null) Array.fill(chunkLen)(longFill)
-          else ChunkCodec.decodeLongs(
-            ChunkCodec.decompress(bytes, compressor, chunks.product.toInt * elemSz), dtype)
-        }
+        def seedL(cid: Long): Array[Long] =
+          source.load(meta, arrayDir, meta.chunkCoords(cid).toSeq) match {
+            case null => Array.fill(chunkLen)(longFill)
+            case l: Array[Long] => l
+          }
         rows.foreach { r =>
           val cid = r.getLong(rank + valueWidth)
           var o = 0L
@@ -766,6 +755,7 @@ object MdioWriter {
                     else ChunkCodec.encodeDoubles(buf, dtype))
         }
         byChunkL.foreach { case (cid, buf) => emit(cid, ChunkCodec.encodeLongs(buf, dtype)) }
+        source.close()
         if (!collectStats) Iterator.empty
         else {
           // bounds over the FINITE values only; NaN cells (fill) satisfy
@@ -773,13 +763,8 @@ object MdioWriter {
           // with no finite value at all marks `empty` (prunable under any
           // range); a chunk holding ±Inf reports non-finite bounds and is
           // dropped on the driver (stays unprunable — safe).
-          def validOf(cid: Long): Array[Int] = {
-            val cc = new Array[Long](rank)
-            var rem = cid
-            var i = rank - 1
-            while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-            MdioWriter.validExtents(cc, chunks, shape)
-          }
+          def validOf(cid: Long): Array[Int] =
+            MdioWriter.validExtents(meta.chunkCoords(cid), chunks, shape)
           val floatStats = byChunkD.iterator.map { case (cid, buf) =>
             MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }
           val longStats = byChunkL.iterator.map { case (cid, buf) =>
@@ -1050,18 +1035,13 @@ object MdioWriter {
         import java.nio.{ByteBuffer, ByteOrder}
         val byChunk = scala.collection.mutable.Map[Long, Array[Byte]]()
         val chunkBytes = chunks.product.toInt * recSize
-        def chunkPath(cid: Long) = {
-          val cc = new Array[Long](rank)
-          var rem = cid
-          var i = rank - 1
-          while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-          meta.chunkFile(ZarrMeta.path(pathStr).resolve(variable), cc.toSeq)
-        }
+        val arrayDir = ZarrMeta.path(pathStr).resolve(variable)
         // read-modify-write: preserve existing records on partial writes
+        val source = new ChunkSource
         def seed(cid: Long): Array[Byte] = {
-          val bytes = chunkPath(cid).readBytesOrNull()
+          val bytes = source.fetch(meta, arrayDir, meta.chunkCoords(cid).toSeq)
           if (bytes == null) new Array[Byte](chunkBytes)
-          else ChunkCodec.decompress(bytes, compressor, chunkBytes)
+          else ChunkSource.decompress(meta, bytes)
         }
         rows.foreach { r =>
           val cid = r.getLong(rank + fields.size)
@@ -1102,14 +1082,10 @@ object MdioWriter {
           }
         }
         byChunk.foreach { case (cid, buf) =>
-          val cc = new Array[Long](rank)
-          var rem = cid
-          var i = rank - 1
-          while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-          val out = ChunkCodec.compress(buf, compressor, recSize, bloscSettings)
-          val file = meta.chunkFile(ZarrMeta.path(pathStr).resolve(variable), cc.toSeq)
-          file.write(out)
+          meta.chunkFile(arrayDir, meta.chunkCoords(cid).toSeq)
+            .write(ChunkCodec.compress(buf, compressor, recSize, bloscSettings))
         }
+        source.close()
       }
   }
 
@@ -1182,46 +1158,26 @@ object MdioWriter {
         VPath.install(hc.value)
         val chunkLen = chunks.product.toInt
         val innerCount = ips.product.toInt
-        def shardPath(sid: Long) = {
-          val sc = new Array[Long](rank)
-          var rem = sid
-          var i = rank - 1
-          while (i >= 0) { sc(i) = rem % sGrid(i); rem /= sGrid(i); i -= 1 }
-          // shard coords == inner-chunk coords scaled: chunkFile divides out
+        // shard coords == inner-chunk coords scaled: chunkFile divides out
+        def shardPath(sid: Long) =
           metaB.chunkFile(ZarrMeta.path(pathStr).resolve(variable),
-            sc.toSeq.zipWithIndex.map { case (c, i2) => c * ips(i2) })
-        }
-        // per shard: existing raw shard bytes (null if absent) + touched
-        // inner-chunk buffers
-        val existing = scala.collection.mutable.Map[Long, Array[Byte]]()
+            metaB.shardCoords(sid).toSeq.zipWithIndex.map { case (c, i2) => c * ips(i2) })
+        // existing inner chunks, sliced out of one whole read per shard
+        // object; touched inner-chunk buffers per (shard, in-shard index)
+        val source = new ChunkSource(wholeShards = true)
+        def existingInner(sid: Long, idx: Int): Array[Byte] =
+          source.innerChunk(metaB, shardPath(sid), idx)
         val touchedD = scala.collection.mutable.Map[(Long, Int), Array[Double]]()
         val touchedL = scala.collection.mutable.Map[(Long, Int), Array[Long]]()
         def seedD(sid: Long, idx: Int): Array[Double] = {
           val raw = existingInner(sid, idx)
           if (raw == null) Array.fill(chunkLen)(fill)
-          else ChunkCodec.decodeDoubles(
-            ChunkCodec.decompress(raw, compressor, chunkLen * elemSz), dtype)
+          else ChunkSource.decode(metaB, raw).asInstanceOf[Array[Double]]
         }
         def seedL(sid: Long, idx: Int): Array[Long] = {
           val raw = existingInner(sid, idx)
           if (raw == null) Array.fill(chunkLen)(longFill)
-          else ChunkCodec.decodeLongs(
-            ChunkCodec.decompress(raw, compressor, chunkLen * elemSz), dtype)
-        }
-        def existingInner(sid: Long, idx: Int): Array[Byte] = {
-          val bytes = existing.getOrElseUpdate(sid, {
-            val b = shardPath(sid).readBytesOrNull()
-            if (b == null) Array.emptyByteArray else b
-          })
-          if (bytes.isEmpty) null
-          else {
-            val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val idxBase = bytes.length - (16 * innerCount + 4)
-            val off = bb.getLong(idxBase + idx * 16)
-            val nb = bb.getLong(idxBase + idx * 16 + 8)
-            if (off == -1L && nb == -1L) null
-            else java.util.Arrays.copyOfRange(bytes, off.toInt, (off + nb).toInt)
-          }
+          else ChunkSource.decode(metaB, raw).asInstanceOf[Array[Long]]
         }
         rows.foreach { r =>
           val sid = r.getLong(rank + 1)
@@ -1266,29 +1222,19 @@ object MdioWriter {
           }
           shardPath(sid).write(ZarrMeta.buildShard(parts2))
         }
+        source.close()
         locally {
           // global inner-chunk C-order id from (shard id, in-shard index)
           def innerCid(sid: Long, idx: Int): Long = {
-            val sc = new Array[Long](rank)
-            var rem = sid
-            var i = rank - 1
-            while (i >= 0) { sc(i) = rem % sGrid(i); rem /= sGrid(i); i -= 1 }
-            val o = new Array[Long](rank)
-            var rem2 = idx.toLong
-            i = rank - 1
-            while (i >= 0) { o(i) = rem2 % ips(i); rem2 /= ips(i); i -= 1 }
+            val sc = metaB.shardCoords(sid)
+            val o = ZarrMeta.unflatten(idx, ips)
             var cid = 0L
-            i = 0
+            var i = 0
             while (i < rank) { cid = cid * grid(i) + (sc(i) * ips(i) + o(i)); i += 1 }
             cid
           }
-          def validOf(cid: Long): Array[Int] = {
-            val cc = new Array[Long](rank)
-            var rem = cid
-            var i = rank - 1
-            while (i >= 0) { cc(i) = rem % grid(i); rem /= grid(i); i -= 1 }
-            MdioWriter.validExtents(cc, chunks, shape)
-          }
+          def validOf(cid: Long): Array[Int] =
+            MdioWriter.validExtents(metaB.chunkCoords(cid), chunks, shape)
           val fs = touchedD.iterator.map { case ((sid, idx), buf) =>
             val cid = innerCid(sid, idx)
             MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }

@@ -47,7 +47,7 @@ final class ShardCache extends AutoCloseable {
     try {
       val raw = new Array[Byte](idxBytes.toInt)
       in.readFully(len - idxBytes, raw)
-      new Entry(in, ZarrMeta.parseShardIndex(raw, n, crc = true, file.uri))
+      new Entry(in, ZarrMeta.parseShardIndex(raw, n, crc = true, file.uri, len - idxBytes))
     } catch {
       // a truncated/corrupt index must not leak the open handle (each
       // task retry would otherwise leak one connection on object stores)

@@ -44,6 +44,11 @@ object ZarrMeta {
     def rank: Int = shape.size
     /** Number of (inner) chunks along each dimension. */
     def chunkGrid: Seq[Long] = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
+    def isComplex: Boolean = ZarrMeta.isComplex(dtype)
+    /** Coordinates of the chunk with C-order flat id `cid` on [[chunkGrid]]. */
+    def chunkCoords(cid: Long): Array[Long] = unflatten(cid, chunkGrid)
+    /** Coordinates of the shard with C-order flat id `sid` on [[shardGrid]]. */
+    def shardCoords(sid: Long): Array[Long] = unflatten(sid, shardGrid)
     def elemSize: Int = fields match {
       case Some(fs) => fs.map(f => ChunkCodec.elemSize(f._2)).sum
       case None => ChunkCodec.elemSize(dtype)
@@ -77,6 +82,20 @@ object ZarrMeta {
       }
       idx.toInt
     }
+  }
+
+  /** "<c8" ('c' at len-2) or "<c16" ('c' at len-3). */
+  def isComplex(dtype: String): Boolean =
+    dtype.length >= 3 &&
+      (dtype.charAt(dtype.length - 2) == 'c' || dtype.charAt(dtype.length - 3) == 'c')
+
+  /** C-order flat index `flat` → coordinates in a box of `extents`. */
+  def unflatten(flat: Long, extents: Seq[Long]): Array[Long] = {
+    val cc = new Array[Long](extents.size)
+    var rem = flat
+    var i = extents.size - 1
+    while (i >= 0) { cc(i) = rem % extents(i); rem /= extents(i); i -= 1 }
+    cc
   }
 
   /** v3 data_type name ↔ numpy typestring. */
@@ -319,12 +338,23 @@ object ZarrMeta {
     if (len < 0) return None
     val idxBytes = 16L * n + (if (crc) 4 else 0)
     require(len >= idxBytes, s"shard ${file.uri} shorter than its index")
-    Some(parseShardIndex(file.readRange(len - idxBytes, idxBytes.toInt), n, crc, file.uri))
+    Some(parseShardIndex(file.readRange(len - idxBytes, idxBytes.toInt), n, crc, file.uri,
+      len - idxBytes))
   }
 
-  /** Parse raw footer-index bytes (crc32c-checked when `crc`). */
+  /** Footer index of a whole shard object held in memory (crc32c-checked). */
+  private[graft] def parseShardFooter(obj: Array[Byte], n: Int, uri: String): Array[(Long, Long)] = {
+    val idxLen = 16 * n + 4
+    require(obj.length >= idxLen, s"shard $uri shorter than its index")
+    parseShardIndex(java.util.Arrays.copyOfRange(obj, obj.length - idxLen, obj.length),
+      n, crc = true, uri, obj.length - idxLen)
+  }
+
+  /** Parse raw footer-index bytes (crc32c-checked when `crc`); every entry
+    * that is not a missing-chunk sentinel must lie within the `dataLen`
+    * payload bytes in front of the index. */
   private[graft] def parseShardIndex(raw: Array[Byte], n: Int, crc: Boolean,
-                                     uri: String): Array[(Long, Long)] = {
+                                     uri: String, dataLen: Long): Array[(Long, Long)] = {
     if (crc) {
       val c = new java.util.zip.CRC32C
       c.update(raw, 0, 16 * n)
@@ -333,7 +363,13 @@ object ZarrMeta {
       require(c.getValue.toInt == stored, s"shard index crc32c mismatch in $uri")
     }
     val bb = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    Array.tabulate(n)(i => (bb.getLong(i * 16), bb.getLong(i * 16 + 8)))
+    Array.tabulate(n) { i =>
+      val (off, nbytes) = (bb.getLong(i * 16), bb.getLong(i * 16 + 8))
+      require((off == -1L && nbytes == -1L) ||
+        (off >= 0 && nbytes >= 0 && off <= dataLen - nbytes),
+        s"shard index entry $i ($off, $nbytes) out of bounds in $uri")
+      (off, nbytes)
+    }
   }
 
   /** Assemble a shard object: concatenated encoded inner chunks followed

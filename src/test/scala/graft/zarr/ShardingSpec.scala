@@ -164,6 +164,65 @@ class ShardingSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
+  /** Writes the full `image` variable, then points the footer entry of the
+    * untouched inner chunk (0,1) of shard (0,0) at offset 0: the index
+    * stays in bounds, only its crc32c no longer matches. */
+  private def corruptedShardStore(prefix: String): (String, VPath) = {
+    val dir = Files.createTempDirectory(prefix).resolve("sh.mdio").toString
+    MdioWriter.create(MdioSpec.fromJson(specJson), dir, version = 3)
+    val cells = for { i <- 0L until 8L; x <- 0L until 6L } yield (i, x, (i * 10 + x).toFloat)
+    MdioWriter.writeVariable(spark, cells.toDF("inline", "crossline", "image"), dir, "image")
+    val root = ZarrMeta.path(dir)
+    val m = ZarrMeta.readGroup(root)._2("image")._1
+    val shard = m.chunkFile(root.resolve("image"), Seq(0L, 0L))
+    val bytes = shard.readAllBytes()
+    val idxBase = bytes.length - (16 * 4 + 4)
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    assert(bb.getLong(idxBase + 16) > 0L)
+    bb.putLong(idxBase + 16, 0L)
+    shard.write(bytes)
+    (dir, shard)
+  }
+
+  /** A partial write into inner chunk (1,1) of the corrupted shard must
+    * refuse it, leaving the shard object byte-for-byte as it was. */
+  private def assertCorruptShardRefused(shard: VPath)(write: => Unit): Unit = {
+    val before = shard.readAllBytes()
+    val e = intercept[Exception](write)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("shard index crc32c mismatch")), msgs.mkString(" | "))
+    assert(java.util.Arrays.equals(shard.readAllBytes(), before), "shard object was rewritten")
+  }
+
+  test("sink partial write refuses a shard whose footer index fails its crc32c") {
+    val (dir, shard) = corruptedShardStore("mdio_shard_crc_sink")
+    assertCorruptShardRefused(shard) {
+      MdioWriter.insertAligned(Seq((3L, 4L, -1.0f)).toDF("inline", "crossline", "image"), dir)
+    }
+    MdioWriter.delete(dir)
+  }
+
+  test("writeVariable partial write refuses a shard whose footer index fails its crc32c") {
+    val (dir, shard) = corruptedShardStore("mdio_shard_crc_wv")
+    assertCorruptShardRefused(shard) {
+      MdioWriter.writeVariable(spark,
+        Seq((3L, 4L, -1.0f)).toDF("inline", "crossline", "image"), dir, "image")
+    }
+    MdioWriter.delete(dir)
+  }
+
+  test("shard index entries pointing past the payload are rejected") {
+    val parts = Array[Array[Byte]](Array[Byte](1, 2, 3), Array[Byte](4, 5))
+    val shard = ZarrMeta.buildShard(parts)
+    val bb = java.nio.ByteBuffer.wrap(shard).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putLong(5 + 16, 4L) // second entry: (4, 2) ends past the 5 payload bytes
+    val footer = java.util.Arrays.copyOfRange(shard, 5, shard.length)
+    val e = intercept[IllegalArgumentException](
+      ZarrMeta.parseShardIndex(footer, 2, crc = false, "mem", 5L))
+    assert(e.getMessage.contains("out of bounds"))
+  }
+
   test("oversized shard assembly fails with a clear message, not an array error") {
     // one 16 KB buffer referenced 135k times: summed lengths pass 2 GB
     // while the guard fires before any real allocation happens

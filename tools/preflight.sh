@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/3 full test suite =="
+echo "== 1/5 full test suite =="
 if ! sbt -batch test > "$OUT/test.log" 2>&1; then
   echo "SBT TEST RED:"; grep -E "\*\*\* FAILED|TESTS FAILED|error\]" "$OUT/test.log" | tail -20
   fail=1
@@ -19,18 +19,41 @@ else
   grep -E "Tests: succeeded" "$OUT/test.log" | tail -1
 fi
 
-echo "== 2/3 Verify (every query) at $SF =="
+echo "== 2/5 Verify (every query) at $SF =="
 if ! sbt -batch "runMain graft.Verify $SF $OUT/verify" > "$OUT/verify.log" 2>&1; then
   echo "VERIFY RED:"; grep -E "\[verify\]" "$OUT/verify.log" | tail -20
   fail=1
 fi
 
-echo "== 3/3 DuckDB oracle compare =="
+echo "== 3/5 DuckDB oracle compare =="
 if ! python3 tools/check_correctness.py "$SF" "$OUT/verify" > "$OUT/oracle.log" 2>&1; then
   echo "ORACLE RED:"; grep -vE "^ok " "$OUT/oracle.log" | tail -20
   fail=1
 else
   tail -1 "$OUT/oracle.log"
+fi
+
+echo "== 4/5 perfbench smoke (every workload) =="
+for w in volume_rw slice_mix query_mix; do
+  if ! python3 perfbench/run.py --workload "$w" --seed 1 --seconds 1 --smoke \
+      > "$OUT/perfbench_$w.log" 2>&1; then
+    echo "PERFBENCH $w RED:"; tail -20 "$OUT/perfbench_$w.log"
+    fail=1
+  else
+    echo "perfbench $w ok"
+  fi
+done
+
+echo "== 5/5 zarr v2 + v3 interop on MdioDemo output =="
+if ! sbt -batch "runMain graft.tools.MdioDemo $OUT/mdio_demo" > "$OUT/demo.log" 2>&1; then
+  echo "MDIODEMO RED:"; grep -E "error\]|Exception" "$OUT/demo.log" | tail -20
+  fail=1
+elif ! python3 tools/check_zarr_interop.py "$OUT/mdio_demo" > "$OUT/interop.log" 2>&1 ||
+     ! python3 tools/check_zarr_v3_interop.py "$OUT/mdio_demo_v3sharded" >> "$OUT/interop.log" 2>&1; then
+  echo "INTEROP RED:"; tail -20 "$OUT/interop.log"
+  fail=1
+else
+  tail -2 "$OUT/interop.log"
 fi
 
 if [ "$fail" -eq 0 ]; then
