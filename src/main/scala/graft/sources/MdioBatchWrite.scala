@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   *
   * With `aligned=true` the writer trusts the caller's partitioning; lying
   * reproduces the reference's UB (a chunk written by two tasks —
-  * last-writer-wins). [[MdioWriter.writeVariable]] remains the internally
-  * aligned one-call path.
+  * last-writer-wins). [[MdioWriter.writeVariable]] runs the same chunk
+  * writer ([[MdioDataWriter]]) behind its own owner-id shuffle.
   *
   * Cell-level merge semantics match the reference's accessor writes:
   * partial-chunk writes READ-MODIFY-WRITE — an existing chunk's
@@ -350,7 +350,10 @@ private final case class MdioStatsCommit(
 
 /** Buffers every owned chunk per variable; flushes chunk files on commit.
   * Thanks to the declared clustering, a chunk is owned by exactly one
-  * task — no cross-task merge is ever needed. */
+  * task — no cross-task merge is ever needed. This is the one chunk
+  * writer: the DSv2 sink creates one per task through
+  * [[MdioDataWriterFactory]], and [[MdioWriter.writeVariable]] runs one in
+  * each partition of its owner-id shuffle. */
 final class MdioDataWriter(path: String, dims: Array[String], schema: StructType,
                            vars: Array[(String, ZarrMeta.ArrayMeta)],
                            inlineStatRows: Int = MdioBatchWrite.InlineStatRows,
@@ -381,10 +384,29 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
   private val bufL = Array.fill(vars.length)(scala.collection.mutable.Map[Long, Array[Long]]())
   private val bufB = Array.fill(vars.length)(scala.collection.mutable.Map[Long, Array[Byte]]())
 
-  private def kindOf(m: ZarrMeta.ArrayMeta): Char =
-    if (m.fields.isDefined) 'V'
-    else if (m.isComplex) 'c'
-    else m.dtype.charAt(m.dtype.length - 2)
+  // ---- per-variable dispatch, fixed for the task: write() runs per cell
+  private val kinds: Array[Char] = vars.map(v => MdioDataWriter.kindOf(v._2))
+  private val valueTypes: Array[DataType] = varIdx.map(schema.fields(_).dataType)
+  private val isU64: Array[Boolean] = vars.map { case (_, m) =>
+    m.dtype.charAt(m.dtype.length - 2) == 'u' && m.dtype.endsWith("8") }
+  // the value (for complex: each half) is read as a float, not a double
+  private val floatIn: Array[Boolean] = Array.tabulate(vars.length) { v =>
+    if (kinds(v) == 'c') !vars(v)._2.dtype.endsWith("16") else valueTypes(v) == FloatType }
+  // float values round to the stored width BEFORE they are buffered, so the
+  // chunk stats describe the stored values (encoding leaves them unchanged);
+  // 8 = nothing to round (float64, or a float value bound for float32)
+  private val roundWidth: Array[Int] = Array.tabulate(vars.length) { v =>
+    val es = vars(v)._2.elemSize
+    if (kinds(v) != 'f' || (es == 4 && floatIn(v))) 8 else es }
+  private val fills: Array[Double] = Array.tabulate(vars.length) { v =>
+    MdioDataWriter.round(vars(v)._2.fillValue.getOrElse(Double.NaN), roundWidth(v)) }
+  private val longFills: Array[Long] = Array.tabulate(vars.length) { v =>
+    if (isU64(v) && fills(v) > 9.2e18) -1L // u64 max fill, two's complement
+    else if (fills(v).isNaN) 0L else fills(v).toLong }
+  // sharded (sharding_indexed) variables take float/integral dtypes only:
+  // complex/record shard assembly is not wired
+  private val shardUnsupported: Array[Boolean] = vars.map { case (_, m) =>
+    m.shard.isDefined && (m.fields.isDefined || m.isComplex) }
 
   private def varDir(v: Int) = ZarrMeta.path(path).resolve(vars(v)._1)
 
@@ -406,24 +428,24 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     m.chunkFile(varDir(v), m.shardCoords(sid).toSeq.zip(m.innerPerShard).map { case (c, ips) => c * ips })
   }
 
-  // read-modify-write seeds: a partial write through the sink preserves
-  // the untouched cells of an existing chunk (fill only where no chunk
-  // file exists), matching MdioWriter.writeVariable and the reference's
-  // merging accessor writes. A sharded variable's shard object is read
-  // once and serves both the seeds and the carried-over inner chunks.
+  // read-modify-write seeds: a partial write preserves the untouched cells
+  // of an existing chunk (fill only where no chunk file exists), matching
+  // the reference's merging accessor writes. A sharded variable's shard
+  // object is read once and serves both the seeds and the carried-over
+  // inner chunks.
   private val source = new ChunkSource(wholeShards = true)
   private def existing(v: Int, cid: Long): Array[Byte] =
     source.fetch(vars(v)._2, varDir(v), anchor.chunkCoords(cid).toSeq)
 
-  private def seedD(v: Int, cid: Long, fill: Double, width: Int): Array[Double] = {
+  private def seedD(v: Int, cid: Long, width: Int): Array[Double] = {
     val bytes = existing(v, cid)
-    if (bytes == null) Array.fill(chunkLen * width)(fill)
+    if (bytes == null) Array.fill(chunkLen * width)(fills(v))
     else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Double]]
   }
 
-  private def seedL(v: Int, cid: Long, longFill: Long): Array[Long] = {
+  private def seedL(v: Int, cid: Long): Array[Long] = {
     val bytes = existing(v, cid)
-    if (bytes == null) Array.fill(chunkLen)(longFill)
+    if (bytes == null) Array.fill(chunkLen)(longFills(v))
     else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Long]]
   }
 
@@ -465,38 +487,31 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       // null-expands table columns the input DataFrame doesn't carry, so a
       // partial-VARIABLE write arrives with the other variables all-null —
       // skipping nulls is what keeps those variables' data intact.
-      if (row.isNullAt(varIdx(v))) { v += 1 }
+      val vi = varIdx(v)
+      if (row.isNullAt(vi)) { v += 1 }
       else {
-      val m = vars(v)._2
-      // sharded (sharding_indexed) variables: float/integral dtypes only,
-      // mirroring MdioWriter.writeShardedVariable (complex/record shard
-      // assembly is not wired). Checked here, on the first actual value,
-      // so a sharded variable merely PRESENT in the table (null-expanded)
-      // never blocks its unsharded peers.
-      require(m.shard.isEmpty || (m.fields.isEmpty && !m.isComplex),
-        s"sharded write supports float/integral dtypes, not '${m.dtype}' " +
+      // checked on the first actual value, so a sharded variable merely
+      // PRESENT in the table (null-expanded) never blocks its unsharded peers
+      require(!shardUnsupported(v),
+        s"sharded write supports float/integral dtypes, not '${vars(v)._2.dtype}' " +
           s"(variable '${vars(v)._1}')")
-      val fill = m.fillValue.getOrElse(Double.NaN)
-      kindOf(m) match {
+      kinds(v) match {
         case 'f' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, fill, 1))
-          buf(off.toInt) = schema.fields(varIdx(v)).dataType match {
-            case FloatType => row.getFloat(varIdx(v)).toDouble
-            case _ => row.getDouble(varIdx(v))
-          }
+          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 1))
+          val d = if (floatIn(v)) row.getFloat(vi).toDouble else row.getDouble(vi)
+          buf(off.toInt) = MdioDataWriter.round(d, roundWidth(v))
         case 'c' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, fill, 2))
-          val s = row.getStruct(varIdx(v), 2)
-          val isF4 = !m.dtype.endsWith("16")
-          buf(off.toInt * 2) = if (isF4) s.getFloat(0).toDouble else s.getDouble(0)
-          buf(off.toInt * 2 + 1) = if (isF4) s.getFloat(1).toDouble else s.getDouble(1)
+          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 2))
+          val s = row.getStruct(vi, 2)
+          buf(off.toInt * 2) = if (floatIn(v)) s.getFloat(0).toDouble else s.getDouble(0)
+          buf(off.toInt * 2 + 1) = if (floatIn(v)) s.getFloat(1).toDouble else s.getDouble(1)
         case 'V' => // record dtype: pack struct fields little-endian
           val fs = recFields(v)
           val recSize = recSizes(v)
           val buf = bufB(v).getOrElseUpdate(cid, seedB(v, cid, recSize))
           val bb = java.nio.ByteBuffer.wrap(buf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val s = row.getStruct(varIdx(v), fs.size)
-          val sdt = schema.fields(varIdx(v)).dataType.asInstanceOf[StructType]
+          val s = row.getStruct(vi, fs.size)
+          val sdt = valueTypes(v).asInstanceOf[StructType]
           var base = off.toInt * recSize
           var k = 0
           while (k < fs.size) {
@@ -532,20 +547,17 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
             k += 1
           }
         case _ =>
-          val isU64 = m.dtype.charAt(m.dtype.length - 2) == 'u' && m.dtype.endsWith("8")
-          val longFill = if (isU64 && fill > 9.2e18) -1L
-                         else if (fill.isNaN) 0L else fill.toLong
-          val buf = bufL(v).getOrElseUpdate(cid, seedL(v, cid, longFill))
-          buf(off.toInt) = schema.fields(varIdx(v)).dataType match {
-            case LongType => row.getLong(varIdx(v))
-            case IntegerType => row.getInt(varIdx(v)).toLong
-            case ShortType => row.getShort(varIdx(v)).toLong
-            case ByteType => row.getByte(varIdx(v)).toLong
-            case BooleanType => if (row.getBoolean(varIdx(v))) 1L else 0L
+          val buf = bufL(v).getOrElseUpdate(cid, seedL(v, cid))
+          buf(off.toInt) = valueTypes(v) match {
+            case LongType => row.getLong(vi)
+            case IntegerType => row.getInt(vi).toLong
+            case ShortType => row.getShort(vi).toLong
+            case ByteType => row.getByte(vi).toLong
+            case BooleanType => if (row.getBoolean(vi)) 1L else 0L
             case dt: DecimalType => // u64 two's-complement wrap
-              row.getDecimal(varIdx(v), dt.precision, dt.scale)
+              row.getDecimal(vi, dt.precision, dt.scale)
                 .toJavaBigDecimal.toBigInteger.longValue()
-            case _ => row.getLong(varIdx(v))
+            case _ => row.getLong(vi)
           }
       }
       v += 1
@@ -575,9 +587,8 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     var v = 0
     while (v < vars.length) {
       val (name, m) = vars(v)
-      val kind = kindOf(m)
+      val kind = kinds(v)
       val isC = kind == 'c'
-      val isU64 = kind == 'u' && m.dtype.endsWith("8")
       def encoded(cid: Long): Array[Byte] = {
         val raw = bufD(v).get(cid)
           .map(b => if (isC) ChunkCodec.encodeComplex(b, m.dtype)
@@ -593,8 +604,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       } else {
         // sharded: assemble each owned shard object whole — touched inner
         // chunks from the buffers, untouched ones carried over
-        // byte-for-byte from the existing shard (exactly
-        // MdioWriter.writeShardedVariable's merge)
+        // byte-for-byte from the existing shard
         val innerCount = m.innerPerShard.product.toInt
         val bySid = cids.groupBy(cid => shardIdOf(m, anchor.chunkCoords(cid)))
         bySid.foreach { case (sid, owned) =>
@@ -615,7 +625,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
           MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }.toArray)
       else if (kind != 'c' && kind != 'V')
         emit(name, bufL(v).iterator.map { case (cid, buf) =>
-          if (isU64) MdioWriter.u64Stat(cid, buf, chunks, validOf(cid))
+          if (isU64(v)) MdioWriter.u64Stat(cid, buf, chunks, validOf(cid))
           else MdioWriter.longStat(cid, buf, chunks, validOf(cid)) }.toArray)
       v += 1
     }
@@ -629,4 +639,21 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       try p.delete() catch { case scala.util.control.NonFatal(_) => () }
     }
   override def close(): Unit = source.close()
+}
+
+object MdioDataWriter {
+  /** Value family of a variable: 'V' record, 'c' complex, else the dtype's
+    * kind character ('f', 'i', 'u', 'b'). */
+  private[sources] def kindOf(m: ZarrMeta.ArrayMeta): Char =
+    if (m.fields.isDefined) 'V'
+    else if (m.isComplex) 'c'
+    else m.dtype.charAt(m.dtype.length - 2)
+
+  /** `d` as a float of `width` bytes stores it (float16 through the codec's
+    * own conversion); any other width leaves it as is. */
+  private def round(d: Double, width: Int): Double = width match {
+    case 4 => d.toFloat.toDouble
+    case 2 => ChunkCodec.halfToFloat(ChunkCodec.floatToHalf(d.toFloat)).toDouble
+    case _ => d
+  }
 }

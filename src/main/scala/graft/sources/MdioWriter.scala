@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.spec.MdioSpec
-import graft.zarr.{ChunkCodec, ChunkSource, ZarrMeta}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.zarr.ZarrMeta
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -14,11 +14,13 @@ import graft.zarr.VPath
   *
   * The reference makes misaligned writes undefined behavior
   * (USER_GUIDE.md "Efficient Assignment"); here alignment is a SHUFFLE
-  * CONTRACT instead: [[writeVariable]] repartitions rows by chunk id, so
-  * exactly one task owns each chunk file — no torn chunks, no
-  * read-modify-write races, at any cluster size. Metadata writes happen on
-  * the driver after all tasks succeed (the reference's WaitAllFuture
-  * all-or-nothing shape, mdio/dataset.h:1030-1040).
+  * CONTRACT instead: [[writeVariable]] repartitions rows by chunk id (shard
+  * id for sharded variables), so exactly one task owns each chunk or shard
+  * file — no torn chunks, no read-modify-write races, at any cluster size.
+  * Every chunk, whichever API wrote it, is written by the DSv2 sink's
+  * [[MdioDataWriter]]. Metadata writes happen on the driver after all
+  * tasks succeed (the reference's WaitAllFuture all-or-nothing shape,
+  * mdio/dataset.h:1030-1040).
   */
 object MdioWriter {
 
@@ -616,11 +618,16 @@ object MdioWriter {
     * named after the variable — or `<name>__value` when the variable IS a
     * dimension coordinate (its name equals its dim column, mirroring the
     * reader's aliasing). Rows outside the domain error; absent cells
-    * materialize the fill value.
+    * materialize the fill value, and a NULL value leaves its cell untouched
+    * (the DSv2 sink's contract — it is the same writer). A NULL coordinate,
+    * or a NULL `re`/`im` half or record field inside a non-NULL value,
+    * fails the job before any chunk is written.
     *
-    * Plan shape: one narrow map computing the chunk id, one shuffle
-    * clustering rows by chunk (single writer per chunk file), encode+write
-    * per task. At 100 TB the shuffle payload is the data itself once —
+    * Plan shape: one narrow projection, one shuffle clustering rows by
+    * OWNER id — the chunk id, or the shard id for a `sharding_indexed`
+    * variable — so one task owns each chunk or shard file, and in each
+    * task the sink's [[MdioDataWriter]] buffers, encodes and writes the
+    * chunks it owns. At 100 TB the shuffle payload is the data itself once —
     * matching any columnar writer's cost — and chunk files stream out in
     * parallel across all executors. */
   def writeVariable(spark: SparkSession, df: DataFrame, path: String, variable: String): Unit = {
@@ -630,171 +637,78 @@ object MdioWriter {
       throw new IllegalArgumentException(s"no variable '$variable' at $path"))
     val dims = attrs.flatMap(MdioTableUtil.arrayDimensions).getOrElse(
       throw new IllegalArgumentException(s"variable '$variable' lacks _ARRAY_DIMENSIONS"))
-    val shape = meta.shape.toArray
-    val chunks = meta.chunks.toArray
-    val grid = meta.chunkGrid.toArray
-    val dtype = meta.dtype
-    val compressor = meta.compressor
-    val bloscSettings = meta.blosc
-    val elemSz = meta.elemSize
-    val fill = meta.fillValue.getOrElse(Double.NaN)
-    val pathStr = path
-    val rank = dims.size
 
-    // chunk id = C-order linearized chunk coordinate. `div` is exact
-    // integer division — SQL `/` would detour through double and can
-    // misplace rows for coordinates above 2^53.
-    val chunkId = dims.zipWithIndex.map { case (d, i) =>
-      expr(s"CAST(`$d` AS BIGINT) div ${chunks(i)}") *
-        lit(grid.drop(i + 1).product)
-    }.reduce(_ + _)
-
+    require(meta.shard.isEmpty || (meta.fields.isEmpty && !meta.isComplex),
+      s"sharded write supports float/integral dtypes, not '${meta.dtype}'")
+    // value representation per dtype family: double for 'f'; long for
+    // 'i'/'u'/'b' (lossless for int64; uint64 arrives as decimal and wraps
+    // to two's complement), so no integral value ever rides a double;
+    // struct(re, im) of the dtype's half type for complex; per-field
+    // double/long for records
     val valueCol = if (dims.contains(variable)) s"${variable}__value" else variable
-    // dtype family decides the value representation end-to-end:
-    //  'f'       → double column, encodeDoubles
-    //  'i'/'u'/'b' → long column (lossless for int64; uint64 arrives as
-    //               decimal and wraps to two's complement), encodeLongs
-    //  'c'       → struct(re, im) flattened to two double columns,
-    //               encodeComplex — so no integral value ever rides a double
-    if (meta.fields.isDefined)
-      return writeRecordVariable(spark, df, path, variable, meta, dims, chunkId)
-    if (meta.shard.isDefined)
-      return writeShardedVariable(spark, df, path, variable, meta, dims)
-
-    val kindChar = if (meta.isComplex) 'c' else dtype.charAt(dtype.length - 2)
-    val isU64 = kindChar == 'u' && dtype.endsWith("8")
-    val dimCols = dims.map(d => col(d).cast("long").as(d))
-    val valueCols: Seq[org.apache.spark.sql.Column] = kindChar match {
-      case 'f' => Seq(col(valueCol).cast("double").as("__v"))
-      case 'c' => Seq(col(valueCol).getField("re").cast("double").as("__re"),
-                      col(valueCol).getField("im").cast("double").as("__im"))
-      case _ if isU64 =>
+    val c = col(valueCol)
+    val kind = MdioDataWriter.kindOf(meta)
+    // the sink's NULL contract covers a whole value only: a NULL inside one
+    // (or a NULL coordinate) fails in the projection, before the shuffle
+    def nonNull(e: Column, what: String): Column =
+      when(e.isNull, raise_error(lit(s"NULL $what writing '$variable'"))).otherwise(e)
+    val value = kind match {
+      case 'f' => c.cast("double")
+      case 'c' => when(c.isNotNull, struct(nonNull(c.getField("re"), "re"),
+        nonNull(c.getField("im"), "im")).cast(MdioTableUtil.sparkTypeOf(meta.dtype)))
+      case 'V' => when(c.isNotNull, struct(meta.fields.get.map { case (n, ft) =>
+        nonNull(c.getField(n).cast(if (ft.charAt(ft.length - 2) == 'f') "double" else "long"),
+          s"field '$n'").as(n) }: _*))
+      case 'u' if meta.dtype.endsWith("8") =>
         // wrap [2^63, 2^64) into negative two's-complement longs
-        val v = col(valueCol).cast("decimal(21,0)")
-        Seq(when(v >= lit(BigDecimal("9223372036854775808")),
-              (v - lit(BigDecimal("18446744073709551616"))).cast("long"))
-            .otherwise(v.cast("long")).as("__v"))
-      case _ => Seq(col(valueCol).cast("long").as("__v"))
+        val v = c.cast("decimal(21,0)")
+        when(v >= lit(BigDecimal("9223372036854775808")),
+          (v - lit(BigDecimal("18446744073709551616"))).cast("long"))
+          .otherwise(v.cast("long"))
+      case _ => c.cast("long")
     }
-    val projected = df.select(dimCols ++ valueCols: _*).withColumn("__chunk", chunkId)
-    val isComplex = kindChar == 'c'
-    val valueWidth = if (isComplex) 2 else 1
-    val isFloat = kindChar == 'f' || isComplex
-    val longFill: Long =
-      if (isU64 && fill > 9.2e18) -1L // u64 max fill, two's complement
-      else if (fill.isNaN) 0L else fill.toLong
+    val projected = df.select(
+      dims.map(d => nonNull(col(d).cast("long"), s"coordinate on dim '$d'").as(d)) :+ value.as(valueCol): _*)
 
-    val nChunks = grid.product
-    val parts = math.min(nChunks, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
+    // owner id = C-order linearized chunk (or shard) coordinate. `div` is
+    // exact integer division — SQL `/` would detour through double and can
+    // misplace rows for coordinates above 2^53.
+    val own = meta.shard.getOrElse(meta.chunks)
+    val ownGrid = if (meta.shard.isDefined) meta.shardGrid else meta.chunkGrid
+    val ownerId = dims.zipWithIndex.map { case (d, i) =>
+      expr(s"`$d` div ${own(i)}") * lit(ownGrid.drop(i + 1).product)
+    }.reduce(_ + _)
+    val parts = math.min(ownGrid.product, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
     val hc = graft.zarr.HConf.capture() // executor JVMs have no SparkSession
+    val schema = projected.schema
+    val dimArr = dims.toArray
 
     // per-chunk value stats ride out of the write tasks for free: each task
-    // holds the FINAL post-read-modify-write chunk buffer, so its bounds
-    // are exact by construction (no extra pass, no estimate) — u64 included
-    // (unsigned min/max, serialized exactly past 2^63). Complex dtypes skip
-    // stats; their write still bumps the generation below, invalidating any
-    // stale sidecar. The rows NEVER collect to the driver: they shuffle by
-    // stats-shard id and the shard files are written from executors
-    // (MdioStatsPublish) — the driver sees only per-shard summaries.
-    val collectStats = !isComplex
-    val statRows: org.apache.spark.rdd.RDD[MdioWriter.ChunkStatRow] = projected
-      .repartition(parts, col("__chunk"))
-      .rdd.mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
+    // holds the FINAL post-read-modify-write chunk buffer, so its bounds are
+    // exact by construction. The rows NEVER collect to the driver (hence no
+    // inline cap to spill past): they shuffle by stats-shard id and the shard
+    // files are written from executors (MdioStatsPublish) — the driver sees
+    // only per-shard summaries. The chunk writes and the sidecar shard writes
+    // are ONE Spark job.
+    val statRows: org.apache.spark.rdd.RDD[ChunkStatRow] = projected
+      .repartition(parts, ownerId)
+      .queryExecution.toRdd.mapPartitions { rows =>
         VPath.install(hc.value)
-        // group this partition's rows by chunk; one buffer per chunk at a time
-        val byChunkD = scala.collection.mutable.Map[Long, Array[Double]]()
-        val byChunkL = scala.collection.mutable.Map[Long, Array[Long]]()
-        val chunkLen = chunks.product.toInt * valueWidth
-        val arrayDir = ZarrMeta.path(pathStr).resolve(variable)
-        def chunkPath(cid: Long) = meta.chunkFile(arrayDir, meta.chunkCoords(cid).toSeq)
-        // READ-MODIFY-WRITE seed: a partial write must preserve the
-        // untouched cells of an existing chunk (the reference's accessor
-        // writes merge through tensorstore; whole-chunk-with-fill would
-        // clobber them). Absent chunk -> fill-initialized buffer.
-        val source = new ChunkSource
-        def seedD(cid: Long): Array[Double] =
-          source.load(meta, arrayDir, meta.chunkCoords(cid).toSeq) match {
-            case null => Array.fill(chunkLen)(fill)
-            case d: Array[Double] => d
-          }
-        def seedL(cid: Long): Array[Long] =
-          source.load(meta, arrayDir, meta.chunkCoords(cid).toSeq) match {
-            case null => Array.fill(chunkLen)(longFill)
-            case l: Array[Long] => l
-          }
-        rows.foreach { r =>
-          val cid = r.getLong(rank + valueWidth)
-          var o = 0L
-          var stride = 1L
-          var i = rank - 1
-          while (i >= 0) {
-            val coord = r.getLong(i)
-            require(coord >= 0 && coord < shape(i),
-              s"coordinate $coord out of domain [0, ${shape(i)}) on dim ${dims(i)}")
-            o += (coord % chunks(i)) * stride
-            stride *= chunks(i)
-            i -= 1
-          }
-          if (isFloat) {
-            val buf = byChunkD.getOrElseUpdate(cid, seedD(cid))
-            if (isComplex) {
-              buf(o.toInt * 2) = r.getDouble(rank)
-              buf(o.toInt * 2 + 1) = r.getDouble(rank + 1)
-            } else buf(o.toInt) = r.getDouble(rank)
-          } else {
-            val buf = byChunkL.getOrElseUpdate(cid, seedL(cid))
-            buf(o.toInt) = r.getLong(rank)
-          }
-        }
-        def emit(cid: Long, raw: Array[Byte]): Unit = {
-          val out = ChunkCodec.compress(raw, compressor, elemSz, bloscSettings)
-          chunkPath(cid).write(out)
-        }
-        byChunkD.foreach { case (cid, buf) =>
-          emit(cid, if (isComplex) ChunkCodec.encodeComplex(buf, dtype)
-                    else ChunkCodec.encodeDoubles(buf, dtype))
-        }
-        byChunkL.foreach { case (cid, buf) => emit(cid, ChunkCodec.encodeLongs(buf, dtype)) }
-        source.close()
-        if (!collectStats) Iterator.empty
-        else {
-          // bounds over the FINITE values only; NaN cells (fill) satisfy
-          // no range predicate, so they never widen the bounds. A chunk
-          // with no finite value at all marks `empty` (prunable under any
-          // range); a chunk holding ±Inf reports non-finite bounds and is
-          // dropped on the driver (stays unprunable — safe).
-          def validOf(cid: Long): Array[Int] =
-            MdioWriter.validExtents(meta.chunkCoords(cid), chunks, shape)
-          val floatStats = byChunkD.iterator.map { case (cid, buf) =>
-            MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }
-          val longStats = byChunkL.iterator.map { case (cid, buf) =>
-            if (isU64) MdioWriter.u64Stat(cid, buf, chunks, validOf(cid))
-            else MdioWriter.longStat(cid, buf, chunks, validOf(cid)) }
-          (floatStats ++ longStats).toArray.iterator
-        }
+        val writer = new MdioDataWriter(path, dimArr, schema, Array(variable -> meta),
+          inlineStatRows = Int.MaxValue)
+        val msg = try { rows.foreach(writer.write); writer.commit() } finally writer.close()
+        msg.asInstanceOf[MdioStatsCommit].stats.getOrElse(variable, Array.empty[ChunkStatRow]).iterator
       }
 
-    // publish the sidecar at the NEW generation (gen file first: a crash
-    // window reads stale, never wrongly current); untouched chunks keep
-    // their prior entries when those were generation-current. The chunk
-    // writes and the sidecar shard writes are ONE Spark job: the stat rows
-    // shuffle from the write tasks straight into the shard-writing reduce
-    // stage, so a full-store write never stages O(chunks) rows on the
-    // driver (the r12 verdict's last O(chunks) driver stage, removed).
     val varDir = root.resolve(variable)
-    if (!collectStats) {
-      // bump BEFORE the action: the write mutates chunks in place, so a
-      // mid-job failure must already read as stale (the success end-state
-      // is the same stale generation either way)
+    if (kind == 'c' || kind == 'V') {
+      // no stats for complex/record: bump BEFORE the action — the write
+      // mutates chunks in place, so a mid-job failure must already read as
+      // stale (the success end-state is the same stale generation)
       MdioChunkStats.bump(varDir)
-      projectedAction(statRows)
-    } else MdioStatsPublish.publishRows(spark, varDir.toString, hc, grid, statRows)
+      statRows.foreachPartition((_: Iterator[ChunkStatRow]) => ())
+    } else MdioStatsPublish.publishRows(spark, varDir.toString, hc, meta.chunkGrid.toArray, statRows)
   }
-
-  /** Run a stats-less write job (the mapPartitions side effects are the
-    * chunk writes; the iterator is empty by construction). */
-  private def projectedAction(rows: org.apache.spark.rdd.RDD[ChunkStatRow]): Unit =
-    rows.foreachPartition((_: Iterator[ChunkStatRow]) => ())
 
   /** S10 / F5 — update a variable's (or the group's, variable="") user
     * attributes with RFC 7386 merge-patch semantics, then re-consolidate
@@ -993,262 +907,6 @@ object MdioWriter {
       case _ => paths.foreach(del)
     }
   }
-
-  /** Chunk-aligned write of a structured (record) variable: the value
-    * column is a struct whose field names match the record dtype; each
-    * task packs its chunks' records into zero-filled byte buffers
-    * (reference struct fill = zero bytes) and writes them whole. */
-  private def writeRecordVariable(spark: SparkSession, df: DataFrame, path: String,
-                                  variable: String, meta: ZarrMeta.ArrayMeta,
-                                  dims: Seq[String],
-                                  chunkId: org.apache.spark.sql.Column): Unit = {
-    val fields = meta.fields.get
-    val shape = meta.shape.toArray
-    val chunks = meta.chunks.toArray
-    val grid = meta.chunkGrid.toArray
-    val compressor = meta.compressor
-    val bloscSettings = meta.blosc
-    val pathStr = path
-    val rank = dims.size
-    val fieldKinds: Array[Char] = fields.map(f => f._2.charAt(f._2.length - 2)).toArray
-    val fieldSizes: Array[Int] = fields.map(f => ChunkCodec.elemSize(f._2)).toArray
-    val recSize = fieldSizes.sum
-
-    val dimCols = dims.map(d => col(d).cast("long").as(d))
-    val fieldCols = fields.zipWithIndex.map { case ((name, ft), i) =>
-      val c = col(variable).getField(name)
-      if (ft.charAt(ft.length - 2) == 'f') c.cast("double").as(s"__f$i")
-      else c.cast("long").as(s"__f$i")
-    }
-    val projected = df.select(dimCols ++ fieldCols: _*).withColumn("__chunk", chunkId)
-    val nChunks = grid.product
-    val parts = math.min(nChunks, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
-    val hc = graft.zarr.HConf.capture()
-
-    // record dtypes carry no scalar bounds: invalidate any stats sidecar —
-    // BEFORE the action, so a mid-job failure already reads as stale
-    MdioChunkStats.bump(ZarrMeta.path(path).resolve(variable))
-    projected
-      .repartition(parts, col("__chunk"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        VPath.install(hc.value)
-        import java.nio.{ByteBuffer, ByteOrder}
-        val byChunk = scala.collection.mutable.Map[Long, Array[Byte]]()
-        val chunkBytes = chunks.product.toInt * recSize
-        val arrayDir = ZarrMeta.path(pathStr).resolve(variable)
-        // read-modify-write: preserve existing records on partial writes
-        val source = new ChunkSource
-        def seed(cid: Long): Array[Byte] = {
-          val bytes = source.fetch(meta, arrayDir, meta.chunkCoords(cid).toSeq)
-          if (bytes == null) new Array[Byte](chunkBytes)
-          else ChunkSource.decompress(meta, bytes)
-        }
-        rows.foreach { r =>
-          val cid = r.getLong(rank + fields.size)
-          val buf = byChunk.getOrElseUpdate(cid, seed(cid))
-          var o = 0L
-          var stride = 1L
-          var i = rank - 1
-          while (i >= 0) {
-            val coord = r.getLong(i)
-            require(coord >= 0 && coord < shape(i),
-              s"coordinate $coord out of domain [0, ${shape(i)}) on dim ${dims(i)}")
-            o += (coord % chunks(i)) * stride
-            stride *= chunks(i)
-            i -= 1
-          }
-          val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-          var base = o.toInt * recSize
-          var k = 0
-          while (k < fields.size) {
-            if (fieldKinds(k) == 'f') {
-              val v = r.getDouble(rank + k)
-              fieldSizes(k) match {
-                case 2 => bb.putShort(base, ChunkCodec.floatToHalf(v.toFloat))
-                case 4 => bb.putFloat(base, v.toFloat)
-                case _ => bb.putDouble(base, v)
-              }
-            } else {
-              val v = r.getLong(rank + k)
-              fieldSizes(k) match {
-                case 1 => bb.put(base, v.toByte)
-                case 2 => bb.putShort(base, v.toShort)
-                case 4 => bb.putInt(base, v.toInt)
-                case _ => bb.putLong(base, v)
-              }
-            }
-            base += fieldSizes(k)
-            k += 1
-          }
-        }
-        byChunk.foreach { case (cid, buf) =>
-          meta.chunkFile(arrayDir, meta.chunkCoords(cid).toSeq)
-            .write(ChunkCodec.compress(buf, compressor, recSize, bloscSettings))
-        }
-        source.close()
-      }
-  }
-
-  /** Sharded (zarr v3 `sharding_indexed`) distributed write: rows shuffle
-    * on the SHARD id — one task owns each shard OBJECT — and the task
-    * packs its inner chunks, carries over untouched inner chunks of an
-    * existing shard byte-for-byte (read-modify-write without re-encoding),
-    * and writes data + footer index (+crc32c) in one put. At 100 TB this
-    * is what keeps object counts sane: billions of inner chunks, millions
-    * of shard objects. Float + integral dtypes (complex/record stay
-    * unsharded in v1). A shard is assembled in task memory — size shards
-    * to the usual object-store sweet spot (≲1 GB), which also keeps the
-    * JVM arrays under the 2 GB Array[Byte] ceiling. */
-  private def writeShardedVariable(spark: SparkSession, df: DataFrame, path: String,
-                                   variable: String, meta: ZarrMeta.ArrayMeta,
-                                   dims: Seq[String]): Unit = {
-    val shape = meta.shape.toArray
-    val chunks = meta.chunks.toArray
-    val shardShape = meta.shard.get.toArray
-    val ips = meta.innerPerShard.toArray
-    val sGrid = meta.shardGrid.toArray
-    val dtype = meta.dtype
-    val compressor = meta.compressor
-    val bloscSettings = meta.blosc
-    val elemSz = meta.elemSize
-    val fill = meta.fillValue.getOrElse(Double.NaN)
-    val metaB = meta
-    val pathStr = path
-    val rank = dims.size
-    val kindChar = dtype.charAt(dtype.length - 2)
-    require(kindChar != 'c' && metaB.fields.isEmpty,
-      s"sharded write supports float/integral dtypes, not '$dtype'")
-    val isFloat = kindChar == 'f'
-    val isU64 = kindChar == 'u' && dtype.endsWith("8")
-    val longFill: Long =
-      if (isU64 && fill > 9.2e18) -1L
-      else if (fill.isNaN) 0L else fill.toLong
-
-    val shardId = dims.zipWithIndex.map { case (d, i) =>
-      expr(s"CAST(`$d` AS BIGINT) div ${shardShape(i)}") *
-        lit(sGrid.drop(i + 1).product)
-    }.reduce(_ + _)
-    val valueCol = if (dims.contains(variable)) s"${variable}__value" else variable
-    val dimCols = dims.map(d => col(d).cast("long").as(d))
-    val vCol =
-      if (isFloat) col(valueCol).cast("double").as("__v")
-      else if (isU64) {
-        val v = col(valueCol).cast("decimal(21,0)")
-        when(v >= lit(BigDecimal("9223372036854775808")),
-          (v - lit(BigDecimal("18446744073709551616"))).cast("long"))
-          .otherwise(v.cast("long")).as("__v")
-      } else col(valueCol).cast("long").as("__v")
-    val projected = df.select(dimCols :+ vCol: _*).withColumn("__shard", shardId)
-    val nShards = sGrid.product
-    val parts = math.min(nShards, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
-    val hc = graft.zarr.HConf.capture()
-
-    val grid = metaB.chunkGrid.toArray
-    // sharded tasks hold every TOUCHED inner chunk's final buffer (the
-    // same exact-by-construction property as the chunk-shuffle path), so
-    // per-inner-chunk bounds ride out with the job (u64 included: unsigned
-    // bounds, exact past 2^63); untouched inner chunks carry over
-    // byte-identical AND keep their prior sidecar entries through the
-    // generation-checked merge. Stat rows shuffle straight into the
-    // executor-side shard-writing stage (MdioStatsPublish) — never
-    // collected to the driver.
-    val statRows: org.apache.spark.rdd.RDD[ChunkStatRow] = projected
-      .repartition(parts, col("__shard"))
-      .rdd.mapPartitions { rows: Iterator[org.apache.spark.sql.Row] =>
-        VPath.install(hc.value)
-        val chunkLen = chunks.product.toInt
-        val innerCount = ips.product.toInt
-        // shard coords == inner-chunk coords scaled: chunkFile divides out
-        def shardPath(sid: Long) =
-          metaB.chunkFile(ZarrMeta.path(pathStr).resolve(variable),
-            metaB.shardCoords(sid).toSeq.zipWithIndex.map { case (c, i2) => c * ips(i2) })
-        // existing inner chunks, sliced out of one whole read per shard
-        // object; touched inner-chunk buffers per (shard, in-shard index)
-        val source = new ChunkSource(wholeShards = true)
-        def existingInner(sid: Long, idx: Int): Array[Byte] =
-          source.innerChunk(metaB, shardPath(sid), idx)
-        val touchedD = scala.collection.mutable.Map[(Long, Int), Array[Double]]()
-        val touchedL = scala.collection.mutable.Map[(Long, Int), Array[Long]]()
-        def seedD(sid: Long, idx: Int): Array[Double] = {
-          val raw = existingInner(sid, idx)
-          if (raw == null) Array.fill(chunkLen)(fill)
-          else ChunkSource.decode(metaB, raw).asInstanceOf[Array[Double]]
-        }
-        def seedL(sid: Long, idx: Int): Array[Long] = {
-          val raw = existingInner(sid, idx)
-          if (raw == null) Array.fill(chunkLen)(longFill)
-          else ChunkSource.decode(metaB, raw).asInstanceOf[Array[Long]]
-        }
-        rows.foreach { r =>
-          val sid = r.getLong(rank + 1)
-          // inner-chunk index within the shard + cell offset within chunk
-          var idx = 0L
-          var off = 0L
-          var stride = 1L
-          var i = rank - 1
-          while (i >= 0) {
-            val coord = r.getLong(i)
-            require(coord >= 0 && coord < shape(i),
-              s"coordinate $coord out of domain [0, ${shape(i)}) on dim ${dims(i)}")
-            off += (coord % chunks(i)) * stride
-            stride *= chunks(i)
-            i -= 1
-          }
-          i = 0
-          while (i < rank) {
-            idx = idx * ips(i) + (r.getLong(i) / chunks(i)) % ips(i)
-            i += 1
-          }
-          if (isFloat) {
-            val buf = touchedD.getOrElseUpdate((sid, idx.toInt), seedD(sid, idx.toInt))
-            buf(off.toInt) = r.getDouble(rank)
-          } else {
-            val buf = touchedL.getOrElseUpdate((sid, idx.toInt), seedL(sid, idx.toInt))
-            buf(off.toInt) = r.getLong(rank)
-          }
-        }
-        val shards = (touchedD.keys.map(_._1) ++ touchedL.keys.map(_._1)).toSet
-        shards.foreach { sid =>
-          val parts2 = new Array[Array[Byte]](innerCount)
-          var idx = 0
-          while (idx < innerCount) {
-            val enc: Array[Byte] =
-              touchedD.get((sid, idx)).map(b => ChunkCodec.encodeDoubles(b, dtype))
-                .orElse(touchedL.get((sid, idx)).map(b => ChunkCodec.encodeLongs(b, dtype)))
-                .map(raw => ChunkCodec.compress(raw, compressor, elemSz, bloscSettings))
-                .getOrElse(existingInner(sid, idx)) // untouched: carry bytes over
-            parts2(idx) = enc
-            idx += 1
-          }
-          shardPath(sid).write(ZarrMeta.buildShard(parts2))
-        }
-        source.close()
-        locally {
-          // global inner-chunk C-order id from (shard id, in-shard index)
-          def innerCid(sid: Long, idx: Int): Long = {
-            val sc = metaB.shardCoords(sid)
-            val o = ZarrMeta.unflatten(idx, ips)
-            var cid = 0L
-            var i = 0
-            while (i < rank) { cid = cid * grid(i) + (sc(i) * ips(i) + o(i)); i += 1 }
-            cid
-          }
-          def validOf(cid: Long): Array[Int] =
-            MdioWriter.validExtents(metaB.chunkCoords(cid), chunks, shape)
-          val fs = touchedD.iterator.map { case ((sid, idx), buf) =>
-            val cid = innerCid(sid, idx)
-            MdioWriter.floatStat(cid, buf, chunks, validOf(cid)) }
-          val ls = touchedL.iterator.map { case ((sid, idx), buf) =>
-            val cid = innerCid(sid, idx)
-            if (isU64) MdioWriter.u64Stat(cid, buf, chunks, validOf(cid))
-            else MdioWriter.longStat(cid, buf, chunks, validOf(cid)) }
-          (fs ++ ls).toArray.iterator
-        }
-      }
-    val varDir = ZarrMeta.path(path).resolve(variable)
-    MdioStatsPublish.publishRows(spark, varDir.toString, hc, grid, statRows)
-  }
-
   /** The variables of `path` that `df`'s columns actually cover (data
     * variables whose name appears in the schema), used to scope DSv2
     * writes on MULTI-TUPLE stores: without the restriction, schema

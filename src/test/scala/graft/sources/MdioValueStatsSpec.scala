@@ -19,20 +19,27 @@ import java.nio.file.Files
 class MdioValueStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** 1-D store: dim x (size 64, chunks of 8 → 8 chunks), float64 v = f(x). */
-  private def createFloat(values: Long => Double): String = {
+  /** 1-D store, no data yet: dim x (size 64, chunks of 8 → 8 chunks),
+    * float variable v of `dataType`. */
+  private def createEmpty(dataType: String = "float64"): String = {
     val dir = Files.createTempDirectory("mdio_vstats").resolve("s.mdio").toString
     MdioWriter.create(MdioSpec.fromJson(
-      """{
+      s"""{
         |  "metadata": {"name": "s", "apiVersion": "v1.0", "createdOn": "2026-01-01T00:00:00Z"},
         |  "variables": [
         |    {"name": "x", "dataType": "int64",
         |     "dimensions": [{"name": "x", "size": 64}]},
-        |    {"name": "v", "dataType": "float64",
+        |    {"name": "v", "dataType": "$dataType",
         |     "dimensions": [{"name": "x", "size": 64}],
         |     "metadata": {"chunkGrid": {"name": "regular", "configuration": {"chunkShape": [8]}}}}
         |  ]
         |}""".stripMargin), dir)
+    dir
+  }
+
+  /** [[createEmpty]] float64 store with v = f(x) written by writeVariable. */
+  private def createFloat(values: Long => Double): String = {
+    val dir = createEmpty()
     val fn = udf(values.apply _)
     MdioWriter.writeVariable(spark,
       spark.range(64).select($"id".as("x"), fn($"id").as("v")), dir, "v")
@@ -103,6 +110,31 @@ class MdioValueStatsSpec extends SparkSpec {
     assert(coveredChunks(dir, Array.empty) == 8L)
     assert(spark.read.format("mdio").load(dir).filter($"v" <= 1e9).count() == 56L)
     MdioWriter.delete(dir)
+  }
+
+  test("float32/float16 stats describe the stored values: pruning and metadata SUM") {
+    // every cell 0.1 as a double: a float32/float16 chunk stores the value
+    // rounded to its width, and its bounds and moments must be taken from
+    // that stored value — from the unrounded input, a predicate on the
+    // stored value prunes every chunk and the metadata SUM is off
+    for (dataType <- Seq("float32", "float16"); api <- Seq("writeVariable", "insertAligned")) {
+      val dir = createEmpty(dataType)
+      val cells = spark.range(64).select($"id".as("x"), lit(0.1).as("v"))
+      if (api == "writeVariable") MdioWriter.writeVariable(spark, cells, dir, "v")
+      else MdioWriter.insertAligned(cells, dir)
+      val df = spark.read.format("mdio").load(dir)
+      val stored = df.select($"v").as[Float].collect()
+      assert(stored.length == 64 && stored.distinct.length == 1, s"$dataType/$api")
+      val s = stored.head
+      assert(df.filter($"v" >= lit(s)).count() == 64L, s"$dataType/$api: v >= $s")
+      assert(df.filter($"v" <= lit(s)).count() == 64L, s"$dataType/$api: v <= $s")
+      val total = df.agg(sum($"v"))
+      val plan = total.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(plan.contains("vsum(v)"), plan.take(800))
+      assert(total.head.getDouble(0) == stored.map(f => BigDecimal(f.toDouble)).sum.toDouble,
+        s"$dataType/$api: metadata SUM")
+      MdioWriter.delete(dir)
+    }
   }
 
   test("RMW through writeVariable refreshes stats: new bounds prune correctly") {

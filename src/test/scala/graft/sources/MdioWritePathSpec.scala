@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.spec.MdioSpec
+import graft.zarr.ZarrMeta
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -84,6 +86,57 @@ class MdioWritePathSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
+  test("writeVariable leaves a NULL cell untouched") {
+    val dir = create()
+    val cells = for { i <- 0L until 8L; x <- 0L until 6L } yield (i, x, (i * 10 + x).toDouble)
+    MdioWriter.writeVariable(spark, cells.toDF("inline", "crossline", "image"), dir, "image")
+    MdioWriter.writeVariable(spark,
+      Seq[(Long, Long, Option[Double])]((2L, 2L, None), (2L, 1L, Some(-1.0)))
+        .toDF("inline", "crossline", "image"), dir, "image")
+    val got = spark.read.format("mdio").load(dir)
+      .select("inline", "crossline", "image").as[(Long, Long, Double)]
+      .collect().map(r => (r._1, r._2) -> r._3).toMap
+    cells.foreach { case (i, x, v) =>
+      assert(got((i, x)) == (if ((i, x) == (2L, 1L)) -1.0 else v), s"cell ($i,$x)")
+    }
+    MdioWriter.delete(dir)
+  }
+
+  test("writeVariable fails on a NULL coordinate or a NULL inside a value and writes nothing") {
+    // only a whole NULL value means "leave the cell"; a NULL coordinate would
+    // otherwise land on coordinate 0, a NULL half or field would store 0
+    val k = $"inline" * 6 + $"crossline"
+    val grid = spark.range(48).select(($"id" / 6).cast("long").as("inline"),
+      ($"id" % 6).as("crossline"))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    def cplx(re: Column, im: Column) = struct(re.as("re"), im.as("im"))
+    def rec(x: Column, e: Column) = struct(x.as("cdp-x"), e.as("elev"))
+    val nullL = lit(null).cast("long")
+    // (dtype, full value, bad rows: (inline, crossline, value), expected message)
+    val cases = Seq(
+      ("<f8", k * 0.5, Seq((nullL, lit(0L), lit(-1.0)), (lit(1L), lit(1L), lit(-1.0))),
+        "NULL coordinate on dim 'inline'"),
+      ("<f8", k * 0.5, Seq((lit(0L), nullL, lit(-1.0))), "NULL coordinate on dim 'crossline'"),
+      ("<c16", cplx(k * 0.5, -k), Seq((lit(0L), lit(0L), cplx(lit(null).cast("double"), lit(4.0)))),
+        "NULL re"),
+      ("|V8", rec(k.cast("int"), k * 0.5), Seq((lit(0L), lit(0L), rec(lit(null).cast("int"), lit(2.0)))),
+        "NULL field 'cdp-x'"))
+    for ((dtype, full, bad, msg) <- cases) {
+      val dir = createV(dtype, sharded = false)
+      MdioWriter.writeVariable(spark, grid.select($"inline", $"crossline", full.as("v")), dir, "v")
+      def readAll() = spark.read.format("mdio").load(dir)
+        .select($"inline", $"crossline", $"v".cast("string")).collect().toSet
+      val before = readAll()
+      val badDf = bad.map { case (i, x, v) => spark.range(1).select(i.as("inline"), x.as("crossline"), v.as("v")) }
+        .reduce(_ union _)
+      val e = intercept[Exception](MdioWriter.writeVariable(spark, badDf, dir, "v"))
+      assert(messages(e).contains(msg), s"$dtype: ${messages(e)}")
+      assert(readAll() == before, s"$dtype: a failed write changed cells")
+      MdioWriter.delete(dir)
+    }
+  }
+
   test("default write is the safe single-partition path (no torn chunks)") {
     val dir = create()
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
@@ -120,6 +173,104 @@ class MdioWritePathSpec extends SparkSpec {
     }
     MdioWriter.delete(serialDir)
     MdioWriter.delete(alignedDir)
+  }
+
+  // inline(8) × crossline(6) with int64 coordinates and one variable `v`
+  // of `dtype` (records: `recFields`) in 4×3 chunks, or 2×3 inner chunks in
+  // 4×6 shards (v3, blosc) when sharded
+  private val recFields = Seq("cdp-x" -> "<i4", "elev" -> "<f4")
+  private def createV(dtype: String, sharded: Boolean): String = {
+    val version = if (sharded) 3 else 2
+    val root = ZarrMeta.path(Files.createTempDirectory("mdio_par").resolve("p.mdio").toString)
+    ZarrMeta.writeGroup(root, Some("""{"name": "p"}"""), version)
+    def attrs(ds: String*) = Some(ds.map(d => s""""$d"""").mkString("""{"_ARRAY_DIMENSIONS": [""", ", ", "]}"))
+    for ((d, n) <- Seq("inline" -> 8L, "crossline" -> 6L))
+      ZarrMeta.writeArray(root, d, ZarrMeta.ArrayMeta(Seq(n), Seq(n), "<i8", None, Some(0.0),
+        version = version, dimNames = Some(Seq(d))), attrs(d))
+    ZarrMeta.writeArray(root, "v", ZarrMeta.ArrayMeta(Seq(8L, 6L),
+      if (sharded) Seq(2L, 3L) else Seq(4L, 3L), dtype,
+      if (sharded) Some("blosc") else Some("zstd"),
+      if (dtype.startsWith("|V")) None else Some(0.0),
+      version = version, dimNames = Some(Seq("inline", "crossline")),
+      fields = if (dtype.startsWith("|V")) Some(recFields) else None,
+      blosc = if (sharded) Some(graft.zarr.ChunkCodec.Blosc("zstd", 5, 1)) else None,
+      shard = if (sharded) Some(Seq(4L, 6L)) else None), attrs("inline", "crossline"))
+    if (version == 2) ZarrMeta.consolidate(root)
+    root.toString
+  }
+
+  test("writeVariable, insertAligned and the sink agree on every dtype") {
+    // One chunk writer serves every write API: for each dtype, the same
+    // cells written through writeVariable, insertAligned (>1 writer task)
+    // and the bare serial sink leave byte-identical chunk/shard files and
+    // equal stats sidecars — after a full write, and again after a partial
+    // read-modify-write patch that also carries NULL (= untouched) cells.
+    val k = $"inline" * 6 + $"crossline"
+    def cplx(re: Column, im: Column) = struct(re.as("re"), im.as("im"))
+    def rec(x: Column, e: Column) = struct(x.as("cdp-x"), e.as("elev"))
+    // (label, zarr dtype, sharded, cell value, patch value)
+    val cases = Seq(
+      ("f2", "<f2", false, k * 0.1, lit(-2.5)),
+      ("f4", "<f4", false, k * 0.1, lit(-2.5)),
+      ("f8", "<f8", false, k * 0.1, lit(-2.5)),
+      ("i1", "|i1", false, (k - 24).cast("int"), lit(-7)),
+      ("u8", "<u8", false, lit(BigDecimal("9223372036854775808")) + k,
+        lit(BigDecimal("18446744073709551615"))),
+      ("bool", "|b1", false, k % 3 === 0, lit(true)),
+      ("c8", "<c8", false, cplx(k * 0.1, -k * 0.3), cplx(lit(-2.5), lit(4.0))),
+      ("c16", "<c16", false, cplx(k * 0.1, -k * 0.3), cplx(lit(-2.5), lit(4.0))),
+      ("record", "|V8", false, rec((k * 100).cast("int"), k * 0.1), rec(lit(-7), lit(-2.5))),
+      ("sharded f4", "<f4", true, k * 0.1, lit(-2.5)),
+      ("sharded i4", "<i4", true, (k - 20).cast("int"), lit(-7)))
+    val grid = spark.range(48).select(($"id" / 6).cast("long").as("inline"),
+      ($"id" % 6).as("crossline")).repartition(7)
+
+    def dataFiles(dir: String): Seq[(String, Seq[Byte])] = {
+      val vd = ZarrMeta.path(dir).resolve("v")
+      vd.listFilesRecursive().filterNot(p => p.name.startsWith(".") || p.name == "zarr.json")
+        .map(p => vd.relativize(p) -> p.readAllBytes().toSeq).sortBy(_._1)
+    }
+    def read(dir: String): Map[(Long, Long), String] =
+      spark.read.format("mdio").load(dir).select($"inline", $"crossline", $"v".cast("string"))
+        .as[(Long, Long, String)].collect().map(r => (r._1, r._2) -> r._3).toMap
+
+    for ((label, dtype, sharded, value, patch) <- cases) {
+      val dirs = Seq.fill(3)(createV(dtype, sharded))
+      def writeAll(df: DataFrame): Unit = {
+        MdioWriter.writeVariable(spark, df, dirs(0), "v")
+        MdioWriter.insertAligned(df, dirs(1))
+        df.write.format("mdio").mode("append").save(dirs(2))
+      }
+      def assertSame(step: String): Unit = {
+        val files = dirs.map(dataFiles)
+        assert(files.head.nonEmpty, s"$label $step: no chunk files")
+        dirs.indices.tail.foreach(i => assert(files(i) == files.head,
+          s"$label $step: chunk files of ${dirs(i)} differ from writeVariable's"))
+        val stats = dirs.map(d => MdioChunkStats.current(ZarrMeta.path(d).resolve("v")))
+        assert(stats.head.isDefined == !(label.startsWith("c") || label == "record"),
+          s"$label $step: stats ${stats.head}")
+        assert(stats.forall(_ == stats.head), s"$label $step: stats differ: $stats")
+      }
+      val cells = grid.select($"inline", $"crossline", value.as("v"))
+      if (label == "f4") assert(MdioWriter.repartitionByChunk(cells, dirs(1)).rdd.getNumPartitions > 1,
+        "alignment repartition must fan out to >1 writer task")
+      writeAll(cells)
+      assertSame("full write")
+      val before = read(dirs(0))
+      // patch: crossline 1 gets `patch`, crossline 4 gets NULL (untouched)
+      val patchDf = grid.filter($"crossline" % 3 === 1).select($"inline", $"crossline",
+        when($"crossline" === 1, patch).as("v"))
+      writeAll(patchDf)
+      assertSame("patch")
+      val after = read(dirs(0))
+      val readType = spark.read.format("mdio").load(dirs(0)).schema("v").dataType
+      val patched = patch.cast(readType).cast("string")
+      val want = spark.range(1).select(patched).head.getString(0)
+      before.foreach { case ((i, x), old) =>
+        assert(after((i, x)) == (if (x == 1) want else old), s"$label cell ($i,$x)")
+      }
+      dirs.foreach(MdioWriter.delete)
+    }
   }
 
   test("a sharded variable elsewhere in the table does not block unsharded writes") {
