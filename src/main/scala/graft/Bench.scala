@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -13,26 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
-      // InferFiltersFromGenerate re-evaluates the generator input under the
-      // inferred size()>0 filter; every generator in this engine is a
-      // computed kernel column (shingles/fingerprints/segments), so the
-      // inference only ever re-runs kernels single-task below the spread
-      // exchange — never prunes a stored column (r20 A/B: dedup family
-      // −0.2..−0.45 s each, no query slower beyond noise). Same posture at
-      // cluster scale; the conf is the engine's recommended session config.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up: touch every table once (file listing, footer reads, page
@@ -196,7 +176,7 @@ object Bench {
     // r18 adjudication of the r17 suite-drift cluster (agg_gini /
     // grouping_sets / hll_intersect / cube / distinct / embedding_centroid
     // / histogram all measured ~2x their budgets IN UNISON in the r17
-    // suite): BenchOne 3-rep idle floors at sf0.1 — gini 0.31-0.39,
+    // suite): isolated 3-rep idle floors at sf0.1 — gini 0.31-0.39,
     // grouping_sets 0.21-0.25, hll_intersect 0.49-0.60, cube 0.52-0.56,
     // distinct 0.57-0.78, embedding_centroid 0.19-0.25, histogram
     // 0.18-0.19 — match the r16 snapshot times, so the drift is suite
@@ -280,7 +260,7 @@ object Bench {
     "dedup_cascade" -> 1.144,
     // comparator: dedup_minhash_lsh + dedup_components + text_line_dedup
     // chained (the recipe runs all three over the cleaned corpus).
-    // r9 stage profile (graft.tools.ProfileDedupRecipe, sf0.1 warm):
+    // r9 stage profile (sf0.1 warm):
     // exact 0.3 + lineDedup 0.2 + minhashLsh 4.4 + components 5.5 +
     // final agg 1.7 — the r6->r8 drift (7.4->9.4s) is entirely the two
     // corpus-floor stages (candidate pairs ~= all true pairs at t=0.4,
@@ -373,15 +353,15 @@ object Bench {
     // comparator: stream_join_exec + the horizon staging write (events
     // re-written once per run so the watermark can pass the corpus tail)
     // + the no-data finalization batch that emits the outer rows.
-    // measured warm sf0.1 (TimeOne): 8.0/8.6 s two-pass; 6.8 s under
+    // measured warm sf0.1 isolated: 8.0/8.6 s two-pass; 6.8 s under
     // full-suite load (r10 confirmation run)
     "stream_outer_join_exec" -> 8.3,
     // comparator: stream_join_exec (same two-source state machinery; the
     // matched-flag state replaces pair multiplication).
-    // measured warm sf0.1 (TimeOne): 8.5/8.8 s two-pass
+    // measured warm sf0.1 isolated: 8.5/8.8 s two-pass
     "stream_semi_join_exec" -> 8.8,
     // comparator: stream_outer_join_exec + click-side eviction output.
-    // measured warm sf0.1 (TimeOne): 10.8/8.7 s two-pass (variance band)
+    // measured warm sf0.1 isolated: 10.8/8.7 s two-pass (variance band)
     "stream_full_join_exec" -> 10.8,
     // comparator: mdio_smooth_grid (identical two-window separable pass
     // over the same cell aggregation)
@@ -412,7 +392,7 @@ object Bench {
     // cost is the token-explode + df ranking over part names)
     "join_fuzzy" -> 1.041,
     // r16 idle re-floor for the six mdio rows the r15 suite ran >2x by
-    // ratio (all under the 2 s gate floor): BenchOne 3-rep idle minima at
+    // ratio (all under the 2 s gate floor): isolated 3-rep idle minima at
     // HEAD — cast 0.287, nmo 0.917, concat 0.333, migrate 0.785 (held),
     // stride 0.419, slice 0.304 — and the SAME binaries' r14 snapshot
     // (b4d7628) re-measured TODAY at the same warm times (cast 0.574 first
@@ -463,7 +443,7 @@ object Bench {
     "multimodal_features" -> 0.724,
     // r4 measured 0.30, r5/r6 ~0.51-0.68 warm: profiled round 6 — the
     // source diff is a field rename + per-image O(1) header checks, and
-    // the number is stable in isolation (BenchOne), so ~0.5 s is the
+    // the number is stable in isolation, so ~0.5 s is the
     // honest cost of 5k real BMP encode+decodes through Dataset encoders,
     // not a plan defect; budget stays at its r4-era recorded value
     "multimodal_bmp" -> 0.315, "multimodal_wav" -> 0.65,
@@ -520,7 +500,7 @@ object Bench {
     // join_anti + agg_distinct (anti join on urgent orders + group-by)
     "q22_global_sales" -> 0.58,
     // round-7 TPC-H completion — first-recorded sf0.1 warm values
-    // (BenchOne, min of two warm passes in one JVM):
+    // (isolated, min of two warm passes in one JVM):
     "q2_min_cost_supplier" -> 1.88, "q11_important_stock" -> 0.821,
     "q12_shipmode_priority" -> 0.629, "q16_part_supplier_cnt" -> 1.656,
     "q20_excess_stock" -> 1.999, "q21_waiting_supplier" -> 1.587,
@@ -620,7 +600,7 @@ object Bench {
     // metadata min/max probe; the whole-domain probe is metadata-only;
     // first budget r14)
     "zarr_count_in_range" -> 0.25,
-    // measured warm sf0.1 isolated (BenchOne): the bracket is
+    // measured warm sf0.1 isolated: the bracket is
     // metadata-only, but the finish is 1-2 sequential jobs whose unioned
     // boxed subscans each plan a DSv2 table — job+plan latency, not data.
     // First budget r14; the probe-per-job first cut measured 2.43 s from

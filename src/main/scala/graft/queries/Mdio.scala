@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftSession.withConfs
 import graft.operators.{CoordinateSelector, MdioDataset}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -673,13 +674,10 @@ object Mdio {
     val a = zarrGrid(s, d)
     val b = zarrGridWeight(s, d)
     s.conf.set("spark.sql.catalog.graft_spj", "graft.sources.MdioCatalog")
-    val saved = Seq("spark.graft.scan.keyedPartitions",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.graft.scan.keyedPartitions", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(s)(
+      "spark.graft.scan.keyedPartitions" -> "true",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = s.table(s"graft_spj.`$a`")
         .join(s.table(s"graft_spj.`$b`"), Seq("inline", "crossline"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -690,9 +688,6 @@ object Mdio {
         .head
       import s.implicits._
       Seq((r.getDouble(0), r.getLong(1))).toDF("wsum", "n")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -710,15 +705,11 @@ object Mdio {
     val a = zarrGrid(s, d)
     val b = zarrGridWeight(s, d)
     s.conf.set("spark.sql.catalog.graft_spj", "graft.sources.MdioCatalog")
-    val saved = Seq("spark.graft.scan.keyedPartitions",
-      "spark.graft.scan.keyedPartitions.groupFactor",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.graft.scan.keyedPartitions", "true")
-    s.conf.set("spark.graft.scan.keyedPartitions.groupFactor", "2")
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(s)(
+      "spark.graft.scan.keyedPartitions" -> "true",
+      "spark.graft.scan.keyedPartitions.groupFactor" -> "2",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the scans genuinely plan GROUPED partitions: 2 lead-groups × 2
       // crossline chunks = 4, not the per-chunk 8
       val parts = graft.sources.MdioTable(a, None)
@@ -738,9 +729,6 @@ object Mdio {
         .head
       import s.implicits._
       Seq((r.getDouble(0), r.getLong(1))).toDF("wsum", "n")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1567,15 +1555,11 @@ object Mdio {
     val a = zarrGrid(s, d)
     val b = zarrGridWeight(s, d)
     s.conf.set("spark.sql.catalog.graft_spj", "graft.sources.MdioCatalog")
-    val saved = Seq("spark.graft.scan.keyedPartitions",
-      "spark.graft.scan.keyedPartitions.groupFactor",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.graft.scan.keyedPartitions", "true")
-    s.conf.set("spark.graft.scan.keyedPartitions.groupFactor", "1,2")
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(s)(
+      "spark.graft.scan.keyedPartitions" -> "true",
+      "spark.graft.scan.keyedPartitions.groupFactor" -> "1,2",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val parts = graft.sources.MdioTable(a, None)
         .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
         .build().toBatch.planInputPartitions()
@@ -1595,9 +1579,6 @@ object Mdio {
         .head
       import s.implicits._
       Seq((r.getDouble(0), r.getLong(1))).toDF("wsum", "n")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1672,15 +1653,11 @@ object Mdio {
     val a = zarrGrid(s, d)
     val b = zarrGridWeightCoarse(s, d)
     s.conf.set("spark.sql.catalog.graft_spj", "graft.sources.MdioCatalog")
-    val saved = Seq("spark.graft.scan.keyedPartitions",
-      "spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-    s.conf.set("spark.graft.scan.keyedPartitions", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    s.conf.set("spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled", "true")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConfs(s)(
+      "spark.graft.scan.keyedPartitions" -> "true",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = s.table(s"graft_spj.`$a`")
         .join(s.table(s"graft_spj.`$b`"), Seq("inline", "crossline"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -1691,9 +1668,6 @@ object Mdio {
         .head
       import s.implicits._
       Seq((r.getDouble(0), r.getLong(1))).toDF("wsum", "n")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -63,16 +63,15 @@ object StreamingExec {
     // inner/semi stream-stream joins: the extra batch only evicts state,
     // emitting nothing — r19 measured it at ~45% of the run). Outer/full
     // joins and timeout-bearing operators REQUIRE it and keep the default.
-    // Session-level conf; the set/restore pair wraps the WHOLE start/run in
-    // its own try/finally so a start() failure (or an exception out of
-    // q.stop()) cannot leak the disabled conf into the shared session,
-    // where a later outer/full join would silently lose its finalization
-    // batch.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = df.sparkSession.conf.getOption(ndKey)
+    // Session-level conf; withConfs wraps the WHOLE start/run so a start()
+    // failure (or an exception out of q.stop()) cannot leak the disabled
+    // conf into the shared session, where a later outer/full join would
+    // silently lose its finalization batch.
+    val noData =
+      if (finalizeNoData) Nil
+      else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     val (dropped, dataBatches) =
-      try {
-        if (!finalizeNoData) df.sparkSession.conf.set(ndKey, "false")
+      try GraftSession.withConfs(df.sparkSession)(noData: _*) {
         val q = df.writeStream.format("memory").queryName(qname)
           .outputMode(mode).option("checkpointLocation", ckpt.toString).start()
         try {
@@ -89,15 +88,7 @@ object StreamingExec {
           val withData = progress.count(_.numInputRows > 0)
           (drops, withData)
         } finally q.stop()
-      } finally {
-        if (!finalizeNoData) {
-          ndPrev match {
-            case Some(v) => df.sparkSession.conf.set(ndKey, v)
-            case None => df.sparkSession.conf.unset(ndKey)
-          }
-        }
-        deleteRecursively(ckpt)
-      }
+      } finally deleteRecursively(ckpt)
     require(dropped == 0L,
       s"streaming run dropped $dropped rows by watermark — result would be silently wrong")
     (df.sparkSession.table(qname), dropped, dataBatches)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.functions.{Curation, Dedup, Sampling, TextFunctions => TF}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation pipeline over the documents corpus — the
@@ -19,9 +18,7 @@ object CurationDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_curation")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = graft.Tables.documents(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `explain("formatted")` for every SparkEntry query to
@@ -12,12 +11,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.drop(1).headOption.getOrElse("/tmp/graft_plans")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.autoBroadcastJoinThreshold", s"${64 * 1024 * 1024}")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.sources.MdioWriter
 import graft.spec.MdioSpec
-import org.apache.spark.sql.SparkSession
 
 /** Writes a small demo MDIO/Zarr-v2 dataset to argv(0) (default
   * /tmp/mdio_demo) — used by the cross-implementation interop check
@@ -11,9 +10,7 @@ import org.apache.spark.sql.SparkSession
 object MdioDemo {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/mdio_demo")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(2).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -92,9 +92,7 @@ object SeismicDemo {
 
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/graft_seismic/survey.mdio")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, path)
     val cube = open(spark, path)

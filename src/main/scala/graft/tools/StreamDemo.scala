@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Live smoke-drive of the streaming surface: rate source → synthetic
@@ -9,9 +8,7 @@ import org.apache.spark.sql.functions._
   * state against a genuinely unbounded source (not MemoryStream). */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder(2).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val events = spark.readStream.format("rate").option("rowsPerSecond", 500).load()

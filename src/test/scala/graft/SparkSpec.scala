@@ -9,19 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * inherit a stopped context). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // engine-standard exclusion (see Bench.scala): InferFiltersFromGenerate
-      // only re-evaluates computed kernel generators under inferred filters
-      // in this engine; tests run the same plans the bench/verify sessions do
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

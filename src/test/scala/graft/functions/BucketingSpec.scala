@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class BucketingSpec extends SparkSpec {
@@ -11,9 +11,8 @@ class BucketingSpec extends SparkSpec {
     val b = (1 to 3000).map(i => (i.toLong % 97, i * 2)).toDF("k", "vb")
     Bucketing.writeBucketed(a, "k", 8, "graft_bucket_a")
     Bucketing.writeBucketed(b, "k", 8, "graft_bucket_b")
-    try {
-      // disable auto-broadcast so the test sees the SMJ path a big-big join takes
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
+    // disable auto-broadcast so the test sees the SMJ path a big-big join takes
+    try GraftSession.withConfs(spark)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.cojoin(spark, "graft_bucket_a", "graft_bucket_b", "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
@@ -21,7 +20,6 @@ class BucketingSpec extends SparkSpec {
       val expected = a.join(b, Seq("k")).count()
       assert(joined.count() == expected)
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_a")
       spark.sql("DROP TABLE IF EXISTS graft_bucket_b")
     }

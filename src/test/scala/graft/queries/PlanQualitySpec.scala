@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** Regression tests for the plan shapes the engine's scale posture depends
   * on — a correct result with a degraded plan (lost pushdown, dropped
@@ -270,14 +270,11 @@ class PlanQualitySpec extends SparkSpec {
     // pin the MECHANISM by loosening them and forcing the join to shuffle
     // — if a Spark upgrade or a query rewrite makes our shapes ineligible
     // (e.g. a non-equi key sneaks in), this breaks.
-    val confs = Seq(
+    GraftSession.withConfs(spark)(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       import org.apache.spark.sql.functions._
       val li = graft.Tables.lineitem(spark, sf)
       val sel = graft.Tables.orders(spark, sf)
@@ -287,9 +284,6 @@ class PlanQualitySpec extends SparkSpec {
       val p = q.queryExecution.optimizedPlan.toString
       assert(p.contains("might_contain") || p.contains("bloom_filter"),
         "runtime bloom filter was not injected:\n" + p.take(800))
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.spec.MdioSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -36,20 +36,11 @@ class MdioCopartitionSpec extends SparkSpec {
     dir
   }
 
-  private def withSpjConfs[A](body: => A): A = {
-    val saved = Seq(
-      "spark.graft.scan.keyedPartitions" -> spark.conf.getOption("spark.graft.scan.keyedPartitions"),
-      "spark.sql.sources.v2.bucketing.enabled" -> spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled"),
-      "spark.sql.autoBroadcastJoinThreshold" -> spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.graft.scan.keyedPartitions", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a real join
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withSpjConfs[A](body: => A): A =
+    GraftSession.withConfs(spark)(
+      "spark.graft.scan.keyedPartitions" -> "true",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body) // -1: force a real join
 
   test("co-gridded catalog tables join with zero exchanges, exact results") {
     val dirA = create("image")

@@ -11,7 +11,17 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/5 full test suite =="
+echo "== 1/6 one session builder =="
+# every engine session comes from graft.GraftSession.builder(cpus)
+stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
+if [ -n "$stray" ]; then
+  echo "SESSION LINT RED: SparkSession.builder outside GraftSession.scala:"; echo "$stray"
+  fail=1
+else
+  echo "SparkSession.builder only in GraftSession.scala"
+fi
+
+echo "== 2/6 full test suite =="
 if ! sbt -batch test > "$OUT/test.log" 2>&1; then
   echo "SBT TEST RED:"; grep -E "\*\*\* FAILED|TESTS FAILED|error\]" "$OUT/test.log" | tail -20
   fail=1
@@ -19,13 +29,13 @@ else
   grep -E "Tests: succeeded" "$OUT/test.log" | tail -1
 fi
 
-echo "== 2/5 Verify (every query) at $SF =="
+echo "== 3/6 Verify (every query) at $SF =="
 if ! sbt -batch "runMain graft.Verify $SF $OUT/verify" > "$OUT/verify.log" 2>&1; then
   echo "VERIFY RED:"; grep -E "\[verify\]" "$OUT/verify.log" | tail -20
   fail=1
 fi
 
-echo "== 3/5 DuckDB oracle compare =="
+echo "== 4/6 DuckDB oracle compare =="
 if ! python3 tools/check_correctness.py "$SF" "$OUT/verify" > "$OUT/oracle.log" 2>&1; then
   echo "ORACLE RED:"; grep -vE "^ok " "$OUT/oracle.log" | tail -20
   fail=1
@@ -33,7 +43,7 @@ else
   tail -1 "$OUT/oracle.log"
 fi
 
-echo "== 4/5 perfbench smoke (every workload) =="
+echo "== 5/6 perfbench smoke (every workload) =="
 for w in volume_rw slice_mix query_mix; do
   if ! python3 perfbench/run.py --workload "$w" --seed 1 --seconds 1 --smoke \
       > "$OUT/perfbench_$w.log" 2>&1; then
@@ -44,7 +54,7 @@ for w in volume_rw slice_mix query_mix; do
   fi
 done
 
-echo "== 5/5 zarr v2 + v3 interop on MdioDemo output =="
+echo "== 6/6 zarr v2 + v3 interop on MdioDemo output =="
 if ! sbt -batch "runMain graft.tools.MdioDemo $OUT/mdio_demo" > "$OUT/demo.log" 2>&1; then
   echo "MDIODEMO RED:"; grep -E "error\]|Exception" "$OUT/demo.log" | tail -20
   fail=1
