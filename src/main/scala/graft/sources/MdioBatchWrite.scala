@@ -25,8 +25,11 @@ import org.apache.spark.sql.types._
   *
   * With `aligned=true` the writer trusts the caller's partitioning; lying
   * reproduces the reference's UB (a chunk written by two tasks —
-  * last-writer-wins). [[MdioWriter.writeVariable]] runs the same chunk
-  * writer ([[MdioDataWriter]]) behind its own owner-id shuffle.
+  * last-writer-wins). [[MdioWriter.insertAligned]] and
+  * [[MdioWriter.writeVariable]] do not come through here: they run the same
+  * chunk writer ([[MdioDataWriter]]) behind their owner shuffle of chunk
+  * fragments, and this sink keeps the row path — serial, `aligned` and
+  * catalog writes.
   *
   * Cell-level merge semantics match the reference's accessor writes:
   * partial-chunk writes READ-MODIFY-WRITE — an existing chunk's
@@ -256,7 +259,7 @@ final case class MdioBatchWrite(path: String, dims: Seq[String],
                        math.max(1, math.min(
                          inline.size / MdioBatchWrite.InlineStatRows + 1,
                          sc.defaultParallelism))))
-          MdioStatsPublish.publishRows(session.get, varDirStr, hc, grid, rows)
+          MdioStatsPublish.publishRows(session.get, hc, Seq(varDirStr -> grid), rows.map(0 -> _))
         } else {
           // small write (or no session to run a job): driver-side refresh
           val rows = inline ++ frags.flatMap(f =>
@@ -352,8 +355,11 @@ private final case class MdioStatsCommit(
   * Thanks to the declared clustering, a chunk is owned by exactly one
   * task — no cross-task merge is ever needed. This is the one chunk
   * writer: the DSv2 sink creates one per task through
-  * [[MdioDataWriterFactory]], and [[MdioWriter.writeVariable]] runs one in
-  * each partition of its owner-id shuffle. */
+  * [[MdioDataWriterFactory]] and feeds it rows ([[write]]); the owner
+  * shuffle of [[MdioWriter.writeVariable]] and [[MdioWriter.insertAligned]]
+  * packs cells into chunk fragments with one ([[pack]]) on the map side and
+  * merges them into another ([[merge]]) in each owner task. Both paths
+  * fill the same seeded buffers with the same stored values. */
 final class MdioDataWriter(path: String, dims: Array[String], schema: StructType,
                            vars: Array[(String, ZarrMeta.ArrayMeta)],
                            inlineStatRows: Int = MdioBatchWrite.InlineStatRows,
@@ -433,19 +439,20 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
   // the reference's merging accessor writes. A sharded variable's shard
   // object is read once and serves both the seeds and the carried-over
   // inner chunks.
-  private val source = new ChunkSource(wholeShards = true)
+  private lazy val source = new ChunkSource(wholeShards = true)
   private def existing(v: Int, cid: Long): Array[Byte] =
     source.fetch(vars(v)._2, varDir(v), anchor.chunkCoords(cid).toSeq)
 
+  // (java.util.Arrays.fill: Scala's generic Array.fill boxes every cell)
   private def seedD(v: Int, cid: Long, width: Int): Array[Double] = {
     val bytes = existing(v, cid)
-    if (bytes == null) Array.fill(chunkLen * width)(fills(v))
+    if (bytes == null) { val a = new Array[Double](chunkLen * width); java.util.Arrays.fill(a, fills(v)); a }
     else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Double]]
   }
 
   private def seedL(v: Int, cid: Long): Array[Long] = {
     val bytes = existing(v, cid)
-    if (bytes == null) Array.fill(chunkLen)(longFills(v))
+    if (bytes == null) { val a = new Array[Long](chunkLen); java.util.Arrays.fill(a, longFills(v)); a }
     else ChunkSource.decode(vars(v)._2, bytes).asInstanceOf[Array[Long]]
   }
 
@@ -455,113 +462,252 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
     else ChunkSource.decompress(vars(v)._2, bytes)
   }
 
+  private def bufferD(v: Int, cid: Long): Array[Double] =
+    bufD(v).getOrElseUpdate(cid, seedD(v, cid, if (kinds(v) == 'c') 2 else 1))
+  private def bufferL(v: Int, cid: Long): Array[Long] = bufL(v).getOrElseUpdate(cid, seedL(v, cid))
+  private def bufferB(v: Int, cid: Long): Array[Byte] =
+    bufB(v).getOrElseUpdate(cid, seedB(v, cid, recSizes(v)))
+
   // record-dtype layout per variable (null when not a record dtype)
   private val recFields: Array[Seq[(String, String)]] = vars.map(_._2.fields.orNull)
   private val recSizes: Array[Int] = vars.map { case (_, m) =>
     m.fields.map(_.map(f => ChunkCodec.elemSize(f._2)).sum).getOrElse(0)
   }
 
-  override def write(row: InternalRow): Unit = {
+  // ---- one cell: where it lands and what it stores, shared by write()
+  // (the row path) and pack() (the fragment path)
+  private var cellOff = 0
+  private var cellCid = 0L
+  // per dim: the last coordinate seen and its chunk index and in-chunk
+  // position — rows mostly arrive in C order, so the outer dims repeat and
+  // the inner one steps by one, and neither needs a division
+  private val lastCoord = Array.fill(rank)(-2L)
+  private val lastQ = new Array[Long](rank)
+  private val lastR = new Array[Long](rank)
+
+  /** Sets [[cellOff]] (C-order offset in its chunk) and [[cellCid]]. */
+  private def locate(row: InternalRow): Unit = {
     var off = 0L
     var cid = 0L
     var stride = 1L
+    var gstride = 1L
     var i = rank - 1
     while (i >= 0) {
       val coord = row.getLong(dimIdx(i))
-      require(coord >= 0 && coord < shape(i),
-        s"coordinate $coord out of domain [0, ${shape(i)}) on dim ${dims(i)}")
-      off += (coord % chunks(i)) * stride
+      if (coord != lastCoord(i)) {
+        require(coord >= 0 && coord < shape(i),
+          s"coordinate $coord out of domain [0, ${shape(i)}) on dim ${dims(i)}")
+        if (coord == lastCoord(i) + 1 && lastR(i) + 1 < chunks(i)) lastR(i) += 1
+        else { lastQ(i) = coord / chunks(i); lastR(i) = coord % chunks(i) }
+        lastCoord(i) = coord
+      }
+      off += lastR(i) * stride
       stride *= chunks(i)
-      i -= 1
-    }
-    i = rank - 1
-    var gstride = 1L
-    while (i >= 0) {
-      cid += (row.getLong(dimIdx(i)) / chunks(i)) * gstride
+      cid += lastQ(i) * gstride
       gstride *= grid(i)
       i -= 1
     }
-    var v = 0
-    while (v < vars.length) {
-      // NULL means "leave this cell untouched": Spark's append resolution
-      // null-expands table columns the input DataFrame doesn't carry, so a
-      // partial-VARIABLE write arrives with the other variables all-null —
-      // skipping nulls is what keeps those variables' data intact.
-      val vi = varIdx(v)
-      if (row.isNullAt(vi)) { v += 1 }
-      else {
+    cellOff = off.toInt
+    cellCid = cid
+  }
+
+  /** Whether variable `v` carries a value in `row`. NULL means "leave this
+    * cell untouched": Spark's append resolution null-expands table columns
+    * the input DataFrame doesn't carry, so a partial-VARIABLE write arrives
+    * with the other variables all-null — skipping nulls is what keeps those
+    * variables' data intact. */
+  private def present(v: Int, row: InternalRow): Boolean =
+    !row.isNullAt(varIdx(v)) && {
       // checked on the first actual value, so a sharded variable merely
       // PRESENT in the table (null-expanded) never blocks its unsharded peers
       require(!shardUnsupported(v),
         s"sharded write supports float/integral dtypes, not '${vars(v)._2.dtype}' " +
           s"(variable '${vars(v)._1}')")
-      kinds(v) match {
-        case 'f' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 1))
-          val d = if (floatIn(v)) row.getFloat(vi).toDouble else row.getDouble(vi)
-          buf(off.toInt) = MdioDataWriter.round(d, roundWidth(v))
-        case 'c' =>
-          val buf = bufD(v).getOrElseUpdate(cid, seedD(v, cid, 2))
-          val s = row.getStruct(vi, 2)
-          buf(off.toInt * 2) = if (floatIn(v)) s.getFloat(0).toDouble else s.getDouble(0)
-          buf(off.toInt * 2 + 1) = if (floatIn(v)) s.getFloat(1).toDouble else s.getDouble(1)
-        case 'V' => // record dtype: pack struct fields little-endian
-          val fs = recFields(v)
-          val recSize = recSizes(v)
-          val buf = bufB(v).getOrElseUpdate(cid, seedB(v, cid, recSize))
-          val bb = java.nio.ByteBuffer.wrap(buf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val s = row.getStruct(vi, fs.size)
-          val sdt = valueTypes(v).asInstanceOf[StructType]
-          var base = off.toInt * recSize
-          var k = 0
-          while (k < fs.size) {
-            val ft = fs(k)._2
-            val es = ChunkCodec.elemSize(ft)
-            if (ft.charAt(ft.length - 2) == 'f') {
-              val d = sdt.fields(k).dataType match {
-                case FloatType => s.getFloat(k).toDouble
-                case _ => s.getDouble(k)
-              }
-              es match {
-                case 2 => bb.putShort(base, ChunkCodec.floatToHalf(d.toFloat))
-                case 4 => bb.putFloat(base, d.toFloat)
-                case _ => bb.putDouble(base, d)
-              }
-            } else {
-              val l = sdt.fields(k).dataType match {
-                case LongType => s.getLong(k)
-                case IntegerType => s.getInt(k).toLong
-                case ShortType => s.getShort(k).toLong
-                case ByteType => s.getByte(k).toLong
-                case BooleanType => if (s.getBoolean(k)) 1L else 0L
-                case _ => s.getLong(k)
-              }
-              es match {
-                case 1 => bb.put(base, l.toByte)
-                case 2 => bb.putShort(base, l.toShort)
-                case 4 => bb.putInt(base, l.toInt)
-                case _ => bb.putLong(base, l)
-              }
-            }
-            base += es
-            k += 1
-          }
-        case _ =>
-          val buf = bufL(v).getOrElseUpdate(cid, seedL(v, cid))
-          buf(off.toInt) = valueTypes(v) match {
-            case LongType => row.getLong(vi)
-            case IntegerType => row.getInt(vi).toLong
-            case ShortType => row.getShort(vi).toLong
-            case ByteType => row.getByte(vi).toLong
-            case BooleanType => if (row.getBoolean(vi)) 1L else 0L
-            case dt: DecimalType => // u64 two's-complement wrap
-              row.getDecimal(vi, dt.precision, dt.scale)
-                .toJavaBigDecimal.toBigInteger.longValue()
-            case _ => row.getLong(vi)
-          }
+      true
+    }
+
+  private def doubleAt(v: Int, row: InternalRow): Double = {
+    val d = if (floatIn(v)) row.getFloat(varIdx(v)).toDouble else row.getDouble(varIdx(v))
+    MdioDataWriter.round(d, roundWidth(v))
+  }
+
+  /** An integral value as the stored width keeps it, so the chunk stats
+    * describe what a reader gets back. */
+  private def longAt(v: Int, row: InternalRow): Long = {
+    val vi = varIdx(v)
+    val l = valueTypes(v) match {
+      case LongType => row.getLong(vi)
+      case IntegerType => row.getInt(vi).toLong
+      case ShortType => row.getShort(vi).toLong
+      case ByteType => row.getByte(vi).toLong
+      case BooleanType => if (row.getBoolean(vi)) 1L else 0L
+      case dt: DecimalType => // u64 two's-complement wrap
+        row.getDecimal(vi, dt.precision, dt.scale).toJavaBigDecimal.toBigInteger.longValue()
+      case _ => row.getLong(vi)
+    }
+    MdioDataWriter.narrow(l, kinds(v), vars(v)._2.elemSize)
+  }
+
+  private def complexAt(v: Int, row: InternalRow, buf: Array[Double], at: Int): Unit = {
+    val s = row.getStruct(varIdx(v), 2)
+    buf(at) = if (floatIn(v)) s.getFloat(0).toDouble else s.getDouble(0)
+    buf(at + 1) = if (floatIn(v)) s.getFloat(1).toDouble else s.getDouble(1)
+  }
+
+  /** Packs a record value's struct fields little-endian at `buf(base)`. */
+  private def recordAt(v: Int, row: InternalRow, buf: Array[Byte], base0: Int): Unit = {
+    val fs = recFields(v)
+    val bb = java.nio.ByteBuffer.wrap(buf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val s = row.getStruct(varIdx(v), fs.size)
+    val sdt = valueTypes(v).asInstanceOf[StructType]
+    var base = base0
+    var k = 0
+    while (k < fs.size) {
+      val ft = fs(k)._2
+      val es = ChunkCodec.elemSize(ft)
+      if (ft.charAt(ft.length - 2) == 'f') {
+        val d = sdt.fields(k).dataType match {
+          case FloatType => s.getFloat(k).toDouble
+          case _ => s.getDouble(k)
+        }
+        es match {
+          case 2 => bb.putShort(base, ChunkCodec.floatToHalf(d.toFloat))
+          case 4 => bb.putFloat(base, d.toFloat)
+          case _ => bb.putDouble(base, d)
+        }
+      } else {
+        val l = sdt.fields(k).dataType match {
+          case LongType => s.getLong(k)
+          case IntegerType => s.getInt(k).toLong
+          case ShortType => s.getShort(k).toLong
+          case ByteType => s.getByte(k).toLong
+          case BooleanType => if (s.getBoolean(k)) 1L else 0L
+          case _ => s.getLong(k)
+        }
+        es match {
+          case 1 => bb.put(base, l.toByte)
+          case 2 => bb.putShort(base, l.toShort)
+          case 4 => bb.putInt(base, l.toInt)
+          case _ => bb.putLong(base, l)
+        }
+      }
+      base += es
+      k += 1
+    }
+  }
+
+  override def write(row: InternalRow): Unit = {
+    locate(row)
+    val off = cellOff
+    val cid = cellCid
+    var v = 0
+    while (v < vars.length) {
+      if (present(v, row)) kinds(v) match {
+        case 'f' => bufferD(v, cid)(off) = doubleAt(v, row)
+        case 'c' => complexAt(v, row, bufferD(v, cid), off * 2)
+        case 'V' => recordAt(v, row, bufferB(v, cid), off * recSizes(v))
+        case _ => bufferL(v, cid)(off) = longAt(v, row)
       }
       v += 1
+    }
+  }
+
+  // ---- the fragment path: map tasks pack() their cells into per-chunk
+  // fragments, the owner shuffle routes each to the task owning its chunk
+  // (shard) file, and that task merge()s them into the same seeded buffers
+  // write() fills
+  private val ownSizes: Array[Long] = MdioWriteBuilder.ownershipSizes(vars.map(_._2).toSeq).toArray
+  private val ownStrides: Array[Long] = MdioWriter.ownerStrides(shape, ownSizes)
+
+  /** Owner id of chunk `cid`: the linear id of the ownership unit (whole
+    * shard or chunk of every variable) holding it. */
+  private def ownerOf(cid: Long): Long = {
+    val cc = anchor.chunkCoords(cid)
+    var o = 0L
+    var i = 0
+    while (i < rank) { o += cc(i) * chunks(i) / ownSizes(i) * ownStrides(i); i += 1 }
+    o
+  }
+
+  /** Map side of the owner shuffle: packs the non-NULL cells of `rows` into
+    * one [[MdioDataWriter.Fragment]] per (variable, chunk) and emits each as
+    * `(owner id, bytes)` — every pending fragment once
+    * [[MdioDataWriter.FragmentBudget]] bytes are held, and the rest when the
+    * input ends, so a task touching many chunks stays bounded. */
+  private[sources] def pack(rows: Iterator[InternalRow]): Iterator[(Long, Array[Byte])] =
+    new Iterator[(Long, Array[Byte])] {
+      private val pending = Array.fill(vars.length)(scala.collection.mutable.LongMap.empty[MdioDataWriter.Fragment])
+      private val last = new Array[MdioDataWriter.Fragment](vars.length) // the last one hit, per variable
+      private val ready = scala.collection.mutable.Queue[MdioDataWriter.Fragment]()
+      private var held = 0L
+
+      private def fragment(v: Int): MdioDataWriter.Fragment = {
+        if (last(v) == null || last(v).cid != cellCid)
+          last(v) = pending(v).getOrElseUpdate(cellCid,
+            new MdioDataWriter.Fragment(v, cellCid, kinds(v), if (kinds(v) == 'V') recSizes(v) else 1))
+        last(v)
       }
+
+      private def add(row: InternalRow): Unit = {
+        locate(row)
+        var v = 0
+        while (v < vars.length) {
+          if (present(v, row)) {
+            val f = fragment(v)
+            held += f.add(cellOff)
+            val at = f.n - 1
+            kinds(v) match {
+              case 'f' => f.d(at) = doubleAt(v, row)
+              case 'c' => complexAt(v, row, f.d, at * 2)
+              case 'V' => recordAt(v, row, f.b, at * recSizes(v))
+              case _ => f.l(at) = longAt(v, row)
+            }
+          }
+          v += 1
+        }
+      }
+
+      override def hasNext: Boolean = {
+        while (ready.isEmpty && rows.hasNext) {
+          while (held < MdioDataWriter.FragmentBudget && rows.hasNext) add(rows.next())
+          pending.foreach { p => ready ++= p.valuesIterator; p.clear() }
+          last.indices.foreach(last(_) = null)
+          held = 0L
+        }
+        ready.nonEmpty
+      }
+
+      override def next(): (Long, Array[Byte]) = {
+        val f = ready.dequeue()
+        ownerOf(f.cid) -> f.toBytes(vars(f.v)._2)
+      }
+    }
+
+  /** Reduce side of the owner shuffle: writes one packed fragment's cells
+    * into the chunk buffer they belong to, seeded as for [[write]]. */
+  private[sources] def merge(fragment: Array[Byte]): Unit = {
+    val bb = java.nio.ByteBuffer.wrap(fragment)
+    val v = bb.getInt()
+    val cid = bb.getLong()
+    val runs = bb.getInt()
+    val starts = Array.fill(runs)(bb.getInt())
+    val lens = Array.fill(runs)(bb.getInt())
+    val raw = java.util.Arrays.copyOfRange(fragment, bb.position(), fragment.length)
+    val dtype = vars(v)._2.dtype
+    def scatter(src: AnyRef, dst: AnyRef, width: Int): Unit = {
+      var pos = 0
+      var r = 0
+      while (r < runs) {
+        System.arraycopy(src, pos * width, dst, starts(r) * width, lens(r) * width)
+        pos += lens(r)
+        r += 1
+      }
+    }
+    kinds(v) match {
+      case 'f' => scatter(ChunkCodec.decodeDoubles(raw, dtype), bufferD(v, cid), 1)
+      case 'c' => scatter(ChunkCodec.decodeComplex(raw, dtype), bufferD(v, cid), 2)
+      case 'V' => scatter(raw, bufferB(v, cid), recSizes(v))
+      case _ => scatter(ChunkCodec.decodeLongs(raw, dtype), bufferL(v, cid), 1)
     }
   }
 
@@ -600,7 +746,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
       }
       val cids = (bufD(v).keysIterator ++ bufL(v).keysIterator ++ bufB(v).keysIterator).toSet
       if (m.shard.isEmpty) {
-        cids.foreach(cid => m.chunkFile(varDir(v), anchor.chunkCoords(cid).toSeq).write(encoded(cid)))
+        cids.foreach(cid => m.chunkFile(varDir(v), anchor.chunkCoords(cid).toSeq).replace(encoded(cid)))
       } else {
         // sharded: assemble each owned shard object whole — touched inner
         // chunks from the buffers, untouched ones carried over
@@ -613,7 +759,7 @@ final class MdioDataWriter(path: String, dims: Array[String], schema: StructType
           val parts = Array.tabulate(innerCount) { idx =>
             byIdx.get(idx).map(encoded).getOrElse(source.innerChunk(m, file, idx))
           }
-          file.write(ZarrMeta.buildShard(parts))
+          file.replace(ZarrMeta.buildShard(parts))
         }
         if (bySid.nonEmpty) shardIds += name -> bySid.keysIterator.toArray
       }
@@ -655,5 +801,84 @@ object MdioDataWriter {
     case 4 => d.toFloat.toDouble
     case 2 => ChunkCodec.halfToFloat(ChunkCodec.floatToHalf(d.toFloat)).toDouble
     case _ => d
+  }
+
+  /** `l` as an integral `kind` of `width` bytes stores it: truncated to the
+    * width, unsigned kinds zero-extended, bool as 0/1 — what
+    * [[ChunkCodec.decodeLongs]] returns for [[ChunkCodec.encodeLongs]]. */
+  private def narrow(l: Long, kind: Char, width: Int): Long =
+    if (kind == 'b') { if (l != 0L) 1L else 0L }
+    else if (kind == 'i') width match {
+      case 1 => l.toByte.toLong
+      case 2 => l.toShort.toLong
+      case 4 => l.toInt.toLong
+      case _ => l
+    } else width match {
+      case 1 => l & 0xffL
+      case 2 => l & 0xffffL
+      case 4 => l & 0xffffffffL
+      case _ => l
+    }
+
+  /** Bytes of packed cells a map task holds before it emits its fragments. */
+  private[sources] val FragmentBudget: Long = 16L << 20
+
+  /** A map task's pending cells of one chunk of variable `v`: C-order offset
+    * runs over the chunk, plus the values in cell order — doubles for float
+    * (one per cell) and complex (two), longs for integral kinds, packed
+    * record bytes (`width` per cell). [[toBytes]] stores the values in the
+    * variable's dtype, so the shuffle carries stored bytes, not cells. */
+  private[sources] final class Fragment(val v: Int, val cid: Long, kind: Char, width: Int) {
+    private val perCell = if (kind == 'c') 2 else 1
+    private val cellBytes = if (kind == 'V') width else 8 * perCell
+    private var starts = new Array[Int](4)
+    private var lens = new Array[Int](4)
+    private var runs = 0
+    private var end = -1
+    var n = 0
+    var d: Array[Double] = if (kind == 'f' || kind == 'c') new Array[Double](16 * perCell) else null
+    var b: Array[Byte] = if (kind == 'V') new Array[Byte](16 * width) else null
+    var l: Array[Long] = if (d == null && b == null) new Array[Long](16) else null
+
+    /** Appends the cell at chunk offset `off`, whose value goes in slot
+      * `n - 1`; returns the bytes this adds. */
+    def add(off: Int): Long = {
+      var added = cellBytes.toLong
+      if (runs > 0 && off == end) lens(runs - 1) += 1
+      else {
+        if (runs == starts.length) {
+          starts = java.util.Arrays.copyOf(starts, runs * 2)
+          lens = java.util.Arrays.copyOf(lens, runs * 2)
+        }
+        starts(runs) = off
+        lens(runs) = 1
+        runs += 1
+        added += 8
+      }
+      end = off + 1
+      n += 1
+      if (d != null && n * perCell > d.length) d = java.util.Arrays.copyOf(d, d.length * 2)
+      if (b != null && n * width > b.length) b = java.util.Arrays.copyOf(b, b.length * 2)
+      if (l != null && n > l.length) l = java.util.Arrays.copyOf(l, l.length * 2)
+      added
+    }
+
+    /** `[v][cid][runs][run starts][run lengths][values in m's dtype]`, the
+      * layout [[MdioDataWriter.merge]] reads. */
+    def toBytes(m: ZarrMeta.ArrayMeta): Array[Byte] = {
+      val values = kind match {
+        case 'f' => ChunkCodec.encodeDoubles(java.util.Arrays.copyOf(d, n), m.dtype)
+        case 'c' => ChunkCodec.encodeComplex(java.util.Arrays.copyOf(d, 2 * n), m.dtype)
+        case 'V' => java.util.Arrays.copyOf(b, n * width)
+        case _ => ChunkCodec.encodeLongs(java.util.Arrays.copyOf(l, n), m.dtype)
+      }
+      val bb = java.nio.ByteBuffer.allocate(16 + 8 * runs + values.length)
+      bb.putInt(v).putLong(cid).putInt(runs)
+      var r = 0
+      while (r < runs) { bb.putInt(starts(r)); r += 1 }
+      r = 0
+      while (r < runs) { bb.putInt(lens(r)); r += 1 }
+      bb.put(values).array()
+    }
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** EXECUTOR-SIDE publication of the [[MdioChunkStats]] sidecar — the
   * distributed form of [[MdioChunkStats.refresh]] used by every
-  * stats-aware write path (the chunk-shuffle writer, the sharded writer,
-  * the DSv2 sink's fragment commit).
+  * stats-aware write path (the owner shuffle of `writeVariable` and
+  * `insertAligned`, the DSv2 sink's stat-fragment commit).
   *
   * Why it exists: a stats-aware write produces exactly one
   * [[MdioWriter.ChunkStatRow]] per touched chunk. Collecting those to the
@@ -48,80 +48,90 @@ object MdioStatsPublish {
   def gridSpan(grid: Array[Long]): Long =
     MdioChunkStats.deriveSpanOf(grid.product, grid.head - 1)
 
-  /** Publish the sidecar for the stat rows of one write job (see object
-    * doc). This is the terminal ACTION of the write: `rows`' lineage
-    * includes the chunk-writing map stage, which executes here. */
-  def publishRows(spark: SparkSession, varDirStr: String, hconf: HConf,
-                  grid: Array[Long], rows: RDD[MdioWriter.ChunkStatRow]): Unit =
-    publishEntries(spark, varDirStr, hconf,
-      rows.flatMap(entryOf(_, grid)), gridSpan(grid))
+  /** Publish the sidecars for the stat rows of one write job (see object
+    * doc): row `(t, sr)` belongs to `targets(t)` = (variable directory,
+    * chunk grid). This is the terminal ACTION of the write: `rows`' lineage
+    * includes the chunk-writing stages, which execute here, and one job
+    * publishes every target. Each target's generation is bumped BEFORE the
+    * action, so a job that dies midway leaves every sidecar reading stale,
+    * never wrongly current. */
+  private[sources] def publishRows(spark: SparkSession, hconf: HConf, targets: Seq[(String, Array[Long])],
+                  rows: RDD[(Int, MdioWriter.ChunkStatRow)]): Unit = {
+    val grids = targets.map(_._2).toArray
+    publishEntries(spark, hconf, targets.map { case (d, grid) => d -> gridSpan(grid) },
+      rows.flatMap { case (t, sr) => entryOf(sr, grids(t)).map(t -> _) })
+  }
 
-  /** Publish `entries` (fresh per-chunk sidecar entries, keyed by chunk
-    * key) against whatever prior state `varDir` holds, entirely from
-    * executors except the generation bump and the manifest commit.
-    * `freshSpan` is the span a from-scratch publish uses. */
+  /** [[publishEntries]] of one variable directory. */
   def publishEntries(spark: SparkSession, varDirStr: String, hconf: HConf,
-                     entries: RDD[(String, MdioChunkStats.Entry)],
-                     freshSpan: Long): Unit = {
-    val varDir = VPath(varDirStr)
-    val gen = MdioChunkStats.generation(varDir)
-    val mOpt = MdioChunkStats.readManifest(varDir)
-    mOpt match {
-      case Some(m) if m.gen == gen && m.legacy.nonEmpty =>
-        // legacy monolith migration: the monolith was driver-written in the
-        // pre-shard era, so a one-time driver-side merge is no worse than
-        // the file that already exists; refresh() migrates it to shards.
-        // The collect RUNS the chunk-writing lineage — if it dies midway
-        // the store is already part-mutated, so the stats must not keep
-        // reading current over pre-write bounds (the other branches bump
-        // BEFORE their action for exactly this reason).
-        val collected =
-          try entries.collect().toMap
-          catch { case t: Throwable => MdioChunkStats.bump(varDir); throw t }
-        MdioChunkStats.refresh(varDir, collected)
-      case Some(m) if m.gen == gen =>
-        // incremental against a current sharded prior: only touched shards
-        // rewrite, each reduce task merging its prior shard's entries
-        val next = MdioChunkStats.bump(varDir)
-        val written = writeShards(entries, varDirStr, hconf, m.span, next, m.shards)
-        val merged = m.shards ++ written
-        MdioChunkStats.writeManifest(varDir, next, m.span, merged)
-        // span drift (store grew far past its first-publish span): re-derive
-        // with a distributed full republish — still never O(store) driver
-        if (written.valuesIterator.exists(
-            _.count > MdioChunkStats.SpanDriftFactor * MdioChunkStats.ShardTargetEntries))
-          respan(spark, varDirStr, hconf, m.span, merged)
-      case prior =>
-        // stale or absent prior: nothing carries over; GC whatever shard
-        // files a dead manifest still listed
-        val next = MdioChunkStats.bump(varDir)
-        val written = writeShards(entries, varDirStr, hconf, freshSpan, next, Map.empty)
-        MdioChunkStats.writeManifest(varDir, next, freshSpan, written)
-        MdioChunkStats.gcShards(varDir,
-          prior.map(_.shards.keySet).getOrElse(Set.empty), written.keySet)
+                     entries: RDD[(String, MdioChunkStats.Entry)], freshSpan: Long): Unit =
+    publishEntries(spark, hconf, Seq(varDirStr -> freshSpan), entries.map(0 -> _))
+
+  /** Publish fresh per-chunk sidecar entries — `(t, (chunk key, entry))`
+    * for `targets(t)` = (variable directory, span a from-scratch publish
+    * uses) — against whatever prior state each directory holds, entirely
+    * from executors except the generation bumps and the manifest commits. */
+  private[sources] def publishEntries(spark: SparkSession, hconf: HConf, targets: Seq[(String, Long)],
+                     entries: RDD[(Int, (String, MdioChunkStats.Entry))]): Unit = {
+    val plans = targets.map { case (varDirStr, freshSpan) =>
+      val varDir = VPath(varDirStr)
+      // a legacy monolith was driver-written in the pre-shard era; migrating
+      // it to shards on the driver first costs no more than the file that
+      // already exists, and leaves the incremental case below
+      if (MdioChunkStats.currentManifest(varDir).exists(_.legacy.nonEmpty))
+        MdioChunkStats.refresh(varDir, Map.empty)
+      // incremental against a current sharded prior: only touched shards
+      // rewrite, each reduce task merging its prior shard's entries; a stale
+      // or absent prior carries nothing over
+      val prior = MdioChunkStats.currentManifest(varDir)
+      Target(varDirStr, prior.map(_.span).getOrElse(freshSpan),
+        MdioChunkStats.bump(varDir), prior.map(_.shards).getOrElse(Map.empty),
+        MdioChunkStats.readManifest(varDir).map(_.shards.keySet).getOrElse(Set.empty))
+    }
+    val written = writeShards(entries, plans, hconf)
+    plans.zipWithIndex.foreach { case (p, t) =>
+      val varDir = VPath(p.varDirStr)
+      val mine = written.collect { case ((`t`, sid), sm) => sid -> sm }
+      val merged = p.prior ++ mine
+      MdioChunkStats.writeManifest(varDir, p.gen, p.span, merged)
+      // GC whatever shard files a dead manifest still listed
+      if (p.prior.isEmpty) MdioChunkStats.gcShards(varDir, p.listed, mine.keySet)
+      // span drift (store grew far past its first-publish span): re-derive
+      // with a distributed full republish — still never O(store) driver
+      else if (mine.valuesIterator.exists(
+          _.count > MdioChunkStats.SpanDriftFactor * MdioChunkStats.ShardTargetEntries))
+        respan(spark, p.varDirStr, hconf, p.span, merged)
     }
   }
 
-  /** The reduce stage: shuffle fresh entries by stats-shard id, write each
-    * owned shard file at generation `gen` (merging the prior shard's
-    * entries when the prior manifest listed it), and return one summary
-    * per touched shard. `prior` is driver-small (one record per shard,
-    * ~400 at the 100 TB envelope) and rides in the task closure. */
-  private def writeShards(entries: RDD[(String, MdioChunkStats.Entry)],
-                          varDirStr: String, hconf: HConf, span: Long, gen: Long,
-                          prior: Map[Long, MdioChunkStats.ShardMeta])
-      : Map[Long, MdioChunkStats.ShardMeta] = {
+  /** One sidecar a publish writes: its new generation `gen`, its shard span,
+    * the current prior's shard records (empty = a fresh publish) and the
+    * shard ids any prior manifest listed. */
+  private final case class Target(varDirStr: String, span: Long, gen: Long,
+                                  prior: Map[Long, MdioChunkStats.ShardMeta],
+                                  listed: Set[Long])
+
+  /** The reduce stage: shuffle fresh entries of target `t` by (t,
+    * stats-shard id), write each owned shard file at the target's
+    * generation (merging the prior shard's entries when its prior manifest
+    * listed it), and return one summary per touched (target, shard). The
+    * targets are driver-small (one record per shard, ~400 at the 100 TB
+    * envelope) and ride in the task closure. */
+  private def writeShards(entries: RDD[(Int, (String, MdioChunkStats.Entry))],
+                          targets: Seq[Target], hconf: HConf)
+      : Map[(Int, Long), MdioChunkStats.ShardMeta] = {
     val parts = math.max(1, entries.sparkContext.defaultParallelism)
     entries
-      .map { case (k, e) => MdioChunkStats.shardOf(k, span) -> (k, e) }
-      .groupByKey(parts) // one owner task per shard id: no write races
-      .map { case (sid, kvs) =>
+      .map { case (t, (k, e)) => (t, MdioChunkStats.shardOf(k, targets(t).span)) -> (k, e) }
+      .groupByKey(parts) // one owner task per shard file: no write races
+      .map { case ((t, sid), kvs) =>
         VPath.install(hconf.value) // executor JVMs have no SparkSession
-        val varDir = VPath(varDirStr)
-        val carried = prior.get(sid)
+        val tg = targets(t)
+        val varDir = VPath(tg.varDirStr)
+        val carried = tg.prior.get(sid)
           .map(sm => MdioChunkStats.readShard(varDir, sid, sm.gen))
           .getOrElse(Map.empty[String, MdioChunkStats.Entry])
-        sid -> MdioChunkStats.writeShardFile(varDir, sid, gen, carried ++ kvs.toMap)
+        (t, sid) -> MdioChunkStats.writeShardFile(varDir, sid, tg.gen, carried ++ kvs.toMap)
       }
       .collect().toMap
   }
@@ -223,7 +233,9 @@ object MdioStatsPublish {
     val span2 = MdioChunkStats.deriveSpanOf(count, maxLead)
     if (span2 == curSpan || count == 0L) return
     val next = MdioChunkStats.bump(varDir)
-    val written = writeShards(all, varDirStr, hconf, span2, next, Map.empty)
+    val written = writeShards(all.map(0 -> _),
+      Seq(Target(varDirStr, span2, next, Map.empty, shards.keySet)), hconf)
+      .map { case ((_, sid), sm) => sid -> sm }
     MdioChunkStats.writeManifest(varDir, next, span2, written)
     MdioChunkStats.gcShards(varDir, shards.keySet, written.keySet)
   }

@@ -12,15 +12,20 @@ import graft.zarr.VPath
   * variable writes, metadata commit, trim, delete (SURVEY §2.1
   * S2/S6/S9/S10/S11/S12).
   *
-  * The reference makes misaligned writes undefined behavior
-  * (USER_GUIDE.md "Efficient Assignment"); here alignment is a SHUFFLE
-  * CONTRACT instead: [[writeVariable]] repartitions rows by chunk id (shard
-  * id for sharded variables), so exactly one task owns each chunk or shard
-  * file — no torn chunks, no read-modify-write races, at any cluster size.
-  * Every chunk, whichever API wrote it, is written by the DSv2 sink's
-  * [[MdioDataWriter]]. Metadata writes happen on the driver after all
-  * tasks succeed (the reference's WaitAllFuture all-or-nothing shape,
-  * mdio/dataset.h:1030-1040).
+  * The reference writes whole chunk-aligned buffers through one
+  * TensorStore write and makes misaligned writes undefined behavior
+  * (mdio/variable.h:1127-1134, USER_GUIDE.md "Efficient Assignment"); here
+  * alignment is a SHUFFLE CONTRACT instead. [[writeVariable]] and
+  * [[insertAligned]] share one owner shuffle ([[writeOwned]]): map tasks
+  * pack their cells into per-chunk fragments of stored values, and the
+  * fragments route by owner id — the chunk id, or the shard id for
+  * sharded variables — through a direct `owner id mod n` partitioner, so
+  * exactly one task owns each chunk or shard file and no two owners share
+  * a task while they fit: no torn chunks, no read-modify-write races, at
+  * any cluster size. Every chunk, whichever API wrote it, is written by
+  * the DSv2 sink's [[MdioDataWriter]]. Metadata writes happen on the
+  * driver after all tasks succeed (the reference's WaitAllFuture
+  * all-or-nothing shape, mdio/dataset.h:1030-1040).
   */
 object MdioWriter {
 
@@ -345,8 +350,8 @@ object MdioWriter {
     *
     * Scale shape: the source scan pushes the region bounds into the
     * connector (only overlapping chunks are read at all), the index shift
-    * is a narrow map, and [[writeVariable]]'s chunk-id shuffle clusters
-    * rows to one task per destination chunk — extracting a 1 TB subcube
+    * is a narrow map, and [[writeVariable]]'s owner shuffle routes the
+    * cells to one task per destination chunk — extracting a 1 TB subcube
     * from a 100 TB survey reads and shuffles 1 TB, driver stays O(1).
     *
     * Out-of-domain regions: the DEFAULT is to reject loud — a deliberate
@@ -623,13 +628,17 @@ object MdioWriter {
     * or a NULL `re`/`im` half or record field inside a non-NULL value,
     * fails the job before any chunk is written.
     *
-    * Plan shape: one narrow projection, one shuffle clustering rows by
-    * OWNER id — the chunk id, or the shard id for a `sharding_indexed`
-    * variable — so one task owns each chunk or shard file, and in each
-    * task the sink's [[MdioDataWriter]] buffers, encodes and writes the
-    * chunks it owns. At 100 TB the shuffle payload is the data itself once —
-    * matching any columnar writer's cost — and chunk files stream out in
-    * parallel across all executors. */
+    * Plan shape: one narrow projection, then the owner shuffle
+    * ([[writeOwned]]): each map task packs its cells into one fragment per
+    * chunk — offset runs plus the values in the stored dtype, flushed at a
+    * fixed per-task byte budget — and the fragments route by OWNER id (the
+    * chunk id, or the shard id for a `sharding_indexed` variable, mod the
+    * task count), so one task owns each chunk or shard file and in it the
+    * sink's [[MdioDataWriter]] merges, encodes and writes the chunks it
+    * owns; the stat rows then publish the stats sidecar in the same job.
+    * The shuffle carries the stored bytes once — a float32 volume ships
+    * ~1× its size, not a long-form row per cell — and chunk files stream
+    * out in parallel across all executors. */
   def writeVariable(spark: SparkSession, df: DataFrame, path: String, variable: String): Unit = {
     val root = ZarrMeta.path(path)
     val (_, arrays) = ZarrMeta.readGroup(root)
@@ -650,8 +659,7 @@ object MdioWriter {
     val kind = MdioDataWriter.kindOf(meta)
     // the sink's NULL contract covers a whole value only: a NULL inside one
     // (or a NULL coordinate) fails in the projection, before the shuffle
-    def nonNull(e: Column, what: String): Column =
-      when(e.isNull, raise_error(lit(s"NULL $what writing '$variable'"))).otherwise(e)
+    def nonNull(e: Column, what: String): Column = nonNullOr(e, s"$what writing '$variable'")
     val value = kind match {
       case 'f' => c.cast("double")
       case 'c' => when(c.isNotNull, struct(nonNull(c.getField("re"), "re"),
@@ -669,45 +677,84 @@ object MdioWriter {
     }
     val projected = df.select(
       dims.map(d => nonNull(col(d).cast("long"), s"coordinate on dim '$d'").as(d)) :+ value.as(valueCol): _*)
+    writeOwned(spark, projected, path, dims, Seq(variable -> meta))
+  }
 
-    // owner id = C-order linearized chunk (or shard) coordinate. `div` is
-    // exact integer division — SQL `/` would detour through double and can
-    // misplace rows for coordinates above 2^53.
-    val own = meta.shard.getOrElse(meta.chunks)
-    val ownGrid = if (meta.shard.isDefined) meta.shardGrid else meta.chunkGrid
-    val ownerId = dims.zipWithIndex.map { case (d, i) =>
-      expr(s"`$d` div ${own(i)}") * lit(ownGrid.drop(i + 1).product)
-    }.reduce(_ + _)
-    val parts = math.min(ownGrid.product, math.max(spark.sparkContext.defaultParallelism.toLong, 1L)).toInt
+  /** `e`, or a `NULL <what>` error raised in the projection when it is NULL. */
+  private def nonNullOr(e: Column, what: String): Column =
+    when(e.isNull, raise_error(lit(s"NULL $what"))).otherwise(e)
+
+  /** Per-dim ownership-unit counts: `own` cells per unit over `shape`. */
+  private def ownerGrid(shape: Array[Long], own: Array[Long]): Array[Long] =
+    Array.tabulate(shape.length)(i => (shape(i) + own(i) - 1) / own(i))
+
+  /** C-order strides of [[ownerGrid]]: owner id = Σ (coord / own) · stride. */
+  private[sources] def ownerStrides(shape: Array[Long], own: Array[Long]): Array[Long] = {
+    val g = ownerGrid(shape, own)
+    Array.tabulate(g.length)(i => g.drop(i + 1).product)
+  }
+
+  /** Writer tasks for `owners` ownership units: one per unit up to the
+    * cluster's parallelism, so no two units share a task while they fit. */
+  private def ownerTasks(spark: SparkSession, owners: Long): Int =
+    math.max(1L, math.min(owners, spark.sparkContext.defaultParallelism.toLong)).toInt
+
+  /** The owner shuffle's partitioner: owner id mod n. Owner ids are dense
+    * from 0, so up to n owners land in n distinct tasks — a hash would
+    * collide some of them while other tasks idle. */
+  private final class OwnerPartitioner(n: Int) extends org.apache.spark.Partitioner {
+    override def numPartitions: Int = n
+    override def getPartition(key: Any): Int = java.lang.Math.floorMod(key.asInstanceOf[Long], n.toLong).toInt
+  }
+
+  /** The one owner shuffle behind [[writeVariable]] and [[insertAligned]].
+    * `projected` holds long `dims` columns plus one value column per
+    * variable of `vars` (all on `dims`), typed as [[MdioDataWriter]] reads
+    * them. Its map tasks [[MdioDataWriter.pack]] their cells into chunk
+    * fragments; the fragments shuffle by owner id ([[OwnerPartitioner]]),
+    * and in each reduce task an [[MdioDataWriter]] merges them into its
+    * seeded chunk buffers, then encodes, writes and reports stats as the
+    * sink does. The stat rows shuffle on into [[MdioStatsPublish]]: chunk
+    * files and stats sidecars are one job, run as one SQL execution of
+    * `projected` (its observed metrics and listeners see the write). */
+  private def writeOwned(spark: SparkSession, projected: DataFrame, path: String,
+                         dims: Seq[String], vars: Seq[(String, ZarrMeta.ArrayMeta)]): Unit = {
+    val root = ZarrMeta.path(path)
     val hc = graft.zarr.HConf.capture() // executor JVMs have no SparkSession
     val schema = projected.schema
     val dimArr = dims.toArray
-
-    // per-chunk value stats ride out of the write tasks for free: each task
-    // holds the FINAL post-read-modify-write chunk buffer, so its bounds are
-    // exact by construction. The rows NEVER collect to the driver (hence no
-    // inline cap to spill past): they shuffle by stats-shard id and the shard
-    // files are written from executors (MdioStatsPublish) — the driver sees
-    // only per-shard summaries. The chunk writes and the sidecar shard writes
-    // are ONE Spark job.
-    val statRows: org.apache.spark.rdd.RDD[ChunkStatRow] = projected
-      .repartition(parts, ownerId)
-      .queryExecution.toRdd.mapPartitions { rows =>
-        VPath.install(hc.value)
-        val writer = new MdioDataWriter(path, dimArr, schema, Array(variable -> meta),
-          inlineStatRows = Int.MaxValue)
-        val msg = try { rows.foreach(writer.write); writer.commit() } finally writer.close()
-        msg.asInstanceOf[MdioStatsCommit].stats.getOrElse(variable, Array.empty[ChunkStatRow]).iterator
-      }
-
-    val varDir = root.resolve(variable)
-    if (kind == 'c' || kind == 'V') {
-      // no stats for complex/record: bump BEFORE the action — the write
-      // mutates chunks in place, so a mid-job failure must already read as
-      // stale (the success end-state is the same stale generation)
-      MdioChunkStats.bump(varDir)
-      statRows.foreachPartition((_: Iterator[ChunkStatRow]) => ())
-    } else MdioStatsPublish.publishRows(spark, varDir.toString, hc, meta.chunkGrid.toArray, statRows)
+    val varArr = vars.toArray
+    val own = MdioWriteBuilder.ownershipSizes(vars.map(_._2)).toArray
+    val n = ownerTasks(spark, ownerGrid(vars.head._2.shape.toArray, own).product)
+    // complex/record chunks get no stats: bump BEFORE the action — the write
+    // mutates chunks in place, so a mid-job failure must already read as
+    // stale (the success end-state is the same stale generation). The
+    // publish bumps every other variable before its action too.
+    val (bounded, unbounded) = vars.partition { case (_, m) => m.fields.isEmpty && !m.isComplex }
+    unbounded.foreach { case (v, _) => MdioChunkStats.bump(root.resolve(v)) }
+    val slot = bounded.map(_._1).zipWithIndex.toMap
+    val qe = projected.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+        Some(s"mdio write ${vars.map(_._1).mkString(",")} at $path")) {
+      val statRows = qe.toRdd
+        .mapPartitions { rows =>
+          VPath.install(hc.value)
+          new MdioDataWriter(path, dimArr, schema, varArr).pack(rows)
+        }
+        .partitionBy(new OwnerPartitioner(n))
+        .mapPartitions { frags =>
+          VPath.install(hc.value)
+          // per-chunk stats ride out of the write tasks for free: each task
+          // holds the FINAL post-read-modify-write chunk buffers, so their
+          // bounds are exact; the rows never collect to the driver
+          val writer = new MdioDataWriter(path, dimArr, schema, varArr, inlineStatRows = Int.MaxValue)
+          val msg = try { frags.foreach(f => writer.merge(f._2)); writer.commit() } finally writer.close()
+          msg.asInstanceOf[MdioStatsCommit].stats.iterator.flatMap { case (v, rs) =>
+            rs.iterator.map(slot(v) -> _) }
+        }
+      MdioStatsPublish.publishRows(spark, hc,
+        bounded.map { case (v, m) => root.resolve(v).toString -> m.chunkGrid.toArray }, statRows)
+    }
   }
 
   /** S10 / F5 — update a variable's (or the group's, variable="") user
@@ -908,9 +955,9 @@ object MdioWriter {
     }
   }
   /** The variables of `path` that `df`'s columns actually cover (data
-    * variables whose name appears in the schema), used to scope DSv2
-    * writes on MULTI-TUPLE stores: without the restriction, schema
-    * inference sees variables on different dimension tuples (a 3-D cube
+    * variables whose name appears in the schema), used to scope
+    * [[insertAligned]] on MULTI-TUPLE stores: without the restriction, the
+    * table view sees variables on different dimension tuples (a 3-D cube
     * plus its 2-D geometry) and has no single table shape to offer. */
   private def writeTargets(df: DataFrame, path: String): Seq[String] = {
     val (_, arrays) = ZarrMeta.readGroup(ZarrMeta.path(path))
@@ -922,28 +969,47 @@ object MdioWriter {
     }.toSeq.sorted
   }
 
-  /** The pit-of-success parallel DSv2 write: repartitions `df` so each
-    * task owns whole chunks ([[repartitionByChunk]]), then writes with the
-    * alignment contract declared — one call, >1 writer task, no torn
-    * chunks. The write is scoped to the variables present in `df`'s
-    * schema, so it works unchanged on stores whose variables span several
-    * dimension tuples. The bare `df.write.format("mdio")` remains the
-    * safe-but-serial fallback (and logs a warning saying to use this). */
-  def insertAligned(df: DataFrame, path: String, mode: String = "append"): Unit =
-    repartitionByChunk(df, path)
-      .write.format("mdio").option("aligned", "true")
-      .option("variables", writeTargets(df, path).mkString(","))
-      .mode(mode).save(path)
+  /** The pit-of-success parallel write of a long-form DataFrame: the
+    * variables present in `df`'s schema are written through the one owner
+    * shuffle ([[writeOwned]], the same as [[writeVariable]]) as ONE job,
+    * however many variables `df` carries — so it works unchanged on stores
+    * whose variables span several dimension tuples. Columns resolve by
+    * name and cast to the sink's table types; a NULL value leaves its cell
+    * untouched and a NULL coordinate fails the job before any write. The
+    * end state is the sink's: stats sidecars published, the v2
+    * consolidated metadata refreshed, and on failure every written
+    * variable's stats read stale. `mode` is "append" or "overwrite", which
+    * write alike (whole chunks either way). The bare
+    * `df.write.format("mdio")` remains the safe-but-serial sink. */
+  def insertAligned(df: DataFrame, path: String, mode: String = "append"): Unit = {
+    require(Set("append", "overwrite")(mode.toLowerCase(java.util.Locale.ROOT)),
+      s"insertAligned writes in append or overwrite mode, not '$mode'")
+    val targets = writeTargets(df, path)
+    require(targets.nonEmpty, s"insertAligned: no data variable of $path among ${df.columns.mkString(", ")}")
+    val table = MdioTable(path, Some(targets))
+    val dims = table.dims
+    val projected = df.select(table.schema().fields.toSeq.map { f =>
+      if (dims.contains(f.name)) nonNullOr(col(f.name).cast("long"),
+        s"coordinate on dim '${f.name}' writing ${targets.mkString(", ")}").as(f.name)
+      else col(f.name).cast(f.dataType).as(f.name)
+    }: _*)
+    val root = ZarrMeta.path(path)
+    val (_, arrays) = ZarrMeta.readGroup(root)
+    writeOwned(df.sparkSession, projected, path, dims, targets.map(v => v -> arrays(v)._1))
+    if (ZarrMeta.detectVersion(root) == 2) ZarrMeta.consolidate(root)
+  }
 
   /** Repartition a long-form DataFrame so each task owns whole chunks of
     * the dataset at `path` — the explicit alignment step for the parallel
-    * DSv2 write (`.option("aligned", "true")`). Clustering key = the
-    * per-dim chunk starts `dim - (dim % ownSize)`, anchored on the
+    * DSv2 write (`.option("aligned", "true")`). Rows go to partition
+    * `owner id mod n` (`Dataset.repartitionById`), where the owner id is
+    * the C-order linear id of the row's ownership unit, anchored on the
     * variables `df` actually carries (those sharing the highest-rank
-    * anchor's dim tuple); `ownSize` per dim is the LCM of each carried
+    * anchor's dim tuple): per dim the unit is the LCM of each carried
     * variable's shard-or-chunk size, so `sharding_indexed` variables get
-    * whole-SHARD ownership (a shard object is written whole — chunk-start
-    * keys alone would tear it across tasks). */
+    * whole-SHARD ownership (a shard object is written whole). `n` is
+    * `partitions`, or by default one task per owner up to the cluster's
+    * parallelism — up to n owners land in n distinct tasks. */
   def repartitionByChunk(df: DataFrame, path: String, partitions: Int = 0): DataFrame = {
     val (_, arrays) = ZarrMeta.readGroup(ZarrMeta.path(path))
     val labeled = arrays.flatMap { case (name, (meta, attrs)) =>
@@ -956,13 +1022,17 @@ object MdioWriter {
     val anchor = pool.values.toSeq.sortBy(-_._2.size).headOption
       .getOrElse(throw new IllegalArgumentException(s"no data variables at $path"))
     val own = MdioWriteBuilder.ownershipSizes(
-      pool.values.toSeq.filter(_._2 == anchor._2).map(_._1))
-    val keys = anchor._2.zipWithIndex.map { case (d, i) =>
-      col(d).cast("long") - (col(d).cast("long") % lit(own(i)))
-    }
+      pool.values.toSeq.filter(_._2 == anchor._2).map(_._1)).toArray
+    val shape = anchor._1.shape.toArray
+    val strides = ownerStrides(shape, own)
+    // `div` is exact integer division — SQL `/` would detour through double
+    // and can misplace rows for coordinates above 2^53
+    val ownerId = anchor._2.zipWithIndex.map { case (d, i) =>
+      expr(s"CAST(`$d` AS BIGINT) div ${own(i)}") * lit(strides(i))
+    }.reduce(_ + _)
     val n = if (partitions > 0) partitions
-            else df.sparkSession.sparkContext.defaultParallelism
-    df.repartition(n, keys: _*)
+            else ownerTasks(df.sparkSession, ownerGrid(shape, own).product)
+    df.repartitionById(n, pmod(ownerId, lit(n.toLong)).cast("int"))
   }
 
   /** Current metadata generation of a dataset (0 when never stamped).

@@ -311,7 +311,8 @@ object Streams {
 
   /** foreachBatch sink landing micro-batches into an MDIO variable,
     * chunk-aligned (single-writer-per-chunk holds per micro-batch because
-    * writeVariable repartitions by chunk or shard id before writing). */
+    * writeVariable's owner shuffle routes every cell of a chunk or shard to
+    * one task). */
   def chunkAlignedSink(spark: SparkSession, path: String, variable: String)(
       batch: DataFrame, batchId: Long): Unit =
     graft.sources.MdioWriter.writeVariable(spark, batch, path, variable)

@@ -17,8 +17,10 @@ import scala.collection.mutable
   * between the arms, each through the noop sink; prints every arm's reps
   * and their min. With `--conf` the two arms are child sessions
   * (`newSession()`) of one context with `key` set to valA and valB — same
-  * JIT, same page cache. Without it there is one arm, and the jobs of its
-  * last rep are printed with their stages of 50 ms or more. The executed
+  * JIT, same page cache. Every job carries the description
+  * "<query> <arm> rep <i>" (rep 0 is the warm-up). Without `--conf` there
+  * is one arm, and the jobs of its last rep are printed with their SQL
+  * execution id and their stages of 50 ms or more. The executed
   * (post-AQE) plan of each arm's last rep goes to
   * /tmp/graft_exec_plans/<query>.txt. */
 object Profile {
@@ -36,7 +38,7 @@ object Profile {
     })
   }
 
-  private final case class Job(id: Int, desc: String, var ms: Long = -1,
+  private final case class Job(id: Int, desc: String, exec: String, var ms: Long = -1,
                                stages: mutable.Buffer[(Int, String, Long, Int)] = mutable.Buffer())
 
   /** Jobs and their completed stages while `capture` is on. */
@@ -47,9 +49,8 @@ object Profile {
     private val stageJob = mutable.Map[Int, Int]()
     def clear(): Unit = synchronized { jobs.clear(); starts.clear(); stageJob.clear() }
     override def onJobStart(js: SparkListenerJobStart): Unit = if (capture) synchronized {
-      val desc = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-      jobs(js.jobId) = Job(js.jobId, desc)
+      def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+      jobs(js.jobId) = Job(js.jobId, prop("spark.job.description"), prop("spark.sql.execution.id"))
       starts(js.jobId) = js.time
       js.stageIds.foreach(stageJob(_) = js.jobId)
     }
@@ -93,16 +94,19 @@ object Profile {
 
     queries.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def run(arm: Arm): Double = {
+      def run(arm: Arm, rep: Int): Double = {
+        val sc = arm.session.sparkContext
+        sc.setJobDescription(Seq(name, arm.label, s"rep $rep").filter(_.nonEmpty).mkString(" "))
         val t0 = System.nanoTime()
-        fn(arm.session, sfDir).write.format("noop").mode("overwrite").save()
+        try fn(arm.session, sfDir).write.format("noop").mode("overwrite").save()
+        finally sc.setJobDescription(null)
         (System.nanoTime() - t0) / 1e9
       }
-      arms.foreach(run)
+      arms.foreach(run(_, 0))
       val reps = Array.ofDim[Double](arms.size, Reps)
       for (i <- 0 until Reps; (arm, j) <- arms.zipWithIndex) {
         if (arms.size == 1 && i == Reps - 1) { log.clear(); log.capture = true }
-        reps(j)(i) = run(arm)
+        reps(j)(i) = run(arm, i + 1)
       }
       Thread.sleep(500) // let the listener bus drain
       log.capture = false
@@ -112,7 +116,7 @@ object Profile {
       }
       if (arms.size == 1) log.synchronized {
         log.jobs.values.foreach { j =>
-          println(f"  job ${j.id}%3d ${j.ms}%6d ms  ${j.desc.take(80)}")
+          println(f"  job ${j.id}%3d ${j.ms}%6d ms  exec ${j.exec}%4s  ${j.desc.take(80)}")
           j.stages.sortBy(-_._3).filter(_._3 >= 50).foreach { case (sid, nm, ms, nt) =>
             println(f"      stage $sid%4d $ms%6d ms $nt%4d tasks  ${nm.take(70)}")
           }

@@ -1,7 +1,7 @@
 package graft.zarr
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{CommonPathCapabilities, FileSystem, Path => HPath}
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
@@ -75,6 +75,32 @@ final class VPath private (val uri: String) extends Serializable {
     try out.write(bytes) finally out.close()
   }
   def writeString(s: String): Unit = write(s.getBytes(StandardCharsets.UTF_8))
+
+  /** [[write]] as one step: a reader, a crash or a cancelled task (Spark
+    * interrupts the running tasks of a failed job) sees the whole old bytes
+    * or the whole new ones, never a truncated file. Stores whose output
+    * streams publish on close (object stores) put whole objects already;
+    * elsewhere the bytes go to a hidden sibling that is renamed over the
+    * file. */
+  def replace(bytes: Array[Byte]): Unit =
+    if (fs.hasPathCapability(hp, CommonPathCapabilities.ABORTABLE_STREAM)) write(bytes)
+    else {
+      val tmp = new HPath(hp.getParent, s".${hp.getName}.${java.util.UUID.randomUUID()}.tmp")
+      try {
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
+        // a POSIX rename replaces the target in place; where the filesystem
+        // refuses an existing target, the target goes first — delete and
+        // rename ignore interrupts, so only a crash between the two leaves
+        // it absent, never truncated
+        if (!fs.rename(tmp, hp) && !(fs.delete(hp, false) && fs.rename(tmp, hp)))
+          throw new java.io.IOException(s"could not move $tmp over $hp")
+      } catch {
+        case t: Throwable =>
+          try fs.delete(tmp, false) catch { case _: Throwable => () }
+          throw t
+      }
+    }
 
   def mkdirs(): Unit = fs.mkdirs(hp)
 

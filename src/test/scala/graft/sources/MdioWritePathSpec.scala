@@ -365,4 +365,190 @@ class MdioWritePathSpec extends SparkSpec {
     assert(sum == new java.math.BigDecimal("2499975000.0").setScale(6))
     MdioWriter.delete(dir)
   }
+
+  // an inline × crossline × time float32 volume `amplitude` (metadata only)
+  private def createVolume(shape: Seq[Long], chunks: Seq[Long], dir: String): String = {
+    val names = Seq("inline", "crossline", "time")
+    val dims = names.zip(shape).map { case (n, s) => s"""{"name": "$n", "size": $s}""" }
+    val coords = names.zip(dims).map { case (n, d) =>
+      s"""{"name": "$n", "dataType": "int32", "dimensions": [$d]},""" }.mkString("\n")
+    MdioWriter.create(MdioSpec.fromJson(
+      s"""{"metadata": {"name": "vol", "apiVersion": "v1.0", "createdOn": "2026-01-01T00:00:00Z"},
+         | "variables": [$coords
+         |  {"name": "amplitude", "dataType": "float32", "dimensions": [${dims.mkString(", ")}],
+         |   "compressor": {"name": "blosc", "cname": "lz4", "clevel": 5, "shuffle": "shuffle"},
+         |   "metadata": {"chunkGrid": {"name": "regular", "configuration":
+         |     {"chunkShape": [${chunks.mkString(", ")}]}}}}]}""".stripMargin), dir)
+    dir
+  }
+
+  test("repartitionByChunk puts up to n owners in distinct partitions") {
+    // 256×256×128 in 128³ chunks has 4 owners; a hash of the chunk-start
+    // keys put (0,0,0) and (0,128,0) in one partition at 4 and at 8
+    val dir = createVolume(Seq(256L, 256L, 128L), Seq(128L, 128L, 128L),
+      Files.createTempDirectory("mdio_own").resolve("o.mdio").toString)
+    val cells = for (i <- Seq(0L, 128L, 255L); x <- Seq(0L, 128L, 200L)) yield (i, x, 7L, 1.0f)
+    val df = cells.toDF("inline", "crossline", "time", "amplitude")
+    for (n <- Seq(0, 4, 8)) {
+      val placed = MdioWriter.repartitionByChunk(df, dir, partitions = n)
+        .select(floor($"inline" / 128).cast("long"), floor($"crossline" / 128).cast("long"), spark_partition_id())
+        .as[(Long, Long, Int)].collect().distinct
+      assert(placed.length == 4, s"n=$n: an owner split across partitions: ${placed.toSeq}")
+      assert(placed.map(_._3).distinct.length == 4, s"n=$n: owners share a partition: ${placed.toSeq}")
+    }
+    // by default one task per owner, up to the cluster's parallelism
+    assert(MdioWriter.repartitionByChunk(df, dir).rdd.getNumPartitions == 4)
+    MdioWriter.delete(dir)
+  }
+
+  /** Shuffle bytes the jobs of `body` wrote, read through a SparkListener. */
+  private def shuffleWriteBytes(body: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "shuffle marker"))
+          markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // events reach a listener in order: once the marker job's end arrives,
+      // every task end of `body` has been counted
+      spark.sparkContext.setJobDescription("shuffle marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job end never arrived")
+      bytes.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("insertAligned and writeVariable shuffle at most 1.2x the user bytes") {
+    // 2 MiB of float32 in 32×32×64 chunks: the shuffle carries stored values
+    // in chunk fragments, not one long-form row per cell
+    val (ni, nx, nt) = (128L, 64L, 64L)
+    val dir = createVolume(Seq(ni, nx, nt), Seq(32L, 32L, 64L),
+      Files.createTempDirectory("mdio_shuf").resolve("s.mdio").toString)
+    val cells = spark.range(0, ni * nx * nt, 1, 4).select(
+      floor($"id" / (nx * nt)).as("inline"), (floor($"id" / nt) % nx).as("crossline"),
+      ($"id" % nt).as("time"), sin($"id" * 0.37).cast("float").as("amplitude"))
+    val userBytes = ni * nx * nt * 4
+    for (api <- Seq("insertAligned", "writeVariable")) {
+      val shuffled = shuffleWriteBytes {
+        if (api == "insertAligned") MdioWriter.insertAligned(cells, dir)
+        else MdioWriter.writeVariable(spark, cells, dir, "amplitude")
+      }
+      assert(shuffled > 0 && shuffled <= 1.2 * userBytes,
+        s"$api shuffled $shuffled bytes for $userBytes user bytes")
+    }
+    val back = spark.read.format("mdio").load(dir)
+    assert(back.count() == ni * nx * nt)
+    assert(back.filter($"amplitude" =!= sin(($"inline" * nx * nt + $"crossline" * nt + $"time") * 0.37)
+      .cast("float")).count() == 0)
+    MdioWriter.delete(dir)
+  }
+
+  test("insertAligned failing at a chunk put: whole old or new chunks, stale stats, a rerun repairs") {
+    // FaultFs fails the Nth chunk-file put; the job's other tasks are
+    // interrupted mid-write, which must not truncate their chunks either
+    val local = Files.createTempDirectory("mdio_fault")
+    val ref = createVolume(Seq(16L, 16L, 16L), Seq(8L, 8L, 8L), local.resolve("ref.mdio").toString)
+    def cells(scale: Double) = spark.range(0, 16 * 16 * 16, 1, 4).select(floor($"id" / 256).as("inline"),
+      (floor($"id" / 16) % 16).as("crossline"), ($"id" % 16).as("time"),
+      ($"id" * scale).cast("float").as("amplitude"))
+    def chunkFiles(store: String): Map[String, Seq[Byte]] = {
+      val vd = ZarrMeta.path(store).resolve("amplitude")
+      vd.list().filterNot(_.name.startsWith(".")).map(p => p.name -> p.readAllBytes().toSeq).toMap
+    }
+    def hidden(store: String): Seq[String] =
+      ZarrMeta.path(store).listFilesRecursive().map(_.name).filter(_.startsWith(".mdio_statfrag."))
+    graft.GraftSession.withConfs(spark)("fs.faultfs.impl" -> classOf[FaultFs].getName) {
+      val dir = createVolume(Seq(16L, 16L, 16L), Seq(8L, 8L, 8L), "faultfs:" + local.resolve("f.mdio"))
+      val varDir = ZarrMeta.path(dir).resolve("amplitude")
+      MdioWriter.insertAligned(cells(0.5), dir)
+      val old = chunkFiles(dir)
+      assert(old.size == 8 && MdioChunkStats.hasCurrent(varDir))
+      MdioWriter.insertAligned(cells(-0.25), ref)
+      val fresh = chunkFiles(ref)
+      assert(fresh.keySet == old.keySet && fresh.forall { case (k, b) => b != old(k) })
+
+      FaultFs.failChunkPut(3)
+      val e = try intercept[Exception](MdioWriter.insertAligned(cells(-0.25), dir))
+              finally FaultFs.failChunkPut(0)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected chunk put failure")), e)
+      val after = chunkFiles(dir)
+      assert(after.keySet == old.keySet)
+      after.foreach { case (k, b) =>
+        assert(b == old(k) || b == fresh(k), s"chunk $k holds neither the old nor the new bytes") }
+      assert(!MdioChunkStats.hasCurrent(varDir), "stats read current after a failed write")
+      assert(hidden(dir).isEmpty, s"stat fragments left behind: ${hidden(dir)}")
+
+      MdioWriter.insertAligned(cells(-0.25), dir)
+      assert(chunkFiles(dir) == fresh, "a rerun must leave the bytes of a clean write")
+      assert(MdioChunkStats.current(varDir) == MdioChunkStats.current(ZarrMeta.path(ref).resolve("amplitude")))
+      assert(hidden(dir).isEmpty)
+      MdioWriter.delete(dir)
+    }
+    MdioWriter.delete(ref)
+  }
+}
+
+/** Test-only local filesystem under the `faultfs:` scheme. Once armed it
+  * fails the Nth put of chunk bytes before any byte is written — the create
+  * of a chunk file (a name of dot-separated integers) or of a hidden
+  * `.<chunk>.<suffix>` sibling renamed over it — and holds every other
+  * chunk put open mid-write for a while, so the interrupts Spark sends the
+  * failed job's running tasks land inside puts. */
+class FaultFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
+  override def getScheme: String = "faultfs"
+
+  // plain statuses: the local ones load permissions through a file: URI
+  private def plain(s: FileStatus): FileStatus =
+    new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize, s.getModificationTime, s.getPath)
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
+  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+
+  private def put(f: Path)(create: => FSDataOutputStream): FSDataOutputStream =
+    if (FaultFs.failAt.get == 0 || !f.getName.matches("\\.?[0-9]+(\\.[0-9]+)*(\\..+)?")) create
+    else if (FaultFs.puts.incrementAndGet() == FaultFs.failAt.get)
+      throw new java.io.IOException(s"injected chunk put failure at $f")
+    else {
+      val out = create
+      new FSDataOutputStream(new java.io.OutputStream {
+        override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+          Thread.sleep(FaultFs.HoldMs) // an interrupt here lands mid-put
+          out.write(b, off, len)
+        }
+        override def close(): Unit = out.close()
+      }, null)
+    }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+                      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    put(f)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+    put(f)(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+}
+
+object FaultFs {
+  private val HoldMs = 300L
+  private val puts = new java.util.concurrent.atomic.AtomicInteger
+  private val failAt = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Fail the `n`th chunk put from now on (0 disarms). */
+  def failChunkPut(n: Int): Unit = { puts.set(0); failAt.set(n) }
 }

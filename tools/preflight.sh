@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder =="
+echo "== 1/6 one session builder, one owner partitioner =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -19,6 +19,15 @@ if [ -n "$stray" ]; then
   fail=1
 else
   echo "SparkSession.builder only in GraftSession.scala"
+fi
+# the connector's owner shuffles partition by owner id (MdioWriter's owner
+# partitioner, repartitionById), never by a hash of cell columns
+hashed=$(grep -rn "\.repartition(" src/main/scala/graft/sources/)
+if [ -n "$hashed" ]; then
+  echo "OWNER LINT RED: .repartition( in src/main/scala/graft/sources/:"; echo "$hashed"
+  fail=1
+else
+  echo "no .repartition( in src/main/scala/graft/sources/"
 fi
 
 echo "== 2/6 full test suite =="
