@@ -38,8 +38,9 @@ import org.apache.spark.sql.types._
   *     (ERROR — data no scan will ever read; v2 dot-keys at the variable
   *     root and v3 nested `c/…` paths, against the shard grid when the
   *     array is `sharding_indexed`), shard files the manifest does not
-  *     list at their generation (WARNING — GC candidates), and orphan
-  *     stat fragments (WARNING).
+  *     list at their generation (WARNING — GC candidates), and
+  *     `.mdio_statfrag.*` files an earlier sink version left (WARNING —
+  *     safe to delete).
   *
   * A stale sidecar (data generation moved past it) downgrades checks 2–3
   * to a single WARNING — stale stats are a legal state (scans fall back),
@@ -283,7 +284,8 @@ object MdioFsck {
         if (cc.size != grid.size || cc.zip(grid).exists { case (x, g) => x >= g })
           add("error", "inventory", n, "chunk file outside the grid — unreachable data")
       } else if (n.startsWith(".mdio_statfrag")) {
-        add("warning", "inventory", n, "orphan stat fragment (next commit sweeps it)")
+        add("warning", "inventory", n,
+          "stat fragment an earlier sink version left behind — nothing reads it, safe to delete")
       } else if (n.startsWith(".mdio_stats.s")) {
         val sid = try Some(n.stripPrefix(".mdio_stats.s").stripSuffix(".json").toLong)
         catch { case _: Throwable => None }

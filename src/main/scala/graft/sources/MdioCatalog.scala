@@ -13,19 +13,14 @@ import java.util
   * table — `spark.table("mdio.`/data/volume.mdio`")`, and crucially
   * `df.writeTo("mdio.`/data/volume.mdio`").append()`.
   *
-  * Why a catalog when `format("mdio")` already exists: Spark 4.1's write
-  * planner cannot carry arithmetic in a write distribution
-  * (V2ExpressionUtils translates references/transforms only), so the
-  * path-based sink must choose between safe-but-serial and trust-the-
-  * caller `aligned` mode (see [[MdioWriteBuilder]]). What the planner CAN
-  * translate is a catalog FUNCTION transform: with this catalog in the
-  * loop, the write declares `clustered(chunk(dim_i, chunkSize_i)...)`,
-  * Spark resolves [[ChunkFunction]] against the table's own catalog and
-  * shuffles rows so each chunk is owned by exactly one writer task — the
-  * bare catalog write is parallel AND aligned by default, no option, no
-  * pre-repartition call. The reference leaves misaligned parallel writes
-  * undefined behavior (USER_GUIDE.md "Efficient Assignment"); here the
-  * engine enforces alignment in the plan.
+  * Why a catalog when `format("mdio")` already exists: its
+  * FunctionCatalog. Keyed scans (`spark.graft.scan.keyedPartitions`)
+  * report their partitioning over the `chunk_<size>` transforms, which
+  * Spark resolves against the table's own catalog — storage-partitioned
+  * joins of co-gridded stores need it. Writes take the same route as the
+  * path-based sink: `writeTo(...).append()` hands the frame to
+  * [[MdioWriter.insertAligned]], whose owner shuffle gives each chunk (or
+  * shard) file exactly one writer task.
   *
   * The identifier IS the store path (any namespace parts join with `/`):
   * there is no metastore to register into, matching the reference's
@@ -51,7 +46,7 @@ class MdioCatalog extends TableCatalog with FunctionCatalog {
     if (!graft.zarr.VPath(path).exists)
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, path))
-    MdioTable(path, None, chunkTransformWrite = true)
+    MdioTable(path, None)
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
@@ -94,10 +89,8 @@ class MdioCatalog extends TableCatalog with FunctionCatalog {
 }
 
 /** `chunk(coord, chunkSize) = coord / chunkSize`: the chunk ordinal that
-  * owns a cell coordinate along one dimension. Clustering a write on
-  * `chunk(dim_i, size_i)` for every dimension makes Spark's shuffle the
-  * alignment mechanism — rows of one chunk meet in exactly one task.
-  * Deterministic, codegen-friendly (static magic `invoke`). */
+  * owns a cell coordinate along one dimension, callable from SQL through
+  * the catalog. Deterministic, codegen-friendly (static magic `invoke`). */
 object ChunkFunction extends UnboundFunction {
   override def name(): String = "chunk"
   override def description(): String =

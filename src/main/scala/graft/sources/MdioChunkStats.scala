@@ -20,9 +20,9 @@ import org.json4s.jackson.JsonMethods
   * namespace, which never starts with '.'):
   *
   *  - `.mdio_wgen` — the variable's DATA write generation: a plain integer
-  *    every data write bumps: [[MdioWriter.writeVariable]] and the DSv2
-  *    sink's driver commit (the two drivers of the one chunk writer,
-  *    [[MdioDataWriter]]), and trim.
+  *    every data write bumps: the owner shuffle behind
+  *    [[MdioWriter.writeVariable]], [[MdioWriter.insertAligned]] and the
+  *    DSv2 sink (the one chunk writer, [[MdioDataWriter]]), and trim.
   *  - `.mdio_stats.json` — the MANIFEST: `{"generation": G, "span": S,
   *    "shards": {"0": {"g": g0, "n": n0, "lo": …, "hi": …}, …}}`. Entries
   *    are SHARDED by the chunk key's LEADING dimension index: chunk

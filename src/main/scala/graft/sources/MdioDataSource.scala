@@ -58,13 +58,13 @@ class MdioDataSource extends TableProvider with org.apache.spark.sql.sources.Dat
   override def supportsExternalMetadata(): Boolean = false
 }
 
-/** One MDIO dataset directory as a Spark Table. `chunkTransformWrite` is
-  * set when the table was loaded through [[MdioCatalog]], whose
-  * FunctionCatalog lets the write planner resolve the `chunk` transform —
-  * catalog writes are then parallel-aligned by default (path-based loads
-  * have no FunctionCatalog, so the transform could never resolve there). */
-final case class MdioTable(path: String, wanted: Option[Seq[String]],
-                           chunkTransformWrite: Boolean = false)
+/** One MDIO dataset directory as a Spark Table, loaded by path or through
+  * [[MdioCatalog]]. Writes take one route whichever way the table was
+  * loaded: [[MdioWriteBuilder]] hands Spark's resolved frame to
+  * [[MdioWriter.insertAligned]] (a V1 write, so `V1_BATCH_WRITE`;
+  * `BATCH_WRITE` stays because `DataFrameWriter.save` plans a V2 append only
+  * for tables that declare it). */
+final case class MdioTable(path: String, wanted: Option[Seq[String]])
     extends Table with SupportsRead with SupportsWrite {
 
   // driver-side metadata read (S1): consolidated or listing
@@ -125,7 +125,7 @@ final case class MdioTable(path: String, wanted: Option[Seq[String]],
 
   override def name(): String = s"mdio:$path"
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
         TableCapability.MICRO_BATCH_READ, TableCapability.TRUNCATE).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -136,10 +136,7 @@ final case class MdioTable(path: String, wanted: Option[Seq[String]],
       runtimeFiltering = Option(options.get("runtimeFiltering"))
         .forall(_.toBoolean))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    MdioWriteBuilder(path, dims, variables.map(v => v -> labeled(v)._1).toMap, info.schema(),
-      aligned = Option(info.options.get("aligned")).exists(_.toBoolean),
-      chunkTransform = chunkTransformWrite)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = MdioWriteBuilder(path)
 }
 
 object MdioTableUtil {

@@ -5,9 +5,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 /** EXECUTOR-SIDE publication of the [[MdioChunkStats]] sidecar — the
-  * distributed form of [[MdioChunkStats.refresh]] used by every
-  * stats-aware write path (the owner shuffle of `writeVariable` and
-  * `insertAligned`, the DSv2 sink's stat-fragment commit).
+  * distributed form of [[MdioChunkStats.refresh]] used by the one
+  * stats-aware write route: the owner shuffle ([[MdioWriter.writeOwned]])
+  * behind `writeVariable`, `insertAligned` and the DSv2 sink.
   *
   * Why it exists: a stats-aware write produces exactly one
   * [[MdioWriter.ChunkStatRow]] per touched chunk. Collecting those to the
@@ -26,9 +26,9 @@ import org.apache.spark.sql.SparkSession
   * so every crash window reads as stale, never wrongly current.
   *
   * The chunk-data writes themselves ride in the SAME Spark action: the
-  * stat rows are the map-stage output of the write job, so the whole
-  * write+publish is one job — chunk files stream out of the map tasks,
-  * shard files out of the reduce tasks, and nothing O(chunks) ever
+  * stat rows are the output of the write job's owner tasks, so the whole
+  * write+publish is one job — chunk files stream out of the owner tasks,
+  * shard files out of the publish tasks, and nothing O(chunks) ever
   * materializes on the driver. Reference analog: statsV1 publication,
   * mdio/stats.h:229-335 + mdio/dataset.h:1269-1416 (attached attributes
   * committed after the write completes).
@@ -61,11 +61,6 @@ object MdioStatsPublish {
     publishEntries(spark, hconf, targets.map { case (d, grid) => d -> gridSpan(grid) },
       rows.flatMap { case (t, sr) => entryOf(sr, grids(t)).map(t -> _) })
   }
-
-  /** [[publishEntries]] of one variable directory. */
-  def publishEntries(spark: SparkSession, varDirStr: String, hconf: HConf,
-                     entries: RDD[(String, MdioChunkStats.Entry)], freshSpan: Long): Unit =
-    publishEntries(spark, hconf, Seq(varDirStr -> freshSpan), entries.map(0 -> _))
 
   /** Publish fresh per-chunk sidecar entries — `(t, (chunk key, entry))`
     * for `targets(t)` = (variable directory, span a from-scratch publish
@@ -172,45 +167,6 @@ object MdioStatsPublish {
         true
       case _ => false
     }
-  }
-
-  // ---- stat-row FRAGMENT files: the DSv2 sink's task-commit spill. A sink
-  // task owning many chunks would otherwise ship O(chunks) stat rows inside
-  // its WriterCommitMessage (a driver union at scale); past
-  // [[MdioBatchWrite.InlineStatRows]] it writes them to a hidden
-  // `.mdio_statfrag.<uuid>` file in the variable directory instead, and the
-  // message carries only the file name. The driver-side commit then feeds
-  // fragment contents through [[publishRows]] from executors and deletes
-  // the fragments after the manifest commit (a crash in between leaves only
-  // hidden dead bytes no reader opens). One row per line, tab-separated,
-  // doubles as raw bits — exactness survives the text round-trip.
-
-  private[sources] def encodeRow(sr: MdioWriter.ChunkStatRow): String =
-    Seq(sr.cid, if (sr.isFloat) 1 else 0,
-      java.lang.Double.doubleToRawLongBits(sr.minD),
-      java.lang.Double.doubleToRawLongBits(sr.maxD),
-      sr.minL, sr.maxL, if (sr.empty) 1 else 0, if (sr.nan) 1 else 0,
-      sr.cnt, sr.sumS, sr.sumSqS, if (sr.u64) 1 else 0).mkString("\t")
-
-  private[sources] def decodeRow(line: String): MdioWriter.ChunkStatRow = {
-    val f = line.split("\t", -1)
-    require(f.length == 12, s"bad stat-fragment line: $line")
-    MdioWriter.ChunkStatRow(f(0).toLong, f(1) == "1",
-      java.lang.Double.longBitsToDouble(f(2).toLong),
-      java.lang.Double.longBitsToDouble(f(3).toLong),
-      f(4).toLong, f(5).toLong, f(6) == "1", f(7) == "1",
-      f(8).toLong, f(9), f(10), f(11) == "1")
-  }
-
-  private[sources] def writeFragment(file: VPath,
-                                     rows: Iterable[MdioWriter.ChunkStatRow]): Unit =
-    file.writeString(rows.iterator.map(encodeRow).mkString("\n"))
-
-  private[sources] def readFragment(file: VPath): Seq[MdioWriter.ChunkStatRow] = {
-    val bytes = file.readBytesOrNull()
-    if (bytes == null) Seq.empty
-    else new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").iterator.filter(_.nonEmpty).map(decodeRow).toSeq
   }
 
   /** Distributed span re-derivation: read every live shard from executors,

@@ -22,8 +22,10 @@ import graft.zarr.VPath
   * sharded variables — through a direct `owner id mod n` partitioner, so
   * exactly one task owns each chunk or shard file and no two owners share
   * a task while they fit: no torn chunks, no read-modify-write races, at
-  * any cluster size. Every chunk, whichever API wrote it, is written by
-  * the DSv2 sink's [[MdioDataWriter]]. Metadata writes happen on the
+  * any cluster size. The DSv2 sink (`df.write.format("mdio")`, catalog
+  * `writeTo`) hands its frame to [[insertAligned]], so every chunk,
+  * whichever API wrote it, is written by one [[MdioDataWriter]] behind
+  * [[writeOwned]]. Metadata writes happen on the
   * driver after all tasks succeed (the reference's WaitAllFuture
   * all-or-nothing shape, mdio/dataset.h:1030-1040).
   */
@@ -624,7 +626,7 @@ object MdioWriter {
     * dimension coordinate (its name equals its dim column, mirroring the
     * reader's aliasing). Rows outside the domain error; absent cells
     * materialize the fill value, and a NULL value leaves its cell untouched
-    * (the DSv2 sink's contract — it is the same writer). A NULL coordinate,
+    * (the DSv2 sink's contract — it is the same route). A NULL coordinate,
     * or a NULL `re`/`im` half or record field inside a non-NULL value,
     * fails the job before any chunk is written.
     *
@@ -633,8 +635,8 @@ object MdioWriter {
     * chunk — offset runs plus the values in the stored dtype, flushed at a
     * fixed per-task byte budget — and the fragments route by OWNER id (the
     * chunk id, or the shard id for a `sharding_indexed` variable, mod the
-    * task count), so one task owns each chunk or shard file and in it the
-    * sink's [[MdioDataWriter]] merges, encodes and writes the chunks it
+    * task count), so one task owns each chunk or shard file and in it an
+    * [[MdioDataWriter]] merges, encodes and writes the chunks it
     * owns; the stat rows then publish the stats sidecar in the same job.
     * The shuffle carries the stored bytes once — a float32 volume ships
     * ~1× its size, not a long-form row per cell — and chunk files stream
@@ -684,6 +686,20 @@ object MdioWriter {
   private def nonNullOr(e: Column, what: String): Column =
     when(e.isNull, raise_error(lit(s"NULL $what"))).otherwise(e)
 
+  /** Per-dim task-ownership sizes for a parallel write: the LCM over the
+    * written variables of their shard size (sharded) or chunk size
+    * (unsharded) along each dim — an ownership unit then covers whole shard
+    * objects and whole chunk files of every variable. Shard shapes are
+    * chunk multiples by construction, so this stays the shared chunk shape
+    * on unsharded stores. */
+  private[sources] def ownershipSizes(ms: Seq[ZarrMeta.ArrayMeta]): Seq[Long] = {
+    def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
+    def lcm(a: Long, b: Long): Long = a / gcd(a, b) * b
+    (0 until ms.head.rank).map { i =>
+      ms.foldLeft(1L)((acc, m) => lcm(acc, m.shard.map(_(i)).getOrElse(m.chunks(i))))
+    }
+  }
+
   /** Per-dim ownership-unit counts: `own` cells per unit over `shape`. */
   private def ownerGrid(shape: Array[Long], own: Array[Long]): Array[Long] =
     Array.tabulate(shape.length)(i => (shape(i) + own(i) - 1) / own(i))
@@ -702,7 +718,7 @@ object MdioWriter {
   /** The owner shuffle's partitioner: owner id mod n. Owner ids are dense
     * from 0, so up to n owners land in n distinct tasks — a hash would
     * collide some of them while other tasks idle. */
-  private final class OwnerPartitioner(n: Int) extends org.apache.spark.Partitioner {
+  private[sources] final class OwnerPartitioner(n: Int) extends org.apache.spark.Partitioner {
     override def numPartitions: Int = n
     override def getPartition(key: Any): Int = java.lang.Math.floorMod(key.asInstanceOf[Long], n.toLong).toInt
   }
@@ -713,8 +729,8 @@ object MdioWriter {
     * them. Its map tasks [[MdioDataWriter.pack]] their cells into chunk
     * fragments; the fragments shuffle by owner id ([[OwnerPartitioner]]),
     * and in each reduce task an [[MdioDataWriter]] merges them into its
-    * seeded chunk buffers, then encodes, writes and reports stats as the
-    * sink does. The stat rows shuffle on into [[MdioStatsPublish]]: chunk
+    * seeded chunk buffers, then encodes, writes and reports each chunk's
+    * stats. The stat rows shuffle on into [[MdioStatsPublish]]: chunk
     * files and stats sidecars are one job, run as one SQL execution of
     * `projected` (its observed metrics and listeners see the write). */
   private def writeOwned(spark: SparkSession, projected: DataFrame, path: String,
@@ -724,7 +740,7 @@ object MdioWriter {
     val schema = projected.schema
     val dimArr = dims.toArray
     val varArr = vars.toArray
-    val own = MdioWriteBuilder.ownershipSizes(vars.map(_._2)).toArray
+    val own = ownershipSizes(vars.map(_._2)).toArray
     val n = ownerTasks(spark, ownerGrid(vars.head._2.shape.toArray, own).product)
     // complex/record chunks get no stats: bump BEFORE the action — the write
     // mutates chunks in place, so a mid-job failure must already read as
@@ -747,10 +763,9 @@ object MdioWriter {
           // per-chunk stats ride out of the write tasks for free: each task
           // holds the FINAL post-read-modify-write chunk buffers, so their
           // bounds are exact; the rows never collect to the driver
-          val writer = new MdioDataWriter(path, dimArr, schema, varArr, inlineStatRows = Int.MaxValue)
-          val msg = try { frags.foreach(f => writer.merge(f._2)); writer.commit() } finally writer.close()
-          msg.asInstanceOf[MdioStatsCommit].stats.iterator.flatMap { case (v, rs) =>
-            rs.iterator.map(slot(v) -> _) }
+          val writer = new MdioDataWriter(path, dimArr, schema, varArr)
+          val stats = try { frags.foreach(f => writer.merge(f._2)); writer.commit() } finally writer.close()
+          stats.iterator.map { case (v, sr) => slot(v) -> sr }
         }
       MdioStatsPublish.publishRows(spark, hc,
         bounded.map { case (v, m) => root.resolve(v).toString -> m.chunkGrid.toArray }, statRows)
@@ -974,13 +989,14 @@ object MdioWriter {
     * shuffle ([[writeOwned]], the same as [[writeVariable]]) as ONE job,
     * however many variables `df` carries — so it works unchanged on stores
     * whose variables span several dimension tuples. Columns resolve by
-    * name and cast to the sink's table types; a NULL value leaves its cell
-    * untouched and a NULL coordinate fails the job before any write. The
-    * end state is the sink's: stats sidecars published, the v2
-    * consolidated metadata refreshed, and on failure every written
-    * variable's stats read stale. `mode` is "append" or "overwrite", which
-    * write alike (whole chunks either way). The bare
-    * `df.write.format("mdio")` remains the safe-but-serial sink. */
+    * name and cast to the [[MdioTable]] column types; a NULL value leaves
+    * its cell untouched and a NULL coordinate fails the job before any
+    * write. The end state: stats sidecars published, the v2 consolidated
+    * metadata refreshed, and on failure every written variable's stats
+    * read stale. `mode` is "append" or "overwrite", which
+    * write alike (whole chunks either way). The DSv2 sink
+    * (`df.write.format("mdio")` and catalog `writeTo`) calls this with the
+    * frame Spark resolved against the table schema. */
   def insertAligned(df: DataFrame, path: String, mode: String = "append"): Unit = {
     require(Set("append", "overwrite")(mode.toLowerCase(java.util.Locale.ROOT)),
       s"insertAligned writes in append or overwrite mode, not '$mode'")
@@ -997,42 +1013,6 @@ object MdioWriter {
     val (_, arrays) = ZarrMeta.readGroup(root)
     writeOwned(df.sparkSession, projected, path, dims, targets.map(v => v -> arrays(v)._1))
     if (ZarrMeta.detectVersion(root) == 2) ZarrMeta.consolidate(root)
-  }
-
-  /** Repartition a long-form DataFrame so each task owns whole chunks of
-    * the dataset at `path` — the explicit alignment step for the parallel
-    * DSv2 write (`.option("aligned", "true")`). Rows go to partition
-    * `owner id mod n` (`Dataset.repartitionById`), where the owner id is
-    * the C-order linear id of the row's ownership unit, anchored on the
-    * variables `df` actually carries (those sharing the highest-rank
-    * anchor's dim tuple): per dim the unit is the LCM of each carried
-    * variable's shard-or-chunk size, so `sharding_indexed` variables get
-    * whole-SHARD ownership (a shard object is written whole). `n` is
-    * `partitions`, or by default one task per owner up to the cluster's
-    * parallelism — up to n owners land in n distinct tasks. */
-  def repartitionByChunk(df: DataFrame, path: String, partitions: Int = 0): DataFrame = {
-    val (_, arrays) = ZarrMeta.readGroup(ZarrMeta.path(path))
-    val labeled = arrays.flatMap { case (name, (meta, attrs)) =>
-      meta.dimNames.orElse(attrs.flatMap(MdioTableUtil.arrayDimensions)).map(d => name -> (meta, d))
-    }
-    val dataVars = labeled.filterNot { case (name, (_, d)) => d.size == 1 && d.head == name }
-    val cols = df.columns.toSet
-    val carried = dataVars.filter { case (name, _) => cols(name) }
-    val pool = if (carried.nonEmpty) carried else dataVars
-    val anchor = pool.values.toSeq.sortBy(-_._2.size).headOption
-      .getOrElse(throw new IllegalArgumentException(s"no data variables at $path"))
-    val own = MdioWriteBuilder.ownershipSizes(
-      pool.values.toSeq.filter(_._2 == anchor._2).map(_._1)).toArray
-    val shape = anchor._1.shape.toArray
-    val strides = ownerStrides(shape, own)
-    // `div` is exact integer division — SQL `/` would detour through double
-    // and can misplace rows for coordinates above 2^53
-    val ownerId = anchor._2.zipWithIndex.map { case (d, i) =>
-      expr(s"CAST(`$d` AS BIGINT) div ${own(i)}") * lit(strides(i))
-    }.reduce(_ + _)
-    val n = if (partitions > 0) partitions
-            else ownerTasks(df.sparkSession, ownerGrid(shape, own).product)
-    df.repartitionById(n, pmod(ownerId, lit(n.toLong)).cast("int"))
   }
 
   /** Current metadata generation of a dataset (0 when never stamped).

@@ -11,8 +11,9 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
   * credentials and endpoints configured on the session would never reach
   * task-side chunk I/O. The standard connector pattern applies instead:
   * capture the driver's resolved configuration once at plan/write time
-  * ([[HConf.capture]]), ship it inside the reader/writer FACTORY (one copy
-  * per stage, not per partition), and [[VPath.install]] it before any
+  * ([[HConf.capture]]), ship it inside the reader factory or the write
+  * job's task closures (one copy per stage, not per partition), and
+  * [[VPath.install]] it before any
   * task-side filesystem access.
   */
 final class HConf(@transient private var c: Configuration) extends Serializable {

@@ -147,10 +147,6 @@ final class VPath private (val uri: String) extends Serializable {
   def delete(): Unit = fs.delete(hp, false)
   def deleteRecursive(): Unit = fs.delete(hp, true)
 
-  /** Last-modification time (epoch millis) — the age signal the sink's
-    * orphan-fragment sweep uses. */
-  def mtime: Long = fs.getFileStatus(hp).getModificationTime
-
   override def toString: String = uri
   override def equals(o: Any): Boolean = o match {
     case v: VPath => v.uri == uri

@@ -4,11 +4,9 @@ import graft.SparkSpec
 import graft.spec.MdioSpec
 import java.nio.file.Files
 
-/** [[MdioCatalog]]: store paths as catalog identifiers, and the catalog
-  * FunctionCatalog's `chunk` transform making the BARE catalog write
-  * parallel-aligned by default — the declaration the path-based sink
-  * cannot express (Spark 4.1 write distributions translate references
-  * and catalog-function transforms, not arithmetic). */
+/** [[MdioCatalog]]: store paths as catalog identifiers; a catalog write
+  * (`writeTo(...).append()`) takes the sink's one route, the owner
+  * shuffle. */
 class MdioCatalogSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,29 +44,28 @@ class MdioCatalogSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
-  test("bare catalog write resolves the chunk transform: parallel-aligned, bit-identical to serial") {
-    val serialDir = create()
+  test("bare catalog write is bit-identical to writeVariable") {
+    val twinDir = create()
     val catDir = create()
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
       yield (i, x, (i * 3 + x).toDouble, ((i * x) % 3).toInt)
     val df = cells.toDF("inline", "crossline", "image", "mask").repartition(7)
-    // serial twin through the bare path-based sink (single writer task)
-    df.write.format("mdio").mode("append").save(serialDir)
-    // the bare catalog write: NO aligned option, NO pre-repartition call —
-    // Spark must resolve chunk(dim, size) against MdioCatalog and shuffle
-    // rows into chunk ownership itself (resolution failure would throw)
+    // twin: one writeVariable job per variable
+    for (v <- Seq("image", "mask"))
+      MdioWriter.writeVariable(spark, df.select($"inline", $"crossline", $"$v"), twinDir, v)
+    // the bare catalog write: no option, no pre-repartition call
     df.writeTo(s"mdio_cat.`$catDir`").append()
     for (v <- Seq("image", "mask")) {
-      val s = graft.zarr.ZarrMeta.path(serialDir).resolve(v)
+      val s = graft.zarr.ZarrMeta.path(twinDir).resolve(v)
       val c = graft.zarr.ZarrMeta.path(catDir).resolve(v)
       val chunkNames = s.list().map(_.name).filterNot(_.startsWith(".")).sorted
       assert(chunkNames.nonEmpty)
       for (ch <- chunkNames)
         assert(java.util.Arrays.equals(
           s.resolve(ch).readAllBytes(), c.resolve(ch).readAllBytes()),
-          s"chunk $v/$ch differs between serial and catalog-transform writes")
+          s"chunk $v/$ch differs between writeVariable and catalog writes")
     }
-    MdioWriter.delete(serialDir)
+    MdioWriter.delete(twinDir)
     MdioWriter.delete(catDir)
   }
 
@@ -102,9 +99,8 @@ class MdioCatalogSpec extends SparkSpec {
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
       yield (i, x, (i * 3 + x).toFloat, ((i * x) % 3).toInt)
     val df = cells.toDF("inline", "crossline", "image", "mask").repartition(7)
-    // bare catalog write: the chunk() transform resolves on the SHARD
-    // size (ownership LCM), so each task owns whole shard objects —
-    // shard-parallel by default, no aligned option, no pre-repartition
+    // bare catalog write: the owner shuffle owns by the SHARD size
+    // (ownership LCM), so each task assembles whole shard objects
     df.writeTo(s"mdio_cat.`$catDir`").append()
     MdioWriter.writeVariable(spark, df.select($"inline", $"crossline", $"image"), twinDir, "image")
     MdioWriter.writeVariable(spark, df.select($"inline", $"crossline", $"mask"), twinDir, "mask")
@@ -117,10 +113,10 @@ class MdioCatalogSpec extends SparkSpec {
         assert(java.util.Arrays.equals(
           sh.split("/").foldLeft(c)(_.resolve(_)).readAllBytes(),
           sh.split("/").foldLeft(t)(_.resolve(_)).readAllBytes()),
-          s"shard $v/c/$sh differs between catalog-transform and writeVariable writes")
+          s"shard $v/c/$sh differs between catalog and writeVariable writes")
     }
-    // the sink's commit refreshed per-INNER-chunk stats through the shard
-    // write, so value pruning works on the catalog-written store too
+    // the write published per-INNER-chunk stats through the shard write,
+    // so value pruning works on the catalog-written store too
     val cur = MdioChunkStats.current(graft.zarr.ZarrMeta.path(catDir).resolve("image"))
     assert(cur.isDefined && cur.get.size == 8, cur.map(_.size).toString) // 4x2 inner grid
     MdioWriter.delete(catDir); MdioWriter.delete(twinDir)

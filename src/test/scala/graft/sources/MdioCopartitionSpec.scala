@@ -102,45 +102,19 @@ class MdioCopartitionSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
-  test("co-gridded read→write pipeline plans zero shuffles (store-to-store ETL)") {
+  test("keyed scan feeds a bare sink write (store-to-store ETL)") {
     val src = create("image")
     val dst = create("image")
     val cells = for { i <- 0L until 32L; x <- 0L until 8L } yield (i, x)
     MdioWriter.writeVariable(spark,
       cells.toDF("inline", "crossline").withColumn("image", $"inline" * 7 + $"crossline"),
       src, "image")
-    // writeTo executes eagerly — capture the write command's executed plan
-    // through a QueryExecutionListener to pin its shuffle count
-    @volatile var writePlan: String = null
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = {
-        val p = qe.executedPlan.toString
-        if (p.contains("AppendData") || p.contains("MdioBatchWrite")) writePlan = p
-      }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
+    // a keyed scan (one partition per chunk) straight into the sink: the
+    // owner shuffle re-routes its cells, and every one lands
+    withSpjConfs {
+      spark.table(s"mdio_spj.`$src`").withColumn("image", $"image" + 1000.0)
+        .write.format("mdio").mode("append").save(dst)
     }
-    spark.listenerManager.register(listener)
-    try withSpjConfs {
-      // a keyed scan's partitions ARE chunk ownership (one chunk per
-      // task), so the aligned write's trust-the-caller contract holds by
-      // construction and the store-to-store transform moves no rows.
-      // (The catalog write's declared distribution would instead
-      // materialize an unconditional REPARTITION_BY_COL exchange — Spark
-      // never elides a required write distribution.) Unsharded target:
-      // chunk-granular ownership is exactly the alignment unit.
-      val in = spark.table(s"mdio_spj.`$src`")
-        .withColumn("image", $"image" + 1000.0)
-      in.write.format("mdio").option("aligned", "true").mode("append").save(dst)
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (writePlan == null && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(writePlan != null, "write plan never reached the listener")
-      assert(!writePlan.contains("Exchange"),
-        s"co-gridded read→write must plan ZERO shuffles:\n${writePlan.take(1500)}")
-    } finally spark.listenerManager.unregister(listener)
     val got = spark.read.format("mdio").load(dst)
       .select("inline", "crossline", "image").as[(Long, Long, Double)].collect()
     assert(got.length == 256)

@@ -1461,8 +1461,8 @@ class MdioValueStatsSpec extends SparkSpec {
     val hc = HConf.capture()
     def b(i: Long) = Some(MdioChunkStats.Bounds(BigDecimal(i), BigDecimal(i)))
     def publish(entries: Seq[(String, MdioChunkStats.Entry)], freshSpan: Long): Unit =
-      MdioStatsPublish.publishEntries(spark, varDir.toString, hc,
-        spark.sparkContext.parallelize(entries, 4), freshSpan)
+      MdioStatsPublish.publishEntries(spark, hc, Seq(varDir.toString -> freshSpan),
+        spark.sparkContext.parallelize(entries, 4).map(0 -> _))
     // fresh full publish (no prior): executor tasks write the shards
     publish((0L until 100L).map(i => i.toString -> b(i)), freshSpan = 10)
     assert(MdioChunkStats.generation(varDir) == 1L)
@@ -1500,10 +1500,9 @@ class MdioValueStatsSpec extends SparkSpec {
     MdioChunkStats.write(varDir, 1L,
       (0L until 17000L).map(i => i.toString -> b(i)).toMap, span = 1000000)
     // a 1-entry incremental merge crosses the drift threshold → respan job
-    MdioStatsPublish.publishEntries(spark, varDir.toString, hc,
+    MdioStatsPublish.publishEntries(spark, hc, Seq(varDir.toString -> 1000000L),
       spark.sparkContext.parallelize(
-        Seq("3" -> Some(MdioChunkStats.Bounds(BigDecimal(-3), BigDecimal(3)))), 1),
-      freshSpan = 1000000)
+        Seq("3" -> Some(MdioChunkStats.Bounds(BigDecimal(-3), BigDecimal(3)))), 1).map(0 -> _))
     val m = MdioChunkStats.readManifest(varDir).get
     assert(m.span == MdioChunkStats.ShardTargetEntries,
       s"distributed respan should re-derive the span, got ${m.span}")
@@ -1628,141 +1627,19 @@ class MdioValueStatsSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
-  test("sink spills stat rows past the inline cap; commit publishes distributed") {
+  test("sink write publishes every chunk's stats distributed") {
     val dir = createFloat(_.toDouble)
     val varDir = ZarrMeta.path(dir).resolve("v")
-    spark.conf.set("spark.graft.sink.inlineStatRows", "2")
-    try {
-      // serial sink write: one task owns all 8 chunks > cap 2 → fragment
-      spark.range(64).select($"id".as("x"), ($"id" + 1000.0).as("v"))
-        .write.format("mdio").mode("append").save(dir)
-    } finally spark.conf.unset("spark.graft.sink.inlineStatRows")
+    // the owner tasks' stat rows publish through MdioStatsPublish in the
+    // write's own job: one generation bump, an entry per chunk
+    spark.range(64).select($"id".as("x"), ($"id" + 1000.0).as("v"))
+      .write.format("mdio").mode("append").save(dir)
     assert(MdioChunkStats.generation(varDir) == 2L)
     val cur = MdioChunkStats.current(varDir)
     assert(cur.isDefined && cur.get.size == 8)
     assert(stripped(cur.get("0")) ==
       Some(MdioChunkStats.Bounds(BigDecimal(1000), BigDecimal(1007))))
-    // fragments are GC'd after the manifest commit
-    val leftovers = varDir.list().map(_.name).filter(_.startsWith(".mdio_statfrag"))
-    assert(leftovers.isEmpty, s"fragment files survived commit: $leftovers")
     assert(planned(dir, Array(GreaterThanOrEqual("v", 1056.0))) == 1)
-    MdioWriter.delete(dir)
-  }
-
-  test("orphan stat fragments sweep on the next fragment-bearing commit") {
-    // a driver crash between task commit and job commit/abort leaves
-    // `.mdio_statfrag.*` files nothing references — the next fragment-
-    // bearing sink commit must sweep them (grace-aged, foreign job token),
-    // while a genuinely concurrent job's FRESH fragments survive.
-    val dir = createFloat(_.toDouble)
-    val varDir = ZarrMeta.path(dir).resolve("v")
-    val orphan = varDir.resolve(".mdio_statfrag.deadjob.leftover")
-    orphan.writeString("")
-    spark.conf.set("spark.graft.sink.inlineStatRows", "2") // force fragments
-    spark.conf.set("spark.graft.sink.fragGraceMs", "0")    // everything is "old"
-    try spark.range(64).select($"id".as("x"), ($"id" + 1.0).as("v"))
-      .write.format("mdio").mode("append").save(dir)
-    finally {
-      spark.conf.unset("spark.graft.sink.inlineStatRows")
-      spark.conf.unset("spark.graft.sink.fragGraceMs")
-    }
-    assert(!orphan.exists, "an aged unreferenced fragment must be swept")
-    // under the DEFAULT grace window a fresh foreign fragment is presumed
-    // in-flight (another job's task already committed it) and survives
-    val live = varDir.resolve(".mdio_statfrag.livejob.inflight")
-    live.writeString("")
-    spark.conf.set("spark.graft.sink.inlineStatRows", "2")
-    try spark.range(64).select($"id".as("x"), ($"id" + 2.0).as("v"))
-      .write.format("mdio").mode("append").save(dir)
-    finally spark.conf.unset("spark.graft.sink.inlineStatRows")
-    assert(live.exists, "a fresh (in-grace) foreign fragment must survive the sweep")
-    // and this job's OWN fragments are still GC'd after its manifest commit
-    val leftovers = varDir.list().map(_.name)
-      .filter(n => n.startsWith(".mdio_statfrag") && n != live.name)
-    assert(leftovers.isEmpty, s"own fragments survived commit: $leftovers")
-    MdioWriter.delete(dir)
-  }
-
-  test("a task attempt that spilled a fragment deletes it on abort") {
-    // ADVICE r13: DataWriter.abort() was a no-op, so an attempt that
-    // spilled during commit() but then failed (or lost a speculation race)
-    // leaked the fragment forever — job-level abort only sees fragments
-    // named in DELIVERED commit messages.
-    val dir = createFloat(_.toDouble)
-    val varDir = ZarrMeta.path(dir).resolve("v")
-    val (_, arrays) = ZarrMeta.readGroup(ZarrMeta.path(dir))
-    val meta = arrays("v")._1
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType)))
-    val w = new MdioDataWriter(dir, Array("x"), schema, Array("v" -> meta),
-      inlineStatRows = 0, jobToken = "attempt1")
-    w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](3L, 42.0)))
-    w.commit() // spills (cap 0): the fragment exists, message undelivered
-    val frags = varDir.list().map(_.name)
-      .filter(_.startsWith(".mdio_statfrag.attempt1."))
-    assert(frags.size == 1, s"expected one spilled fragment, got $frags")
-    w.abort()
-    assert(!varDir.resolve(frags.head).exists,
-      "task abort must delete the attempt's own spilled fragments")
-    MdioWriter.delete(dir)
-  }
-
-  test("two tasks assembling one shard object fail the commit loudly") {
-    // sharding_indexed + aligned=true with a CHUNK-granular feed: both
-    // tasks assemble shard 0 from stale carryover — last-writer-wins loses
-    // inner chunks. The driver commit cross-checks per-task shard ids and
-    // fails instead of silently corrupting (ADVICE r13, upgraded from a
-    // plan-time warning).
-    val dir = Files.createTempDirectory("mdio_vstats").resolve("col.mdio").toString
-    MdioWriter.create(MdioSpec.fromJson(
-      """{
-        |  "metadata": {"name": "col", "apiVersion": "v1.0", "createdOn": "2026-01-01T00:00:00Z"},
-        |  "variables": [
-        |    {"name": "x", "dataType": "int64",
-        |     "dimensions": [{"name": "x", "size": 16}]},
-        |    {"name": "v", "dataType": "float64",
-        |     "dimensions": [{"name": "x", "size": 16}],
-        |     "metadata": {"chunkGrid": {"name": "regular", "configuration":
-        |       {"chunkShape": [4], "shardShape": [16]}}}}
-        |  ]
-        |}""".stripMargin), dir, version = 3)
-    // two writer tasks, each owning DIFFERENT inner chunks of shard 0 —
-    // exactly what a chunk-granular aligned feed produces (driven directly:
-    // AQE coalesces a 16-row shuffle into one task, masking the race at
-    // test scale; at real scale the tasks are genuinely distinct)
-    val (_, arrays) = ZarrMeta.readGroup(ZarrMeta.path(dir))
-    val meta = arrays("v")._1
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.DoubleType)))
-    def taskOwning(range: Range)
-        : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-      val w = new MdioDataWriter(dir, Array("x"), schema, Array("v" -> meta))
-      range.foreach(i => w.write(
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](i.toLong, i.toDouble))))
-      w.commit()
-    }
-    // a SHARD-granular feed (one task owning the whole shard) commits fine
-    // and publishes current stats
-    val ok = Array(taskOwning(0 until 16))
-    MdioBatchWrite(dir, Seq("x"), Map("v" -> meta), schema).commit(ok)
-    assert(spark.read.format("mdio").load(dir).agg(sum($"v")).first().getDouble(0) == 120.0)
-    val varDir = ZarrMeta.path(dir).resolve("v")
-    assert(MdioChunkStats.current(varDir).isDefined)
-    // the chunk-granular two-task feed collides and the commit REJECTS it
-    val messages = Array(taskOwning(0 until 8), taskOwning(8 until 16))
-    val bw = MdioBatchWrite(dir, Seq("x"), Map("v" -> meta), schema)
-    val ex = intercept[IllegalStateException] { bw.commit(messages) }
-    assert(ex.getMessage.contains("MULTIPLE tasks"), ex.getMessage)
-    // the failed job already mutated shard objects in place — the abort
-    // Spark issues after a commit failure must invalidate the stats, or a
-    // value-pruned scan would keep answering from pre-failure bounds
-    bw.abort(messages.map(_.asInstanceOf[org.apache.spark.sql.connector.write.WriterCommitMessage]))
-    assert(MdioChunkStats.current(varDir).isEmpty,
-      "aborted write left stats generation-current over mutated data")
     MdioWriter.delete(dir)
   }
 
@@ -1894,24 +1771,6 @@ class MdioValueStatsSpec extends SparkSpec {
       "pre-summary shards must all open (coverage is unprovable)")
     assert(spark.read.format("mdio").load(dir).filter($"v" >= 48.0).count() == 16L)
     MdioWriter.delete(dir)
-  }
-
-  test("stat-row fragments round-trip exactly (bits, strings, flags)") {
-    val rows = Seq(
-      MdioWriter.ChunkStatRow(7L, isFloat = true, -0.0, 1.5e308, 0L, 0L,
-        empty = false, nan = true, cnt = 3L, sumS = "1.25", sumSqS = "0.015625"),
-      MdioWriter.ChunkStatRow(8L, isFloat = false, 0.0, 0.0, -1L, Long.MinValue,
-        empty = false, u64 = true),
-      MdioWriter.ChunkStatRow(9L, isFloat = true, Double.NaN, Double.NaN, 0L, 0L,
-        empty = true))
-    val decoded = rows.map(r => MdioStatsPublish.decodeRow(MdioStatsPublish.encodeRow(r)))
-    rows.zip(decoded).foreach { case (a, d) =>
-      assert(java.lang.Double.doubleToRawLongBits(a.minD) ==
-        java.lang.Double.doubleToRawLongBits(d.minD))
-      assert(java.lang.Double.doubleToRawLongBits(a.maxD) ==
-        java.lang.Double.doubleToRawLongBits(d.maxD))
-      assert(a.copy(minD = 0, maxD = 0) == d.copy(minD = 0, maxD = 0))
-    }
   }
 
   test("leading-dim trim is manifest surgery: exactly one shard file opened") {

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** The DSv2 write path: df.write.format("mdio") with the declared
-  * chunk-aligned clustering distribution. */
+/** The write APIs — `writeVariable`, `insertAligned` and the DSv2 sink
+  * (`df.write.format("mdio")`) — and the one owner shuffle behind them. */
 class MdioWritePathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,22 +34,34 @@ class MdioWritePathSpec extends SparkSpec {
     dir
   }
 
-  test("aligned parallel write: repartitionByChunk + option(aligned) round-trips") {
+  /** Chunk file name -> bytes of variable `v` at `dir`. */
+  private def chunkBytes(dir: String, v: String): Map[String, Seq[Byte]] =
+    ZarrMeta.path(dir).resolve(v).list().filterNot(_.name.startsWith("."))
+      .map(p => p.name -> p.readAllBytes().toSeq).toMap
+
+  /** Writes each variable of `vars` from `df` with its own writeVariable job. */
+  private def writeEach(df: DataFrame, dir: String, vars: String*): Unit =
+    vars.foreach(v => MdioWriter.writeVariable(spark, df.select($"inline", $"crossline", col(v)), dir, v))
+
+  test("bare sink append fans out and matches writeVariable's bytes") {
     val dir = create()
+    val twin = create()
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
       yield (i, x, (i * 10 + x).toDouble, ((i + x) % 2).toInt)
     val scrambled = cells.toDF("inline", "crossline", "image", "mask").repartition(7)
-    MdioWriter.repartitionByChunk(scrambled, dir)
-      .write.format("mdio").option("aligned", "true").mode("append").save(dir)
+    val tasks = writerTasks(scrambled.write.format("mdio").mode("append").save(dir))
+    assert(tasks > 1, s"the sink wrote in $tasks owner task(s)")
     val got = spark.read.format("mdio").load(dir)
       .select("inline", "crossline", "image", "mask")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(got == cells.toSet)
-    // chunk files exist for all 4 chunks of each variable
-    val names = graft.zarr.ZarrMeta.path(dir).resolve("image")
-      .list().map(_.name).toSet
-    assert(Set("0.0", "0.1", "1.0", "1.1").subsetOf(names))
+    writeEach(scrambled, twin, "image", "mask")
+    for (v <- Seq("image", "mask")) {
+      assert(chunkBytes(dir, v).keySet == Set("0.0", "0.1", "1.0", "1.1"))
+      assert(chunkBytes(dir, v) == chunkBytes(twin, v), s"chunk files of $v differ from writeVariable's")
+    }
     MdioWriter.delete(dir)
+    MdioWriter.delete(twin)
   }
 
   test("partial writes read-modify-write: untouched cells survive (both paths)") {
@@ -137,15 +149,24 @@ class MdioWritePathSpec extends SparkSpec {
     }
   }
 
-  test("default write is the safe single-partition path (no torn chunks)") {
+  test("bare sink overwrite fans out and matches writeVariable's bytes") {
     val dir = create()
+    val twin = create()
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
-      yield (i, x, 1.0, 1)
-    val df = cells.toDF("inline", "crossline", "image", "mask").repartition(5)
-    df.write.format("mdio").mode("append").save(dir)
-    // a single writer owns every chunk — no torn chunks: re-read equals input
-    assert(spark.read.format("mdio").load(dir).count() == 48)
+      yield (i, x, (i - x) * 0.5, (i * x).toInt)
+    val df = cells.toDF("inline", "crossline", "image", "mask").repartition(7)
+    df.select($"inline", $"crossline", lit(1.0).as("image"), lit(1).as("mask"))
+      .write.format("mdio").mode("append").save(dir)
+    // overwrite rewrites whole chunks, as append does: no torn chunks
+    val tasks = writerTasks(df.write.format("mdio").mode("overwrite").save(dir))
+    assert(tasks > 1, s"the sink wrote in $tasks owner task(s)")
+    assert(spark.read.format("mdio").load(dir).select("inline", "crossline", "image", "mask")
+      .as[(Long, Long, Double, Int)].collect().toSet == cells.toSet)
+    writeEach(df, twin, "image", "mask")
+    for (v <- Seq("image", "mask"))
+      assert(chunkBytes(dir, v) == chunkBytes(twin, v), s"chunk files of $v differ from writeVariable's")
     MdioWriter.delete(dir)
+    MdioWriter.delete(twin)
   }
 
   test("insertAligned: one call, >1 writer task, bit-identical to the serial path") {
@@ -154,22 +175,15 @@ class MdioWritePathSpec extends SparkSpec {
     val cells = for { i <- 0L until 8L; x <- 0L until 6L }
       yield (i, x, (i * 3 + x).toDouble, ((i * x) % 3).toInt)
     val df = cells.toDF("inline", "crossline", "image", "mask").repartition(7)
-    // serial twin: the bare sink (single writer task)
-    df.write.format("mdio").mode("append").save(serialDir)
-    // pit-of-success call: repartitions by chunk + aligned internally
-    assert(MdioWriter.repartitionByChunk(df, alignedDir).rdd.getNumPartitions > 1,
-      "alignment repartition must fan out to >1 writer task")
-    MdioWriter.insertAligned(df, alignedDir)
-    // bit-identical chunk files, variable by variable
+    // serial twin: one writeVariable job per variable, one after the other
+    writeEach(df, serialDir, "image", "mask")
+    // pit-of-success call: every variable in one owner shuffle
+    val tasks = writerTasks(MdioWriter.insertAligned(df, alignedDir))
+    assert(tasks > 1, s"insertAligned wrote in $tasks owner task(s)")
     for (v <- Seq("image", "mask")) {
-      val s = graft.zarr.ZarrMeta.path(serialDir).resolve(v)
-      val a = graft.zarr.ZarrMeta.path(alignedDir).resolve(v)
-      val chunkNames = s.list().map(_.name).filterNot(_.startsWith(".")).sorted
-      assert(chunkNames.nonEmpty)
-      for (c <- chunkNames)
-        assert(java.util.Arrays.equals(
-          s.resolve(c).readAllBytes(), a.resolve(c).readAllBytes()),
-          s"chunk $v/$c differs between serial and aligned writes")
+      assert(chunkBytes(serialDir, v).nonEmpty)
+      assert(chunkBytes(alignedDir, v) == chunkBytes(serialDir, v),
+        s"chunk files of $v differ between serial and aligned writes")
     }
     MdioWriter.delete(serialDir)
     MdioWriter.delete(alignedDir)
@@ -201,10 +215,10 @@ class MdioWritePathSpec extends SparkSpec {
 
   test("writeVariable, insertAligned and the sink agree on every dtype") {
     // One chunk writer serves every write API: for each dtype, the same
-    // cells written through writeVariable, insertAligned (>1 writer task)
-    // and the bare serial sink leave byte-identical chunk/shard files and
-    // equal stats sidecars — after a full write, and again after a partial
-    // read-modify-write patch that also carries NULL (= untouched) cells.
+    // cells written through writeVariable, insertAligned and the bare sink
+    // leave byte-identical chunk/shard files and equal stats sidecars —
+    // after a full write, and again after a partial read-modify-write patch
+    // that also carries NULL (= untouched) cells.
     val k = $"inline" * 6 + $"crossline"
     def cplx(re: Column, im: Column) = struct(re.as("re"), im.as("im"))
     def rec(x: Column, e: Column) = struct(x.as("cdp-x"), e.as("elev"))
@@ -252,8 +266,6 @@ class MdioWritePathSpec extends SparkSpec {
         assert(stats.forall(_ == stats.head), s"$label $step: stats differ: $stats")
       }
       val cells = grid.select($"inline", $"crossline", value.as("v"))
-      if (label == "f4") assert(MdioWriter.repartitionByChunk(cells, dirs(1)).rdd.getNumPartitions > 1,
-        "alignment repartition must fan out to >1 writer task")
       writeAll(cells)
       assertSame("full write")
       val before = read(dirs(0))
@@ -334,9 +346,31 @@ class MdioWritePathSpec extends SparkSpec {
     MdioWriter.delete(dir)
   }
 
+  test("a partial-variable sink write keeps the other's stats current") {
+    // the sink writes every table variable; one the frame leaves NULL gets
+    // no fragment, and its publish carries the prior stats shards over
+    val dir = create()
+    val cells = for { i <- 0L until 8L; x <- 0L until 6L }
+      yield (i, x, (i * 10 + x).toDouble, ((i + x) % 2).toInt)
+    MdioWriter.insertAligned(cells.toDF("inline", "crossline", "image", "mask"), dir)
+    val maskDir = ZarrMeta.path(dir).resolve("mask")
+    val maskStats = MdioChunkStats.current(maskDir)
+    val maskBytes = chunkBytes(dir, "mask")
+    assert(maskStats.exists(_.size == 4) && maskBytes.size == 4)
+    cells.map { case (i, x, _, _) => (i, x, -1.0) }.toDF("inline", "crossline", "image")
+      .write.format("mdio").mode("append").save(dir)
+    assert(MdioChunkStats.current(maskDir) == maskStats, "mask's stats changed or went stale")
+    assert(chunkBytes(dir, "mask") == maskBytes, "mask's chunk files changed")
+    val imageStats = MdioChunkStats.current(ZarrMeta.path(dir).resolve("image"))
+    assert(imageStats.exists(_.valuesIterator.forall(_.exists(b => b.min == -1 && b.max == -1))),
+      s"image's stats do not describe the write: $imageStats")
+    MdioWriter.delete(dir)
+  }
+
   test("aligned parallel write at 100k cells keeps every chunk intact") {
     val dir = Files.createTempDirectory("mdio_big").resolve("big.mdio").toString
-    MdioWriter.create(MdioSpec.fromJson(
+    val twin = Files.createTempDirectory("mdio_big").resolve("twin.mdio").toString
+    for (d <- Seq(dir, twin)) MdioWriter.create(MdioSpec.fromJson(
       """{
         |  "metadata": {"name": "big", "apiVersion": "v1.0", "createdOn": "2026-01-01T00:00:00Z"},
         |  "variables": [
@@ -349,14 +383,15 @@ class MdioWritePathSpec extends SparkSpec {
         |     "compressor": {"name": "zstd"},
         |     "metadata": {"chunkGrid": {"name": "regular", "configuration": {"chunkShape": [64, 64]}}}}
         |  ]
-        |}""".stripMargin), dir)
-    import spark.implicits._
+        |}""".stripMargin), d)
     val df = spark.range(100000).select(
       (col("id") / 250).cast("long").as("inline"),
       (col("id") % 250).as("crossline"),
       (col("id") * 0.5).as("image")).repartition(13) // deliberately scrambled
-    MdioWriter.repartitionByChunk(df, dir, partitions = 8)
-      .write.format("mdio").option("aligned", "true").mode("append").save(dir)
+    val tasks = writerTasks(df.write.format("mdio").mode("append").save(dir))
+    assert(tasks > 1, s"the sink wrote in $tasks owner task(s)")
+    MdioWriter.writeVariable(spark, df, twin, "image")
+    assert(chunkBytes(dir, "image").size == 28 && chunkBytes(dir, "image") == chunkBytes(twin, "image"))
     val back = spark.read.format("mdio").load(dir)
     assert(back.count() == 100000)
     // spot-exact: decimal sums match (order-independent)
@@ -364,6 +399,7 @@ class MdioWritePathSpec extends SparkSpec {
       .collect()(0).getDecimal(0)
     assert(sum == new java.math.BigDecimal("2499975000.0").setScale(6))
     MdioWriter.delete(dir)
+    MdioWriter.delete(twin)
   }
 
   // an inline × crossline × time float32 volume `amplitude` (metadata only)
@@ -382,51 +418,79 @@ class MdioWritePathSpec extends SparkSpec {
     dir
   }
 
-  test("repartitionByChunk puts up to n owners in distinct partitions") {
+  test("the owner partitioner puts up to n owners in distinct tasks") {
     // 256×256×128 in 128³ chunks has 4 owners; a hash of the chunk-start
     // keys put (0,0,0) and (0,128,0) in one partition at 4 and at 8
     val dir = createVolume(Seq(256L, 256L, 128L), Seq(128L, 128L, 128L),
       Files.createTempDirectory("mdio_own").resolve("o.mdio").toString)
     val cells = for (i <- Seq(0L, 128L, 255L); x <- Seq(0L, 128L, 200L)) yield (i, x, 7L, 1.0f)
     val df = cells.toDF("inline", "crossline", "time", "amplitude")
-    for (n <- Seq(0, 4, 8)) {
-      val placed = MdioWriter.repartitionByChunk(df, dir, partitions = n)
-        .select(floor($"inline" / 128).cast("long"), floor($"crossline" / 128).cast("long"), spark_partition_id())
-        .as[(Long, Long, Int)].collect().distinct
-      assert(placed.length == 4, s"n=$n: an owner split across partitions: ${placed.toSeq}")
-      assert(placed.map(_._3).distinct.length == 4, s"n=$n: owners share a partition: ${placed.toSeq}")
+    // the owner ids the map side packs these cells' fragments under
+    val dims = Array("inline", "crossline", "time")
+    val meta = ZarrMeta.readGroup(ZarrMeta.path(dir))._2("amplitude")._1
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    val owners = new MdioDataWriter(dir, dims, df.schema, Array("amplitude" -> meta))
+      .pack(rows.iterator).map(_._1).toSeq.distinct
+    assert(owners.sorted == Seq(0L, 1L, 2L, 3L), owners)
+    for (n <- Seq(4, 8)) {
+      val partitioner = new MdioWriter.OwnerPartitioner(n)
+      val placed = owners.map(o => partitioner.getPartition(o))
+      assert(placed.distinct.length == 4, s"n=$n: owners share a partition: $placed")
     }
     // by default one task per owner, up to the cluster's parallelism
-    assert(MdioWriter.repartitionByChunk(df, dir).rdd.getNumPartitions == 4)
+    assert(writerTasks(MdioWriter.insertAligned(df, dir)) == 4)
     MdioWriter.delete(dir)
   }
 
-  /** Shuffle bytes the jobs of `body` wrote, read through a SparkListener. */
-  private def shuffleWriteBytes(body: => Unit): Long = {
+  /** Runs `body` with `listener` attached and returns once `listener` has
+    * seen every event of `body`'s jobs. */
+  private def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
     import org.apache.spark.scheduler._
-    val bytes = new java.util.concurrent.atomic.AtomicLong
     val markerDone = new java.util.concurrent.CountDownLatch(1)
     @volatile var markerJob = -1
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    val marker = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "shuffle marker"))
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "listener marker"))
           markerJob = e.jobId
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob) markerDone.countDown()
     }
     spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(marker)
     try {
       body
-      // events reach a listener in order: once the marker job's end arrives,
-      // every task end of `body` has been counted
-      spark.sparkContext.setJobDescription("shuffle marker")
+      // events reach the listeners in order: once the marker job's end
+      // arrives, every event of `body` has been delivered
+      spark.sparkContext.setJobDescription("listener marker")
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job end never arrived")
-      bytes.get
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(marker)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Shuffle bytes the jobs of `body` wrote, read through a SparkListener. */
+  private def shuffleWriteBytes(body: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    })(body)
+    bytes.get
+  }
+
+  /** Tasks of the owner stages `body` runs — the stages reading the owner
+    * shuffle (`partitionBy` in MdioWriter), one task per chunk writer. */
+  private def writerTasks(body: => Unit): Int = {
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.callSite.startsWith("partitionBy at MdioWriter")))
+          tasks.addAndGet(e.stageInfo.numTasks)
+    })(body)
+    tasks.get
   }
 
   test("insertAligned and writeVariable shuffle at most 1.2x the user bytes") {

@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner =="
+echo "== 1/6 one session builder, one owner partitioner, one write route =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -28,6 +28,15 @@ if [ -n "$hashed" ]; then
   fail=1
 else
   echo "no .repartition( in src/main/scala/graft/sources/"
+fi
+# every chunk write goes through MdioWriter.writeOwned: no DSv2 row-writer
+# commit protocol and no sink-only settings beside it
+route=$(grep -rnE "DataWriterFactory|BatchWrite|RequiresDistributionAndOrdering|spark\.graft\.sink\." src/main/)
+if [ -n "$route" ]; then
+  echo "WRITE ROUTE LINT RED: a second write route in src/main/:"; echo "$route"
+  fail=1
+else
+  echo "one write route (no DataWriterFactory, BatchWrite, RequiresDistributionAndOrdering, spark.graft.sink.)"
 fi
 
 echo "== 2/6 full test suite =="
