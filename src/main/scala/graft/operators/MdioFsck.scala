@@ -38,9 +38,11 @@ import org.apache.spark.sql.types._
   *     (ERROR — data no scan will ever read; v2 dot-keys at the variable
   *     root and v3 nested `c/…` paths, against the shard grid when the
   *     array is `sharding_indexed`), shard files the manifest does not
-  *     list at their generation (WARNING — GC candidates), and
+  *     list at their generation (WARNING — GC candidates),
   *     `.mdio_statfrag.*` files an earlier sink version left (WARNING —
-  *     safe to delete).
+  *     safe to delete), and the hidden `.<name>.<uuid>.tmp` sibling a
+  *     crash inside a chunk put (`VPath.replace`) leaves, at the variable
+  *     root or under `c/` (WARNING — safe to delete).
   *
   * A stale sidecar (data generation moved past it) downgrades checks 2–3
   * to a single WARNING — stale stats are a legal state (scans fall back),
@@ -277,9 +279,13 @@ object MdioFsck {
     // iterator), so the driver holds one name at a time, not the ~1.6 M
     // chunk names of the 100 TB envelope
     val keyRe = "^\\d+(\\.\\d+)*$".r
+    val putTmpRe = "^\\..+\\.[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\\.tmp$".r
+    def putTmp(subject: String): Unit =
+      add("warning", "inventory", subject, "interrupted chunk put; safe to delete")
     varDir.listIterator().foreach { p =>
       val n = p.name
-      if (keyRe.findFirstIn(n).isDefined && meta.version == 2) {
+      if (putTmpRe.matches(n)) putTmp(n)
+      else if (keyRe.findFirstIn(n).isDefined && meta.version == 2) {
         val cc = n.split("\\.").map(_.toLong).toSeq
         if (cc.size != grid.size || cc.zip(grid).exists { case (x, g) => x >= g })
           add("error", "inventory", n, "chunk file outside the grid — unreachable data")
@@ -310,7 +316,7 @@ object MdioFsck {
           val cc = parts.map(_.toLong).toSeq
           if (cc.size != fileGrid.size || cc.zip(fileGrid).exists { case (x, g) => x >= g })
             add("error", "inventory", s"c/$rel", "chunk file outside the grid — unreachable data")
-        }
+        } else if (putTmpRe.matches(f.name)) putTmp(s"c/$rel")
       }
     }
 

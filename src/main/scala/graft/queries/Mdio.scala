@@ -715,9 +715,10 @@ object Mdio {
       val parts = graft.sources.MdioTable(a, None)
         .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
         .build().toBatch.planInputPartitions()
-      require(parts.length == 4 &&
-        parts.forall(_.isInstanceOf[graft.sources.MdioChunkGroupPartition]),
-        s"grouped keyed scan regressed: ${parts.length} partitions of " +
+      require(parts.length == 4 && parts.forall {
+        case r: graft.sources.MdioChunkRun => r.key != null && r.factors.toSeq == Seq(2L, 1L)
+        case _ => false
+      }, s"grouped keyed scan regressed: ${parts.length} partitions of " +
           parts.map(_.getClass.getSimpleName).distinct.mkString(","))
       val joined = s.table(s"graft_spj.`$a`")
         .join(s.table(s"graft_spj.`$b`"), Seq("inline", "crossline"))
@@ -1563,11 +1564,10 @@ object Mdio {
       val parts = graft.sources.MdioTable(a, None)
         .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
         .build().toBatch.planInputPartitions()
-      require(parts.length == 4 &&
-        parts.forall(_.isInstanceOf[graft.sources.MdioChunkGroupPartition]) &&
-        parts.head.asInstanceOf[graft.sources.MdioChunkGroupPartition]
-          .factors.toSeq == Seq(1L, 2L),
-        s"trailing-grouped keyed scan regressed: ${parts.length} partitions of " +
+      require(parts.length == 4 && parts.forall {
+        case r: graft.sources.MdioChunkRun => r.key != null && r.factors.toSeq == Seq(1L, 2L)
+        case _ => false
+      }, s"trailing-grouped keyed scan regressed: ${parts.length} partitions of " +
           parts.map(_.getClass.getSimpleName).distinct.mkString(","))
       val joined = s.table(s"graft_spj.`$a`")
         .join(s.table(s"graft_spj.`$b`"), Seq("inline", "crossline"))

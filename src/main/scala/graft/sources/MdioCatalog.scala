@@ -15,10 +15,11 @@ import java.util
   *
   * Why a catalog when `format("mdio")` already exists: its
   * FunctionCatalog. Keyed scans (`spark.graft.scan.keyedPartitions`)
-  * report their partitioning over the `chunk_<size>` transforms, which
-  * Spark resolves against the table's own catalog — storage-partitioned
-  * joins of co-gridded stores need it. Writes take the same route as the
-  * path-based sink: `writeTo(...).append()` hands the frame to
+  * report their partitioning over the `chunk_<size>` transforms — the
+  * catalog's only functions — which Spark resolves against the table's
+  * own catalog; storage-partitioned joins of co-gridded stores need it.
+  * Writes take the same route as the path-based sink:
+  * `writeTo(...).append()` hands the frame to
   * [[MdioWriter.insertAligned]], whose owner shuffle gives each chunk (or
   * shard) file exactly one writer task.
   *
@@ -72,9 +73,7 @@ class MdioCatalog extends TableCatalog with FunctionCatalog {
   // ---- FunctionCatalog: the chunk ownership transform --------------------
 
   override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.namespace().isEmpty && ident.name() == ChunkFunction.name())
-      ChunkFunction
-    else if (ident.namespace().isEmpty && ident.name().startsWith("chunk_"))
+    if (ident.namespace().isEmpty && ident.name().startsWith("chunk_"))
       // sized single-argument family `chunk_<size>(coord)` — the form
       // KeyGroupedPartitioning accepts (catalyst supports only
       // one-argument transforms as partition keys), used by MdioScan's
@@ -84,31 +83,17 @@ class MdioCatalog extends TableCatalog with FunctionCatalog {
         .getOrElse(throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident))
     else throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident)
 
-  override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(Array.empty, ChunkFunction.name()))
+  /** The `chunk_<size>` family is one function per chunk size, resolved on
+    * demand; there is no finite list to enumerate. */
+  override def listFunctions(namespace: Array[String]): Array[Identifier] = Array.empty
 }
 
-/** `chunk(coord, chunkSize) = coord / chunkSize`: the chunk ordinal that
-  * owns a cell coordinate along one dimension, callable from SQL through
-  * the catalog. Deterministic, codegen-friendly (static magic `invoke`). */
-object ChunkFunction extends UnboundFunction {
-  override def name(): String = "chunk"
-  override def description(): String =
-    "chunk(coord, chunkSize): ordinal of the chunk owning a cell coordinate"
-  override def bind(inputType: StructType): BoundFunction = {
-    require(inputType.fields.length == 2 &&
-      inputType.fields.forall(_.dataType == LongType),
-      s"chunk(coord: long, chunkSize: long), got $inputType")
-    ChunkBound
-  }
-}
-
-/** `chunk_<size>(coord) = coord / size`: the single-argument form of
-  * [[ChunkFunction]] with the chunk size baked into the FUNCTION NAME —
-  * catalyst's KeyGroupedPartitioning accepts only one-argument transforms
-  * as partition keys, so the storage-partitioned-join report uses this
-  * family; two scans are join-compatible exactly when their canonical
-  * names (and so their grids) match. */
+/** `chunk_<size>(coord) = coord / size`: the ordinal of the size-`size`
+  * chunk that owns a cell coordinate, with the chunk size baked into the
+  * FUNCTION NAME — catalyst's KeyGroupedPartitioning accepts only
+  * one-argument transforms as partition keys, so the storage-partitioned
+  * join report uses this family; two scans are join-compatible exactly
+  * when their canonical names (and so their grids) match. */
 final case class SizedChunkFunction(size: Long) extends UnboundFunction {
   override def name(): String = s"chunk_$size"
   override def description(): String =
@@ -154,17 +139,4 @@ final case class SizedChunkBound(size: Long) extends ScalarFunction[java.lang.Lo
 final case class SizedChunkReducer(ratio: Long)
     extends org.apache.spark.sql.connector.catalog.functions.Reducer[java.lang.Long, java.lang.Long] {
   override def reduce(k: java.lang.Long): java.lang.Long = k / ratio
-}
-
-object ChunkBound extends ScalarFunction[java.lang.Long] {
-  override def inputTypes(): Array[DataType] = Array(LongType, LongType)
-  override def resultType(): DataType = LongType
-  override def name(): String = "chunk"
-  override def canonicalName(): String = "graft.mdio.chunk"
-  override def isDeterministic: Boolean = true
-  override def isResultNullable: Boolean = false
-  // interpreted path; codegen uses the static-shaped magic method below
-  override def produceResult(input: InternalRow): java.lang.Long =
-    input.getLong(0) / input.getLong(1)
-  def invoke(coord: Long, chunkSize: Long): Long = coord / chunkSize
 }

@@ -6,21 +6,47 @@ import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableCo
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
+/** The scan's one reader: walks an [[MdioChunkRun]]'s chunks in order and
+  * drains an [[MdioColumnarReader]] over each, every chunk fetched and
+  * decoded through one [[ChunkSource]] that this reader owns, so shard
+  * handles persist across the run. */
+final class MdioChunkRunReader(run: MdioChunkRun, dims: Array[String], schema: StructType)
+    extends PartitionReader[ColumnarBatch] {
+  private val source = new ChunkSource
+  private var pos = 0L // index of the run's next chunk
+  private var cur: MdioColumnarReader = null
+
+  override def next(): Boolean = {
+    while (true) {
+      if (cur == null) {
+        if (pos >= run.chunkCount) return false
+        cur = new MdioColumnarReader(run.chunk(pos), dims, schema, source)
+        pos += 1
+      }
+      if (cur.next()) return true
+      cur.close()
+      cur = null
+    }
+    false // unreachable
+  }
+
+  override def get(): ColumnarBatch = cur.get()
+  override def close(): Unit = {
+    if (cur != null) { cur.close(); cur = null }
+    source.close()
+  }
+}
+
 /** Vectorized chunk reader: decodes each variable's chunk once through the
-  * task's [[ChunkSource]], then fills OnHeapColumnVectors in batches of up
+  * run's [[ChunkSource]], then fills OnHeapColumnVectors in batches of up
   * to [[MdioColumnarReader.BatchRows]] cells (C-order over the pushed cell
   * ranges). Covers the FULL dtype matrix — primitives, complex (struct
   * re/im), record ("void") structs, and u64 (Decimal(20,0)) — so every
   * scan feeds whole-stage codegen batches; struct children are filled
   * through the parent vector's child columns. */
 final class MdioColumnarReader(p: MdioInputPartition, dims: Array[String], schema: StructType,
-                               sharedSource: ChunkSource = null)
+                               source: ChunkSource)
     extends PartitionReader[ColumnarBatch] {
-
-  // shard handles reused across inner-chunk reads; owned here only when
-  // not provided by an enclosing chunk-range reader
-  private val source = if (sharedSource != null) sharedSource else new ChunkSource
-  private val ownsSource = sharedSource == null
 
   private val rank = dims.length
   private val meta0 = p.metas.headOption.getOrElse(
@@ -191,10 +217,7 @@ final class MdioColumnarReader(p: MdioInputPartition, dims: Array[String], schem
     }
 
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    batch.close()
-    if (ownsSource) source.close()
-  }
+  override def close(): Unit = batch.close()
 }
 
 object MdioColumnarReader {

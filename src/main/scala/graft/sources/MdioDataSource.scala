@@ -25,10 +25,12 @@ import scala.jdk.CollectionConverters._
   * Scale design:
   *  - partitions cover only chunks intersecting the pushed dim ranges —
   *    the Spark analog of the reference's "only chunks inside the slice are
-  *    read" (USER_GUIDE.md Read; mdio/variable.h:1348-1351) — and the plain
-  *    full-scan path COALESCES C-order-adjacent chunks into per-task ranges
-  *    (~targetPartitionBytes each), so the driver plans O(bytes/target)
-  *    partitions, never one control object per chunk;
+  *    read" (USER_GUIDE.md Read; mdio/variable.h:1348-1351). Every
+  *    partition is one [[MdioChunkRun]] read by one [[MdioChunkRunReader]];
+  *    the plain full-scan path COALESCES C-order-adjacent chunks into
+  *    per-task runs (~`spark.sql.files.maxPartitionBytes` each), so the
+  *    driver plans O(bytes/target) partitions, never one control object
+  *    per chunk;
   *  - `SupportsPushDownFilters`: per-dimension range predicates are absorbed
   *    entirely (chunk pruning + exact in-chunk ranges), so a 100 TB store
   *    sliced to one inline only ever opens that inline's chunk files;
@@ -1269,12 +1271,8 @@ object MdioAggScan {
   }
 
   /** C-order chunk keys of a chunk-index box. */
-  def boxKeys(box: Seq[(Long, Long)]): Iterator[String] = {
-    def rec(i: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-      if (i == box.size) Iterator.single(acc)
-      else (box(i)._1 until box(i)._2).iterator.flatMap(c => rec(i + 1, acc :+ c))
-    rec(0, Vector.empty).map(ZarrMeta.chunkKey)
-  }
+  def boxKeys(box: Seq[(Long, Long)]): Iterator[String] =
+    MdioScan.cartesian(box.map { case (lo, hi) => lo until hi }).map(ZarrMeta.chunkKey)
 
   /** One metadata aggregate answer over a set of chunk entries, or None
     * when the entries cannot answer it (missing moments; an integral SUM
@@ -1412,14 +1410,9 @@ object MdioAggScan {
         v -> entries
       }.toMap
     // enumerate slab tuples in pushed-group order (C-order nesting)
-    def tuples(i: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-      if (i == groups.size) Iterator.single(acc)
-      else {
-        val (dLo, dHi) = bounds(dis(i))
-        val l = groups(i)._2
-        ((dLo / l) to ((dHi - 1) / l)).iterator.flatMap(g => tuples(i + 1, acc :+ g))
-      }
-    val rows = tuples(0, Vector.empty).map { gs =>
+    val rows = MdioScan.cartesian(groups.zip(dis).map { case ((_, l), di) =>
+      (bounds(di)._1 / l) to ((bounds(di)._2 - 1) / l)
+    }).map { gs =>
       // slab-clamped cell range per grouped dim
       val slabbed = groups.zip(dis).zip(gs).foldLeft(ranges) {
         case (r, (((d, l), di), g)) =>
@@ -1482,6 +1475,12 @@ final case class MdioAggReaderFactory() extends PartitionReaderFactory {
     }
 }
 
+/** The chunk scan. Every plan is an array of [[MdioChunkRun]]s; each
+  * planning branch chooses its chunks and task count: the plain full scan
+  * coalesces C-order ranges of the chunk box (pruned by value stats into
+  * runs of survivors), keyed mode plans one keyed run per group box, and
+  * the top-N, limit, IN-list (static or runtime) and allowlist plans emit
+  * one-chunk runs. [[MdioChunkRunReader]] reads any run. */
 final case class MdioScan(path: String, dims: Seq[String],
                           metas: Map[String, ZarrMeta.ArrayMeta],
                           requiredSchema: StructType,
@@ -1499,41 +1498,40 @@ final case class MdioScan(path: String, dims: Seq[String],
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
 
-  /** STORAGE-PARTITIONED JOINS (opt-in session switch
-    * `spark.graft.scan.keyedPartitions=true`): the scan plans ONE
-    * partition per chunk, each carrying its chunk ordinals as a
-    * partition key, and reports `KeyGroupedPartitioning` over the
-    * catalog `chunk(dim, chunkSize)` transform — so two CO-GRIDDED MDIO
-    * stores loaded through [[MdioCatalog]] (whose FunctionCatalog
-    * resolves the transform) join on their dims with ZERO shuffle under
-    * `spark.sql.sources.v2.bucketing.enabled=true`: Spark zips the two
-    * sides' chunk-key groups task-by-task, the attribute-merge pattern
-    * of seismic cube fusion at 100 TB (neither cube is broadcastable and
-    * a shuffle would move both corpora whole). The trade is
-    * O(chunks-in-box) driver-side partition objects instead of the
-    * coalesced O(bytes/target) ranges — exactly why it is a per-session
-    * opt-in rather than the default full-scan plan. Path-based loads
-    * (no FunctionCatalog) fall back to unknown partitioning harmlessly. */
-  private def keyedPartitions: Boolean = {
-    val s = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    s.exists(_.conf.get("spark.graft.scan.keyedPartitions", "false").toBoolean)
-  }
+  /** A session setting read at planning time (active session, else the
+    * default one). */
+  private def sessionConf(key: String, default: String): String =
+    MdioScan.session.map(_.conf.get(key, default)).getOrElse(default)
 
-  /** Ceiling on keyed-mode partition count: keyed planning is one driver
-    * object per chunk, so an unbounded keyed scan of a 100 TB store would
-    * plan ~1.6 M InputPartitions per variable. Past the ceiling the scan
-    * falls back LOUDLY to the coalesced chunk-range plan — the join then
-    * shuffles instead of zipping partitions, which is the correct trade
-    * when the alternative is millions of driver-side control objects.
-    * Raise `spark.graft.scan.keyedPartitions.max` deliberately if the
-    * driver is sized for more. */
-  private def keyedMaxPartitions: Long = {
-    val s = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    s.map(_.conf.get("spark.graft.scan.keyedPartitions.max", "65536").toLong)
-      .getOrElse(65536L)
-  }
+  /** STORAGE-PARTITIONED JOINS (opt-in session switch
+    * `spark.graft.scan.keyedPartitions=true`): the scan plans one keyed
+    * run per GROUP of chunks (one chunk per group at the default factor
+    * 1), each carrying its group ordinals as a partition key, and reports
+    * `KeyGroupedPartitioning` over the catalog `chunk_<size>(dim)`
+    * transforms — so two CO-GRIDDED MDIO stores loaded through
+    * [[MdioCatalog]] (whose FunctionCatalog resolves the transform) join
+    * on their dims with ZERO shuffle under
+    * `spark.sql.sources.v2.bucketing.enabled=true`: Spark zips the two
+    * sides' key groups task-by-task, the attribute-merge pattern of
+    * seismic cube fusion at 100 TB (neither cube is broadcastable and a
+    * shuffle would move both corpora whole). The trade is O(groups)
+    * driver-side partition objects instead of the coalesced
+    * O(bytes/target) ranges — exactly why it is a per-session opt-in
+    * rather than the default full-scan plan. Path-based loads (no
+    * FunctionCatalog) fall back to unknown partitioning harmlessly. */
+  private def keyedPartitions: Boolean =
+    sessionConf("spark.graft.scan.keyedPartitions", "false").toBoolean
+
+  /** Ceiling on keyed-mode partition count: an unbounded per-chunk keyed
+    * scan of a 100 TB store would plan ~1.6 M InputPartitions per
+    * variable. Past the ceiling the scan falls back LOUDLY to the
+    * coalesced chunk-range plan — the join then shuffles instead of
+    * zipping partitions, which is the correct trade when the alternative
+    * is millions of driver-side control objects. Raise
+    * `spark.graft.scan.keyedPartitions.max` deliberately if the driver is
+    * sized for more. */
+  private def keyedMaxPartitions: Long =
+    sessionConf("spark.graft.scan.keyedPartitions.max", "65536").toLong
 
   /** GROUPED keys (`spark.graft.scan.keyedPartitions.groupFactor`): the
     * keyed scan coarsens partition keys to `chunk_<G_i·size_i>(dim_i)` and
@@ -1543,7 +1541,7 @@ final case class MdioScan(path: String, dims: Seq[String],
     * they coarsen identically; `SizedChunkBound`'s reducers keep divisible
     * grids compatible). Accepted forms:
     *  - a single integer `G` — coarsens the LEADING dim only (the common
-    *    long-dim-leading geometry, and the r13-compatible form);
+    *    long-dim-leading geometry); `1`, the default, keys each chunk;
     *  - a comma list `g0,g1,…` — per-dim factors, the escape hatch for
     *    stores whose chunk count lives in TRAILING dims (e.g. 4×2048×2048
     *    chunks: `1,64,64` keeps the join under the ceiling);
@@ -1555,38 +1553,30 @@ final case class MdioScan(path: String, dims: Seq[String],
     *    when the join must zip.
     * The way to keep storage-partitioned joins live on stores whose chunk
     * count exceeds [[keyedMaxPartitions]]. */
-  private def keyedGroupFactorConf: String = {
-    val s = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    s.map(_.conf.get("spark.graft.scan.keyedPartitions.groupFactor", "1"))
-      .getOrElse("1")
-  }
+  private def keyedGroupFactorConf: String =
+    sessionConf("spark.graft.scan.keyedPartitions.groupFactor", "1")
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, UnknownPartitioning}
     import org.apache.spark.sql.connector.expressions.Expressions
     val planned = if (keyedPartitions) planInputPartitions() else Array.empty[InputPartition]
-    if (planned.isEmpty || !planned.forall(_.isInstanceOf[HasPartitionKey]))
-      new UnknownPartitioning(planned.length)
-    else {
-      val anchor = metas.values.head
-      // grouped keys coarsen each dim's key size by the factors the
-      // planned partitions actually carry (consistent with the memoized
-      // plan, whatever the live conf now says)
-      val factors: Array[Long] = planned.head match {
-        case gp: MdioChunkGroupPartition => gp.factors
-        case _ => Array.fill(dims.size)(1L)
-      }
-      // the SIZED single-argument transform family: catalyst accepts only
-      // one-argument transforms as partition keys, so the chunk size is
-      // baked into the function name (join compatibility = equal names =
-      // equal grids)
-      new KeyGroupedPartitioning(
-        dims.zipWithIndex.map { case (d, i) =>
-          val size = anchor.chunks(i) * factors(i)
-          Expressions.apply(s"chunk_$size", Expressions.column(d))
-            : org.apache.spark.sql.connector.expressions.Expression
-        }.toArray, planned.length)
+    // keys coarsen each dim's key size by the factors the planned runs
+    // actually carry (consistent with the memoized plan, whatever the live
+    // conf now says); a plan is keyed in every run or in none
+    planned.headOption.collect { case r: MdioChunkRun if r.key != null => r.factors } match {
+      case None => new UnknownPartitioning(planned.length)
+      case Some(factors) =>
+        val anchor = metas.values.head
+        // the SIZED single-argument transform family: catalyst accepts only
+        // one-argument transforms as partition keys, so the chunk size is
+        // baked into the function name (join compatibility = equal names =
+        // equal grids)
+        new KeyGroupedPartitioning(
+          dims.zipWithIndex.map { case (d, i) =>
+            val size = anchor.chunks(i) * factors(i)
+            Expressions.apply(s"chunk_$size", Expressions.column(d))
+              : org.apache.spark.sql.connector.expressions.Expression
+          }.toArray, planned.length)
     }
   }
 
@@ -1697,8 +1687,20 @@ final case class MdioScan(path: String, dims: Seq[String],
     // chunk-coordinate ranges intersecting the bounds, enumerated in C-order
     val chunkLo = bounds.zip(chunks).map { case ((lo, _), c) => lo / c }
     val chunkHi = bounds.zip(chunks).map { case ((_, hi), c) => (hi - 1) / c }
+    val box: Seq[Seq[Long]] = dims.indices.map(i => chunkLo(i) to chunkHi(i))
+    val extents: Seq[Long] = dims.indices.map(i => chunkHi(i) - chunkLo(i) + 1)
     val neededVars = requiredSchema.fieldNames
       .map(_.stripSuffix("__value")).distinct.filter(metas.contains)
+    val (cellLo, cellHi) = (bounds.map(_._1).toArray, bounds.map(_._2).toArray)
+    val (chunkShape, varMetas) = (chunks.toArray, neededVars.map(v => metas(v)))
+
+    /** The run of flat indices `[start, end)` of the chunk box at `boxLo`. */
+    def run(boxLo: Seq[Long], ext: Seq[Long], start: Long, end: Long,
+            survivors: Array[Long] = null, key: Array[Long] = null,
+            factors: Array[Long] = null): InputPartition =
+      MdioChunkRun(path, boxLo.toArray, ext.toArray, start, end, survivors,
+        cellLo, cellHi, chunkShape, neededVars, varMetas, key, factors)
+    def one(cc: Seq[Long]): InputPartition = run(cc, cc.map(_ => 1L), 0L, 1L)
 
     // ---- value-statistics chunk pruning: for each variable with a pushed
     // value range, load its per-chunk [min, max] sidecar IF it is
@@ -1749,9 +1751,12 @@ final case class MdioScan(path: String, dims: Seq[String],
       }
     }
 
-    def enumerate(dim: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-      if (dim == dims.size) Iterator.single(acc)
-      else (chunkLo(dim) to chunkHi(dim)).iterator.flatMap(c => enumerate(dim + 1, acc :+ c))
+    /** Cell range of chunk `cc` inside the bounds (global coords). */
+    def cellsOf(cc: Seq[Long]): Seq[(Long, Long)] =
+      cc.zipWithIndex.map { case (c, i) =>
+        (math.max(bounds(i)._1, c * chunks(i)), math.min(bounds(i)._2, (c + 1) * chunks(i)))
+      }
+    def cellCount(cc: Seq[Long]): Long = cellsOf(cc).map { case (lo, hi) => hi - lo }.product
 
     // ---- value-ordered TOP-N chunk pruning: ORDER BY v [DESC] LIMIT k
     // with current stats. Soundness: every Some-entry chunk guarantees
@@ -1770,16 +1775,11 @@ final case class MdioScan(path: String, dims: Seq[String],
         else MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
             chunkLo.headOption.getOrElse(0L),
             chunkHi.headOption.getOrElse(0L)).flatMap { entries =>
-          def cellsOf(cc: Vector[Long]): Long =
-            cc.zipWithIndex.map { case (c, i) =>
-              math.min(bounds(i)._2, (c + 1) * chunks(i)) -
-                math.max(bounds(i)._1, c * chunks(i))
-            }.product
           val guar = scala.collection.mutable.ArrayBuffer.empty[(BigDecimal, Long)]
-          enumerate(0, Vector.empty).foreach { cc =>
+          MdioScan.cartesian(box).foreach { cc =>
             entries.get(ZarrMeta.chunkKey(cc)).flatten.foreach { b =>
               if (desc || !b.hasNaN)
-                guar += (((if (desc) b.min else b.max), cellsOf(cc)))
+                guar += (((if (desc) b.min else b.max), cellCount(cc)))
             }
           }
           val ord = if (desc) Ordering[BigDecimal].reverse else Ordering[BigDecimal]
@@ -1809,278 +1809,170 @@ final case class MdioScan(path: String, dims: Seq[String],
     def survives(cc: Seq[Long]): Boolean =
       chunkSurvivesValues(cc) && topNPred.forall(_(cc))
 
-    def partitionFor(cc: Vector[Long]): Option[(InputPartition, Long)] = {
-      // cell range inside this chunk (global coords)
-      val cell = cc.zipWithIndex.map { case (c, i) =>
-        val lo = math.max(bounds(i)._1, c * chunks(i))
-        val hi = math.min(bounds(i)._2, (c + 1) * chunks(i))
-        (lo, hi)
+    /** Is chunk `cc` read? Runtime (join-driven) pruning skips chunks
+      * holding none of the dynamically provided dim values; then the
+      * value-stat and top-N pruning. */
+    def kept(cc: Seq[Long]): Boolean =
+      (runtimeValues.isEmpty || {
+        val cell = cellsOf(cc)
+        !dims.zipWithIndex.exists { case (d, i) =>
+          runtimeValues.get(d).exists(vals => !anyValueIn(vals, cell(i)._1, cell(i)._2))
+        }
+      }) && survives(cc)
+
+    /** Chunks of the box that are read, in C-order. Runtime IN-filters
+      * narrow each filtered dim to the chunks containing provided values —
+      * O(values) driver work, not an O(grid) sweep of a billion-chunk
+      * store. */
+    def candidates: Iterator[Vector[Long]] =
+      MdioScan.cartesian(dims.zipWithIndex.map { case (d, i) =>
+        runtimeValues.get(d) match {
+          case Some(vals) =>
+            vals.iterator.map(_ / chunks(i))
+              .filter(c => c >= chunkLo(i) && c <= chunkHi(i))
+              .toIndexedSeq.distinct.sorted
+          case None => box(i)
+        }
+      }).filter(kept)
+
+    /** One-chunk runs of `groups`, each group planned whole, until the
+      * planned chunks cover `cells` cells. */
+    def untilCells(groups: Iterator[Iterator[Vector[Long]]], cells: Long): Array[InputPartition] = {
+      val out = Vector.newBuilder[InputPartition]
+      var covered = 0L
+      while (covered < cells && groups.hasNext)
+        groups.next().foreach { cc => out += one(cc); covered += cellCount(cc) }
+      out.result().toArray
+    }
+
+    /** The plain full-scan plan: one run per contiguous C-order RANGE of
+      * chunks, sized to ~`spark.sql.files.maxPartitionBytes` of projected
+      * output per task — a billion-chunk store plans O(bytes/target)
+      * partitions, never one driver-side control object per chunk (SURVEY
+      * §7.4.6; the reference iterates chunks inside the read,
+      * mdio/variable.h:1078-1103, rather than materializing per-chunk
+      * control structures on a coordinator). Small grids still fan out to
+      * the cluster's parallelism, so correctness tests and small stores
+      * keep their per-chunk behavior. */
+    def coalescedPlan(): Array[InputPartition] = {
+      val totalChunks = extents.product
+      val totalCells = bounds.map { case (lo, hi) => hi - lo }.product
+      val rowBytes =
+        math.max(1L, requiredSchema.fields.map(_.dataType.defaultSize.toLong).sum)
+      val targetBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sessionConf("spark.sql.files.maxPartitionBytes", "128MB"))
+      val targetCells = math.max(1L, targetBytes / rowBytes)
+      val idealTasks = (totalCells + targetCells - 1) / targetCells
+      val par = MdioScan.session.map(_.sparkContext.defaultParallelism.toLong).getOrElse(1L)
+      val tasks = math.max(1L, math.min(totalChunks, math.max(idealTasks, par)))
+      val chunksPerTask = (totalChunks + tasks - 1) / tasks
+      if (!pruningActive)
+        (0L until totalChunks by chunksPerTask).map { s =>
+          run(chunkLo, extents, s, math.min(s + chunksPerTask, totalChunks))
+        }.toArray
+      else {
+        // value-stat pruning over the full-scan path: test each chunk in
+        // C-order against the sidecar bounds and coalesce runs of
+        // SURVIVORS into range partitions (still capped at chunksPerTask).
+        // Driver cost is O(chunks-in-box) — the same order as the stats
+        // sidecar itself, i.e. the parquet-footer trade: chunk-level
+        // stats are only ever as cheap as one entry per chunk.
+        val out = Vector.newBuilder[InputPartition]
+        var runStart = -1L
+        var flat = 0L
+        while (flat < totalChunks) {
+          val ok = survives(ZarrMeta.unflatten(flat, extents).toSeq.zip(chunkLo)
+            .map { case (c, lo) => c + lo })
+          if (ok && runStart < 0) runStart = flat
+          if (ok && flat - runStart + 1 == chunksPerTask) {
+            out += run(chunkLo, extents, runStart, flat + 1); runStart = -1L
+          } else if (!ok && runStart >= 0) {
+            out += run(chunkLo, extents, runStart, flat); runStart = -1L
+          }
+          flat += 1
+        }
+        if (runStart >= 0) out += run(chunkLo, extents, runStart, totalChunks)
+        out.result().toArray
       }
-      // runtime (join-driven) pruning: skip chunks holding none of the
-      // dynamically provided dim values
-      val pruned = dims.zipWithIndex.exists { case (d, i) =>
-        runtimeValues.get(d).exists(vals => !anyValueIn(vals, cell(i)._1, cell(i)._2))
-      } || !survives(cc)
-      if (pruned) None
-      else Some((MdioInputPartition(path, cc.toArray, cell.map(_._1).toArray, cell.map(_._2).toArray,
-        neededVars, neededVars.map(v => metas(v)).toArray): InputPartition,
-        cell.map { case (lo, hi) => hi - lo }.product))
     }
 
-    def coalescedPlan(): Array[InputPartition] =
-      coalescedRangePlan(chunkLo, chunkHi, bounds, chunks, neededVars,
-        pruningActive, survives)
-
-    // ---- explicit chunk-key allowlist (the internal planning hint behind
-    // countInRange/kthSmallest boundary probes): plan EXACTLY the listed
-    // chunks in ONE scan node, where a per-chunk union of dim-boxed scans
-    // would carry one plan leg each. Enumerates from the keys, not the
-    // grid (O(keys) driver work, not O(box)); value-stat pruning and
-    // runtime IN-filters still apply conjunctively via partitionFor; keys
-    // outside the clamped bounds are skipped.
-    chunkKeys match {
-      case Some(keys) =>
-        return keys.iterator
-          .map(k => Vector(k.split("\\.").map(_.toLong): _*))
-          .filter(cc => cc.size == dims.size && cc.indices.forall(i =>
-            cc(i) >= chunkLo(i) && cc(i) <= chunkHi(i)))
-          .toVector.distinct.sortBy(_.mkString("."))
-          .flatMap(cc => partitionFor(cc)).map(_._1).toArray
-      case None => ()
-    }
-
-    topN match {
+    if (chunkKeys.isDefined)
+      // ---- explicit chunk-key allowlist (the internal planning hint behind
+      // countInRange/kthSmallest boundary probes): plan EXACTLY the listed
+      // chunks in ONE scan node, where a per-chunk union of dim-boxed scans
+      // would carry one plan leg each. Enumerates from the keys, not the
+      // grid (O(keys) driver work, not O(box)); value-stat pruning and
+      // runtime IN-filters still apply conjunctively; keys outside the
+      // clamped bounds are skipped.
+      chunkKeys.get.iterator
+        .map(k => Vector(k.split("\\.").map(_.toLong): _*))
+        .filter(cc => cc.size == dims.size && cc.indices.forall(i =>
+          cc(i) >= chunkLo(i) && cc(i) <= chunkHi(i)))
+        .toVector.distinct.sortBy(_.mkString("."))
+        .filter(kept).map(one).toArray
+    else if (runtimeValues.isEmpty && topN.isDefined) {
       // ORDER BY <dims> LIMIT k: plan complete slabs of the LEADING sort
       // dim (in its direction) until >= k cells are covered — the leading
       // key dominates, so the true top-k rows all live in those slabs.
       // Spark re-sorts the reduced set (partial pushdown).
-      case Some((dim, desc, k)) if runtimeValues.isEmpty =>
-        val j = dims.indexOf(dim)
-        val cjs = if (desc) chunkHi(j) to chunkLo(j) by -1 else chunkLo(j) to chunkHi(j)
-        val others = dims.indices.filterNot(_ == j).toList
-        def enumOthers(rem: List[Int], acc: Map[Int, Long]): Iterator[Map[Int, Long]] =
-          rem match {
-            case Nil => Iterator.single(acc)
-            case d :: tail =>
-              (chunkLo(d) to chunkHi(d)).iterator.flatMap(c => enumOthers(tail, acc + (d -> c)))
-          }
-        val out = Vector.newBuilder[InputPartition]
-        var cells = 0L
-        val slabIter = cjs.iterator
-        while (cells < k && slabIter.hasNext) {
-          val cj = slabIter.next()
-          enumOthers(others, Map(j -> cj)).foreach { m =>
-            partitionFor(Vector.tabulate(dims.size)(m)).foreach { case (p, n) =>
-              out += p; cells += n
-            }
-          }
-        }
-        out.result().toArray
-      case _ =>
-        limitCells match {
-          // runtime IN-filters re-filter rows inside chunks, so a
-          // cell-count cap could under-deliver; plan everything then
-          case Some(limit) if runtimeValues.isEmpty =>
-            val it = enumerate(0, Vector.empty).flatMap(partitionFor)
-            val out = Vector.newBuilder[InputPartition]
-            var cells = 0L
-            while (cells < limit && it.hasNext) {
-              val (p, n) = it.next()
-              out += p
-              cells += n
-            }
-            out.result().toArray
-          // keyed mode (storage-partitioned joins): per-chunk partitions
-          // with partition keys — no range coalescing, every partition a
-          // HasPartitionKey (required to survive runtime filtering too).
-          // BOUNDED: past the ceiling the scan falls back LOUDLY to the
-          // coalesced plan (millions of driver-side partition objects are
-          // worse than one shuffled join).
-          case None if runtimeValues.isEmpty && keyedPartitions =>
-            val ceiling = keyedMaxPartitions
-            val extents = dims.indices.map(i => chunkHi(i) - chunkLo(i) + 1)
-            val factors = MdioScan.resolveGroupFactors(
-              keyedGroupFactorConf, dims.size, extents, ceiling)
-            if (factors.exists(_ > 1)) {
-              // grouped keys: one partition per aligned GROUP BOX of chunk
-              // ordinals (per-dim factors — trailing-dim-heavy geometries
-              // coarsen where their chunk count actually lives)
-              val gLo = dims.indices.map(i => chunkLo(i) / factors(i))
-              val gHi = dims.indices.map(i => chunkHi(i) / factors(i))
-              val groupCount = dims.indices.map(i => gHi(i) - gLo(i) + 1).product
-              if (groupCount <= ceiling) {
-                def enumGroups(dim: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-                  if (dim == dims.size) Iterator.single(acc)
-                  else (gLo(dim) to gHi(dim)).iterator
-                    .flatMap(g => enumGroups(dim + 1, acc :+ g))
-                val out = Vector.newBuilder[InputPartition]
-                enumGroups(0, Vector.empty).foreach { g =>
-                  val mLo = dims.indices.map(i => math.max(g(i) * factors(i), chunkLo(i)))
-                  val mHi = dims.indices.map(i =>
-                    math.min((g(i) + 1) * factors(i) - 1, chunkHi(i)))
-                  // member survivors only when pruning can thin the box —
-                  // the common unpruned plan stores O(rank) longs per group
-                  val surv: Array[Long] =
-                    if (!pruningActive) null
-                    else {
-                      val ext = dims.indices.map(i => mHi(i) - mLo(i) + 1)
-                      def enumM(dim: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-                        if (dim == dims.size) Iterator.single(acc)
-                        else (mLo(dim) to mHi(dim)).iterator
-                          .flatMap(c => enumM(dim + 1, acc :+ c))
-                      enumM(0, Vector.empty).filter(survives).map { cc =>
-                        dims.indices.foldLeft(0L)((f, i) => f * ext(i) + (cc(i) - mLo(i)))
-                      }.toArray
-                    }
-                  if (surv == null || surv.nonEmpty)
-                    out += MdioChunkGroupPartition(path, g.toArray, factors,
-                      mLo.toArray, mHi.toArray, surv, chunks.toArray,
-                      bounds.map(_._1).toArray, bounds.map(_._2).toArray,
-                      neededVars, neededVars.map(v => metas(v)).toArray)
-                }
-                out.result().toArray
-              } else {
-                MdioScan.log.warn(
-                  s"mdio keyed scan of $path: $groupCount grouped partitions " +
-                    s"(factors ${factors.mkString("x")}) still exceed " +
-                    s"spark.graft.scan.keyedPartitions.max=$ceiling — falling back " +
-                    "to coalesced chunk-range planning (raise the factors or use " +
-                    "groupFactor=auto).")
-                coalescedPlan()
-              }
-            } else {
-              val boxChunks: Long =
-                dims.indices.map(i => chunkHi(i) - chunkLo(i) + 1).product
-              if (boxChunks <= ceiling)
-                enumerate(0, Vector.empty).flatMap(partitionFor).map(_._1).toArray
-              else {
-                MdioScan.log.warn(
-                  s"mdio keyed scan of $path: box holds $boxChunks chunks, over " +
-                    s"spark.graft.scan.keyedPartitions.max=$ceiling — falling back " +
-                    "to coalesced chunk-range planning; the join will shuffle " +
-                    "instead of zipping storage partitions. Set " +
-                    "spark.graft.scan.keyedPartitions.groupFactor to keep the " +
-                    "storage-partitioned join with G-coarsened keys, or raise the " +
-                    "ceiling only if the driver is sized for that many partition " +
-                    "objects.")
-                coalescedPlan()
-              }
-            }
-          case None if runtimeValues.isEmpty => coalescedPlan()
-          case _ =>
-            // runtime (join-driven) IN-filters: enumerate ONLY the chunks
-            // containing provided values on their filtered dims — O(values)
-            // driver work, not an O(grid) sweep of a billion-chunk store
-            val perDim: Seq[IndexedSeq[Long]] = dims.zipWithIndex.map { case (d, i) =>
-              runtimeValues.get(d) match {
-                case Some(vals) =>
-                  vals.iterator.map(_ / chunks(i))
-                    .filter(c => c >= chunkLo(i) && c <= chunkHi(i))
-                    .toIndexedSeq.distinct.sorted
-                case None => chunkLo(i) to chunkHi(i)
-              }
-            }
-            def enumCand(dim: Int, acc: Vector[Long]): Iterator[Vector[Long]] =
-              if (dim == dims.size) Iterator.single(acc)
-              else perDim(dim).iterator.flatMap(c => enumCand(dim + 1, acc :+ c))
-            val perChunk = enumCand(0, Vector.empty).flatMap(partitionFor).map(_._1).toArray
-            val factors =
-              if (!keyedPartitions) Array.fill(dims.size)(1L)
-              else MdioScan.resolveGroupFactors(keyedGroupFactorConf, dims.size,
-                dims.indices.map(i => chunkHi(i) - chunkLo(i) + 1), keyedMaxPartitions)
-            if (factors.forall(_ <= 1)) perChunk
-            else {
-              // grouped keys must survive runtime filtering in the SAME
-              // declared key space (chunk_<G_i·size_i> per dim): regroup
-              // the surviving chunks into their aligned group boxes so
-              // partition keys keep matching the reported transforms.
-              // (`auto` factors derive from the STATIC chunk box, which
-              // runtime IN-sets never change — replans stay compatible.)
-              perChunk.collect { case p: MdioInputPartition => p }
-                .groupBy(p => p.chunk.indices.map(i => p.chunk(i) / factors(i)).toVector)
-                .map { case (g, members) =>
-                  val mLo = dims.indices.map(i => math.max(g(i) * factors(i), chunkLo(i)))
-                  val mHi = dims.indices.map(i =>
-                    math.min((g(i) + 1) * factors(i) - 1, chunkHi(i)))
-                  val ext = dims.indices.map(i => mHi(i) - mLo(i) + 1)
-                  val surv = members.map { p =>
-                    dims.indices.foldLeft(0L)((f, i) => f * ext(i) + (p.chunk(i) - mLo(i)))
-                  }.sorted
-                  MdioChunkGroupPartition(path, g.toArray, factors,
-                    mLo.toArray, mHi.toArray, surv, chunks.toArray,
-                    bounds.map(_._1).toArray, bounds.map(_._2).toArray,
-                    neededVars, neededVars.map(v => metas(v)).toArray): InputPartition
-                }.toArray
-            }
-        }
+      val (dim, desc, k) = topN.get
+      val j = dims.indexOf(dim)
+      val slabs = if (desc) box(j).reverse else box(j)
+      untilCells(slabs.iterator.map(c =>
+        MdioScan.cartesian(box.updated(j, Seq(c))).filter(kept)), k)
     }
-  }
-
-  /** The plain full-scan plan: one InputPartition per contiguous C-order
-    * RANGE of chunks, sized to ~targetPartitionBytes of projected output
-    * per task — a billion-chunk store plans O(bytes/target) partitions,
-    * never one driver-side control object per chunk (SURVEY §7.4.6; the
-    * reference iterates chunks inside the read, mdio/variable.h:1078-1103,
-    * rather than materializing per-chunk control structures on a
-    * coordinator). Small grids still fan out to the cluster's parallelism,
-    * so correctness tests and small stores keep their per-chunk behavior. */
-  private def coalescedRangePlan(chunkLo: Seq[Long], chunkHi: Seq[Long],
-                                 bounds: Seq[(Long, Long)],
-                                 chunks: Seq[Long],
-                                 neededVars: Array[String],
-                                 pruningActive: Boolean,
-                                 survives: Seq[Long] => Boolean): Array[InputPartition] = {
-    val extents: Array[Long] =
-      dims.indices.map(i => chunkHi(i) - chunkLo(i) + 1).toArray
-    val totalChunks = extents.product
-    val totalCells = bounds.map { case (lo, hi) => hi - lo }.product
-    val rowBytes =
-      math.max(1L, requiredSchema.fields.map(_.dataType.defaultSize.toLong).sum)
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    val targetBytes = session
-      .map(_.conf.get("spark.graft.scan.targetPartitionBytes", "134217728").toLong)
-      .getOrElse(134217728L)
-    val targetCells = math.max(1L, targetBytes / rowBytes)
-    val idealTasks = (totalCells + targetCells - 1) / targetCells
-    val par = session.map(_.sparkContext.defaultParallelism.toLong).getOrElse(1L)
-    val tasks = math.max(1L, math.min(totalChunks, math.max(idealTasks, par)))
-    val chunksPerTask = (totalChunks + tasks - 1) / tasks
-    def rangePartition(s: Long, e: Long): InputPartition =
-      MdioChunkRangePartition(path, chunkLo.toArray, extents, chunks.toArray,
-        s, e,
-        bounds.map(_._1).toArray, bounds.map(_._2).toArray,
-        neededVars, neededVars.map(v => metas(v)).toArray)
-    if (!pruningActive)
-      (0L until totalChunks by chunksPerTask).map { s =>
-        rangePartition(s, math.min(s + chunksPerTask, totalChunks))
-      }.toArray
-    else {
-      // value-stat pruning over the full-scan path: test each chunk
-      // in C-order against the sidecar bounds and coalesce runs of
-      // SURVIVORS into range partitions (still capped at
-      // chunksPerTask). Driver cost is O(chunks-in-box) — the same
-      // order as the stats sidecar itself, i.e. the parquet-footer
-      // trade: chunk-level stats are only ever as cheap as one
-      // entry per chunk.
-      def ccOf(flat: Long): Seq[Long] =
-        ZarrMeta.unflatten(flat, extents).toSeq.zip(chunkLo).map { case (c, lo) => c + lo }
-      val out = Vector.newBuilder[InputPartition]
-      var runStart = -1L
-      var flat = 0L
-      while (flat < totalChunks) {
-        val ok = survives(ccOf(flat))
-        if (ok && runStart < 0) runStart = flat
-        if (ok && flat - runStart + 1 == chunksPerTask) {
-          out += rangePartition(runStart, flat + 1); runStart = -1L
-        } else if (!ok && runStart >= 0) {
-          out += rangePartition(runStart, flat); runStart = -1L
-        }
-        flat += 1
+    // runtime IN-filters re-filter rows inside chunks, so a cell-count cap
+    // could under-deliver; plan everything then
+    else if (runtimeValues.isEmpty && limitCells.isDefined)
+      untilCells(MdioScan.cartesian(box).filter(kept).map(Iterator.single), limitCells.get)
+    else if (keyedPartitions) {
+      // keyed mode (storage-partitioned joins): one keyed run per aligned
+      // GROUP BOX of chunk ordinals (factor 1 = one chunk per group).
+      // BOUNDED: past the ceiling the scan falls back LOUDLY to the
+      // coalesced plan (millions of driver-side partition objects are
+      // worse than one shuffled join).
+      val ceiling = keyedMaxPartitions
+      val f = MdioScan.resolveGroupFactors(keyedGroupFactorConf, dims.size, extents, ceiling)
+      /** The keyed run of group `g`: the aligned group box clamped to the
+        * chunk box, reading `members` (null = the whole box). */
+      def groupRun(g: Seq[Long], members: Seq[Seq[Long]]): InputPartition = {
+        val mLo = dims.indices.map(i => math.max(g(i) * f(i), chunkLo(i)))
+        val ext = dims.indices.map(i =>
+          math.min((g(i) + 1) * f(i) - 1, chunkHi(i)) - mLo(i) + 1)
+        val surv = if (members == null) null else members.map { cc =>
+          dims.indices.foldLeft(0L)((flat, i) => flat * ext(i) + (cc(i) - mLo(i)))
+        }.toArray
+        run(mLo, ext, 0L, ext.product, surv, g.toArray, f)
       }
-      if (runStart >= 0) out += rangePartition(runStart, totalChunks)
-      out.result().toArray
+      val groups = dims.indices.map(i => (chunkLo(i) / f(i)) to (chunkHi(i) / f(i)))
+      val groupCount = dims.indices.map(i => chunkHi(i) / f(i) - chunkLo(i) / f(i) + 1).product
+      if (runtimeValues.isEmpty && groupCount > ceiling) {
+        // (runtime replans stay keyed: `auto` factors derive from the
+        // STATIC chunk box, which runtime IN-sets never change)
+        MdioScan.log.warn(
+          s"mdio keyed scan of $path: $groupCount keyed partitions " +
+            s"(factors ${f.mkString("x")}) exceed " +
+            s"spark.graft.scan.keyedPartitions.max=$ceiling — falling back " +
+            "to coalesced chunk-range planning; the join will shuffle " +
+            "instead of zipping storage partitions. Set " +
+            "spark.graft.scan.keyedPartitions.groupFactor (or auto) to keep " +
+            "the storage-partitioned join with coarsened keys, or raise the " +
+            "ceiling only if the driver is sized for that many partition " +
+            "objects.")
+        coalescedPlan()
+      } else if (runtimeValues.isEmpty && !pruningActive)
+        // the common unpruned join plans O(rank) longs per group, no
+        // member enumeration at all
+        MdioScan.cartesian(groups).map(g => groupRun(g, null)).toArray
+      else
+        // pruned or runtime-filtered: surviving chunks regroup into their
+        // aligned group boxes, so keys keep matching the reported transforms
+        candidates.toSeq.groupBy(cc => cc.indices.map(i => cc(i) / f(i)))
+          .toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering[IndexedSeq, Long])
+          .map { case (g, members) => groupRun(g, members) }.toArray
     }
+    else if (runtimeValues.isEmpty) coalescedPlan()
+    else candidates.map(one).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -2100,12 +1992,23 @@ object MdioScan {
     * ONE value-predicate scan, not one union leg per window chunk). */
   private[graft] val scanBuilds = new java.util.concurrent.atomic.AtomicLong
 
+  /** The session planning runs under: the active one, else the default. */
+  private[sources] def session: Option[org.apache.spark.sql.SparkSession] =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+
+  /** Every tuple of the per-dim ordinal `axes`, in C-order (last dim
+    * fastest). */
+  private[sources] def cartesian(axes: Seq[Seq[Long]]): Iterator[Vector[Long]] =
+    axes.foldLeft(Iterator.single(Vector.empty[Long])) { (tuples, axis) =>
+      tuples.flatMap(acc => axis.iterator.map(acc :+ _))
+    }
+
   /** Resolve `spark.graft.scan.keyedPartitions.groupFactor` into per-dim
-    * factors: a bare integer coarsens the leading dim (the r13 form), a
-    * comma list sets each dim (missing tail entries default to 1), and
-    * `auto` doubles the dim with the most groups until the group count
-    * fits the ceiling — the smallest power-of-two coarsening for the
-    * scan's own chunk box. */
+    * factors: a bare integer coarsens the leading dim, a comma list sets
+    * each dim (missing tail entries default to 1), and `auto` doubles the
+    * dim with the most groups until the group count fits the ceiling —
+    * the smallest power-of-two coarsening for the scan's own chunk box. */
   private[sources] def resolveGroupFactors(raw: String, rank: Int,
                                            extents: Seq[Long],
                                            ceiling: Long): Array[Long] = {
@@ -2131,159 +2034,56 @@ object MdioScan {
   }
 }
 
+/** One chunk as [[MdioColumnarReader]] reads it: the chunk's ordinals and
+  * its cell bounds clamped to the scan, cut from an [[MdioChunkRun]]. */
 final case class MdioInputPartition(path: String, chunk: Array[Long],
                                     cellLo: Array[Long], cellHi: Array[Long],
                                     vars: Array[String],
                                     metas: Array[ZarrMeta.ArrayMeta])
+
+/** The one chunk-reading scan partition: a RUN of chunks. The run reads
+  * the flat C-order indices `[start, end)` of the chunk box
+  * `[boxLo, boxLo + extents)`, or, when chunk pruning thinned the range,
+  * only the flat indices in `survivors` (null = every chunk of the range).
+  * Each chunk reads its own cells clamped to the scan's cell bounds
+  * `[cellLo, cellHi)`. In keyed mode `key` holds the run's group
+  * ordinals (`chunk_<factors_i·size_i>(dim_i)` of every row it yields);
+  * outside keyed mode `key` and `factors` are null.
+  *
+  * The planner's shapes: the coalesced full scan plans ranges of the
+  * scan's chunk box, a keyed scan one run per aligned group box, and
+  * every other plan (top-N, limit, IN-lists, allowlists, streaming)
+  * one-chunk runs. A run's driver footprint is O(rank) longs plus its
+  * survivor list, however many chunks it reads. */
+final case class MdioChunkRun(path: String,
+                              boxLo: Array[Long], extents: Array[Long],
+                              start: Long, end: Long, survivors: Array[Long],
+                              cellLo: Array[Long], cellHi: Array[Long],
+                              chunkShape: Array[Long],
+                              vars: Array[String], metas: Array[ZarrMeta.ArrayMeta],
+                              key: Array[Long] = null, factors: Array[Long] = null)
     extends InputPartition with HasPartitionKey {
-  /** Chunk ordinals per dim — exactly `chunk(dim_i, chunkSize_i)` of any
-    * row in the partition, the key [[MdioScan.outputPartitioning]]
-    * declares for storage-partitioned joins. */
+  /** The group ordinals in keyed mode; null otherwise, where the scan
+    * reports unknown partitioning and Spark never asks. */
   override def partitionKey(): InternalRow =
-    new GenericInternalRow(chunk.map(c => c: Any))
-}
+    if (key == null) null else new GenericInternalRow(key.map(c => c: Any))
 
-/** A GROUP of chunks sharing one storage-partition key under PER-DIM
-  * COARSENED transforms (`chunk_<factor_i·size_i>(dim_i)`): the member
-  * chunks are the ordinal box `[memberLo, memberHi]` (the group's aligned
-  * box clamped to the scan bounds), every one of which satisfies the
-  * declared key `group` (`ordinal_i / factor_i` per dim). This is what
-  * keeps storage-partitioned joins live at the 100 TB envelope: driver
-  * partition objects divide by the factor product instead of tripping the
-  * per-chunk ceiling — and a store whose chunk count lives in TRAILING
-  * dims coarsens those dims directly (r13 verdict #3). `survivors`, when
-  * non-null, lists the flat C-order member indices within the box that
-  * survive chunk pruning (value stats / runtime IN-sets); null means the
-  * whole box reads — the common unpruned join plans O(rank) longs per
-  * partition, no member enumeration at all. */
-final case class MdioChunkGroupPartition(path: String,
-                                         group: Array[Long], factors: Array[Long],
-                                         memberLo: Array[Long], memberHi: Array[Long],
-                                         survivors: Array[Long],
-                                         chunkShape: Array[Long],
-                                         boundLo: Array[Long], boundHi: Array[Long],
-                                         vars: Array[String],
-                                         metas: Array[ZarrMeta.ArrayMeta])
-    extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(group.map(c => c: Any))
-  /** Member chunks this partition reads. */
-  def memberCount: Long =
-    if (survivors != null) survivors.length.toLong
-    else memberLo.indices.map(i => memberHi(i) - memberLo(i) + 1).product
-}
+  /** Chunks this run reads. */
+  def chunkCount: Long = if (survivors != null) survivors.length.toLong else end - start
 
-/** Sequentially drives one per-chunk reader over a group partition's
-  * member chunks (cell bounds clamped per member, as the range reader
-  * does): a C-order odometer over the member box, restricted to the
-  * survivor list when pruning thinned it. */
-final class MdioChunkGroupReader[T](gp: MdioChunkGroupPartition,
-                                    mk: MdioInputPartition => PartitionReader[T],
-                                    source: graft.zarr.ChunkSource)
-    extends PartitionReader[T] {
-  private val rank = gp.boundLo.length
-  private val extents: Array[Long] =
-    Array.tabulate(rank)(i => gp.memberHi(i) - gp.memberLo(i) + 1)
-  private val total: Long = extents.product
-  private var i = 0L // survivor cursor or raw flat index
-  private var cur: PartitionReader[T] = null
-
-  private def nextFlat(): Long =
-    if (gp.survivors == null) { if (i >= total) -1L else { val f = i; i += 1; f } }
-    else { if (i >= gp.survivors.length) -1L else { val f = gp.survivors(i.toInt); i += 1; f } }
-
-  private def chunkPartition(flat: Long): MdioInputPartition = {
-    val cc = ZarrMeta.unflatten(flat, extents)
-    val lo = new Array[Long](rank)
-    val hi = new Array[Long](rank)
+  /** The `i`-th chunk this run reads, `0 <= i < chunkCount`. */
+  def chunk(i: Long): MdioInputPartition = {
+    val cc = ZarrMeta.unflatten(if (survivors != null) survivors(i.toInt) else start + i, extents)
+    val lo = new Array[Long](cc.length)
+    val hi = new Array[Long](cc.length)
     var d = 0
-    while (d < rank) {
-      cc(d) += gp.memberLo(d)
-      lo(d) = math.max(gp.boundLo(d), cc(d) * gp.chunkShape(d))
-      hi(d) = math.min(gp.boundHi(d), (cc(d) + 1) * gp.chunkShape(d))
+    while (d < cc.length) {
+      cc(d) += boxLo(d)
+      lo(d) = math.max(cellLo(d), cc(d) * chunkShape(d))
+      hi(d) = math.min(cellHi(d), (cc(d) + 1) * chunkShape(d))
       d += 1
     }
-    MdioInputPartition(gp.path, cc, lo, hi, gp.vars, gp.metas)
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (cur == null) {
-        val f = nextFlat()
-        if (f < 0) return false
-        cur = mk(chunkPartition(f))
-      }
-      if (cur.next()) return true
-      cur.close()
-      cur = null
-    }
-    false // unreachable
-  }
-
-  override def get(): T = cur.get()
-  override def close(): Unit = {
-    if (cur != null) { cur.close(); cur = null }
-    source.close()
-  }
-}
-
-/** A contiguous C-order RANGE of chunks: `[startIdx, endIdx)` flat indices
-  * within the chunk-coordinate box `[chunkLo, chunkLo + extents)`. O(1)
-  * driver-side footprint regardless of how many chunks the task owns — the
-  * executor reconstructs each chunk's coordinates and clamped cell bounds
-  * from the range arithmetic. */
-final case class MdioChunkRangePartition(path: String,
-                                         chunkLo: Array[Long], extents: Array[Long],
-                                         chunkShape: Array[Long],
-                                         startIdx: Long, endIdx: Long,
-                                         boundLo: Array[Long], boundHi: Array[Long],
-                                         vars: Array[String],
-                                         metas: Array[ZarrMeta.ArrayMeta]) extends InputPartition
-
-/** Sequentially drives one per-chunk reader over a [[MdioChunkRangePartition]]
-  * (via `mk`): decode chunk coords from the flat C-order index, clamp cell
-  * bounds, delegate. Owns the task's [[graft.zarr.ChunkSource]] so shard
-  * handles persist across the chunks of the range. */
-final class MdioChunkRangeReader[T](rp: MdioChunkRangePartition,
-                                    mk: MdioInputPartition => PartitionReader[T],
-                                    source: graft.zarr.ChunkSource)
-    extends PartitionReader[T] {
-  private val rank = rp.chunkLo.length
-  private var idx = rp.startIdx
-  private var cur: PartitionReader[T] = null
-
-  private def chunkPartition(flat: Long): MdioInputPartition = {
-    val cc = ZarrMeta.unflatten(flat, rp.extents)
-    val lo = new Array[Long](rank)
-    val hi = new Array[Long](rank)
-    var i = 0
-    while (i < rank) {
-      cc(i) += rp.chunkLo(i)
-      lo(i) = math.max(rp.boundLo(i), cc(i) * rp.chunkShape(i))
-      hi(i) = math.min(rp.boundHi(i), (cc(i) + 1) * rp.chunkShape(i))
-      i += 1
-    }
-    MdioInputPartition(rp.path, cc, lo, hi, rp.vars, rp.metas)
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (cur == null) {
-        if (idx >= rp.endIdx) return false
-        cur = mk(chunkPartition(idx))
-        idx += 1
-      }
-      if (cur.next()) return true
-      cur.close()
-      cur = null
-    }
-    false // unreachable
-  }
-
-  override def get(): T = cur.get()
-  override def close(): Unit = {
-    if (cur != null) { cur.close(); cur = null }
-    source.close()
+    MdioInputPartition(path, cc, lo, hi, vars, metas)
   }
 }
 
@@ -2304,16 +2104,6 @@ final case class MdioReaderFactory(dims: Array[String], schema: StructType,
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     VPath.install(hconf.value)
-    p match {
-      case cp: MdioInputPartition => new MdioColumnarReader(cp, dims, schema)
-      case gp: MdioChunkGroupPartition =>
-        val source = new graft.zarr.ChunkSource
-        new MdioChunkGroupReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          gp, cp => new MdioColumnarReader(cp, dims, schema, source), source)
-      case rp: MdioChunkRangePartition =>
-        val source = new graft.zarr.ChunkSource
-        new MdioChunkRangeReader[org.apache.spark.sql.vectorized.ColumnarBatch](
-          rp, cp => new MdioColumnarReader(cp, dims, schema, source), source)
-    }
+    new MdioChunkRunReader(p.asInstanceOf[MdioChunkRun], dims, schema)
   }
 }

@@ -25,9 +25,9 @@ final case class MdioStreamOffset(key: Vector[Long]) extends Offset {
   * sort after already-present ones (appends along the leading dimension
   * do); keys arriving below the boundary are ignored, never index-shifted
   * into duplicates or skips. Each micro-batch plans exactly the newly
-  * appeared chunks as ordinary
-  * [[MdioInputPartition]]s — pushed dim-range filters still prune, and
-  * rewritten chunks are NOT re-emitted (each chunk is delivered once).
+  * appeared chunks as one-chunk [[MdioChunkRun]]s, the batch scan's own
+  * partition — pushed dim-range filters still prune, and rewritten chunks
+  * are NOT re-emitted (each chunk is delivered once).
   * Sharded arrays enumerate the inner chunks of newly appeared shard
   * objects.
   *
@@ -193,17 +193,12 @@ final class MdioMicroBatchStream(path: String, dims: Seq[String],
     // exactly the keys in (start, end] — key-ranged, immune to index shift
     presentCoords(s)
       .filter(cc => (s.isEmpty || cc > s) && cc <= e)
-      .flatMap { cc =>
-        val cell = cc.zipWithIndex.map { case (c, i) =>
-          val lo = math.max(bounds(i)._1, c * chunks(i))
-          val hi = math.min(bounds(i)._2, (c + 1) * chunks(i))
-          (lo, hi)
-        }
-        if (cell.exists { case (lo, hi) => lo >= hi }) None // pruned by pushdown
-        else Some(MdioInputPartition(path, cc.toArray,
-          cell.map(_._1).toArray, cell.map(_._2).toArray,
-          neededVars, neededVars.map(v => metas(v)).toArray): InputPartition)
-      }.toArray
+      .filter(cc => cc.indices.forall(i => // chunks outside the pushed ranges prune
+        math.max(bounds(i)._1, cc(i) * chunks(i)) < math.min(bounds(i)._2, (cc(i) + 1) * chunks(i))))
+      .map(cc => MdioChunkRun(path, cc.toArray, Array.fill(cc.size)(1L), 0L, 1L, null,
+        bounds.map(_._1).toArray, bounds.map(_._2).toArray, chunks.toArray,
+        neededVars, neededVars.map(v => metas(v))): InputPartition)
+      .toArray
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =

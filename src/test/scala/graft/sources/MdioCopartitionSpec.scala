@@ -10,7 +10,7 @@ import java.nio.file.Files
   * neither broadcastable, a shuffle would move both corpora whole): with
   * `spark.graft.scan.keyedPartitions=true` the scan plans one partition
   * per chunk carrying its chunk ordinals as the partition key and reports
-  * `KeyGroupedPartitioning` over the catalog `chunk(dim, size)` transform,
+  * `KeyGroupedPartitioning` over the catalog `chunk_<size>(dim)` transforms,
   * so Spark's storage-partitioned join zips the two sides' chunk groups
   * task-by-task — ZERO exchanges in the joined plan. */
 class MdioCopartitionSpec extends SparkSpec {
@@ -196,9 +196,9 @@ class MdioCopartitionSpec extends SparkSpec {
         val parts = MdioTable(dirA, None)
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
           .toBatch.planInputPartitions()
-        assert(parts.forall(_.isInstanceOf[MdioChunkRangePartition]),
-          s"over-ceiling keyed scan must plan coalesced ranges, got " +
-            parts.map(_.getClass.getSimpleName).distinct.mkString(","))
+        assert(parts.forall { case r: MdioChunkRun => r.key == null && r.extents.toSeq == Seq(4L, 2L) },
+          s"over-ceiling keyed scan must plan unkeyed coalesced ranges, got " +
+            parts.mkString(","))
         val (plan, n) = joinPlan()
         assert(plan.contains("Exchange"),
           "over-ceiling fallback should shuffle (coalesced ranges carry no keys)")
@@ -236,8 +236,8 @@ class MdioCopartitionSpec extends SparkSpec {
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
           .toBatch.planInputPartitions()
         assert(parts.length == 4, s"expected 4 grouped partitions, got ${parts.length}")
-        assert(parts.forall(_.isInstanceOf[MdioChunkGroupPartition]),
-          parts.map(_.getClass.getSimpleName).distinct.mkString(","))
+        assert(parts.forall { case r: MdioChunkRun => r.factors.toSeq == Seq(2L, 1L) },
+          parts.mkString(","))
         // the grouped scan reads every cell exactly once
         val all = spark.read.format("mdio").load(dirA)
           .select($"inline", $"crossline", $"image").as[(Long, Long, Double)].collect()
@@ -266,13 +266,12 @@ class MdioCopartitionSpec extends SparkSpec {
           Expressions.column("inline"),
           Expressions.literal(3L), Expressions.literal(30L)))))
         val parts2 = scan2.planInputPartitions()
-        assert(parts2.forall(_.isInstanceOf[MdioChunkGroupPartition]),
-          parts2.map(_.getClass.getSimpleName).distinct.mkString(","))
+        assert(parts2.forall { case r: MdioChunkRun => r.factors.toSeq == Seq(2L, 1L) },
+          parts2.mkString(","))
         // inline 3 → chunk 0 (group 0); inline 30 → chunk 3 (group 1); × 2
         // crossline chunks each = 4 group partitions of one member chunk
         assert(parts2.length == 4, s"got ${parts2.length}")
-        assert(parts2.map(_.asInstanceOf[MdioChunkGroupPartition].memberCount)
-          .forall(_ == 1L))
+        assert(parts2.map(_.asInstanceOf[MdioChunkRun].chunkCount).forall(_ == 1L))
       } finally {
         spark.conf.unset("spark.graft.scan.keyedPartitions.max")
         spark.conf.unset("spark.graft.scan.keyedPartitions.groupFactor")
@@ -303,9 +302,8 @@ class MdioCopartitionSpec extends SparkSpec {
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
           .toBatch.planInputPartitions()
         assert(parts.length == 4, s"expected 4 trailing-grouped partitions, got ${parts.length}")
-        assert(parts.forall(_.isInstanceOf[MdioChunkGroupPartition]),
-          parts.map(_.getClass.getSimpleName).distinct.mkString(","))
-        assert(parts.head.asInstanceOf[MdioChunkGroupPartition].factors.toSeq == Seq(1L, 2L))
+        assert(parts.forall { case r: MdioChunkRun => r.factors.toSeq == Seq(1L, 2L) },
+          parts.mkString(","))
         // the grouped scan reads every cell exactly once
         val all = spark.read.format("mdio").load(dirA)
           .select($"inline", $"crossline", $"image").as[(Long, Long, Double)].collect()
@@ -352,7 +350,7 @@ class MdioCopartitionSpec extends SparkSpec {
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
           .toBatch.planInputPartitions()
         assert(parts.length == 4, s"got ${parts.length}")
-        assert(parts.head.asInstanceOf[MdioChunkGroupPartition].factors.toSeq == Seq(2L, 1L))
+        assert(parts.head.asInstanceOf[MdioChunkRun].factors.toSeq == Seq(2L, 1L))
         // equal-geometry sides derive equal factors: the join still zips
         val joined = spark.table(s"mdio_spj.`$dirA`")
           .join(spark.table(s"mdio_spj.`$dirB`"), Seq("inline", "crossline"))
@@ -388,21 +386,19 @@ class MdioCopartitionSpec extends SparkSpec {
           .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
           .toBatch.asInstanceOf[MdioScan]
         val factors0 = scan.planInputPartitions()
-          .head.asInstanceOf[MdioChunkGroupPartition].factors.toSeq
+          .head.asInstanceOf[MdioChunkRun].factors.toSeq
         assert(factors0 == Seq(2L, 1L))
         scan.filter(Array(new Predicate("IN", Array(
           Expressions.column("inline"),
           Expressions.literal(3L), Expressions.literal(30L)))))
         val parts2 = scan.planInputPartitions()
-        assert(parts2.nonEmpty &&
-          parts2.forall(_.isInstanceOf[MdioChunkGroupPartition]))
-        assert(parts2.map(_.asInstanceOf[MdioChunkGroupPartition].factors.toSeq)
+        assert(parts2.nonEmpty && parts2.forall(_.asInstanceOf[MdioChunkRun].key != null))
+        assert(parts2.map(_.asInstanceOf[MdioChunkRun].factors.toSeq)
           .forall(_ == factors0),
           "replanned factors drifted out of the declared key space")
         // inline 3 → chunk 0 (group 0); 30 → chunk 3 (group 1); ×2 crossline
         assert(parts2.length == 4)
-        assert(parts2.map(_.asInstanceOf[MdioChunkGroupPartition].memberCount)
-          .forall(_ == 1L))
+        assert(parts2.map(_.asInstanceOf[MdioChunkRun].chunkCount).forall(_ == 1L))
       } finally {
         spark.conf.unset("spark.graft.scan.keyedPartitions.max")
         spark.conf.unset("spark.graft.scan.keyedPartitions.groupFactor")

@@ -9,8 +9,9 @@ import java.nio.file.Files
 /** [[MdioFsck]] — every corruption class the audit claims to detect,
   * injected for real: a clean store audits clean with exact totals, a
   * tampered sidecar bound is caught by the DISTRIBUTED recompute, a
-  * beyond-grid chunk file and an orphan stat fragment surface from the
-  * inventory sweep, a garbage shard file reads as torn, and a stale
+  * beyond-grid chunk file, an orphan stat fragment and the leftover
+  * temporary of an interrupted chunk put surface from the inventory
+  * sweep, a garbage shard file reads as torn, and a stale
   * generation downgrades to the single legal-state warning. */
 class MdioFsckSpec extends SparkSpec {
   import spark.implicits._
@@ -146,6 +147,34 @@ class MdioFsckSpec extends SparkSpec {
     assert(f2.contains(("error", "inventory", "c/5")), f2)
     assert(!f2.exists(x => x._2 == "inventory" && x._3 == "c/3"), f2)
     MdioWriter.delete(dir); MdioWriter.delete(dir2)
+  }
+
+  test("inventory: leftover temporaries of interrupted chunk puts surface") {
+    // a crash inside VPath.replace leaves the hidden `.<name>.<uuid>.tmp`
+    // sibling of the chunk it was writing: at a v2 variable root, and
+    // under c/ in a v3 store
+    val tmp = s".${java.util.UUID.randomUUID()}.tmp"
+    val dir = create()
+    ZarrMeta.path(dir).resolve("v").resolve(s".3$tmp").write(Array[Byte](1))
+    assert(findings(dir) == Seq(("warning", "inventory", s".3$tmp")), findings(dir))
+    val dir3 = Files.createTempDirectory("mdio_fsck").resolve("v3.mdio").toString
+    MdioWriter.create(MdioSpec.fromJson(
+      """{
+        |  "metadata": {"name": "s", "apiVersion": "v1.0", "createdOn": "2026-01-01T00:00:00Z"},
+        |  "variables": [
+        |    {"name": "x", "dataType": "int64", "dimensions": [{"name": "x", "size": 16}]},
+        |    {"name": "y", "dataType": "int64", "dimensions": [{"name": "y", "size": 16}]},
+        |    {"name": "v", "dataType": "float64",
+        |     "dimensions": [{"name": "x", "size": 16}, {"name": "y", "size": 16}],
+        |     "metadata": {"chunkGrid": {"name": "regular", "configuration": {"chunkShape": [8, 8]}}}}
+        |  ]
+        |}""".stripMargin), dir3, version = 3)
+    MdioWriter.writeVariable(spark, spark.range(256)
+      .select(($"id" / 16).cast("long").as("x"), ($"id" % 16).as("y"),
+        $"id".cast("double").as("v")), dir3, "v")
+    ZarrMeta.path(dir3).resolve("v").resolve(s"c/1/.0$tmp").write(Array[Byte](1))
+    assert(findings(dir3) == Seq(("warning", "inventory", s"c/1/.0$tmp")), findings(dir3))
+    MdioWriter.delete(dir); MdioWriter.delete(dir3)
   }
 
   test("repair: a tampered sidecar bound recomputes exactly and pruning resumes") {

@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** Chunk-range coalescing in partition planning (SURVEY §7.4.6): a
   * many-chunk store must NOT plan one driver-side InputPartition per chunk
   * on the full-scan path — ranges of C-order-adjacent chunks group into
-  * ~targetPartitionBytes tasks, while filters, pruning, and results stay
+  * ~`spark.sql.files.maxPartitionBytes` tasks, while filters, pruning, and results stay
   * exact. The reference never materializes per-chunk control structures on
   * a coordinator (mdio/variable.h:1078-1103 iterates chunks inside the
   * read). */
@@ -49,10 +49,10 @@ class MdioPartitionPlanningSpec extends SparkSpec {
     val parts = scanFor(dir, Map.empty).planInputPartitions()
     val par = spark.sparkContext.defaultParallelism
     assert(parts.length == par, s"expected $par coalesced partitions, got ${parts.length}")
-    assert(parts.forall(_.isInstanceOf[MdioChunkRangePartition]))
-    // ranges tile [0, 1024) without overlap
-    val ranges = parts.map(_.asInstanceOf[MdioChunkRangePartition])
-      .map(p => (p.startIdx, p.endIdx)).sortBy(_._1)
+    // ranges of the whole box tile [0, 1024) without overlap
+    val runs = parts.map(_.asInstanceOf[MdioChunkRun])
+    assert(runs.forall(r => r.extents.toSeq == Seq(1024L) && r.survivors == null))
+    val ranges = runs.map(p => (p.start, p.end)).sortBy(_._1)
     assert(ranges.head._1 == 0L && ranges.last._2 == 1024L)
     assert(ranges.sliding(2).forall { case Array((_, e), (s, _)) => e == s; case _ => true })
     MdioWriter.delete(dir)
@@ -74,8 +74,7 @@ class MdioPartitionPlanningSpec extends SparkSpec {
     // trace >= 4000 → only chunks 1000..1023 (24 chunks) → ≤ parallelism tasks
     val parts = scanFor(dir, Map("trace" -> (4000L, Long.MaxValue))).planInputPartitions()
     assert(parts.length <= spark.sparkContext.defaultParallelism)
-    val covered = parts.map(_.asInstanceOf[MdioChunkRangePartition])
-      .map(p => p.endIdx - p.startIdx).sum
+    val covered = parts.map(_.asInstanceOf[MdioChunkRun].chunkCount).sum
     assert(covered == 24L)
     val got = spark.read.format("mdio").load(dir).filter($"trace" >= 4000)
     assert(got.count() == 96L)
@@ -134,17 +133,16 @@ class MdioPartitionPlanningSpec extends SparkSpec {
     assert(df.count() == 1000000000000L)
     // full-scan planning coalesces the 10^6-chunk grid into a bounded
     // partition array, and does it in O(tasks), not O(chunks)
-    spark.conf.set("spark.graft.scan.targetPartitionBytes", (1L << 50).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (1L << 50).toString)
     try {
       val t0 = System.nanoTime()
       val parts = scanFor2(dir).planInputPartitions()
       val ms = (System.nanoTime() - t0) / 1e6
       assert(parts.length == spark.sparkContext.defaultParallelism)
       assert(ms < 5000, s"planning took $ms ms")
-      val covered = parts.map(_.asInstanceOf[MdioChunkRangePartition])
-        .map(p => p.endIdx - p.startIdx).sum
+      val covered = parts.map(_.asInstanceOf[MdioChunkRun].chunkCount).sum
       assert(covered == 1000000L * 1000000L / (1000L * 1000L))
-    } finally spark.conf.unset("spark.graft.scan.targetPartitionBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     // a point slice plans exactly one chunk and materializes the fill
     val row = df.filter($"inline" === 123456L && $"crossline" === 654321L)
       .select("image").collect()
@@ -176,19 +174,20 @@ class MdioPartitionPlanningSpec extends SparkSpec {
   }
 
   test("targetPartitionBytes dials the partition count up to per-chunk") {
+    // the target is Spark's own spark.sql.files.maxPartitionBytes
     val dir = freshStore()
-    spark.conf.set("spark.graft.scan.targetPartitionBytes", "1")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
     try {
       val parts = scanFor(dir, Map.empty).planInputPartitions()
       assert(parts.length == 1024) // one chunk per task at the floor
-    } finally spark.conf.unset("spark.graft.scan.targetPartitionBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     // and a mid-size target lands in between: projected row width is
     // 12 bytes (long dim + float value), so 512 cells/task → 8 tasks
-    spark.conf.set("spark.graft.scan.targetPartitionBytes", (512 * 12).toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (512 * 12).toString)
     try {
       val parts = scanFor(dir, Map.empty).planInputPartitions()
       assert(parts.length == 8, s"got ${parts.length}")
-    } finally spark.conf.unset("spark.graft.scan.targetPartitionBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     MdioWriter.delete(dir)
   }
 }

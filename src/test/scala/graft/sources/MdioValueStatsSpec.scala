@@ -64,8 +64,7 @@ class MdioValueStatsSpec extends SparkSpec {
     * keep the PARTITION count while dropping chunks from a run). */
   private def coveredChunks(dir: String, filters: Array[Filter]): Long =
     partitions(dir, filters).map {
-      case r: MdioChunkRangePartition => r.endIdx - r.startIdx
-      case _: MdioInputPartition => 1L
+      case r: MdioChunkRun => r.chunkCount
       case other => fail(s"unexpected partition $other")
     }.sum
 

@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner, one write route =="
+echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -37,6 +37,21 @@ if [ -n "$route" ]; then
   fail=1
 else
   echo "one write route (no DataWriterFactory, BatchWrite, RequiresDistributionAndOrdering, spark.graft.sink.)"
+fi
+# every chunk scan plans MdioChunkRuns: no second chunk-reading partition
+# class beside the run and the two metadata-answer partitions, and coalesced
+# ranges size by Spark's spark.sql.files.maxPartitionBytes, not a private knob
+parts=$(perl -0777 -ne 'while (/\b(?:class|object)\s+(\w+)(?:(?!\b(?:class|object)\b)[^{])*?\b(?:extends|with)\s+InputPartition\b/g) {
+  print "$ARGV: $1\n" unless $1 =~ /^(MdioChunkRun|MdioAggPartition|MdioAggRowsPartition)$/ }' \
+  $(find src/main/scala/graft/sources -name '*.scala'))
+knob=$(grep -rn "spark\.graft\.scan\.targetPartitionBytes" src/main/)
+if [ -n "$parts$knob" ]; then
+  echo "SCAN PARTITION LINT RED: a second scan partition shape or the old range knob in src/main/:"
+  [ -n "$parts" ] && echo "$parts"
+  [ -n "$knob" ] && echo "$knob"
+  fail=1
+else
+  echo "one scan partition (MdioChunkRun beside MdioAggPartition, MdioAggRowsPartition; no spark.graft.scan.targetPartitionBytes)"
 fi
 
 echo "== 2/6 full test suite =="
