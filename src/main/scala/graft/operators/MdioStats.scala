@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import graft.sources.{MdioAggScan, MdioChunkStats}
+import graft.zarr.{VPath, ZarrMeta}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.collection.mutable
 
 /** statsV1 model + one-pass computation + attribute-commit integration
   * (reference mdio/stats.h:229-649 SummaryStats/UserAttributes and the
@@ -97,18 +101,14 @@ object MdioStats {
     * convention), min is the finite minimum, and sum/sumSquares are the
     * EXACT real-number moments of the finite cells rounded once to double
     * — NaN-poisoned (like any engine's double sum) when a NaN exists. */
-  def summaryFromSidecar(spark: SparkSession, path: String, variable: String): org.apache.spark.sql.DataFrame = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    val root = ZarrMeta.path(path)
-    val m = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))._1
+  def summaryFromSidecar(spark: SparkSession, path: String, variable: String): DataFrame = {
+    val (varDir, m, _) = arrayOf(path, variable)
     val cells = m.shape.map(BigInt(_)).product
     val nChunks = m.chunkGrid.product
-    val entries = MdioChunkStats.current(root.resolve(variable)).getOrElse(
+    val entries = MdioChunkStats.current(varDir).getOrElse(
       throw new IllegalStateException(
         s"no generation-current stats sidecar for '$variable' — run a stats-aware write first"))
-    val gridKeys = graft.sources.MdioAggScan.boxKeys(m.chunkGrid.map(g => (0L, g))).toSeq
+    val gridKeys = MdioAggScan.boxKeys(m.chunkGrid.map(g => (0L, g))).toSeq
     require(gridKeys.forall(entries.contains),
       s"stats sidecar covers ${entries.size} of $nChunks chunks")
     val all = gridKeys.map(entries(_))
@@ -162,7 +162,6 @@ object MdioStats {
     * sliced-scan fallback. */
   def selWindow(spark: SparkSession, path: String,
                 windows: Map[String, (Double, Double)]): Map[String, (Long, Long)] = {
-    import graft.zarr.ZarrMeta
     val arrays = ZarrMeta.readGroup(ZarrMeta.path(path))._2
     val resolved = windows.toSeq.map { case (coordName, (lo, hi)) =>
       require(lo <= hi, s"empty sel window [$lo, $hi] on '$coordName'")
@@ -197,7 +196,7 @@ object MdioStats {
 
   /** The clamped dim-index window every windowed QC operator shares
     * (r19, one definition so the clamp and filter semantics can never
-    * drift between the eight call sites): `bounds` is `ranges` clamped
+    * drift between the operators): `bounds` is `ranges` clamped
     * into the variable's shape — loud on an empty slice — and applying
     * the slice to a DataFrame adds one pushable dim predicate per
     * NARROWED dim only, so an unwindowed call filters nothing and the
@@ -205,14 +204,14 @@ object MdioStats {
   private[operators] final case class DimSlice(dims: Seq[String],
                                                shape: Seq[Long],
                                                bounds: Seq[(Long, Long)]) {
-    def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    def apply(df: DataFrame): DataFrame =
       dims.zip(bounds).zipWithIndex.foldLeft(df) { case (acc, ((d, (lo, hi)), i)) =>
         if (lo <= 0 && hi >= shape(i)) acc
         else acc.filter(col(d) >= lo && col(d) < hi)
       }
   }
 
-  private def sliceOf(meta: graft.zarr.ZarrMeta.ArrayMeta, dims: Seq[String],
+  private def sliceOf(meta: ZarrMeta.ArrayMeta, dims: Seq[String],
                       ranges: Map[String, (Long, Long)],
                       variable: String): DimSlice = {
     val bounds = dims.zipWithIndex.map { case (d, i) =>
@@ -236,7 +235,7 @@ object MdioStats {
     * Spark evaluates on the surviving rows. */
   private final case class DimUnion(slices: Seq[DimSlice]) {
     require(slices.nonEmpty, "empty window union")
-    def apply(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    def apply(df: DataFrame): DataFrame = {
       if (slices.size == 1) return slices.head(df)
       val dims = slices.head.dims
       val shape = slices.head.shape
@@ -258,7 +257,7 @@ object MdioStats {
     }
   }
 
-  private def unionOf(meta: graft.zarr.ZarrMeta.ArrayMeta, dims: Seq[String],
+  private def unionOf(meta: ZarrMeta.ArrayMeta, dims: Seq[String],
                       windows: Seq[Map[String, (Long, Long)]],
                       variable: String): DimUnion = {
     val slices = windows.map(w => sliceOf(meta, dims, w, variable))
@@ -275,22 +274,149 @@ object MdioStats {
     DimUnion(slices)
   }
 
-  /** Chunk-aligned boxes for every window of a union; None when ANY
-    * window is misaligned (the caller's exact sliced-union scan answers). */
-  private def alignedUnion(meta: graft.zarr.ZarrMeta.ArrayMeta, dims: Seq[String],
-                           windows: Seq[Map[String, (Long, Long)]]): Option[Seq[Seq[(Long, Long)]]] = {
-    val boxes = windows.map(w =>
-      if (w.isEmpty) Some(meta.chunkGrid.map(g => (0L, g)))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, w))
-    if (boxes.forall(_.isDefined)) Some(boxes.map(_.get)) else None
+  /** A variable's directory, array metadata and attributes — loud on an
+    * unknown variable. */
+  private def arrayOf(path: String, variable: String)
+      : (VPath, ZarrMeta.ArrayMeta, Option[String]) = {
+    val root = ZarrMeta.path(path)
+    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
+      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
+    (root.resolve(variable), meta, attrs)
+  }
+
+  /** The variable/window resolve every direct QC operator starts from:
+    * the variable and its dims (loud on an unknown variable, one without
+    * dim names, or a dimension coordinate — `coordHint` says what to do
+    * instead), its dim window — ONE via `ranges` or a UNION of disjoint
+    * ones via `windows`, never both — and [[plan]], which pins the
+    * generation-current manifest and resolves the window's chunk-aligned
+    * boxes and group geometry. `op` names the operator in the warnings. */
+  private final class QcVar(spark: SparkSession, path: String, variable: String,
+                            op: String, coordHint: String,
+                            ranges: Map[String, (Long, Long)],
+                            windows: Seq[Map[String, (Long, Long)]]) {
+    require(ranges.isEmpty || windows.isEmpty,
+      "pass ONE window via ranges or several via windows, not both")
+    val (varDir, meta, attrs) = arrayOf(path, variable)
+    val dims: Seq[String] = meta.dimNames
+      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
+      .getOrElse(throw new IllegalArgumentException(
+        s"variable '$variable' carries no dimension names"))
+    require(!dims.contains(variable),
+      s"'$variable' is a dimension coordinate — $coordHint")
+    private val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
+    /** The window applied to a frame: the single slice's dim filters push
+      * into the scan; a union pushes its hull and refines with the exact
+      * OR, so every fallback scan prunes too. */
+    val sliced: DataFrame => DataFrame =
+      if (windows.nonEmpty) unionOf(meta, dims, windows, variable).apply
+      else sliceOf(meta, dims, ranges, variable).apply
+    def base: DataFrame = spark.read.format("mdio").load(path)
+    lazy val vt: DataType = base.schema(variable).dataType
+    /** NaN cells never rank, count or win. */
+    def finite(df: DataFrame): DataFrame =
+      if (isFloat) df.filter(!isnan(col(variable))) else df
+    /** ONE scan of exactly `keys` (the `chunkKeys` allowlist): a single
+      * plan node however many chunks it reads. */
+    def chunks(keys: Iterable[Seq[Long]]): DataFrame =
+      spark.read.format("mdio")
+        .option("chunkKeys", keys.map(_.mkString(".")).mkString(","))
+        .load(path)
+
+    private def decline(why: String): Left[Boolean, Nothing] = {
+      log.warn(s"$op($path, $variable): $why — falling back to the exact scan")
+      Left(false)
+    }
+
+    /** Pin the generation-current manifest and resolve the triage
+      * geometry for `groupSizes` (default: one group), or Left(race) when
+      * the operator must take its exact scan instead — `race` marks the
+      * one trigger a fresh manifest can heal (none is current); group
+      * sizes that cut chunks, a misaligned window (a straddling chunk's
+      * interval mixes in- and out-of-window cells) and more than
+      * `maxGroups` groups warn and decline plain. */
+    def plan(groupSizes: Seq[Long] = meta.shape, maxGroups: Int = Int.MaxValue)
+        : Either[Boolean, (MdioChunkStats.Manifest, Geometry)] = {
+      val man = MdioChunkStats.currentManifest(varDir).getOrElse(return Left(true))
+      // a group must contain WHOLE chunks: per dim, a multiple of the
+      // chunk size or the whole extent (a ragged last chunk still fits)
+      if (dims.indices.exists(d =>
+          groupSizes(d) % meta.chunks(d) != 0 && groupSizes(d) < meta.shape(d)))
+        return decline(s"group sizes $groupSizes do not align to the chunk shape ${meta.chunks}")
+      manifestRaceHook()
+      val boxes = (if (windows.nonEmpty) windows else Seq(ranges)).map(w =>
+        if (w.isEmpty) Some(meta.chunkGrid.map(g => (0L, g)))
+        else MdioAggScan.alignedChunkBox(meta, dims, w))
+      if (boxes.exists(_.isEmpty))
+        return decline(s"slice ${if (windows.nonEmpty) windows else ranges} is not chunk-aligned")
+      val geo = new Geometry(meta, groupSizes, boxes.flatten)
+      if (geo.nGroups > maxGroups)
+        return decline(s"${geo.nGroups} groups exceed the driver-state cap $maxGroups")
+      Right((man, geo))
+    }
+  }
+
+  /** The group-column side of a grouped QC operator: group `d`'s ordinal
+    * is `⌊index_d / groupSizes(d)⌋` over ABSOLUTE dim indices, so a group
+    * a window clips keeps its id and holds its surviving cells. */
+  private final class QcGroups(t: QcVar, sizes: Seq[Long]) {
+    require(sizes.forall(_ >= 1), s"group sizes $sizes must be positive")
+    require(sizes.size == t.dims.size, s"${sizes.size} group sizes for ${t.dims.size} dims")
+    val names: Seq[String] = t.dims.indices.map(i => s"_g$i")
+    val cols: Seq[Column] = t.dims.zip(sizes).zip(names).map {
+      case ((dn, gs), gn) => floor(col(dn) / gs).cast("long").as(gn)
+    }
+    /** The `g_<dim>` output columns. */
+    def out: Seq[Column] = names.zip(t.dims).map { case (gn, d) => col(gn).as(s"g_$d") }
+    def fields: Seq[StructField] = t.dims.map(d => StructField(s"g_$d", LongType, nullable = false))
+    /** A driver-built frame keyed by the group columns. */
+    def frame(spark: SparkSession, rows: Seq[Row], tail: Seq[StructField]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(names.map(StructField(_, LongType, nullable = false)) ++ tail))
+  }
+
+  /** The chunk geometry a direct QC operator triages over: the window's
+    * chunk-aligned `boxes` (`[lo, hi)` chunk ordinals per dim) and the
+    * group each chunk falls in — a group spans `cpg(d)` chunks along dim
+    * `d`, the whole grid for a whole-extent size. An ungrouped operator
+    * is ONE group ([[whole]]): every size is the whole extent. */
+  private final class Geometry(meta: ZarrMeta.ArrayMeta, groupSizes: Seq[Long],
+                               val boxes: Seq[Seq[(Long, Long)]]) {
+    val grid: Seq[Long] = meta.chunkGrid
+    private val cpg = grid.indices.map(d =>
+      if (groupSizes(d) >= meta.shape(d)) grid(d) else groupSizes(d) / meta.chunks(d))
+    /** The one group of an ungrouped operator. */
+    val whole: Seq[Long] = grid.map(_ => 0L)
+    def inBox(cc: Seq[Long]): Boolean =
+      boxes.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
+    def groupOf(cc: Seq[Long]): Seq[Long] = cc.zip(cpg).map { case (c, n) => c / n }
+    /** Groups the window touches: the O(groups) driver state a grouped
+      * operator caps (past the cap its distributed scan is the right plan). */
+    def nGroups: BigInt = boxes.map(b => grid.indices.map(d =>
+      BigInt((b(d)._2 - 1) / cpg(d) - b(d)._1 / cpg(d) + 1)).product).sum
+    /** The group whose in-window cells a whole shard's manifest summary
+      * describes exactly: its lead chunks `[sid·span, (sid+1)·span)` sit
+      * inside one box's lead range and one group's, and that box cuts no
+      * trailing dim, each a single group. None = the summary also speaks
+      * of other cells (a trailing cut, a box or group edge), so the shard
+      * opens for per-chunk triage. */
+    def shardGroup(sid: Long, span: Long): Option[Seq[Long]] = {
+      val leadLo = sid * span
+      val leadHi = math.min((sid + 1) * span, grid.head)
+      val inside = boxes.exists(b => b.head._1 <= leadLo && leadHi <= b.head._2 &&
+        (1 until grid.size).forall(d => b(d)._1 <= 0 && b(d)._2 >= grid(d) && cpg(d) >= grid(d)))
+      if (inside && leadLo / cpg.head == (leadHi - 1) / cpg.head)
+        Some((leadLo / cpg.head) +: whole.tail)
+      else None
+    }
   }
 
   /** Feed every grid key in `[leadLo, leadHi)` of the leading dimension
     * to `perChunk` with its entry from `entries` (None = no entry). */
   private def feedKeys(grid: Seq[Long], leadLo: Long, leadHi: Long,
-                       entries: Map[String, graft.sources.MdioChunkStats.Entry])
-                      (perChunk: (Seq[Long], Option[graft.sources.MdioChunkStats.Entry]) => Unit): Unit =
-    graft.sources.MdioAggScan.boxKeys((leadLo, leadHi) +: grid.drop(1).map(g => (0L, g)))
+                       entries: Map[String, MdioChunkStats.Entry])
+                      (perChunk: (Seq[Long], Option[MdioChunkStats.Entry]) => Unit): Unit =
+    MdioAggScan.boxKeys((leadLo, leadHi) +: grid.drop(1).map(g => (0L, g)))
       .foreach { key =>
         perChunk(key.split("\\.").map(_.toLong).toSeq, entries.get(key))
       }
@@ -306,11 +432,11 @@ object MdioStats {
     * Legacy monolithic sidecars feed every key with no summaries. This is
     * what keeps countInRange/kthSmallest at O(manifest) driver bytes on a
     * 100 TB store: interior shards — the overwhelming majority under a
-    * selective range or a rank bracket — never open. `leadBoxes` restricts
-    * the walk to shards intersecting a lead-chunk range (r18, boxed
-    * ranks): disjoint shards are never read, and fed keys clamp to the
-    * intersection, so a slice pays only its own shards. `leadBoxes` may
-    * carry SEVERAL ranges (r19, OR-of-ranges windows — SET1's
+    * selective range or a rank bracket — never open. The walk covers
+    * only shards intersecting the lead-chunk range of one of `geo`'s
+    * boxes (r18, boxed ranks): disjoint shards are never read, and fed
+    * keys clamp to the intersection, so a slice pays only its own shards.
+    * The boxes may be SEVERAL (r19, OR-of-ranges windows — SET1's
     * slice-concat algebra applied to QC): segments are merged ascending,
     * the walk stays ONE pass over the manifest, each shard is triaged
     * (and its file read) AT MOST ONCE no matter how many segments cut
@@ -328,16 +454,14 @@ object MdioStats {
     * monolithic sidecars never count: their whole entry map was already
     * parsed to read the manifest, so aborting would spend the cost twice.
     * Returns true iff the walk completed. */
-  private def walkShards(varDir: graft.zarr.VPath,
-                         man: graft.sources.MdioChunkStats.Manifest,
-                         grid: Seq[Long],
-                         leadBoxes: Seq[(Long, Long)] = Seq.empty,
-                         entryBudget: Long = Long.MaxValue)
-                        (summary: (Long, graft.sources.MdioChunkStats.ShardMeta) => Boolean)
-                        (perChunk: (Seq[Long], Option[graft.sources.MdioChunkStats.Entry]) => Unit): Boolean = {
+  private def walkShards(varDir: VPath, man: MdioChunkStats.Manifest,
+                         geo: Geometry, entryBudget: Long)
+                        (summary: (Long, MdioChunkStats.ShardMeta) => Boolean)
+                        (perChunk: (Seq[Long], Option[MdioChunkStats.Entry]) => Unit): Boolean = {
+    val grid = geo.grid
     // merge the lead segments ascending so each shard is visited once and
     // fed key ranges never overlap
-    val segs = (if (leadBoxes.isEmpty) Seq((0L, grid.head)) else leadBoxes)
+    val segs = geo.boxes.map(_.head)
       .map { case (lo, hi) => (math.max(lo, 0L), math.min(hi, grid.head)) }
       .filter { case (lo, hi) => lo < hi }
       .sortBy(_._1)
@@ -355,7 +479,7 @@ object MdioStats {
         val nShards = (grid.head + man.span - 1) / man.span
         // shard id -> this shard's clamped lead ranges, ascending (a shard
         // straddling two merged segments is still triaged and read ONCE)
-        val bySid = scala.collection.mutable.SortedMap.empty[Long, List[(Long, Long)]]
+        val bySid = mutable.SortedMap.empty[Long, List[(Long, Long)]]
         segs.foreach { case (bLo, bHi) =>
           var sid = bLo / man.span
           val sidEnd = math.min(nShards, (bHi + man.span - 1) / man.span)
@@ -382,8 +506,8 @@ object MdioStats {
               return false
             }
             val entries = smOpt
-              .map(sm => graft.sources.MdioChunkStats.readShard(varDir, sid, sm.gen))
-              .getOrElse(Map.empty[String, graft.sources.MdioChunkStats.Entry])
+              .map(sm => MdioChunkStats.readShard(varDir, sid, sm.gen))
+              .getOrElse(Map.empty[String, MdioChunkStats.Entry])
             segRanges.foreach { case (lo, hi) =>
               feedKeys(grid, lo, hi, entries)(perChunk)
             }
@@ -397,7 +521,7 @@ object MdioStats {
     * [[walkShards]] — the same figure that caps grouped pushdown driver
     * state (`spark.graft.mdio.maxPushedGroups`, default 2^16), so ONE
     * conf governs all driver-side metadata state. */
-  private def qcEntryBudget: Long = graft.sources.MdioAggScan.maxPushedGroups.toLong
+  private def qcEntryBudget: Long = MdioAggScan.maxPushedGroups.toLong
 
   /** [[countInRange]] result: `count` is exact; `metadataChunks` answered
     * from the sidecar (fully inside the range — their finite-cell `cnt`
@@ -444,126 +568,81 @@ object MdioStats {
                    maxScanChunks: Int = 512,
                    ranges: Map[String, (Long, Long)] = Map.empty,
                    windows: Seq[Map[String, (Long, Long)]] = Nil): CountInRange = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
     require(lo <= hi, s"empty range [$lo, $hi]")
-    require(ranges.isEmpty || windows.isEmpty,
-      "pass ONE window via ranges or several via windows, not both")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — count its index range instead")
     // optional dim-index window (r18) or union of disjoint windows (r19):
     // count in-range cells of the window cells only — out-of-window
     // chunks are outside the domain, not "outside the range", and appear
     // in no counter
-    val sliced: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (windows.nonEmpty) unionOf(meta, dims, windows, variable).apply
-      else sliceOf(meta, dims, ranges, variable).apply
+    val t = new QcVar(spark, path, variable, "countInRange",
+      "count its index range instead", ranges, windows)
     // exact range membership in the column's own type — consistent with
     // the BigDecimal chunk triage (see rangePred)
-    def filtered(df: org.apache.spark.sql.DataFrame) =
+    def filtered(df: DataFrame) =
       df.filter(rangePred(col(variable), df.schema(variable).dataType, lo, hi))
-    def fullScanCount(): Long =
-      filtered(sliced(spark.read.format("mdio").load(path))).count()
-
-    val (loB, hiB) = (exactBig(lo), exactBig(hi))
-    MdioChunkStats.currentManifest(root.resolve(variable)) match {
-      case None => CountInRange(fullScanCount(), 0L, 0L, 0L, fallback = true)
-      case Some(man) =>
-        val grid = meta.chunkGrid
-        val boxesOpt =
-          if (windows.nonEmpty) alignedUnion(meta, dims, windows)
-          else if (ranges.isEmpty) Some(Seq(grid.map(g => (0L, g))))
-          else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges).map(Seq(_))
-        if (boxesOpt.isEmpty) { // misaligned window: exact sliced scan
-          log.warn(s"countInRange($path, $variable): slice " +
-            s"${if (windows.nonEmpty) windows else ranges} is not " +
-            "chunk-aligned — falling back to the sliced range scan")
-          return CountInRange(fullScanCount(), 0L, 0L, 0L, fallback = true)
-        }
-        val boxes = boxesOpt.get
-        def inBox(cc: Seq[Long]): Boolean =
-          boxes.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
-        val tf = boxes.map(b =>
-          (1 until grid.size).forall(i => b(i)._1 <= 0 && b(i)._2 >= grid(i)))
-        var metaCount = 0L
-        var metaChunks = 0L
-        var outside = 0L
-        val straddlers = Seq.newBuilder[Seq[Long]]
-        var nStraddle = 0
-        // whole-shard answers from the manifest summary alone (the r15
-        // cells/bounded fields): a complete shard whose bounds union lies
-        // inside the range counts its `cells` finite cells whole (all-NaN
-        // chunks there are outside — NaN matches no range), one disjoint
-        // from the range proves every chunk empty, and an all-NaN shard
-        // (no union, cells = 0 by construction) is proven zero. Anything
-        // the summary cannot decide — including a shard the dim window
-        // cuts — opens the shard for per-chunk triage.
-        val within = walkShards(root.resolve(variable), man, grid,
-          leadBoxes = boxes.map(_.head), entryBudget = qcEntryBudget) { (sid, sm) =>
-          boxes.indices.exists { w =>
-            tf(w) && sid * man.span >= boxes(w).head._1 &&
-              math.min((sid + 1) * man.span, grid.head) <= boxes(w).head._2
-          } &&
-            ((sm.lo, sm.hi) match {
-              case (Some(l), Some(h)) if h < loB || l > hiB =>
-                outside += sm.count; true
-              case (Some(l), Some(h)) if l >= loB && h <= hiB &&
-                  sm.cells.isDefined && sm.bounded >= 0 =>
-                metaCount += sm.cells.get
-                metaChunks += sm.bounded
-                outside += sm.count - sm.bounded
-                true
-              case (None, None) => outside += sm.count; true
-              case _ => false
-            })
-        } { (cc, eOpt) =>
-          if (inBox(cc)) eOpt match {
-            case Some(None) => outside += 1 // all-NaN: no cell can match
-            case Some(Some(b)) if b.max < loB || b.min > hiB => outside += 1
-            case Some(Some(b)) if b.min >= loB && b.max <= hiB &&
-                b.moments.isDefined =>
-              metaCount += b.moments.get.cnt
-              metaChunks += 1
-            case _ => // straddler, no entry, or no moments: scan it
-              straddlers += cc
-              nStraddle += 1
-          }
-        }
-        if (!within || nStraddle > maxScanChunks)
-          return CountInRange(fullScanCount(), 0L, 0L, 0L, fallback = true)
-        val scanned: Long =
-          if (nStraddle == 0) 0L
-          else
-            // ONE scan planning exactly the straddler chunks via the
-            // chunkKeys allowlist — a single plan node no matter how many
-            // chunks the range boundary crosses (a per-chunk union carried
-            // one dim-boxed leg each)
-            filtered(spark.read.format("mdio")
-              .option("chunkKeys",
-                straddlers.result().map(_.mkString(".")).mkString(","))
-              .load(path)).count()
-        CountInRange(metaCount + scanned, metaChunks, outside,
-          nStraddle.toLong, fallback = false)
+    def fullScan(): CountInRange =
+      CountInRange(filtered(t.sliced(t.base)).count(), 0L, 0L, 0L, fallback = true)
+    val (man, geo) = t.plan() match {
+      case Right(p) => p
+      case Left(_) => return fullScan()
     }
+    val (loB, hiB) = (exactBig(lo), exactBig(hi))
+    var metaCount = 0L
+    var metaChunks = 0L
+    var outside = 0L
+    val straddlers = Seq.newBuilder[Seq[Long]]
+    var nStraddle = 0
+    // whole-shard answers from the manifest summary alone (the r15
+    // cells/bounded fields): a complete shard whose bounds union lies
+    // inside the range counts its `cells` finite cells whole (all-NaN
+    // chunks there are outside — NaN matches no range), one disjoint
+    // from the range proves every chunk empty, and an all-NaN shard
+    // (no union, cells = 0 by construction) is proven zero. Anything
+    // the summary cannot decide — including a shard the dim window
+    // cuts — opens the shard for per-chunk triage.
+    val within = walkShards(t.varDir, man, geo, qcEntryBudget) { (sid, sm) =>
+      geo.shardGroup(sid, man.span).isDefined &&
+        ((sm.lo, sm.hi) match {
+          case (Some(l), Some(h)) if h < loB || l > hiB =>
+            outside += sm.count; true
+          case (Some(l), Some(h)) if l >= loB && h <= hiB &&
+              sm.cells.isDefined && sm.bounded >= 0 =>
+            metaCount += sm.cells.get
+            metaChunks += sm.bounded
+            outside += sm.count - sm.bounded
+            true
+          case (None, None) => outside += sm.count; true
+          case _ => false
+        })
+    } { (cc, eOpt) =>
+      if (geo.inBox(cc)) eOpt match {
+        case Some(None) => outside += 1 // all-NaN: no cell can match
+        case Some(Some(b)) if b.max < loB || b.min > hiB => outside += 1
+        case Some(Some(b)) if b.min >= loB && b.max <= hiB &&
+            b.moments.isDefined =>
+          metaCount += b.moments.get.cnt
+          metaChunks += 1
+        case _ => // straddler, no entry, or no moments: scan it
+          straddlers += cc
+          nStraddle += 1
+      }
+    }
+    if (!within || nStraddle > maxScanChunks) return fullScan()
+    // ONE scan planning exactly the straddler chunks — a single plan node
+    // no matter how many chunks the range boundary crosses
+    val scanned: Long =
+      if (nStraddle == 0) 0L else filtered(t.chunks(straddlers.result())).count()
+    CountInRange(metaCount + scanned, metaChunks, outside,
+      nStraddle.toLong, fallback = false)
   }
 
   /** [[kthSmallest]] result: `value` is the exact k-th smallest finite
     * cell; `jobs` counts the Spark scan jobs issued (0–2: the below-rank
     * recount when the bracket's lower edge straddles chunks, and the
-    * window selection), `scannedChunks` the chunks those jobs read (the
-    * window job's count is the sidecar-pruned chunk set of its ONE scan
-    * node); `fallback` marks the exact full-scan grouped-rank path. */
+    * window selection), `scannedChunks` the chunks those jobs read (each
+    * job ONE allowlist scan node); `fallback` marks the exact full-scan
+    * grouped-rank path. */
   final case class KthSmallest(value: Double, jobs: Int,
                                scannedChunks: Long, fallback: Boolean)
-
-  private def asDouble(row: org.apache.spark.sql.Row): Double = anyToDouble(row.get(0))
 
   private def anyToDouble(x: Any): Double = x match {
     case d: Double => d
@@ -576,8 +655,8 @@ object MdioStats {
     case other => throw new IllegalStateException(s"unrankable value $other")
   }
 
-  /** Buckets per [[selectByRank]] pass: bounds the driver collect at one
-    * Long per non-empty bucket and the final single-partition sort at one
+  /** Buckets per rank in [[selectByRankMulti]]: bounds the driver collect
+    * at one Long per non-empty bucket and each rank's final sort at one
     * bucket's distinct values. */
   private val RankBuckets = 1024
 
@@ -599,9 +678,8 @@ object MdioStats {
     * never promotes to double); float/double columns against the
     * double/float, which IS the value. */
   private[graft] def edgeLit(x: BigDecimal,
-                             dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types._
+                             dt: DataType)
+      : Column = {
     dt match {
       case _: DecimalType => lit(x.underlying)
       case LongType | IntegerType | ShortType | ByteType => lit(x.toLongExact)
@@ -613,9 +691,8 @@ object MdioStats {
   /** The Spark type sidecar edges take beside column type `dt` (what
     * [[edgeLit]] produces): decimals stay themselves, integrals widen to
     * long, floats/doubles stay. */
-  private[graft] def edgeType(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
+  private[graft] def edgeType(dt: DataType)
+      : DataType = {
     dt match {
       case d: DecimalType => d
       case LongType | IntegerType | ShortType | ByteType => LongType
@@ -627,8 +704,7 @@ object MdioStats {
   /** A sidecar edge as a PLAIN VALUE of [[edgeType]] (for broadcast-frame
     * rows, where [[edgeLit]]'s literal form can't be used). */
   private[graft] def edgeValue(x: BigDecimal,
-                               dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
+                               dt: DataType): Any = {
     dt match {
       case _: DecimalType => x.underlying
       case LongType | IntegerType | ShortType | ByteType => Long.box(x.toLongExact)
@@ -646,10 +722,9 @@ object MdioStats {
     * BigDecimal arithmetic the chunk triage used. Float/double columns
     * compare in double, which is exact (the edges ARE doubles). Integral
     * edges beyond the Long range collapse to constant true/false. */
-  private[graft] def rangePred(vcol: org.apache.spark.sql.Column,
-                               dt: org.apache.spark.sql.types.DataType,
-                               lo: Double, hi: Double): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types._
+  private[graft] def rangePred(vcol: Column,
+                               dt: DataType,
+                               lo: Double, hi: Double): Column = {
     def snap(x: Double, up: Boolean): BigDecimal =
       exactBig(x).setScale(0,
         if (up) BigDecimal.RoundingMode.CEILING else BigDecimal.RoundingMode.FLOOR)
@@ -701,63 +776,36 @@ object MdioStats {
     throw new IllegalArgumentException(s"rank $rank exceeds $before cells")
   }
 
-  /** Exact rank selection over DISTINCT-VALUE counts (`v`: any numeric,
-    * `c`: Long) with Long ranks end-to-end — the replacement for
-    * `ORDER BY v OFFSET rank-1 LIMIT 1`, whose Int-typed offset silently
-    * wraps past 2³¹ and whose global sort funnels every row through one
-    * partition. Two bounded jobs over `byV` (persist it when it derives
-    * from a scan): a ≤[[RankBuckets]]-row per-bucket histogram collected
-    * to the driver locates the bucket holding the rank, then an ordered
-    * cumulative count INSIDE that one bucket selects the value — the
-    * final sort sees one bucket's distinct values, not the window's.
-    * Buckets are a deterministic pure function of the value (no
-    * sampling), so re-evaluation cannot move rows across buckets; `lo`/
-    * `hi` need only be approximate covers (values outside clamp into the
-    * edge buckets). */
-  private[graft] def selectByRank(byV: org.apache.spark.sql.DataFrame,
-                                  rank: Long, lo: Double, hi: Double): Double = {
-    val width = (hi - lo) / RankBuckets
-    val bucket =
-      if (!(width > 0)) lit(0L) // single value / zero span: one bucket
-      else least(greatest(floor((col("v").cast("double") - lit(lo)) / lit(width)),
-        lit(0.0)), lit((RankBuckets - 1).toDouble)).cast("long")
-    val per = byV.groupBy(bucket.as("b")).agg(sum(col("c")).as("bc"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (b, before) = bucketForRank(per, rank)
-    val cum = org.apache.spark.sql.expressions.Window.orderBy(col("v"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    asDouble(byV.filter(bucket === b)
-      .withColumn("cum", sum(col("c")).over(cum))
-      .filter(col("cum") >= rank - before)
-      .orderBy(col("v")).limit(1).select(col("v")).head)
-  }
-
   /** One rank request for [[selectByRankMulti]]: select the `residual`-th
     * smallest value among `byV` rows with `x0 < v ≤ x1` (x0 None ⇒ no
     * lower edge). The edges are COLUMNS (built with [[edgeLit]]) so the
     * window membership compares in the value's native type — a u64 edge
     * past 2^53 must not round through double. `lo`/`hi` are approximate
-    * double covers for the bucket span, exactly as in [[selectByRank]]
-    * (buckets only need determinism, not exactness). */
-  private[graft] final case class RankReq(x0: Option[org.apache.spark.sql.Column],
-                                          x1: org.apache.spark.sql.Column,
+    * double covers for the bucket span (buckets only need determinism,
+    * not exactness: values outside clamp into the edge buckets). */
+  private[graft] final case class RankReq(x0: Option[Column],
+                                          x1: Column,
                                           lo: Double, hi: Double,
                                           residual: Long)
 
-  /** [[selectByRank]] for MANY ranks (each with its own window) in TWO
-    * jobs total instead of two per rank: the requests ride the plan as an
-    * exploded literal array — no join, no per-rank action — so job one
-    * collects every rank's ≤[[RankBuckets]]-row bucket histogram at once
-    * and job two picks every rank's value from its located bucket with a
-    * cumulative-count window PARTITIONED BY RANK (each partition sorts
-    * one bucket's distinct values, the same bound as the single-rank
-    * form). Driver round-trips stop scaling with the rank count — the
-    * p01/p50/p99 readout pays the same two cached-frame jobs as one
-    * median. */
-  private[graft] def selectByRankMulti(byV: org.apache.spark.sql.DataFrame,
+  /** Exact rank selection over DISTINCT-VALUE counts (`byV`: `v` any
+    * numeric, `c` Long) with Long ranks end-to-end — the replacement for
+    * `ORDER BY v OFFSET rank-1 LIMIT 1`, whose Int-typed offset silently
+    * wraps past 2³¹ and whose global sort funnels every row through one
+    * partition — for MANY ranks (each with its own window) in TWO jobs
+    * total: the requests ride the plan as an exploded literal array — no
+    * join, no per-rank action — so job one collects every rank's
+    * ≤[[RankBuckets]]-row bucket histogram at once and job two picks
+    * every rank's value from its located bucket with a cumulative-count
+    * window PARTITIONED BY RANK (each partition sorts one bucket's
+    * distinct values). Buckets are a pure function of the value (no
+    * sampling), so re-evaluation cannot move rows across buckets; persist
+    * `byV` when it derives from a scan. Driver round-trips stop scaling
+    * with the rank count — the p01/p50/p99 readout pays the same two
+    * cached-frame jobs as one median. */
+  private[graft] def selectByRankMulti(byV: DataFrame,
                                        reqs: Seq[RankReq],
-                                       et: org.apache.spark.sql.types.DataType)
+                                       et: DataType)
       : Seq[Double] = {
     import org.apache.spark.sql.expressions.Window
     if (reqs.isEmpty) return Seq.empty
@@ -826,9 +874,9 @@ object MdioStats {
     * exchange reuse executes the underlying scan once (pinned in
     * MdioValueStatsSpec via the chunk-read counter). Returns `byKV`'s
     * rows (all columns) filtered to each group's selected value. */
-  private[graft] def pickByRankBucketed(byKV: org.apache.spark.sql.DataFrame,
+  private[graft] def pickByRankBucketed(byKV: DataFrame,
                                         keys: Seq[String])
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // coalesce makes _bkt provably NON-NULL: otherwise the join on _bkt
     // below lets the optimizer infer an isnotnull(_bkt) constraint into
@@ -857,104 +905,109 @@ object MdioStats {
       .filter(col("_cum") >= col("_need") && col("_cum") - col("c") < col("_need"))
   }
 
-  /** The hierarchical rank-item state [[kthSmallest]] and [[quantilesOf]]
-    * share: FINE items (opened per-chunk bounds, moments required) and
-    * COARSE items (unopened whole-shard manifest summaries, one
-    * [lo, hi]×cells interval each), built by one walk of the manifest.
-    * `usable` drops on any cell unaccounted for with moments (missing
-    * entry, missing moments, torn shard) — callers fall back to their
-    * exact full scan. [[openCoarse]] refines: shards whose bounds satisfy
-    * the caller's window predicate open into fine items (ONE round
-    * suffices — finer detail only SHRINKS brackets, so a shard touching
-    * the shrunk window touched the coarse one and is already open;
-    * interior shards NEVER open — that is ShardMeta's O(manifest)
-    * promise). */
-  private final class RankItems(varDir: graft.zarr.VPath,
-                                man: graft.sources.MdioChunkStats.Manifest,
-                                grid: Seq[Long],
-                                boxes: Seq[Seq[(Long, Long)]] = Nil,
-                                entryBudget: Long = Long.MaxValue) {
-    import graft.sources.MdioChunkStats
-    // chunk-index boxes [lo, hi) per dim (r18, sliced ranks; r19, a UNION
-    // of disjoint boxes — SET1's slice-concat algebra): items outside
-    // every box never rank — a chunk without an entry OUT of the union
-    // cannot trip `usable`, and a shard only summarizes coarse when its
-    // WHOLE chunk range maps inside ONE box (lead range within that box's
-    // lead range, that box's trailing dims uncut); anything partial opens
-    // into fine items. Nil = the whole grid.
-    private val bs = if (boxes.isEmpty) Seq(grid.map(g => (0L, g))) else boxes
-    private val tf = bs.map(b =>
-      (1 until grid.size).forall(i => b(i)._1 <= 0 && b(i)._2 >= grid(i)))
-    private def inBox(cc: Seq[Long]): Boolean =
-      bs.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
-    val fine = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], MdioChunkStats.Bounds)]
-    var coarse = Map.empty[Long, (BigDecimal, BigDecimal, Long)] // sid -> (lo, hi, cells)
+  /** The hierarchical item state every item-ranking QC operator triages
+    * from, per group of `geo` (an ungrouped operator has one): FINE items
+    * (opened per-chunk bounds) and COARSE items (unopened whole-shard
+    * manifest summaries, one [lo, hi]×cells interval each), built by one
+    * walk of the manifest. Chunks outside every box never count — a
+    * chunk without an entry OUT of the window cannot trip `usable` — and
+    * a shard rides coarse only when [[Geometry.shardGroup]] maps it whole
+    * into one group; anything partial opens into fine items. `moments`
+    * says whether items need finite-cell counts (ranks and group sizes
+    * do; locating an extremum needs bounds only). `usable` drops on any
+    * cell unaccounted for (missing entry, missing moments where needed,
+    * torn shard) or when the walk or a refinement exceeds `entryBudget`
+    * driver-side entries — callers then take their exact scan instead of
+    * answering from incomplete items. [[openCoarse]] refines: coarse
+    * shards the caller's predicate picks open into fine items. */
+  private final class RankItems(varDir: VPath, man: MdioChunkStats.Manifest,
+                                geo: Geometry, entryBudget: Long,
+                                moments: Boolean = true) {
+    private type Bounds = MdioChunkStats.Bounds
+    private val fine = mutable.Map.empty[Seq[Long], mutable.ArrayBuffer[(Seq[Long], Bounds)]]
+    // group -> sid -> (lo, hi, cells), sids ascending
+    private val coarse = mutable.Map
+      .empty[Seq[Long], mutable.SortedMap[Long, (BigDecimal, BigDecimal, Long)]]
     var usable = true
     private def intake(cc: Seq[Long], eOpt: Option[MdioChunkStats.Entry]): Unit =
-      if (inBox(cc)) eOpt match {
-        case Some(Some(bb)) if bb.moments.isDefined => fine += ((cc, bb))
-        case Some(None) => () // all-NaN chunk: never ranks
+      if (geo.inBox(cc)) eOpt match {
+        case Some(Some(b)) if !moments || b.moments.isDefined =>
+          fine.getOrElseUpdate(geo.groupOf(cc), mutable.ArrayBuffer.empty) += ((cc, b))
+        case Some(None) => () // all-NaN chunk: never ranks or wins
         case _ => usable = false
       }
-    // a budget-aborted walk (trailing-narrowed window cutting every
-    // shard's summary) reads as unusable: callers take their exact
-    // sliced-scan fallback, never a driver-side parse of every cut shard
-    if (!walkShards(varDir, man, grid, leadBoxes = bs.map(_.head),
-      entryBudget = entryBudget) { (sid, sm) =>
-      sm.cells.isDefined && bs.indices.exists { w =>
-        tf(w) && sid * man.span >= bs(w).head._1 &&
-          math.min((sid + 1) * man.span, grid.head) <= bs(w).head._2
-      } && {
+    if (!walkShards(varDir, man, geo, entryBudget) { (sid, sm) =>
+      (!moments || sm.cells.isDefined) && geo.shardGroup(sid, man.span).exists { g =>
         (sm.lo, sm.hi) match {
-          case (Some(l), Some(h)) => coarse = coarse.updated(sid, (l, h, sm.cells.get))
-          case _ => () // all-NaN shard: proven cells = 0, contributes nothing
+          case (Some(l), Some(h)) =>
+            coarse.getOrElseUpdate(g, mutable.SortedMap.empty)
+              .update(sid, (l, h, sm.cells.getOrElse(0L)))
+            true
+          case _ => sm.cells.contains(0L) // all-NaN shard: proven no finite cell
         }
-        true
       }
     }(intake)) usable = false
-    /** Total finite cells across both granularities. */
-    def n: Long = coarse.valuesIterator.map(_._3).sum +
-      fine.iterator.map(_._2.moments.get.cnt).sum
-    /** Rank intervals over MIXED granularity — whole-shard summaries and
-      * opened chunks are both just [lo, hi] intervals carrying a
-      * finite-cell count, exactly what [[bracketItems]] consumes. */
-    def items: IndexedSeq[(BigDecimal, BigDecimal, Long)] =
-      (coarse.valuesIterator ++
-        fine.iterator.map { case (_, b) => (b.min, b.max, b.moments.get.cnt) })
-        .toIndexedSeq
-    /** Open every coarse shard whose [lo, hi] satisfies `touches` into
-      * fine items; true when any opened OR the entry budget tripped (the
-      * caller re-brackets — and its unconditional `usable` check catches
-      * the trip). The refinement shares the walk's budget discipline: a
-      * partially-opened shard set would leave bracket-intersecting coarse
-      * intervals OUT of the probe/window scans, so exceeding the budget
-      * drops `usable` (→ the exact scan fallback) instead of answering
-      * from incomplete items. */
-    def openCoarse(touches: (BigDecimal, BigDecimal) => Boolean): Boolean = {
-      val toOpen = coarse.collect { case (sid, (l, h, _)) if touches(l, h) => sid }
-      val chunksPerLead = grid.drop(1).product
+
+    /** Groups holding at least one item, ascending. */
+    def groups: Seq[Seq[Long]] = (fine.keySet ++ coarse.keySet).toSeq
+      .sorted(Ordering.Implicits.seqOrdering[Seq, Long])
+    def fineOf(g: Seq[Long]): Iterable[(Seq[Long], Bounds)] = fine.getOrElse(g, Nil)
+    def coarseOf(g: Seq[Long]): Iterable[(BigDecimal, BigDecimal, Long)] =
+      coarse.get(g).fold(Iterable.empty[(BigDecimal, BigDecimal, Long)])(_.values)
+    /** A group's rank intervals over MIXED granularity — whole-shard
+      * summaries and opened chunks are both just [lo, hi] intervals
+      * carrying a finite-cell count (0 where moments were not asked for),
+      * exactly what [[bracketItems]] consumes. */
+    def items(g: Seq[Long]): IndexedSeq[(BigDecimal, BigDecimal, Long)] =
+      (coarseOf(g).iterator ++ fineOf(g).iterator.map { case (_, b) =>
+        (b.min, b.max, b.moments.fold(0L)(_.cnt)) }).toIndexedSeq
+
+    /** Open every coarse shard `touches(group, lo, hi)` picks into fine
+      * items, groups ascending, shards ascending. The refinement shares
+      * the walk's budget: exceeding it drops `usable`. */
+    def openCoarse(touches: (Seq[Long], BigDecimal, BigDecimal) => Boolean): Unit = {
+      val chunksPerLead = geo.grid.drop(1).product
       var openedKeys = 0L
-      var any = false
-      toOpen.foreach { sid =>
-        if (usable) {
-          val leadHi = math.min((sid + 1) * man.span, grid.head)
-          openedKeys += (leadHi - sid * man.span) * chunksPerLead
-          if (openedKeys > entryBudget) {
-            MdioStats.log.warn(s"rank refinement of '$varDir' would parse " +
-              s"$openedKeys+ chunk entries driver-side (budget $entryBudget) " +
-              "— falling back to the exact scan")
-            usable = false
-          } else {
-            coarse -= sid
-            feedKeys(grid, sid * man.span, leadHi,
-              MdioChunkStats.readShard(varDir, sid, man.shards(sid).gen))(intake)
-            any = true
-          }
+      for {
+        g <- groups
+        sid <- coarse.get(g).toSeq.flatMap(_.collect { case (sid, (l, h, _)) if touches(g, l, h) => sid })
+      } if (usable) {
+        val leadHi = math.min((sid + 1) * man.span, geo.grid.head)
+        openedKeys += (leadHi - sid * man.span) * chunksPerLead
+        if (openedKeys > entryBudget) {
+          log.warn(s"refinement of '$varDir' would parse $openedKeys+ chunk " +
+            s"entries driver-side (budget $entryBudget) — falling back to the exact scan")
+          usable = false
+        } else {
+          coarse(g) -= sid
+          feedKeys(geo.grid, sid * man.span, leadHi,
+            MdioChunkStats.readShard(varDir, sid, man.shards(sid).gen))(intake)
         }
       }
-      any || !usable
+    }
+
+    /** Each group's rank brackets ([[bracketItems]]) for its ranks `ks`,
+      * after opening every coarse shard that intersects one of them — ONE
+      * round suffices: finer detail only SHRINKS brackets, so a shard
+      * touching a shrunk window touched the coarse one and is already
+      * open; interior shards NEVER open (ShardMeta's O(manifest) promise).
+      * None when the refinement left the items unusable. */
+    def brackets(ks: Seq[(Seq[Long], Seq[Long])])
+        : Option[Map[Seq[Long], Seq[(Option[BigDecimal], BigDecimal)]]] = {
+      def bracket() = ks.map { case (g, gks) =>
+        val its = items(g)
+        g -> gks.map(bracketItems(its, _))
+      }.toMap
+      val coarseBrs = bracket()
+      openCoarse((g, l, h) => coarseBrs.get(g).exists(_.exists(inWindow(l, h, _))))
+      if (usable) Some(bracket()) else None
     }
   }
+
+  /** Whether an interval [l, h] intersects a rank window (x0, x1]. */
+  private def inWindow(l: BigDecimal, h: BigDecimal,
+                       br: (Option[BigDecimal], BigDecimal)): Boolean =
+    br._1.forall(h > _) && l <= br._2
 
   /** Metadata-only rank bracket over interval items (lo, hi, cnt) — each
     * a chunk's or a whole shard's [min, max]×finite-cells record. The
@@ -1005,163 +1058,28 @@ object MdioStats {
     * summary interval ([lo, hi]×cells, [[graft.sources.MdioChunkStats.ShardMeta]]),
     * and only the shards intersecting the bracket window are opened for
     * chunk-level refinement. `ranges` (r18) restricts the rank to a
-    * dim-index box (`dim -> [lo, hi)`): chunk-aligned windows ride the
-    * same machinery over their own chunks only, misaligned ones answer
-    * exactly through the sliced fallback scan. The median of a 100 TB store thus reads
+    * dim-index box (`dim -> [lo, hi)`), `windows` (r19) to a union of
+    * disjoint boxes: chunk-aligned windows ride the same machinery over
+    * their own chunks only, misaligned ones answer exactly through the
+    * sliced fallback scan. The median of a 100 TB store thus reads
     * O(manifest) sidecar bytes plus only the chunks overlapping one
-    * boundary window — a global sort must shuffle the full corpus. Requires
-    * generation-current stats with full coverage and moments; anything
-    * less falls back to the exact full-scan grouped-rank form
-    * (`fallback = true`).
-    * Ties are handled exactly: the result equals
-    * `ORDER BY v LIMIT 1 OFFSET k-1` in any engine — but the selection
-    * itself is [[selectByRank]]'s Long-rank grouped count, never an
-    * Int-typed OFFSET. More than `maxProbeChunks` chunks straddling the
-    * bracket's lower edge falls back loudly too (the probe is the one
-    * remaining per-chunk union; the window selection is always ONE scan). */
+    * boundary window — a global sort must shuffle the full corpus.
+    * Requires generation-current stats with full coverage and moments;
+    * anything less falls back to the exact full-scan grouped-rank form
+    * (`fallback = true`), as do more than `maxProbeChunks` chunks
+    * straddling the bracket's lower edge. Ties are handled exactly: the
+    * result equals `ORDER BY v LIMIT 1 OFFSET k-1` in any engine, with a
+    * Long rank, never an Int-typed OFFSET. This is [[valuesAtRanks]] at
+    * one rank. */
   def kthSmallest(spark: SparkSession, path: String, variable: String,
                   k: Long, maxProbeChunks: Int = 512,
                   ranges: Map[String, (Long, Long)] = Map.empty,
                   windows: Seq[Map[String, (Long, Long)]] = Nil): KthSmallest = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
     require(k >= 1, s"rank $k out of range")
-    if (windows.nonEmpty) { // OR-of-ranges union (r19): the batched rank
-      require(ranges.isEmpty,
-        "pass ONE window via ranges or several via windows, not both")
-      val q = rankVector(spark, path, variable, { n =>
-        require(k <= n, s"rank $k exceeds $n finite cells"); Seq(k)
-      }, maxProbeChunks, Map.empty, windows)
-      return KthSmallest(q.values.head, q.jobs, q.scannedChunks, q.fallback)
-    }
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — rank its index range instead")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    def dropNaN(df: org.apache.spark.sql.DataFrame) =
-      if (isFloat) df.filter(!isnan(col(variable))) else df
-    def base = spark.read.format("mdio").load(path)
-    val vt = base.schema(variable).dataType
-    // optional dim-index window (r18): the rank is over the BOX's finite
-    // cells only — the depth-window k-th amplitude
-    val sliced = sliceOf(meta, dims, ranges, variable)
-    // exact full-scan fallback (stale/absent stats, or an uncapped probe):
-    // grouped distinct-value counts + Long-rank selection — no global
-    // sort, no Int offset, one scan
-    def scanFallback(): KthSmallest = {
-      val byV = dropNaN(sliced(base).select(col(variable).as("v")))
-        .groupBy(col("v")).agg(count(lit(1L)).as("c")).persist()
-      try {
-        val mm = byV.agg(min(col("v").cast("double")), max(col("v").cast("double")),
-          sum(col("c"))).head
-        val total = if (mm.isNullAt(2)) 0L else mm.getLong(2)
-        require(k <= total, s"rank $k exceeds $total finite cells")
-        KthSmallest(selectByRank(byV, k, mm.getDouble(0), mm.getDouble(1)),
-          0, 0L, fallback = true)
-      } finally byV.unpersist()
-    }
-
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val man = manOpt.get
-    val grid = meta.chunkGrid
-    val boxOpt =
-      if (ranges.isEmpty) Some(grid.map(g => (0L, g)))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges)
-    if (boxOpt.isEmpty) { // misaligned window: exact through the sliced scan
-      log.warn(s"kthSmallest($path, $variable): slice $ranges is not " +
-        "chunk-aligned — falling back to the exact sliced-scan selection")
-      return scanFallback()
-    }
-
-    // shard-resolved rank items, mixed granularity (see RankItems),
-    // restricted to the box's own chunks
-    val ri = new RankItems(varDir, man, grid, boxOpt.toSeq, entryBudget = qcEntryBudget)
-    if (!ri.usable) return scanFallback()
-    val n = ri.n
-    require(k <= n, s"rank $k exceeds $n finite cells")
-
-    var scanned = 0L
-    var jobs = 0
-    def items = ri.items
-    var (x0, x1) = bracketItems(items, k)
-    // open exactly the coarse shards intersecting (x0, x1] — only their
-    // chunk-level detail can tighten the bracket or be scanned — then
-    // re-bracket over the refined items (one round, see RankItems)
-    if (ri.openCoarse((l, h) => x0.forall(h > _) && l <= x1)) {
-      if (!ri.usable) return scanFallback() // torn shard mid-refinement
-      val t = bracketItems(items, k)
-      x0 = t._1
-      x1 = t._2
-    }
-
-    // exact rank below the window's lower edge: certain-below intervals
-    // (unopened coarse shards included) from metadata, chunks straddling
-    // x0 through one allowlist-scan job (often 0; capped — when the
-    // store's intervals all overlap, every chunk straddles the edge and
-    // even one scan's partition count would go O(chunks)). A remaining
-    // coarse shard can never straddle x0: a union crossing it would
-    // intersect the window, so the shard was opened above.
-    val below: Long = x0 match {
-      case None => 0L
-      case Some(b0) =>
-        val straddle = ri.fine.collect {
-          case (cc, b) if b.min <= b0 && b.max > b0 => cc
-        }
-        if (straddle.size > maxProbeChunks) {
-          log.warn(s"kthSmallest($path, $variable, k=$k): ${straddle.size} " +
-            s"chunks straddle the bracket edge $b0 (cap $maxProbeChunks) — " +
-            "falling back to the exact full-scan grouped-rank selection")
-          return scanFallback()
-        }
-        val exact =
-          if (straddle.isEmpty) 0L
-          else {
-            scanned += straddle.size
-            jobs += 1
-            // ONE scan over exactly the straddler chunks (chunkKeys
-            // allowlist), counting their cells at-or-under the edge
-            spark.read.format("mdio")
-              .option("chunkKeys", straddle.map(_.mkString(".")).mkString(","))
-              .load(path)
-              .filter(col(variable) <= edgeLit(b0, vt)).count()
-          }
-        items.iterator.collect { case (_, h, c) if h <= b0 => c }.sum + exact
-    }
-    // residual selection inside (x0, x1]: ONE scan whose pushed value
-    // predicate rides the sidecar chunk pruning (the zarr_value_pruning
-    // path plans exactly the chunks with max > x0 and min ≤ x1) — the
-    // plan stays a single scan node even when every chunk interval
-    // overlaps the window (zero-centered amplitude data), where a
-    // per-chunk union would carry one leg per chunk in the store
-    val window = ri.fine.collect {
-      case (cc, b) if x0.forall(b.max > _) && b.min <= x1 => cc
-    }
-    scanned += window.size
-    jobs += 1
-    val x1d = x1.toDouble
-    val winScan = x0 match {
-      case Some(b0) =>
-        sliced(base).filter(col(variable) > edgeLit(b0, vt) &&
-          col(variable) <= edgeLit(x1, vt))
-      case None => dropNaN(sliced(base).filter(col(variable) <= edgeLit(x1, vt)))
-    }
-    val residual = k - below
-    require(residual >= 1, s"rank window inconsistency: residual $residual")
-    val byV = winScan.groupBy(col(variable).as("v"))
-      .agg(count(lit(1L)).as("c")).persist()
-    val value =
-      try selectByRank(byV, residual,
-        x0.getOrElse(items.iterator.map(_._1).min).toDouble, x1d)
-      finally byV.unpersist()
-    KthSmallest(value, jobs, scanned, fallback = false)
+    val q = rankVector(spark, path, variable, { n =>
+      require(k <= n, s"rank $k exceeds $n finite cells"); Seq(k)
+    }, maxProbeChunks, ranges, windows)
+    KthSmallest(q.values.head, q.jobs, q.scannedChunks, q.fallback)
   }
 
   /** [[quantilesOf]] result: `values(i)` is the exact `ks(i)`-th smallest
@@ -1177,15 +1095,15 @@ object MdioStats {
   /** EXACT quantile VECTOR in one boundary-window pass — the amplitude
     * clip-level readout (p01/p50/p99 of a survey for display gain/clip
     * QC; reference statsV1 QC anchor, mdio/stats.h:229-335) computed the
-    * way [[kthSmallest]] computes one rank, but sharing every stage
-    * across ALL requested quantiles: ONE metadata bracket per rank over
+    * way [[kthSmallest]] computes one rank — the same pass — sharing every
+    * stage across ALL requested quantiles: ONE metadata bracket per rank over
     * the same hierarchical items (whole-shard manifest summaries +
     * per-chunk [min,max,cnt]; shards open only when they intersect SOME
     * rank's window), ONE `chunkKeys` probe scan recounting every
     * bracket's lower edge together (one conditional-count column per
     * distinct edge), and ONE window scan over the UNION of the rank
     * windows whose cached grouped counts answer every rank via
-    * [[selectByRank]] (Long ranks; the per-rank selections re-read the
+    * [[selectByRankMulti]] (Long ranks; the selections re-read the
     * cached frame, not the store). Chunk I/O for the whole vector is the
     * union of the boundary windows — reading the store once per quantile,
     * or sorting it, would cost p×more or shuffle the corpus. `ks(i) =
@@ -1211,8 +1129,8 @@ object MdioStats {
     * one-bracket / one-probe / one-window pass — the batched entry the
     * percentile aggregate pushdown routes through: a pushed `median` +
     * `percentile_disc` pair needs 2–3 ranks of one variable, and per-rank
-    * [[kthSmallest]] calls would pay the bracket walk and the bounded
-    * scan jobs once per rank instead of once per vector. `ranges`
+    * calls would pay the bracket walk and the bounded scan jobs once per
+    * rank instead of once per vector. `ranges`
     * restricts the ranking to a dim-index BOX (`dim -> [lo, hi)`; r18 —
     * the depth-window median): a chunk-aligned box rides the same bracket
     * machinery over its own chunks only (disjoint shards never read), a
@@ -1232,102 +1150,54 @@ object MdioStats {
   private def rankVector(spark: SparkSession, path: String, variable: String,
                          mkKs: Long => Seq[Long], maxProbeChunks: Int,
                          ranges: Map[String, (Long, Long)],
-                         windows: Seq[Map[String, (Long, Long)]] = Nil): Quantiles = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    require(ranges.isEmpty || windows.isEmpty,
-      "pass ONE window via ranges or several via windows, not both")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — rank its index range instead")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    def dropNaN(df: org.apache.spark.sql.DataFrame) =
-      if (isFloat) df.filter(!isnan(col(variable))) else df
-    def base = spark.read.format("mdio").load(path)
-    val vt = base.schema(variable).dataType
+                         windows: Seq[Map[String, (Long, Long)]]): Quantiles = {
     // optional dim-index slice (r18) or UNION of disjoint slices (r19):
-    // ranks are computed over the window cells only. The single-window
-    // dim filters push into the scan; a union pushes its hull and refines
-    // with the exact OR Spark-side, so the fallback too prunes.
-    val sliced: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (windows.nonEmpty) unionOf(meta, dims, windows, variable).apply
-      else sliceOf(meta, dims, ranges, variable).apply
-    def ksOf(n: Long): Seq[Long] = mkKs(n)
+    // ranks are computed over the window cells only
+    val t = new QcVar(spark, path, variable, "rank vector",
+      "rank its index range instead", ranges, windows)
     def scanFallback(): Quantiles = {
-      val byV = dropNaN(sliced(base).select(col(variable).as("v")))
-        .groupBy(col("v")).agg(count(lit(1L)).as("c")).persist()
+      val byV = t.finite(t.sliced(t.base)).groupBy(col(variable).as("v"))
+        .agg(count(lit(1L)).as("c")).persist()
       try {
         val mm = byV.agg(min(col("v").cast("double")), max(col("v").cast("double")),
           sum(col("c")), max(col("v"))).head
         val total = if (mm.isNullAt(2)) 0L else mm.getLong(2)
         require(total >= 1, s"no finite cells to rank in '$variable'")
-        val ks = ksOf(total)
+        val ks = mkKs(total)
         require(ks.forall(_ <= total), s"ranks $ks exceed $total finite cells")
         val reqs = ks.map(k =>
           RankReq(None, lit(mm.get(3)), mm.getDouble(0), mm.getDouble(1), k))
-        Quantiles(selectByRankMulti(byV, reqs, edgeType(vt)),
+        Quantiles(selectByRankMulti(byV, reqs, edgeType(t.vt)),
           ks, total, 0, 0L, fallback = true)
       } finally byV.unpersist()
     }
-
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val man = manOpt.get
-    manifestRaceHook()
-    val grid = meta.chunkGrid
-    // a sliced rank needs CHUNK-ALIGNED boxes (whole chunks in or out —
-    // a straddling chunk's stats interval mixes in- and out-of-box cells
-    // and the rank arithmetic would lie); misaligned slices answer
-    // exactly through the sliced fallback scan. A union ranks over the
-    // union's chunks in the SAME one-bracket/one-probe/one-window pass.
-    val boxesOpt =
-      if (windows.nonEmpty) alignedUnion(meta, dims, windows)
-      else if (ranges.isEmpty) Some(Seq(grid.map(g => (0L, g))))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges).map(Seq(_))
-    if (boxesOpt.isEmpty) {
-      log.warn(s"rank vector($path, $variable): slice " +
-        s"${if (windows.nonEmpty) windows else ranges} is not " +
-        "chunk-aligned — falling back to the exact sliced-scan selection")
-      return scanFallback()
+    val (man, geo) = t.plan() match {
+      case Right(p) => p
+      case Left(_) => return scanFallback()
     }
-
-    // shared hierarchical rank items, exactly as kthSmallest — restricted
-    // to the union's own chunks (disjoint shards are never even read)
-    val ri = new RankItems(varDir, man, grid, boxesOpt.get, entryBudget = qcEntryBudget)
+    // hierarchical rank items over the window's own chunks (disjoint
+    // shards are never even read)
+    val ri = new RankItems(t.varDir, man, geo, qcEntryBudget)
     if (!ri.usable) return scanFallback()
-    val n = ri.n
+    val g = geo.whole
+    val n = ri.items(g).iterator.map(_._3).sum
     require(n >= 1, s"no finite cells to rank in '$variable'")
-    val ks = ksOf(n)
+    val ks = mkKs(n)
     require(ks.forall(_ <= n), s"ranks $ks exceed $n finite cells")
-
-    def items = ri.items
-    var brackets = ks.map(bracketItems(items, _))
-    // refinement: open every coarse shard intersecting ANY rank's window,
-    // then re-bracket each rank over the refined items (one round, see
-    // RankItems); interior shards never open
-    if (ri.openCoarse((l, h) => brackets.exists { case (x0, x1) =>
-        x0.forall(h > _) && l <= x1 })) {
-      if (!ri.usable) return scanFallback() // torn shard mid-refinement
-      brackets = ks.map(bracketItems(items, _))
-    }
+    val brackets = ri.brackets(Seq(g -> ks)).getOrElse(return scanFallback())(g)
+    val fine = ri.fineOf(g)
+    val vt = t.vt
 
     var scanned = 0L
     var jobs = 0
-    // ONE probe scan recounts EVERY bracket's lower edge: the chunkKeys
+    // ONE probe scan recounts EVERY bracket's lower edge (a remaining
+    // coarse shard can never straddle one: a union crossing it would
+    // intersect that rank's window, so the shard is open): the chunkKeys
     // allowlist is the union of all edges' straddlers, and one aggregate
     // row carries a conditional count per distinct edge
     val edges = brackets.flatMap(_._1).distinct.sorted
-    val straddlersOf: Map[BigDecimal, Seq[Seq[Long]]] = edges.map { e =>
-      e -> ri.fine.collect { case (cc, b) if b.min <= e && b.max > e => cc }.toSeq
-    }.toMap
-    val probeChunks = straddlersOf.valuesIterator.flatten.toSeq.distinct
+    val probeChunks = edges.flatMap(e =>
+      fine.collect { case (cc, b) if b.min <= e && b.max > e => cc }).distinct
     if (probeChunks.size > maxProbeChunks) {
       log.warn(s"rank vector($path, $variable): ${probeChunks.size} " +
         s"chunks straddle bracket edges (cap $maxProbeChunks) — falling " +
@@ -1335,16 +1205,13 @@ object MdioStats {
       return scanFallback()
     }
     val exactAtEdge: Map[BigDecimal, Long] =
-      if (edges.isEmpty || probeChunks.isEmpty) Map.empty
+      if (probeChunks.isEmpty) Map.empty
       else {
         scanned += probeChunks.size
         jobs += 1
-        val aggs = edges.map(e => count(when(col(variable) <= edgeLit(e, vt), 1L))
-          .as(s"e${edges.indexOf(e)}"))
-        val row = spark.read.format("mdio")
-          .option("chunkKeys", probeChunks.map(_.mkString(".")).mkString(","))
-          .load(path)
-          .agg(aggs.head, aggs.tail: _*).head
+        val aggs = edges.indices.map(i =>
+          count(when(col(variable) <= edgeLit(edges(i), vt), 1L)).as(s"e$i"))
+        val row = t.chunks(probeChunks).agg(aggs.head, aggs.tail: _*).head
         // row(i) = cells ≤ edge(i) over ALL probed chunks (a probed chunk
         // fully below/above a FOREIGN edge counts whole/zero there, which
         // is exact); belowAt pairs this with metadata counts over the
@@ -1358,42 +1225,31 @@ object MdioStats {
     // edge — its cells are in the probe count for that edge too, so the
     // metadata side must exclude every probed chunk to avoid double count.
     val probedSet = probeChunks.toSet
-    def belowAt(e: BigDecimal): Long = {
-      val metaBelow = ri.coarse.valuesIterator.collect {
-        case (_, h, c) if h <= e => c }.sum +
-        ri.fine.iterator.collect {
-          case (cc, b) if !probedSet.contains(cc) && b.max <= e =>
-            b.moments.get.cnt }.sum
-      metaBelow + exactAtEdge.getOrElse(e, 0L)
-    }
+    def belowAt(e: BigDecimal): Long =
+      ri.coarseOf(g).iterator.collect { case (_, h, c) if h <= e => c }.sum +
+        fine.iterator.collect {
+          case (cc, b) if !probedSet.contains(cc) && b.max <= e => b.moments.get.cnt
+        }.sum +
+        exactAtEdge.getOrElse(e, 0L)
 
     // ONE window scan over the UNION of the rank windows; the cached
-    // grouped counts answer every rank (selectByRank re-reads the cache)
-    val windowChunks = ri.fine.collect {
-      case (cc, b) if brackets.exists { case (x0, x1) =>
-        x0.forall(b.max > _) && b.min <= x1 } => cc
-    }.toSeq.distinct
+    // grouped counts answer every rank (selectByRankMulti re-reads the cache)
+    val windowChunks = fine.collect {
+      case (cc, b) if brackets.exists(inWindow(b.min, b.max, _)) => cc
+    }.toSeq
     scanned += windowChunks.size
     jobs += 1
     val unionPred = brackets.map { case (x0, x1) =>
-      x0 match {
-        case Some(b0) => col(variable) > edgeLit(b0, vt) &&
-          col(variable) <= edgeLit(x1, vt)
-        case None => col(variable) <= edgeLit(x1, vt)
-      }
+      x0.fold(lit(true))(col(variable) > edgeLit(_, vt)) && col(variable) <= edgeLit(x1, vt)
     }.reduce(_ || _)
-    val byV = spark.read.format("mdio")
-      .option("chunkKeys", windowChunks.map(_.mkString(".")).mkString(","))
-      .load(path)
-      .filter(unionPred)
+    val byV = t.chunks(windowChunks).filter(unionPred)
       .groupBy(col(variable).as("v")).agg(count(lit(1L)).as("c")).persist()
+    val lo0 = ri.items(g).iterator.map(_._1).min
     val reqs = ks.zip(brackets).map { case (k, (x0, x1)) =>
-      val below = x0.map(belowAt).getOrElse(0L)
-      val residual = k - below
+      val residual = k - x0.map(belowAt).getOrElse(0L)
       require(residual >= 1, s"rank window inconsistency: residual $residual")
       RankReq(x0.map(edgeLit(_, vt)), edgeLit(x1, vt),
-        x0.getOrElse(items.iterator.map(_._1).min).toDouble, x1.toDouble,
-        residual)
+        x0.getOrElse(lo0).toDouble, x1.toDouble, residual)
     }
     val values =
       try selectByRankMulti(byV, reqs, edgeType(vt))
@@ -1407,7 +1263,7 @@ object MdioStats {
     * likewise — or zero rows when the variable has no finite cell.
     * `scannedChunks` counts the candidate chunks the one location scan
     * read; `fallback` marks the full-scan path (stale/absent stats). */
-  final case class ExtremaLocation(result: org.apache.spark.sql.DataFrame,
+  final case class ExtremaLocation(result: DataFrame,
                                    scannedChunks: Long, fallback: Boolean)
 
   /** WHERE the global extrema live — the peak/trough amplitude locator
@@ -1438,28 +1294,11 @@ object MdioStats {
                       variable: String,
                       ranges: Map[String, (Long, Long)] = Map.empty,
                       windows: Seq[Map[String, (Long, Long)]] = Nil): ExtremaLocation = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    import org.apache.spark.sql.{Column, Row}
-    import org.apache.spark.sql.types._
-    require(ranges.isEmpty || windows.isEmpty,
-      "pass ONE window via ranges or several via windows, not both")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — its extrema are its ends")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    def base = spark.read.format("mdio").load(path)
     // optional dim-index window (r18) or union of disjoint windows (r19):
     // WHERE does the peak of this crop (or crop union) live
-    val sliced: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (windows.nonEmpty) unionOf(meta, dims, windows, variable).apply
-      else sliceOf(meta, dims, ranges, variable).apply
+    val t = new QcVar(spark, path, variable, "extremaLocation",
+      "its extrema are its ends", ranges, windows)
+    val dims = t.dims
     val outSchema = StructType(
       Seq(StructField("v_min", DoubleType, nullable = false)) ++
         dims.map(d => StructField(s"min_$d", LongType, nullable = false)) ++
@@ -1468,29 +1307,16 @@ object MdioStats {
     def empty = ExtremaLocation(
       spark.createDataFrame(java.util.Collections.emptyList[Row](), outSchema),
       0L, fallback = false)
-    // native-typed literal so the equality never rounds (u64 decimal
-    // bounds past 2^53 must not route through double)
-    def exactLit(x: BigDecimal): Column = {
-      val dt = base.schema(variable).dataType
-      dt match {
-        case _: DecimalType => lit(x.underlying)
-        case LongType => lit(x.toLongExact)
-        case IntegerType => lit(x.toIntExact)
-        case ShortType => lit(x.toShortExact)
-        case ByteType => lit(x.toByteExact)
-        case FloatType => lit(x.toFloat)
-        case _ => lit(x.toDouble)
-      }
-    }
     // ONE job locates both extrema over any source: first occurrence =
     // smallest dim-struct among the matching cells (struct ordering is
-    // lexicographic over the dims in order)
-    def locate(src: org.apache.spark.sql.DataFrame,
-               vmin: BigDecimal, vmax: BigDecimal): org.apache.spark.sql.DataFrame = {
+    // lexicographic over the dims in order); the native-typed edge
+    // literal keeps the equality from rounding (u64 decimal bounds past
+    // 2^53 must not route through double)
+    def locate(src: DataFrame, vmin: BigDecimal, vmax: BigDecimal): DataFrame = {
       val dimStruct = struct(dims.map(col): _*)
       val r = src.agg(
-        min(when(col(variable) === exactLit(vmin), dimStruct)).as("lmin"),
-        min(when(col(variable) === exactLit(vmax), dimStruct)).as("lmax")).head
+        min(when(col(variable) === edgeLit(vmin, t.vt), dimStruct)).as("lmin"),
+        min(when(col(variable) === edgeLit(vmax, t.vt), dimStruct)).as("lmax")).head
       val (lmin, lmax) = (r.getStruct(0), r.getStruct(1))
       require(lmin != null && lmax != null,
         s"extrema location scan found no matching cell — stale stats for '$variable'?")
@@ -1501,8 +1327,7 @@ object MdioStats {
         outSchema)
     }
     def scanFallback(): ExtremaLocation = {
-      val box = sliced(base)
-      val src = if (isFloat) box.filter(!isnan(col(variable))) else box
+      val src = t.finite(t.sliced(t.base))
       val mm = src.agg(min(col(variable)).as("mn"), max(col(variable)).as("mx")).head
       if (mm.isNullAt(0)) return empty.copy(fallback = true)
       def bd(i: Int): BigDecimal = mm.get(i) match {
@@ -1518,85 +1343,26 @@ object MdioStats {
       ExtremaLocation(locate(src, bd(0), bd(1)), 0L, fallback = true)
     }
 
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val man = manOpt.get
-    val grid = meta.chunkGrid
-    // the window must be chunk-aligned for metadata candidacy (a
-    // straddling chunk's bounds mix in- and out-of-box cells); misaligned
-    // windows answer exactly through the sliced fallback scan
-    val boxesOpt =
-      if (windows.nonEmpty) alignedUnion(meta, dims, windows)
-      else if (ranges.isEmpty) Some(Seq(grid.map(g => (0L, g))))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges).map(Seq(_))
-    if (boxesOpt.isEmpty) {
-      log.warn(s"extremaLocation($path, $variable): slice " +
-        s"${if (windows.nonEmpty) windows else ranges} is not " +
-        "chunk-aligned — falling back to the sliced locate scan")
-      return scanFallback()
+    val (man, geo) = t.plan() match {
+      case Right(p) => p
+      case Left(_) => return scanFallback()
     }
-    val boxes = boxesOpt.get
-    def inBox(cc: Seq[Long]): Boolean =
-      boxes.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
-    val tf = boxes.map(b =>
-      (1 until grid.size).forall(i => b(i)._1 <= 0 && b(i)._2 >= grid(i)))
-
-    val fine = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], MdioChunkStats.Bounds)]
-    var coarse = Map.empty[Long, (BigDecimal, BigDecimal)]
-    var usable = true
-    def intake(cc: Seq[Long], eOpt: Option[MdioChunkStats.Entry]): Unit =
-      if (inBox(cc)) eOpt match {
-        case Some(Some(b)) => fine += ((cc, b)) // moments not needed here
-        case Some(None) => () // all-NaN chunk: no finite cell can win
-        case _ => usable = false
-      }
-    val within = walkShards(varDir, man, grid, leadBoxes = boxes.map(_.head),
-      entryBudget = qcEntryBudget) { (sid, sm) =>
-      boxes.indices.exists { w =>
-        tf(w) && sid * man.span >= boxes(w).head._1 &&
-          math.min((sid + 1) * man.span, grid.head) <= boxes(w).head._2
-      } &&
-        ((sm.lo, sm.hi) match {
-          case (Some(l), Some(h)) => coarse = coarse.updated(sid, (l, h)); true
-          case _ => sm.count >= 0 && sm.cells.contains(0L) // proven all-NaN
-        })
-    }(intake)
-    if (!within || !usable) return scanFallback()
-    if (coarse.isEmpty && fine.isEmpty) return empty // every chunk all-NaN
-    val gmin = (coarse.valuesIterator.map(_._1) ++ fine.iterator.map(_._2.min)).min
-    val gmax = (coarse.valuesIterator.map(_._2) ++ fine.iterator.map(_._2.max)).max
+    // bounds only: a chunk can win without moments
+    val ri = new RankItems(t.varDir, man, geo, qcEntryBudget, moments = false)
+    if (!ri.usable) return scanFallback()
+    val its = ri.items(geo.whole)
+    if (its.isEmpty) return empty // every chunk all-NaN
+    val gmin = its.iterator.map(_._1).min
+    val gmax = its.iterator.map(_._2).max
     // open only the shards whose bounds union TOUCHES an extremum — the
     // candidates must be chunk-grained for the allowlist scan
-    val chunksPerLead = grid.drop(1).product
-    var openedKeys = 0L
-    coarse.collect {
-      case (sid, (l, h)) if l == gmin || h == gmax => sid
-    }.foreach { sid =>
-      if (usable) { // refinement shares the walk's entry-budget discipline
-        val leadHi = math.min((sid + 1) * man.span, grid.head)
-        openedKeys += (leadHi - sid * man.span) * chunksPerLead
-        if (openedKeys > qcEntryBudget) {
-          log.warn(s"extremaLocation($path, $variable): candidate " +
-            s"refinement would parse $openedKeys+ entries driver-side " +
-            s"(budget $qcEntryBudget) — falling back to the sliced locate scan")
-          usable = false
-        } else {
-          coarse -= sid
-          feedKeys(grid, sid * man.span, leadHi,
-            MdioChunkStats.readShard(varDir, sid, man.shards(sid).gen))(intake)
-        }
-      }
-    }
-    if (!usable) return scanFallback()
-    val candidates = fine.collect {
+    ri.openCoarse((_, l, h) => l == gmin || h == gmax)
+    if (!ri.usable) return scanFallback()
+    val candidates = ri.fineOf(geo.whole).collect {
       case (cc, b) if b.min == gmin || b.max == gmax => cc
-    }.toSeq.distinct
-    val src = spark.read.format("mdio")
-      .option("chunkKeys", candidates.map(_.mkString(".")).mkString(","))
-      .load(path)
-    ExtremaLocation(locate(src, gmin, gmax), candidates.size.toLong,
-      fallback = false)
+    }.toSeq
+    ExtremaLocation(locate(t.chunks(candidates), gmin, gmax),
+      candidates.size.toLong, fallback = false)
   }
 
   /** [[extremaByBox]] result: one row per group with ≥1 finite cell —
@@ -1605,7 +1371,7 @@ object MdioStats {
     * and `n` finite cells. `scannedChunks` counts the candidate chunks
     * the one location scan read; `fallback` marks the distributed
     * two-pass scan form. */
-  final case class GroupedExtrema(result: org.apache.spark.sql.DataFrame,
+  final case class GroupedExtrema(result: DataFrame,
                                   scannedChunks: Long, fallback: Boolean)
 
   /** WHERE each box's extrema live — the per-slab / per-tile peak-and-
@@ -1631,46 +1397,25 @@ object MdioStats {
                    maxScanChunks: Int = 512,
                    maxGroups: Int = 1 << 16,
                    ranges: Map[String, (Long, Long)] = Map.empty): GroupedExtrema = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    import org.apache.spark.sql.{Column, Row}
-    import org.apache.spark.sql.types._
-    require(groupSizes.forall(_ >= 1), s"group sizes $groupSizes must be positive")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — its extrema are its ends")
-    require(groupSizes.size == dims.size,
-      s"${groupSizes.size} group sizes for ${dims.size} dims")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    val gNames = dims.indices.map(i => s"_g$i")
-    val gCols: Seq[Column] = dims.zip(groupSizes).zip(gNames).map {
-      case ((dn, gs), gn) => floor(col(dn) / gs).cast("long").as(gn)
-    }
-    def base = spark.read.format("mdio").load(path)
-    val vt = base.schema(variable).dataType
-    val sliced = sliceOf(meta, dims, ranges, variable)
+    val t = new QcVar(spark, path, variable, "extremaByBox",
+      "its extrema are its ends", ranges, Nil)
+    val gs = new QcGroups(t, groupSizes)
+    val dims = t.dims
     val dimStruct = struct(dims.map(col): _*)
-    val outCols =
-      gNames.zip(dims).map { case (gn, d) => col(gn).as(s"g_$d") } ++
-        Seq(col("vmn").cast("double").as("v_min")) ++
-        dims.map(d => col(s"lmin.$d").as(s"min_$d")) ++
-        Seq(col("vmx").cast("double").as("v_max")) ++
-        dims.map(d => col(s"lmax.$d").as(s"max_$d")) :+ col("n")
+    val outCols = gs.out ++
+      Seq(col("vmn").cast("double").as("v_min")) ++
+      dims.map(d => col(s"lmin.$d").as(s"min_$d")) ++
+      Seq(col("vmx").cast("double").as("v_max")) ++
+      dims.map(d => col(s"lmax.$d").as(s"max_$d")) :+ col("n")
+    def located(src: DataFrame): DataFrame =
+      src.select(gs.cols ++ Seq(dimStruct.as("_loc"), col(variable).as("v")): _*)
     def scanFallback(): GroupedExtrema = {
-      val box0 = sliced(base)
-      val src = (if (isFloat) box0.filter(!isnan(col(variable))) else box0)
-        .select(gCols ++ Seq(dimStruct.as("_loc"), col(variable).as("v")): _*)
-      val stats = src.groupBy(gNames.map(col): _*)
+      val src = located(t.finite(t.sliced(t.base)))
+      val stats = src.groupBy(gs.names.map(col): _*)
         .agg(min(col("v")).as("vmn"), max(col("v")).as("vmx"),
           count(lit(1L)).as("n"))
-      val loc = src.join(stats, gNames)
-        .groupBy(gNames.map(col): _*)
+      val loc = src.join(stats, gs.names)
+        .groupBy(gs.names.map(col): _*)
         .agg(min(when(col("v") === col("vmn"), col("_loc"))).as("lmin"),
           min(when(col("v") === col("vmx"), col("_loc"))).as("lmax"),
           min(col("vmn")).as("vmn"), min(col("vmx")).as("vmx"),
@@ -1678,141 +1423,38 @@ object MdioStats {
       GroupedExtrema(loc.select(outCols: _*), 0L, fallback = true)
     }
 
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val misaligned = dims.indices.exists { d =>
-      groupSizes(d) % meta.chunks(d) != 0 && groupSizes(d) < meta.shape(d)
+    val (man, geo) = t.plan(groupSizes, maxGroups) match {
+      case Right(p) => p
+      case Left(_) => return scanFallback()
     }
-    if (misaligned) {
-      log.warn(s"extremaByBox($path, $variable): group sizes $groupSizes " +
-        s"do not align to the chunk shape ${meta.chunks} — falling back " +
-        "to the distributed two-pass scan form")
-      return scanFallback()
-    }
-    val man = manOpt.get
-    val grid = meta.chunkGrid
-    val boxOpt =
-      if (ranges.isEmpty) Some(grid.map(g => (0L, g)))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges)
-    if (boxOpt.isEmpty) {
-      log.warn(s"extremaByBox($path, $variable): slice $ranges is not " +
-        "chunk-aligned — falling back to the distributed two-pass scan form")
-      return scanFallback()
-    }
-    val box = boxOpt.get
-    def inBox(cc: Seq[Long]): Boolean =
-      cc.indices.forall(i => cc(i) >= box(i)._1 && cc(i) < box(i)._2)
-    val cpg = dims.indices.map { d =>
-      if (groupSizes(d) >= meta.shape(d)) grid(d)
-      else groupSizes(d) / meta.chunks(d)
-    }
-    // O(groups) driver contract: extrema maps + one result row per group
-    val nGroups = dims.indices.map(d =>
-      BigInt((box(d)._2 - 1) / cpg(d) - box(d)._1 / cpg(d) + 1)).product
-    if (nGroups > maxGroups) {
-      log.warn(s"extremaByBox($path, $variable): $nGroups groups exceed " +
-        s"the driver-state cap $maxGroups — using the distributed " +
-        "two-pass scan form")
-      return scanFallback()
-    }
-    val trailingSingle = (1 until dims.size).forall(d =>
-      cpg(d) >= grid(d) && box(d)._1 == 0 && box(d)._2 == grid(d))
-    def groupOf(cc: Seq[Long]): Seq[Long] =
-      cc.zip(cpg).map { case (c, n) => c / n }
-
-    val fine = scala.collection.mutable.Map
-      .empty[Seq[Long], scala.collection.mutable.ArrayBuffer[(Seq[Long], MdioChunkStats.Bounds)]]
-    val coarse = scala.collection.mutable.Map
-      .empty[Seq[Long], scala.collection.mutable.Map[Long, (BigDecimal, BigDecimal, Long)]]
-    var usable = true
-    def intake(cc: Seq[Long], eOpt: Option[MdioChunkStats.Entry]): Unit =
-      if (inBox(cc)) eOpt match {
-        case Some(Some(b)) if b.moments.isDefined =>
-          fine.getOrElseUpdate(groupOf(cc),
-            scala.collection.mutable.ArrayBuffer.empty) += ((cc, b))
-        case Some(None) => () // all-NaN chunk: no finite cell can win
-        case _ => usable = false
-      }
-    val within = walkShards(varDir, man, grid, leadBoxes = Seq(box.head),
-      entryBudget = qcEntryBudget) { (sid, sm) =>
-      sm.cells.isDefined && trailingSingle && {
-        val leadLo = sid * man.span
-        val leadHi = math.min((sid + 1) * man.span, grid.head)
-        leadLo >= box.head._1 && leadHi <= box.head._2 &&
-        (leadLo / cpg.head) == ((leadHi - 1) / cpg.head) && {
-          (sm.lo, sm.hi) match {
-            case (Some(l), Some(h)) =>
-              coarse.getOrElseUpdate(
-                (leadLo / cpg.head) +: Seq.fill(dims.size - 1)(0L),
-                scala.collection.mutable.Map.empty)
-                .update(sid, (l, h, sm.cells.get))
-            case _ => () // all-NaN shard: proven cells = 0
-          }
-          true
-        }
-      }
-    }(intake)
-    if (!within || !usable) return scanFallback()
-
+    val ri = new RankItems(t.varDir, man, geo, qcEntryBudget)
+    if (!ri.usable) return scanFallback()
     // per-group extrema + finite counts, exactly from metadata
-    val groups = (fine.keySet ++ coarse.keySet).toSeq
-      .sorted(Ordering.Implicits.seqOrdering[Seq, Long])
     final case class GExt(n: Long, mn: BigDecimal, mx: BigDecimal)
-    def extOf(g: Seq[Long]): Option[GExt] = {
-      val items = coarse.get(g).iterator.flatMap(_.valuesIterator).toSeq ++
-        fine.get(g).iterator.flatMap(_.iterator.map { case (_, b) =>
-          (b.min, b.max, b.moments.get.cnt) }).toSeq
-      val n = items.iterator.map(_._3).sum
+    val exts: Map[Seq[Long], GExt] = ri.groups.flatMap { g =>
+      val its = ri.items(g)
+      val n = its.iterator.map(_._3).sum
       if (n == 0) None
-      else Some(GExt(n, items.iterator.map(_._1).min, items.iterator.map(_._2).max))
-    }
-    val exts: Map[Seq[Long], GExt] =
-      groups.flatMap(g => extOf(g).map(g -> _)).toMap
+      else Some(g -> GExt(n, its.iterator.map(_._1).min, its.iterator.map(_._2).max))
+    }.toMap
     // open the coarse shards whose bounds union TOUCHES their own group's
-    // extremum — only their chunk detail can be a candidate; the
-    // refinement shares the walk's entry-budget discipline
-    val chunksPerLead = grid.drop(1).product
-    var openedKeys = 0L
-    exts.foreach { case (g, e) =>
-      val gc = coarse.getOrElse(g, scala.collection.mutable.Map.empty)
-      val toOpen = gc.collect {
-        case (sid, (l, h, _)) if l == e.mn || h == e.mx => sid }
-      toOpen.foreach { sid =>
-        if (usable) {
-          val leadHi = math.min((sid + 1) * man.span, grid.head)
-          openedKeys += (leadHi - sid * man.span) * chunksPerLead
-          if (openedKeys > qcEntryBudget) {
-            log.warn(s"extremaByBox($path, $variable): candidate " +
-              s"refinement would parse $openedKeys+ entries driver-side " +
-              s"(budget $qcEntryBudget) — using the distributed two-pass form")
-            usable = false
-          } else {
-            gc -= sid
-            feedKeys(grid, sid * man.span, leadHi,
-              MdioChunkStats.readShard(varDir, sid, man.shards(sid).gen))(intake)
-          }
-        }
-      }
-    }
-    if (!usable) return scanFallback() // torn shard or budget mid-refinement
+    // extremum — only their chunk detail can be a candidate
+    ri.openCoarse((g, l, h) => exts.get(g).exists(e => l == e.mn || h == e.mx))
+    if (!ri.usable) return scanFallback() // torn shard or budget mid-refinement
 
-    val outSchema = StructType(
-      dims.map(d => StructField(s"g_$d", LongType, nullable = false)) ++
-        Seq(StructField("v_min", DoubleType, nullable = false)) ++
-        dims.map(d => StructField(s"min_$d", LongType, nullable = false)) ++
-        Seq(StructField("v_max", DoubleType, nullable = false)) ++
-        dims.map(d => StructField(s"max_$d", LongType, nullable = false)) :+
-        StructField("n", LongType, nullable = false))
+    val outSchema = StructType(gs.fields ++
+      Seq(StructField("v_min", DoubleType, nullable = false)) ++
+      dims.map(d => StructField(s"min_$d", LongType, nullable = false)) ++
+      Seq(StructField("v_max", DoubleType, nullable = false)) ++
+      dims.map(d => StructField(s"max_$d", LongType, nullable = false)) :+
+      StructField("n", LongType, nullable = false))
     if (exts.isEmpty) // every box all-NaN: proven-empty result
       return GroupedExtrema(spark.createDataFrame(
         java.util.Collections.emptyList[Row](), outSchema), 0L, fallback = false)
 
-    val emptyFine = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], MdioChunkStats.Bounds)]
     val candidates = exts.toSeq.flatMap { case (g, e) =>
-      fine.getOrElse(g, emptyFine).collect {
-        case (cc, b) if b.min == e.mn || b.max == e.mx => cc }
-    }.distinct
+      ri.fineOf(g).collect { case (cc, b) if b.min == e.mn || b.max == e.mx => cc }
+    }
     if (candidates.size > maxScanChunks) {
       log.warn(s"extremaByBox($path, $variable): ${candidates.size} " +
         s"candidate chunks (cap $maxScanChunks) — using the distributed " +
@@ -1822,28 +1464,24 @@ object MdioStats {
     // ONE location scan over every group's candidates: the per-group
     // extrema ride a broadcast join (native-typed, so u64/decimal
     // equality never rounds) and first occurrence = min dim-struct
-    val boundsRows = exts.toSeq.map { case (g, e) =>
-      Row.fromSeq(g ++ Seq(edgeValue(e.mn, vt), edgeValue(e.mx, vt)))
-    }
-    val bounds = spark.createDataFrame(
-      java.util.Arrays.asList(boundsRows: _*),
-      StructType(gNames.map(StructField(_, LongType, nullable = false)) ++
-        Seq(StructField("vmn", edgeType(vt), nullable = false),
-          StructField("vmx", edgeType(vt), nullable = false))))
-    val located = spark.read.format("mdio")
-      .option("chunkKeys", candidates.map(_.mkString(".")).mkString(","))
-      .load(path)
-      .select(gCols ++ Seq(dimStruct.as("_loc"), col(variable).as("v")): _*)
-      .join(broadcast(bounds), gNames)
-      .groupBy(gNames.map(col): _*)
+    val bounds = gs.frame(spark,
+      exts.toSeq.map { case (g, e) =>
+        Row.fromSeq(g ++ Seq(edgeValue(e.mn, t.vt), edgeValue(e.mx, t.vt)))
+      },
+      Seq(StructField("vmn", edgeType(t.vt), nullable = false),
+        StructField("vmx", edgeType(t.vt), nullable = false)))
+    val nG = gs.names.size
+    val locations = located(t.chunks(candidates))
+      .join(broadcast(bounds), gs.names)
+      .groupBy(gs.names.map(col): _*)
       .agg(min(when(col("v") === col("vmn"), col("_loc"))).as("lmin"),
         min(when(col("v") === col("vmx"), col("_loc"))).as("lmax"))
       .collect()
-      .map(r => (gNames.indices.map(r.getLong(_)): Seq[Long]) ->
-        ((r.getStruct(gNames.size), r.getStruct(gNames.size + 1)))).toMap
+      .map(r => (gs.names.indices.map(r.getLong(_)): Seq[Long]) ->
+        ((r.getStruct(nG), r.getStruct(nG + 1)))).toMap
     val rows = exts.toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering[Seq, Long])
       .map { case (g, e) =>
-        val (lmin, lmax) = located.getOrElse(g.toIndexedSeq: Seq[Long],
+        val (lmin, lmax) = locations.getOrElse(g.toIndexedSeq: Seq[Long],
           throw new IllegalStateException(
             s"extremaByBox location scan found no cell for group $g — " +
               s"stale stats for '$variable'?"))
@@ -1863,7 +1501,7 @@ object MdioStats {
     * sidecar (their stats interval fits one bin — proven by chunk entry
     * or whole-shard summary), `scannedChunks` straddle a bin edge and
     * were read; `fallback` marks the ordinary one-scan path. */
-  final case class HistogramMeta(result: org.apache.spark.sql.DataFrame,
+  final case class HistogramMeta(result: DataFrame,
                                  metadataChunks: Long, scannedChunks: Long,
                                  fallback: Boolean)
 
@@ -1892,25 +1530,10 @@ object MdioStats {
                     maxScanChunks: Int = 512,
                     ranges: Map[String, (Long, Long)] = Map.empty,
                     windows: Seq[Map[String, (Long, Long)]] = Nil): HistogramMeta = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
     require(width > 0 && nBins >= 1, s"bad bins: lo=$lo width=$width n=$nBins")
-    require(ranges.isEmpty || windows.isEmpty,
-      "pass ONE window via ranges or several via windows, not both")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — bin its index range instead")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
     // optional dim-index window (r18) or union of disjoint windows (r19)
-    val sliced: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      if (windows.nonEmpty) unionOf(meta, dims, windows, variable).apply
-      else sliceOf(meta, dims, ranges, variable).apply
+    val t = new QcVar(spark, path, variable, "histogramMeta",
+      "bin its index range instead", ranges, windows)
     def binD(v: Double): Int = { // the StatsV1Aggregator clip rule
       val b = math.floor((v - lo) / width).toInt
       if (b < 0) 0 else if (b >= nBins) nBins - 1 else b
@@ -1918,53 +1541,29 @@ object MdioStats {
     val binCol = least(greatest(
       floor((col(variable).cast("double") - lit(lo)) / lit(width)), lit(0.0)),
       lit((nBins - 1).toDouble)).cast("long").as("bin")
-    def base = spark.read.format("mdio").load(path)
-    def toResult(counts: Map[Long, Long]): org.apache.spark.sql.DataFrame = {
+    def toResult(counts: Map[Long, Long]): DataFrame = {
       import spark.implicits._
       counts.toSeq.filter(_._2 > 0).sortBy(_._1)
         .map { case (b, c) => (b, lo + (b + 0.5) * width, c) }
         .toDF("bin", "center", "cnt")
     }
-    def grouped(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
-      val src = if (isFloat) df.filter(!isnan(col(variable))) else df
-      src.groupBy(binCol).agg(count(lit(1L)).as("c"))
+    def grouped(df: DataFrame): Map[Long, Long] =
+      t.finite(df).groupBy(binCol).agg(count(lit(1L)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    }
     def scanFallback(): HistogramMeta =
-      HistogramMeta(toResult(grouped(sliced(base))), 0L, 0L, fallback = true)
-
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val man = manOpt.get
-    val grid = meta.chunkGrid
-    val boxesOpt =
-      if (windows.nonEmpty) alignedUnion(meta, dims, windows)
-      else if (ranges.isEmpty) Some(Seq(grid.map(g => (0L, g))))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges).map(Seq(_))
-    if (boxesOpt.isEmpty) { // misaligned window: exact sliced scan
-      log.warn(s"histogramMeta($path, $variable): slice " +
-        s"${if (windows.nonEmpty) windows else ranges} is not " +
-        "chunk-aligned — falling back to the sliced histogram scan")
-      return scanFallback()
+      HistogramMeta(toResult(grouped(t.sliced(t.base))), 0L, 0L, fallback = true)
+    val (man, geo) = t.plan() match {
+      case Right(p) => p
+      case Left(_) => return scanFallback()
     }
-    val boxes = boxesOpt.get
-    def inBox(cc: Seq[Long]): Boolean =
-      boxes.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
-    val tf = boxes.map(b =>
-      (1 until grid.size).forall(i => b(i)._1 <= 0 && b(i)._2 >= grid(i)))
 
-    val metaCounts = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+    val metaCounts = mutable.Map.empty[Long, Long].withDefaultValue(0L)
     var metaChunks = 0L
     val straddlers = Seq.newBuilder[Seq[Long]]
     var nStraddle = 0
     var usable = true
-    val within = walkShards(varDir, man, grid, leadBoxes = boxes.map(_.head),
-      entryBudget = qcEntryBudget) { (sid, sm) =>
-      boxes.indices.exists { w =>
-        tf(w) && sid * man.span >= boxes(w).head._1 &&
-          math.min((sid + 1) * man.span, grid.head) <= boxes(w).head._2
-      } &&
+    val within = walkShards(t.varDir, man, geo, qcEntryBudget) { (sid, sm) =>
+      geo.shardGroup(sid, man.span).isDefined &&
         ((sm.lo, sm.hi) match {
           case (Some(l), Some(h)) if sm.cells.isDefined &&
               binD(l.toDouble) == binD(h.toDouble) =>
@@ -1975,7 +1574,7 @@ object MdioStats {
           case _ => false // crosses a bin edge (or no summary): open it
         })
     } { (cc, eOpt) =>
-      if (inBox(cc)) eOpt match {
+      if (geo.inBox(cc)) eOpt match {
         case Some(None) => () // all-NaN chunk
         case Some(Some(b)) if b.moments.isDefined &&
             binD(b.min.toDouble) == binD(b.max.toDouble) =>
@@ -1992,10 +1591,7 @@ object MdioStats {
     }
     val scanCounts: Map[Long, Long] =
       if (nStraddle == 0) Map.empty
-      else grouped(spark.read.format("mdio")
-        .option("chunkKeys",
-          straddlers.result().map(_.mkString(".")).mkString(","))
-        .load(path))
+      else grouped(t.chunks(straddlers.result()))
     val merged = (metaCounts.keySet ++ scanCounts.keySet).map { b =>
       b -> (metaCounts(b) + scanCounts.getOrElse(b, 0L))
     }.toMap
@@ -2010,7 +1606,7 @@ object MdioStats {
     * the signal), `n` = the group's finite cells. `metadataChunks`/
     * `outsideChunks`/`scannedChunks` as in [[CountInRange]]; `fallback`
     * marks the one-scan path. */
-  final case class GroupedCount(result: org.apache.spark.sql.DataFrame,
+  final case class GroupedCount(result: DataFrame,
                                 metadataChunks: Long, outsideChunks: Long,
                                 scannedChunks: Long, fallback: Boolean)
 
@@ -2036,131 +1632,55 @@ object MdioStats {
                         maxScanChunks: Int = 512,
                         maxGroups: Int = 1 << 16,
                         ranges: Map[String, (Long, Long)] = Map.empty): GroupedCount = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    import org.apache.spark.sql.{Column, Row}
-    import org.apache.spark.sql.types._
     require(lo <= hi, s"empty range [$lo, $hi]")
-    require(groupSizes.forall(_ >= 1), s"group sizes $groupSizes must be positive")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — count its index range instead")
-    require(groupSizes.size == dims.size,
-      s"${groupSizes.size} group sizes for ${dims.size} dims")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    val gNames = dims.indices.map(i => s"_g$i")
-    val gCols: Seq[Column] = dims.zip(groupSizes).zip(gNames).map {
-      case ((dn, gs), gn) => floor(col(dn) / gs).cast("long").as(gn)
-    }
-    def base = spark.read.format("mdio").load(path)
     // optional dim-index window (r18): the crop's own occupancy heat map
-    val sliced = sliceOf(meta, dims, ranges, variable)
+    val t = new QcVar(spark, path, variable, "countInRangeByBox",
+      "count its index range instead", ranges, Nil)
+    val gs = new QcGroups(t, groupSizes)
     // exact range membership in the column's own type — consistent with
     // the BigDecimal chunk triage (see rangePred)
-    val inRange = rangePred(col(variable), base.schema(variable).dataType, lo, hi)
-    val outSchema = StructType(
-      dims.map(d => StructField(s"g_$d", LongType, nullable = false)) ++
-        Seq(StructField("cnt", LongType, nullable = false),
-          StructField("n", LongType, nullable = false)))
+    val inRange = rangePred(col(variable), t.vt, lo, hi)
     def scanFallback(): GroupedCount = {
-      val box0 = sliced(base)
-      val src = if (isFloat) box0.filter(!isnan(col(variable))) else box0
-      val sel = src.select(gCols :+ col(variable).as(variable): _*)
-        .groupBy(gNames.map(col): _*)
+      val sel = t.finite(t.sliced(t.base)).select(gs.cols :+ col(variable): _*)
+        .groupBy(gs.names.map(col): _*)
         .agg(count(when(inRange, 1L)).as("cnt"), count(lit(1L)).as("n"))
-        .select(gNames.zip(dims).map { case (gn, d) => col(gn).as(s"g_$d") } ++
-          Seq(col("cnt"), col("n")): _*)
+        .select(gs.out ++ Seq(col("cnt"), col("n")): _*)
       GroupedCount(sel, 0L, 0L, 0L, fallback = true)
     }
-
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback()
-    val misaligned = dims.indices.exists { d =>
-      groupSizes(d) % meta.chunks(d) != 0 && groupSizes(d) < meta.shape(d)
-    }
-    if (misaligned) {
-      log.warn(s"countInRangeByBox($path, $variable): group sizes " +
-        s"$groupSizes do not align to the chunk shape ${meta.chunks} — " +
-        "falling back to the exact full-scan form")
-      return scanFallback()
-    }
-    val man = manOpt.get
-    val grid = meta.chunkGrid
-    val boxOpt =
-      if (ranges.isEmpty) Some(grid.map(g => (0L, g)))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges)
-    if (boxOpt.isEmpty) { // misaligned window: exact sliced scan
-      log.warn(s"countInRangeByBox($path, $variable): slice $ranges is " +
-        "not chunk-aligned — falling back to the sliced grouped scan")
-      return scanFallback()
-    }
-    val box = boxOpt.get
-    def inBox(cc: Seq[Long]): Boolean =
-      cc.indices.forall(i => cc(i) >= box(i)._1 && cc(i) < box(i)._2)
-    val cpg = dims.indices.map { d =>
-      if (groupSizes(d) >= meta.shape(d)) grid(d)
-      else groupSizes(d) / meta.chunks(d)
-    }
     // the explicit O(groups) driver contract: the in/total maps and the
-    // result rows live on the driver — past the cap, the distributed
-    // one-scan form is the right plan, not a degraded one. Group count
-    // is over the BOX: only groups the slice touches exist.
-    val nGroups = dims.indices.map(d =>
-      BigInt((box(d)._2 - 1) / cpg(d) - box(d)._1 / cpg(d) + 1)).product
-    if (nGroups > maxGroups) {
-      log.warn(s"countInRangeByBox($path, $variable): $nGroups groups " +
-        s"exceed the driver-state cap $maxGroups — using the distributed " +
-        "full-scan form")
-      return scanFallback()
+    // result rows live on the driver — past `maxGroups`, the distributed
+    // one-scan form is the right plan, not a degraded one
+    val (man, geo) = t.plan(groupSizes, maxGroups) match {
+      case Right(p) => p
+      case Left(_) => return scanFallback()
     }
-    // coarse whole-shard summaries need every trailing dim single-group
-    // AND un-sliced
-    val trailingSingle = (1 until dims.size).forall(d =>
-      cpg(d) >= grid(d) && box(d)._1 == 0 && box(d)._2 == grid(d))
-    def groupOf(cc: Seq[Long]): Seq[Long] =
-      cc.zip(cpg).map { case (c, n) => c / n }
 
     val (loB, hiB) = (exactBig(lo), exactBig(hi))
-    val inCnt = scala.collection.mutable.Map.empty[Seq[Long], Long].withDefaultValue(0L)
-    val total = scala.collection.mutable.Map.empty[Seq[Long], Long].withDefaultValue(0L)
+    val inCnt = mutable.Map.empty[Seq[Long], Long].withDefaultValue(0L)
+    val total = mutable.Map.empty[Seq[Long], Long].withDefaultValue(0L)
     var metaChunks = 0L
     var outside = 0L
     val straddlers = Seq.newBuilder[Seq[Long]]
     var nStraddle = 0
     var usable = true
-    val within = walkShards(varDir, man, grid, leadBoxes = Seq(box.head),
-      entryBudget = qcEntryBudget) { (sid, sm) =>
+    val within = walkShards(t.varDir, man, geo, qcEntryBudget) { (sid, sm) =>
       // a whole shard decides from the manifest only when it maps into
-      // ONE group (the medianByBox fit rule), sits wholly inside the
-      // window, and its bounds union settles the range question for
-      // every chunk inside it
-      sm.cells.isDefined && trailingSingle && {
-        val leadLo = sid * man.span
-        val leadHi = math.min((sid + 1) * man.span, grid.head)
-        leadLo >= box.head._1 && leadHi <= box.head._2 &&
-        (leadLo / cpg.head) == ((leadHi - 1) / cpg.head) && {
-          val g = (leadLo / cpg.head) +: Seq.fill(dims.size - 1)(0L)
-          (sm.lo, sm.hi) match {
-            case (Some(l), Some(h)) if h < loB || l > hiB =>
-              total(g) += sm.cells.get; outside += sm.count; true
-            case (Some(l), Some(h)) if l >= loB && h <= hiB && sm.bounded >= 0 =>
-              inCnt(g) += sm.cells.get; total(g) += sm.cells.get
-              metaChunks += sm.bounded; outside += sm.count - sm.bounded; true
-            case (None, None) => outside += sm.count; true // all-NaN: n = 0 too
-            case _ => false // straddles the range: open for chunk triage
-          }
+      // ONE group inside the window and its bounds union settles the
+      // range question for every chunk inside it
+      sm.cells.isDefined && geo.shardGroup(sid, man.span).exists { g =>
+        (sm.lo, sm.hi) match {
+          case (Some(l), Some(h)) if h < loB || l > hiB =>
+            total(g) += sm.cells.get; outside += sm.count; true
+          case (Some(l), Some(h)) if l >= loB && h <= hiB && sm.bounded >= 0 =>
+            inCnt(g) += sm.cells.get; total(g) += sm.cells.get
+            metaChunks += sm.bounded; outside += sm.count - sm.bounded; true
+          case (None, None) => outside += sm.count; true // all-NaN: n = 0 too
+          case _ => false // straddles the range: open for chunk triage
         }
       }
     } { (cc, eOpt) =>
-      if (inBox(cc)) {
-        val g = groupOf(cc)
+      if (geo.inBox(cc)) {
+        val g = geo.groupOf(cc)
         eOpt match {
           case Some(None) => outside += 1 // all-NaN chunk
           case Some(Some(b)) if b.moments.isDefined =>
@@ -2178,23 +1698,19 @@ object MdioStats {
         s"$nStraddle straddlers (cap $maxScanChunks) — full scan")
       return scanFallback()
     }
-    if (nStraddle > 0) {
-      spark.read.format("mdio")
-        .option("chunkKeys",
-          straddlers.result().map(_.mkString(".")).mkString(","))
-        .load(path)
-        .select(gCols :+ col(variable).as(variable): _*)
+    if (nStraddle > 0)
+      t.chunks(straddlers.result()).select(gs.cols :+ col(variable): _*)
         .filter(inRange)
-        .groupBy(gNames.map(col): _*).agg(count(lit(1L)).as("c"))
+        .groupBy(gs.names.map(col): _*).agg(count(lit(1L)).as("c"))
         .collect().foreach { r =>
-          inCnt(gNames.indices.map(r.getLong(_)).toSeq) += r.getLong(gNames.size)
+          inCnt(gs.names.indices.map(r.getLong(_))) += r.getLong(gs.names.size)
         }
-    }
     val rows = total.keySet.toSeq
       .sorted(Ordering.Implicits.seqOrdering[Seq, Long])
       .map(g => Row.fromSeq(g ++ Seq(inCnt(g), total(g))))
-    GroupedCount(
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema),
+    GroupedCount(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(gs.fields ++ Seq(StructField("cnt", LongType, nullable = false),
+        StructField("n", LongType, nullable = false)))),
       metaChunks, outside, nStraddle.toLong, fallback = false)
   }
 
@@ -2206,7 +1722,7 @@ object MdioStats {
     * emit no row. `jobs`/`scannedChunks` count the scan jobs issued (0–2
     * on the pruning path) and the chunks they read; `fallback` marks the
     * exact one-scan grouped-rank path. */
-  final case class GroupedMedian(result: org.apache.spark.sql.DataFrame,
+  final case class GroupedMedian(result: DataFrame,
                                  jobs: Int, scannedChunks: Long,
                                  fallback: Boolean)
 
@@ -2217,7 +1733,7 @@ object MdioStats {
     * `scannedChunks` count the scan jobs issued (0–2 on the pruning path)
     * and the chunks they read; `fallback` marks the exact one-scan
     * grouped-rank path. */
-  final case class GroupedQuantiles(result: org.apache.spark.sql.DataFrame,
+  final case class GroupedQuantiles(result: DataFrame,
                                     jobs: Int, scannedChunks: Long,
                                     fallback: Boolean)
 
@@ -2296,75 +1812,52 @@ object MdioStats {
                             groupSizes: Seq[Long], maxProbeChunks: Int,
                             maxGroups: Int, fallbackOk: Boolean,
                             ranges: Map[String, (Long, Long)]): GroupedQuantiles = {
-    import graft.sources.MdioChunkStats
-    import graft.zarr.ZarrMeta
-    import org.apache.spark.sql.{Column, Row}
-    import org.apache.spark.sql.types._
-    require(groupSizes.forall(_ >= 1), s"group sizes $groupSizes must be positive")
-    val root = ZarrMeta.path(path)
-    val (meta, attrs) = ZarrMeta.readGroup(root)._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
-    require(!dims.contains(variable),
-      s"'$variable' is a dimension coordinate — slice its index range instead")
-    require(groupSizes.size == dims.size,
-      s"${groupSizes.size} group sizes for ${dims.size} dims")
-    val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
-    val gNames = dims.indices.map(i => s"_g$i")
-    val gCols: Seq[Column] = dims.zip(groupSizes).zip(gNames).map {
-      case ((dn, gs), gn) => floor(col(dn) / gs).cast("long").as(gn)
-    }
-    val outG = gNames.zip(dims).map { case (gn, d) => col(gn).as(s"g_$d") }
-    val pKeys = gNames :+ "p"
-    def base = spark.read.format("mdio").load(path)
-    val vt = base.schema(variable).dataType
     // optional dim-index slice (r18): per-group ranks are computed over
     // the BOX's cells only — group ids stay ABSOLUTE (FLOOR(dim/L)), so a
     // slab clipped by the slice ranks exactly its surviving cells
-    val sliced = sliceOf(meta, dims, ranges, variable)
+    val t = new QcVar(spark, path, variable, "quantilesByBox",
+      "slice its index range instead", ranges, Nil)
+    val gs = new QcGroups(t, groupSizes)
+    val pKeys = gs.names :+ "p"
     // the shared tail: bucketed two-stage pick over per-(group, p, value)
     // counts, then the output shape
-    def finish(byKV: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    def finish(byKV: DataFrame): DataFrame =
       pickByRankBucketed(byKV, pKeys)
-        .select(outG ++ Seq(col("p"), col("v").cast("double").as("q"), col("n")): _*)
+        .select(gs.out ++ Seq(col("p"), col("v").cast("double").as("q"), col("n")): _*)
     // exact one-scan fallback, fully DISTRIBUTED (nothing driver-held —
     // this is also the >maxGroups escape hatch): per-(group, value)
     // counts, per-group totals/extents by aggregation (never a whole-group
     // window), the quantile requests riding the plan as an exploded
     // literal array, residual = ⌈p·n⌉ in decimal (shortest-decimal p,
-    // the same number the pruned path's ksOf uses — exact past 2^53),
+    // the same number the pruned path's mkKs uses — exact past 2^53),
     // then the same bucketed pick
     // `race = true` marks the manifest-side triggers (pinned manifest
     // vanished, shards read as torn) — the ONLY failures a fresh manifest
     // can heal, so under fallbackOk=false only they wear the retryable
     // StatsRaceException; geometry re-asserts (alignment, group cap)
     // throw plain and stay loud on first throw (r19, ADVICE)
-    def scanFallback(race: Boolean = false): GroupedQuantiles = {
+    def scanFallback(race: Boolean): GroupedQuantiles = {
       if (!fallbackOk) { // boxRanks: answerability was PROVEN at plan time
         val msg = s"rank-by-box for '$variable' lost " +
           "its pruned-path preconditions between planning and execution"
-        if (race) throw new graft.sources.MdioAggScan.StatsRaceException(msg)
+        if (race) throw new MdioAggScan.StatsRaceException(msg)
         else throw new IllegalStateException(msg)
       }
       // runtimeFiltering=false: the group-ordinal joins below cannot prune
       // this scan (every group survives the build side) but their
       // dynamic-pruning subqueries WOULD desync the shared aggregation
       // subtree and kill the exchange reuse that executes it once
-      val full = sliced(spark.read.format("mdio")
+      val full = t.sliced(spark.read.format("mdio")
         .option("runtimeFiltering", "false").load(path))
-      val src = if (isFloat) full.filter(!isnan(col(variable))) else full
-      val byGV = src.select(gCols :+ col(variable).as("v"): _*)
-        .groupBy(gNames.map(col) :+ col("v"): _*).agg(count(lit(1L)).as("c"))
-      val stats = byGV.groupBy(gNames.map(col): _*)
+      val byGV = t.finite(full).select(gs.cols :+ col(variable).as("v"): _*)
+        .groupBy(gs.names.map(col) :+ col("v"): _*).agg(count(lit(1L)).as("c"))
+      val stats = byGV.groupBy(gs.names.map(col): _*)
         .agg(sum(col("c")).as("n"),
           min(col("v").cast("double")).as("blo"),
           max(col("v").cast("double")).as("_vhi"))
       val req = explode(array(ps.map(p => struct(lit(p).as("p"),
         lit(BigDecimal(p).underlying).as("pd"))): _*))
-      val withR = byGV.join(stats, gNames)
+      val withR = byGV.join(stats, gs.names)
         .withColumn("_r", req)
         .withColumn("p", col("_r.p"))
         .withColumn("residual", ceil(col("_r.pd") * col("n")).cast("long"))
@@ -2373,175 +1866,39 @@ object MdioStats {
       GroupedQuantiles(finish(withR), 0, 0L, fallback = true)
     }
 
-    val varDir = root.resolve(variable)
-    val manOpt = MdioChunkStats.currentManifest(varDir)
-    if (manOpt.isEmpty) return scanFallback(race = true)
-    // a group must contain WHOLE chunks: per dim, a multiple of the chunk
-    // size or the whole extent (a ragged last chunk still fits — its cells
-    // end inside the dim, so a whole-extent group covers it)
-    val misaligned = dims.indices.exists { d =>
-      groupSizes(d) % meta.chunks(d) != 0 && groupSizes(d) < meta.shape(d)
-    }
-    if (misaligned) {
-      log.warn(s"quantilesByBox($path, $variable): group sizes $groupSizes " +
-        s"do not align to the chunk shape ${meta.chunks} — chunks would " +
-        "straddle groups; falling back to the exact full-scan selection")
-      return scanFallback()
-    }
-    val man = manOpt.get
-    manifestRaceHook()
-    val grid = meta.chunkGrid
-    // a sliced grouped rank needs a CHUNK-ALIGNED box, like the ungrouped
-    // form — a straddling chunk's stats interval mixes in- and out-of-box
-    // cells; misaligned slices answer exactly through the sliced fallback
-    val boxOpt =
-      if (ranges.isEmpty) Some(grid.map(g => (0L, g)))
-      else graft.sources.MdioAggScan.alignedChunkBox(meta, dims, ranges)
-    if (boxOpt.isEmpty) {
-      log.warn(s"quantilesByBox($path, $variable): slice $ranges is not " +
-        "chunk-aligned — falling back to the exact sliced-scan selection")
-      return scanFallback()
-    }
-    val box = boxOpt.get
-    def inBox(cc: Seq[Long]): Boolean =
-      cc.indices.forall(i => cc(i) >= box(i)._1 && cc(i) < box(i)._2)
-    // chunk ordinals per group along each dim (whole-extent ⇒ one group)
-    val cpg = dims.indices.map { d =>
-      if (groupSizes(d) >= meta.shape(d)) grid(d)
-      else groupSizes(d) / meta.chunks(d)
-    }
     // the explicit O(groups) driver contract: bracket state and the
-    // broadcast bounds are one row per (group, p) — past the cap, the
-    // distributed fallback is the RIGHT plan, not a degraded one.
-    // Group count is over the BOX: only slabs the slice touches exist.
-    val nGroups = dims.indices.map(d =>
-      BigInt((box(d)._2 - 1) / cpg(d) - box(d)._1 / cpg(d) + 1)).product
-    if (nGroups > maxGroups) {
-      log.warn(s"quantilesByBox($path, $variable): $nGroups groups exceed " +
-        s"the driver-state cap $maxGroups — using the distributed " +
-        "full-scan grouped-rank selection")
-      return scanFallback()
+    // broadcast bounds are one row per (group, p) — past `maxGroups`, the
+    // distributed fallback is the RIGHT plan, not a degraded one
+    val (man, geo) = t.plan(groupSizes, maxGroups) match {
+      case Right(p) => p
+      case Left(race) => return scanFallback(race)
     }
-    // coarse whole-shard summaries need every trailing dim single-group
-    // AND un-sliced (a trailing cut invalidates the shard's [lo,hi]×cells)
-    val trailingSingle = (1 until dims.size).forall(d =>
-      cpg(d) >= grid(d) && box(d)._1 == 0 && box(d)._2 == grid(d))
-    def groupOf(cc: Seq[Long]): Seq[Long] =
-      cc.zip(cpg).map { case (c, n) => c / n }
-
-    // per-group rank items, mixed granularity exactly as kthSmallest:
-    // fine = opened chunk entries, coarse = unopened whole-shard manifest
-    // summaries (a shard rides coarse only when its WHOLE chunk box maps
-    // to one group: lead range inside one group, trailing dims
-    // single-group — anything else opens immediately)
-    val fine = scala.collection.mutable.Map
-      .empty[Seq[Long], scala.collection.mutable.ArrayBuffer[(Seq[Long], MdioChunkStats.Bounds)]]
-    val coarse = scala.collection.mutable.Map
-      .empty[Seq[Long], scala.collection.mutable.Map[Long, (BigDecimal, BigDecimal, Long)]]
-    var usable = true
-    def intake(cc: Seq[Long], eOpt: Option[MdioChunkStats.Entry]): Unit =
-      if (inBox(cc)) eOpt match {
-        case Some(Some(b)) if b.moments.isDefined =>
-          fine.getOrElseUpdate(groupOf(cc),
-            scala.collection.mutable.ArrayBuffer.empty) += ((cc, b))
-        case Some(None) => () // all-NaN chunk: never ranks
-        case _ => usable = false
-      }
-    // the direct API budgets its driver-side triage like every QC
-    // operator; the pushdown execution (fallbackOk = false) does NOT — its
-    // budget ran at PLAN time (boxRankAnswerable's entry budget), and an
-    // accepted plan must answer, not start declining mid-execution
-    val within = walkShards(varDir, man, grid, leadBoxes = Seq(box.head),
-      entryBudget = if (fallbackOk) qcEntryBudget else Long.MaxValue) { (sid, sm) =>
-      sm.cells.isDefined && trailingSingle && {
-        val leadLo = sid * man.span
-        val leadHi = math.min((sid + 1) * man.span, grid.head)
-        leadLo >= box.head._1 && leadHi <= box.head._2 &&
-        (leadLo / cpg.head) == ((leadHi - 1) / cpg.head) && {
-          (sm.lo, sm.hi) match {
-            case (Some(l), Some(h)) =>
-              coarse.getOrElseUpdate(
-                (leadLo / cpg.head) +: Seq.fill(dims.size - 1)(0L),
-                scala.collection.mutable.Map.empty)
-                .update(sid, (l, h, sm.cells.get))
-            case _ => () // all-NaN shard: proven cells = 0
-          }
-          true
-        }
-      }
-    }(intake)
-    if (!within) return scanFallback()
-    if (!usable) return scanFallback(race = true)
-
-    def itemsOf(g: Seq[Long]): IndexedSeq[(BigDecimal, BigDecimal, Long)] =
-      (coarse.get(g).iterator.flatMap(_.valuesIterator) ++
-        fine.get(g).iterator.flatMap(_.iterator.map { case (_, b) =>
-          (b.min, b.max, b.moments.get.cnt) })).toIndexedSeq
-
+    // per-group rank items, mixed granularity. The direct API budgets its
+    // driver-side triage like every QC operator; the pushdown execution
+    // (fallbackOk = false) does NOT — its budget ran at PLAN time
+    // (boxRankAnswerable's entry budget), and an accepted plan must
+    // answer, not start declining mid-execution. So unusable items here
+    // are a torn shard whenever they can throw.
+    val ri = new RankItems(t.varDir, man, geo,
+      if (fallbackOk) qcEntryBudget else Long.MaxValue)
+    if (!ri.usable) return scanFallback(race = true)
     // per-group rank list (quantilesByBox: ⌈ps(i)·n⌉ in BigDecimal —
     // exact boundary ceil at any n, the lower median is p = 0.5;
-    // boxRanks: the caller's explicit ranks)
-    def ksOf(n: Long): Seq[Long] = mkKs(n)
-    final case class GState(g: Seq[Long], n: Long, ks: Seq[Long],
-                            var brs: Seq[(Option[BigDecimal], BigDecimal)])
-    val gOrd = Ordering.Implicits.seqOrdering[Seq, Long]
-    val states = (fine.keySet ++ coarse.keySet).toSeq.sorted(gOrd).flatMap { g =>
-      val its = itemsOf(g)
-      val n = its.iterator.map(_._3).sum
-      if (n == 0) None // all-NaN box: no rows
-      else {
-        val ks = ksOf(n)
-        Some(GState(g, n, ks, ks.map(bracketItems(its, _))))
-      }
+    // boxRanks: the caller's explicit ranks); all-NaN boxes emit no rows
+    val states = ri.groups.flatMap { g =>
+      val n = ri.items(g).iterator.map(_._3).sum
+      if (n == 0) None else Some((g, n, mkKs(n)))
     }
-    val outSchema = StructType(
-      dims.map(d => StructField(s"g_$d", LongType, nullable = false)) ++
-        Seq(StructField("p", DoubleType, nullable = false),
-          StructField("q", DoubleType, nullable = false),
-          StructField("n", LongType, nullable = false)))
     if (states.isEmpty) // every box all-NaN: proven-empty result
-      return GroupedQuantiles(
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), outSchema),
+      return GroupedQuantiles(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](),
+        StructType(gs.fields ++ Seq(StructField("p", DoubleType, nullable = false),
+          StructField("q", DoubleType, nullable = false),
+          StructField("n", LongType, nullable = false)))),
         0, 0L, fallback = false)
-    // refinement: open each group's coarse shards intersecting ANY of its
-    // rank windows, then re-bracket that group's ranks — one round
-    // suffices (finer detail only shrinks windows; see kthSmallest).
-    // Interior shards never open. The DIRECT API shares the walk's
-    // entry-budget discipline here too; the pushdown execution
-    // (fallbackOk = false) stays unbudgeted — its budget ran at plan time.
-    val refineBudget = if (fallbackOk) qcEntryBudget else Long.MaxValue
-    val chunksPerLead = grid.drop(1).product
-    var openedKeys = 0L
-    var budgetTripped = false
-    states.foreach { st =>
-      val gc = coarse.getOrElse(st.g, scala.collection.mutable.Map.empty)
-      val toOpen = gc.collect {
-        case (sid, (l, h, _)) if st.brs.exists { case (x0, x1) =>
-          x0.forall(h > _) && l <= x1 } => sid
-      }
-      if (toOpen.nonEmpty && usable && !budgetTripped) {
-        toOpen.foreach { sid =>
-          if (usable && !budgetTripped) {
-            val leadHi = math.min((sid + 1) * man.span, grid.head)
-            openedKeys += (leadHi - sid * man.span) * chunksPerLead
-            if (openedKeys > refineBudget) {
-              log.warn(s"quantilesByBox($path, $variable): rank refinement " +
-                s"would parse $openedKeys+ entries driver-side (budget " +
-                s"$refineBudget) — using the distributed grouped-rank scan")
-              budgetTripped = true
-            } else {
-              gc -= sid
-              feedKeys(grid, sid * man.span, leadHi,
-                MdioChunkStats.readShard(varDir, sid, man.shards(sid).gen))(intake)
-            }
-          }
-        }
-        if (usable && !budgetTripped)
-          st.brs = st.ks.map(bracketItems(itemsOf(st.g), _))
-      }
-    }
-    if (budgetTripped) return scanFallback() // only reachable when fallbackOk
-    if (!usable) return scanFallback(race = true) // torn shard mid-refinement
+    val brs = ri.brackets(states.map { case (g, _, ks) => g -> ks })
+      .getOrElse(return scanFallback(race = true))
+    val vt = t.vt
 
     var scanned = 0L
     var jobs = 0
@@ -2553,11 +1910,9 @@ object MdioStats {
     // (group, p) covers the whole probed set — and the metadata side
     // below excludes probed chunks entirely, so nothing double-counts
     // (a chunk probed for one edge may sit fully below another).
-    val emptyFine = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], MdioChunkStats.Bounds)]
-    val straddlersOf: Map[Seq[Long], Seq[Seq[Long]]] = states.iterator.map { st =>
-      st.g -> st.brs.flatMap(_._1).distinct.flatMap { b0 =>
-        fine.getOrElse(st.g, emptyFine)
-          .collect { case (cc, b) if b.min <= b0 && b.max > b0 => cc }
+    val straddlersOf: Map[Seq[Long], Seq[Seq[Long]]] = states.iterator.map { case (g, _, _) =>
+      g -> brs(g).flatMap(_._1).distinct.flatMap { b0 =>
+        ri.fineOf(g).collect { case (cc, b) if b.min <= b0 && b.max > b0 => cc }
       }.distinct
     }.toMap
     val probeChunks = straddlersOf.valuesIterator.flatten.toSeq.distinct
@@ -2565,64 +1920,56 @@ object MdioStats {
       log.warn(s"quantilesByBox($path, $variable): ${probeChunks.size} " +
         s"chunks straddle group bracket edges (cap $maxProbeChunks) — " +
         "falling back to the exact full-scan grouped-rank selection")
-      return scanFallback()
+      return scanFallback(race = false)
     }
-    def groupedDF(rows: Seq[Row], tail: Seq[StructField]) =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*),
-        StructType(gNames.map(StructField(_, LongType, nullable = false)) ++ tail))
     val exactBelow: Map[(Seq[Long], Double), Long] =
       if (probeChunks.isEmpty) Map.empty
       else {
         scanned += probeChunks.size
         jobs += 1
-        val edges = groupedDF(
-          states.filter(st => straddlersOf(st.g).nonEmpty).flatMap { st =>
-            ps.zip(st.brs).collect { case (p, (Some(b0), _)) =>
-              Row.fromSeq(st.g ++ Seq(p, edgeValue(b0, vt)))
+        val edges = gs.frame(spark,
+          states.filter { case (g, _, _) => straddlersOf(g).nonEmpty }.flatMap { case (g, _, _) =>
+            ps.zip(brs(g)).collect { case (p, (Some(b0), _)) =>
+              Row.fromSeq(g ++ Seq(p, edgeValue(b0, vt)))
             }
           },
           Seq(StructField("p", DoubleType, nullable = false),
             StructField("x0", edgeType(vt), nullable = false)))
-        spark.read.format("mdio")
-          .option("chunkKeys", probeChunks.map(_.mkString(".")).mkString(","))
-          .load(path)
-          .select(gCols :+ col(variable).as("v"): _*)
-          .join(broadcast(edges), gNames)
+        t.chunks(probeChunks)
+          .select(gs.cols :+ col(variable).as("v"): _*)
+          .join(broadcast(edges), gs.names)
           .filter(col("v") <= col("x0"))
           .groupBy(pKeys.map(col): _*).agg(count(lit(1L)).as("c"))
           .collect()
-          .map(r => (gNames.indices.map(r.getLong(_)).toSeq,
-            r.getDouble(gNames.size)) -> r.getLong(gNames.size + 1)).toMap
+          .map(r => (gs.names.indices.map(r.getLong(_)).toSeq,
+            r.getDouble(gs.names.size)) -> r.getLong(gs.names.size + 1)).toMap
       }
 
     // residual ranks + window bounds + bucket params, broadcast once (one
     // row per (group, p)); ONE allowlist scan over the union of every
     // rank's window chunks answers everything together through the
     // two-stage bucketed pick
-    val boundsRows = states.flatMap { st =>
-      val probed = straddlersOf.getOrElse(st.g, Seq.empty).toSet
-      val its = itemsOf(st.g)
-      ps.lazyZip(st.ks).lazyZip(st.brs).map { case (p, k, (x0, x1)) =>
+    val boundsRows = states.flatMap { case (g, n, ks) =>
+      val probed = straddlersOf.getOrElse(g, Seq.empty).toSet
+      val lo0 = ri.items(g).iterator.map(_._1).min
+      ps.lazyZip(ks).lazyZip(brs(g)).map { case (p, k, (x0, x1)) =>
         val below = x0.map { b0 =>
-          val metaBelow = coarse.get(st.g).iterator
-            .flatMap(_.valuesIterator).collect {
-              case (_, h, c) if h <= b0 => c }.sum +
-            fine.getOrElse(st.g, emptyFine).iterator.collect {
-              case (cc, b) if !probed.contains(cc) && b.max <= b0 =>
-                b.moments.get.cnt }.sum
-          metaBelow + exactBelow.getOrElse((st.g, p), 0L)
+          ri.coarseOf(g).iterator.collect { case (_, h, c) if h <= b0 => c }.sum +
+            ri.fineOf(g).iterator.collect {
+              case (cc, b) if !probed.contains(cc) && b.max <= b0 => b.moments.get.cnt
+            }.sum +
+            exactBelow.getOrElse((g, p), 0L)
         }.getOrElse(0L)
         val residual = k - below
         require(residual >= 1,
-          s"rank window inconsistency in group ${st.g}: residual $residual")
-        val blo = x0.getOrElse(its.iterator.map(_._1).min).toDouble
+          s"rank window inconsistency in group $g: residual $residual")
+        val blo = x0.getOrElse(lo0).toDouble
         val bw = (x1.toDouble - blo) / RankBuckets
-        Row.fromSeq(st.g ++ Seq(p, x0.map(edgeValue(_, vt)).orNull,
-          edgeValue(x1, vt), residual, st.n, blo, bw))
+        Row.fromSeq(g ++ Seq(p, x0.map(edgeValue(_, vt)).orNull,
+          edgeValue(x1, vt), residual, n, blo, bw))
       }
     }
-    val bounds = groupedDF(boundsRows,
+    val bounds = gs.frame(spark, boundsRows,
       Seq(StructField("p", DoubleType, nullable = false),
         StructField("x0", edgeType(vt), nullable = true),
         StructField("x1", edgeType(vt), nullable = false),
@@ -2630,19 +1977,14 @@ object MdioStats {
         StructField("n", LongType, nullable = false),
         StructField("blo", DoubleType, nullable = false),
         StructField("bw", DoubleType, nullable = false)))
-    val windowChunks = states.flatMap { st =>
-      val f = fine.getOrElse(st.g, emptyFine)
-      st.brs.flatMap { case (x0, x1) =>
-        f.collect { case (cc, b) if x0.forall(b.max > _) && b.min <= x1 => cc }
-      }
-    }.distinct
+    val windowChunks = states.flatMap { case (g, _, _) =>
+      ri.fineOf(g).collect { case (cc, b) if brs(g).exists(inWindow(b.min, b.max, _)) => cc }
+    }
     scanned += windowChunks.size
     jobs += 1
-    val byKV = spark.read.format("mdio")
-      .option("chunkKeys", windowChunks.map(_.mkString(".")).mkString(","))
-      .load(path)
-      .select(gCols :+ col(variable).as("v"): _*)
-      .join(broadcast(bounds), gNames)
+    val byKV = t.chunks(windowChunks)
+      .select(gs.cols :+ col(variable).as("v"): _*)
+      .join(broadcast(bounds), gs.names)
       .filter((col("x0").isNull || col("v") > col("x0")) && col("v") <= col("x1"))
       .groupBy(pKeys.map(col) ++
         Seq(col("v"), col("residual"), col("n"), col("blo"), col("bw")): _*)
@@ -2678,17 +2020,12 @@ object MdioStats {
                    leadPerGroup: Long,
                    maxProbeChunks: Int = 512,
                    ranges: Map[String, (Long, Long)] = Map.empty): GroupedMedian = {
-    import graft.zarr.ZarrMeta
-    val (meta, attrs) = ZarrMeta.readGroup(ZarrMeta.path(path))._2.getOrElse(variable,
-      throw new IllegalArgumentException(s"no variable '$variable' in $path"))
-    val dims = meta.dimNames
-      .orElse(attrs.flatMap(graft.sources.MdioTableUtil.arrayDimensions))
-      .getOrElse(throw new IllegalArgumentException(
-        s"variable '$variable' carries no dimension names"))
+    val t = new QcVar(spark, path, variable, "medianByLead",
+      "slice its index range instead", ranges, Nil)
     val r = medianByBox(spark, path, variable,
-      leadPerGroup +: meta.shape.tail, maxProbeChunks, ranges = ranges)
+      leadPerGroup +: t.meta.shape.tail, maxProbeChunks, ranges = ranges)
     r.copy(result = r.result.select(
-      col(s"g_${dims.head}").as("slab"), col("med"), col("n")))
+      col(s"g_${t.dims.head}").as("slab"), col("med"), col("n")))
   }
 
   /** A3/S10 — persist computed stats into the variable's attributes with

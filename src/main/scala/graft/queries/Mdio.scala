@@ -1031,8 +1031,8 @@ object Mdio {
     * writes `median(weight)` (or a WITHIN-GROUP percentile) gets the rank
     * family's quantile-by-pruning automatically — the aggregate pushes
     * COMPLETELY into the scan (`vpctc`/`vpctd` ops on `MdioAggScan`,
-    * answered at execution by [[graft.operators.MdioStats.kthSmallest]]'s
-    * bracket machinery: O(manifest) metadata + boundary-window scans),
+    * answered at execution by [[graft.operators.MdioStats.valuesAtRanks]]
+    * — the bracket machinery: O(manifest) metadata + boundary-window scans),
     * so the optimized plan carries NO Spark-side Aggregate and the corpus
     * never shuffles into a Percentile buffer. The CONT interpolation is
     * bit-identical to Spark's PercentileBase (pinned in

@@ -130,8 +130,10 @@ object MdioChunkStats {
     * RANGE-COUNT questions answer per shard from the manifest alone — the
     * live consumers are [[graft.operators.MdioStats.countInRange]] (a
     * shard whose union lies inside the count range contributes `cells`
-    * matching cells without being opened) and
-    * [[graft.operators.MdioStats.kthSmallest]] (the rank bounds L(x)/U(x)
+    * matching cells without being opened) and the rank family's shared
+    * item walk (`MdioStats.RankItems`: the rank bounds L(x)/U(x) of
+    * [[graft.operators.MdioStats.valuesAtRanks]] — which the percentile
+    * pushdown and `kthSmallest` call — and of the per-box ranks
     * accumulate whole shards as one [lo,hi]×cells interval, opening only
     * the shards intersecting the final bracket window) — O(manifest)
     * driver bytes for a 100 TB store's median instead of O(chunk

@@ -487,8 +487,9 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
         }
       // PERCENTILE_CONT / PERCENTILE_DISC over a value column (Spark's
       // `median(v)` analyzes to percentile_cont 0.5): complete pushdown
-      // routes the rank into the quantile-by-pruning machinery
-      // ([[graft.operators.MdioStats.kthSmallest]]) at execution —
+      // routes the ranks into the quantile-by-pruning machinery
+      // ([[graft.operators.MdioStats.valuesAtRanks]], grouped:
+      // [[graft.operators.MdioStats.boxRanks]]) at execution —
       // O(manifest) metadata + at most two boundary-window scans instead
       // of Spark shuffling the corpus into its own Percentile buffer.
       // Accepted over the full variable or (ungrouped) a CHUNK-ALIGNED

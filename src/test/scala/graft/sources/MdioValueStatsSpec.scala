@@ -861,9 +861,10 @@ class MdioValueStatsSpec extends SparkSpec {
     // the full selection plan at a >2^31 rank over grouped counts: value
     // 2.0 holds ranks (3e9, 5e9] — offset((rank-1).toInt) would wrap
     val byV = Seq((1.0, 3000000000L), (2.0, 2000000000L)).toDF("v", "c")
-    assert(MdioStats.selectByRank(byV, 4000000000L, 1.0, 2.0) == 2.0)
-    assert(MdioStats.selectByRank(byV, 3000000000L, 1.0, 2.0) == 1.0)
-    assert(MdioStats.selectByRank(byV, 1L, 1.0, 2.0) == 1.0)
+    val reqs = Seq(4000000000L, 3000000000L, 1L).map(rank =>
+      MdioStats.RankReq(None, lit(2.0), 1.0, 2.0, rank))
+    assert(MdioStats.selectByRankMulti(byV, reqs,
+      org.apache.spark.sql.types.DoubleType) == Seq(2.0, 1.0, 1.0))
   }
 
   test("MIN/MAX over a value column answers from metadata with full coverage") {

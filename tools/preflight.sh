@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition =="
+echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -52,6 +52,20 @@ if [ -n "$parts$knob" ]; then
   fail=1
 else
   echo "one scan partition (MdioChunkRun beside MdioAggPartition, MdioAggRowsPartition; no spark.graft.scan.targetPartitionBytes)"
+fi
+
+# the direct QC operators triage one item walk: sidecar shard files open
+# in walkShards and in RankItems' refinement only, and the single-rank
+# selection stays folded into the rank vector (selectByRankMulti)
+qc=src/main/scala/graft/operators/MdioStats.scala
+reads=$(grep -o "MdioChunkStats\.readShard(" "$qc" | wc -l)
+single=$(grep -n "def selectByRank(" "$qc")
+if [ "$reads" -gt 2 ] || [ -n "$single" ]; then
+  echo "QC TRIAGE LINT RED: $reads MdioChunkStats.readShard( calls in $qc (max 2)"
+  [ -n "$single" ] && echo "$single"
+  fail=1
+else
+  echo "one QC triage ($reads MdioChunkStats.readShard( calls in MdioStats.scala, no selectByRank)"
 fi
 
 echo "== 2/6 full test suite =="
