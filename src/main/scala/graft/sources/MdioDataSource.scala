@@ -211,10 +211,14 @@ object MdioScanBuilder {
 }
 
 /** Pushdown: absorbs per-dimension range filters; prunes variables; and
-  * COMPLETELY answers COUNT(*)/MIN(dim)/MAX(dim) aggregations from the
-  * chunk-grid metadata — the long-form grid is dense by construction
-  * (absent chunks materialize fill), so extents and cardinality of a
-  * 100 TB store are O(1) metadata lookups, no chunk file ever opened. */
+  * COMPLETELY answers an aggregation the metadata can answer as one
+  * [[MdioAggScan]] of slab rows — an ungrouped aggregate is the one-slab
+  * case of `GROUP BY FLOOR(dim/L)…`. Dim aggregates (COUNT, MIN/MAX/SUM
+  * and COUNT(DISTINCT) of an index) come from the clamped chunk-grid
+  * bounds, since the long-form grid is dense by construction (absent
+  * chunks materialize fill); value aggregates come from the stats
+  * sidecar ([[MdioAggScan.slabRows]]); percentiles from the rank
+  * machinery. No chunk file is opened. */
 final class MdioScanBuilder(path: String, dims: Seq[String],
                             metas: Map[String, ZarrMeta.ArrayMeta],
                             fullSchema: StructType,
@@ -238,7 +242,7 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
   private var inValues: Map[String, Array[Long]] = Map.empty
   private var pushed: Array[Filter] = Array.empty
   private var requiredSchema: StructType = fullSchema
-  // accepted metadata-answerable aggregation: ("count", "") | ("min"/"max", dim)
+  // accepted metadata-answered aggregation: (op, dim or variable) pairs
   private var pushedAggs: Option[Seq[(String, String)]] = None
   private var pushedGroup: Option[Seq[(String, Long)]] = None // GROUP BY FLOOR(dim/L)…
   // LIMIT hint: enumerate only enough chunks to cover this many cells —
@@ -290,70 +294,6 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
       case _ => false
     }
   }
-
-  /** Can the stats sidecar answer MIN/MAX over `v` EXACTLY right now?
-    * Requires generation-current stats with an entry for every chunk the
-    * scan touches — full coverage is what removes all fill/absent-chunk
-    * reasoning (a chunk with no entry is indistinguishable from a
-    * pre-stats or ±Inf chunk, so partial coverage falls back to a real
-    * scan). Dim-range slices are answerable IFF they are CHUNK-ALIGNED
-    * (every touched chunk lies fully inside the slice — the common
-    * seismic case, since subvolumes are cut on chunk boundaries): an
-    * entry bounds its whole chunk, so a partially-covered chunk would
-    * make the answer a superset bound, not the exact extremum. */
-  private def statsAnswerable(v: String): Boolean =
-    MdioAggScan.alignedChunkBox(metas(v), dims, ranges).exists { box =>
-      MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
-          box.headOption.map(_._1).getOrElse(0L),
-          box.headOption.map(_._2 - 1).getOrElse(0L)).exists { entries =>
-        val need = box.map { case (lo, hi) => hi - lo }.product
-        // count only entries inside the box (the sidecar may carry more)
-        need > 0 && entries.size >= need &&
-          MdioAggScan.boxKeys(box).forall(entries.contains)
-      }
-    }
-
-  /** Can the stats sidecar answer SUM over `v` EXACTLY right now? On top
-    * of [[statsAnswerable]]'s full-coverage contract, every non-all-NaN
-    * entry in the box must carry statsV1 MOMENTS (older bounds-only
-    * sidecars fall back to a scan), and for integral dtypes the exact
-    * total must fit the Long result Spark's Sum produces — an overflowing
-    * total falls back to the scan, whose wrap-on-overflow is Spark's own
-    * non-ANSI semantics, not ours to imitate from metadata. */
-  private def sumAnswerable(v: String): Boolean = momentsAnswerable(v, requireLongFit = true)
-
-  /** AVG needs the same moment coverage as SUM but never the Long-fit
-    * check — its result is a double quotient for every input dtype. */
-  private def avgAnswerable(v: String): Boolean = momentsAnswerable(v, requireLongFit = false)
-
-  /** VAR/STDDEV additionally need every entry's exact Σx² (integral
-    * chunks whose exact squares overflowed the fast path omit it). */
-  private def varAnswerable(v: String): Boolean =
-    momentsAnswerable(v, requireLongFit = false, requireSumSq = true)
-
-  private def momentsAnswerable(v: String, requireLongFit: Boolean,
-                                requireSumSq: Boolean = false): Boolean =
-    MdioAggScan.alignedChunkBox(metas(v), dims, ranges).exists { box =>
-      MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
-          box.headOption.map(_._1).getOrElse(0L),
-          box.headOption.map(_._2 - 1).getOrElse(0L)).exists { entries =>
-        val keys = MdioAggScan.boxKeys(box).toSeq
-        val need = box.map { case (lo, hi) => hi - lo }.product
-        need > 0 && keys.forall(k =>
-          entries.get(k).exists(e => e.forall(b => b.moments.exists(m =>
-            !requireSumSq || m.sumSq.isDefined)))) && {
-          val isFloat = metas(v).dtype.charAt(metas(v).dtype.length - 2) == 'f'
-          !requireLongFit || isFloat || MdioChunkStats.exactTotal(
-            keys.flatMap(entries(_)).flatMap(_.moments).map(_.sum)).isValidLong
-        }
-      }
-    }
-
-  /** Closed-form SUM over a dim-index column: Σ index over the clamped
-    * range × the other dims' cell counts — answerable whenever the exact
-    * value fits the Long Spark's Sum over a long column produces. */
-  private def dimSumFits(d: String): Boolean =
-    MdioAggScan.dimSumExact(metas.values.head, dims, ranges, d).isDefined
 
   /** A pushed GROUP BY expression answerable per chunk-aligned SLAB:
     * `FLOOR(dim / L)` — Spark's V2 translation of floor-division over a
@@ -436,40 +376,28 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
           case Some(a) if dimSet(a) && grouped.isEmpty => ("dcnt", a)
           case _ => return None
         }
+      // MIN/MAX/SUM over a dim-index column (ungrouped only): the clamped
+      // bounds and their closed-form index sum. Over a value column, the
+      // sidecar's exact bounds and statsV1 moments (mdio/stats.h:229-335);
+      // whether they answer is slabRows' call below
       case m: connector_expressions.aggregate.Min => named(m.column) match {
         case Some(a) if dimSet(a) && grouped.isEmpty => ("min", a)
-        case Some(a) if grouped.isDefined && statVar(a).isDefined =>
-          ("vmin", statVar(a).get) // per-slab answerability checked below
-        case Some(a) if statVar(a).exists(statsAnswerable) => ("vmin", statVar(a).get)
-        case _ => return None
+        case a => ("vmin", a.flatMap(statVar).getOrElse(return None))
       }
       case m: connector_expressions.aggregate.Max => named(m.column) match {
         case Some(a) if dimSet(a) && grouped.isEmpty => ("max", a)
-        case Some(a) if grouped.isDefined && statVar(a).isDefined =>
-          ("vmax", statVar(a).get)
-        case Some(a) if statVar(a).exists(statsAnswerable) => ("vmax", statVar(a).get)
-        case _ => return None
+        case a => ("vmax", a.flatMap(statVar).getOrElse(return None))
       }
-      // SUM: closed form over a dim-index column; exact sidecar moments
-      // over a value column (statsV1 sum, mdio/stats.h:229-335)
       case s: connector_expressions.aggregate.Sum if !s.isDistinct =>
         named(s.column) match {
-          case Some(a) if dimSet(a) && grouped.isEmpty && dimSumFits(a) => ("dsum", a)
-          case Some(a) if grouped.isDefined && statVar(a).isDefined =>
-            ("vsum", statVar(a).get)
-          case Some(a) if statVar(a).exists(sumAnswerable) => ("vsum", statVar(a).get)
-          case _ => return None
+          case Some(a) if dimSet(a) && grouped.isEmpty => ("dsum", a)
+          case a => ("vsum", a.flatMap(statVar).getOrElse(return None))
         }
       // AVG over a value column: exact moment sum / dense-grid cell count,
       // one double division — same rounding story as vsum (exact real sum
       // rounded once), result DoubleType for every input dtype
       case a: connector_expressions.aggregate.Avg if !a.isDistinct =>
-        named(a.column) match {
-          case Some(c) if grouped.isDefined && statVar(c).isDefined =>
-            ("vavg", statVar(c).get)
-          case Some(c) if statVar(c).exists(avgAnswerable) => ("vavg", statVar(c).get)
-          case _ => return None
-        }
+        ("vavg", named(a.column).flatMap(statVar).getOrElse(return None))
       // VAR_POP/VAR_SAMP/STDDEV_POP/STDDEV_SAMP over a value column: the
       // statsV1 moments carry exact Σx AND Σx² (the reference's stats.h
       // keeps sumSquares for precisely this), so the centered second
@@ -478,13 +406,8 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
       case g: connector_expressions.aggregate.GeneralAggregateFunc
           if MdioScanBuilder.VarOps.contains(g.name()) && !g.isDistinct &&
             g.children().length == 1 =>
-        named(g.children()(0)) match {
-          case Some(c) if grouped.isDefined && statVar(c).isDefined =>
-            (MdioScanBuilder.VarOps(g.name()), statVar(c).get)
-          case Some(c) if statVar(c).exists(varAnswerable) =>
-            (MdioScanBuilder.VarOps(g.name()), statVar(c).get)
-          case _ => return None
-        }
+        (MdioScanBuilder.VarOps(g.name()),
+          named(g.children()(0)).flatMap(statVar).getOrElse(return None))
       // PERCENTILE_CONT / PERCENTILE_DISC over a value column (Spark's
       // `median(v)` analyzes to percentile_cont 0.5): complete pushdown
       // routes the ranks into the quantile-by-pruning machinery
@@ -548,30 +471,25 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
                 // full variable, or a chunk-aligned slice whose box proves
                 // NaN-free on its own (r18) — grouped or not: per-slab
                 // ranks rank each slab's SURVIVING cells
-                (if (ranges.isEmpty) MdioAggScan.rankAnswerable(path, v, metas(v))
-                 else MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges)) =>
+                MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges) =>
             (if (disc) s"vpctd:$p" else s"vpctc:$p", v)
           case _ => return None
         }
       case _ => return None
     }
-    grouped match {
-      case Some(gs) =>
-        // per-slab answerability in one shot: coverage, chunk-multiples,
-        // moments for vsum, per-slab integral-sum Long fit. Percentile
-        // ops validated their own (rank) answerability above and are
-        // answered by boxRanks at execution, not by slabRows.
-        val nonPct = out.toSeq.filterNot(_._1.startsWith("vpct"))
-        if (MdioAggScan.slabRows(path, dims, metas, ranges, nonPct, gs).isDefined)
-          Some((out.toSeq, grouped))
-        else None
-      case None => Some((out.toSeq, None))
-    }
+    // every other op answers through slabRows, ungrouped as its one slab,
+    // and this one call proves it: stats coverage and currency, chunk
+    // alignment, moments, an integral SUM's Long fit, the group cap.
+    // Percentile ops proved their rank answerability above.
+    val stats = out.toSeq.filterNot(_._1.startsWith("vpct"))
+    if (MdioAggScan.slabRows(path, dims, metas, ranges, stats, grouped.getOrElse(Nil)).isDefined)
+      Some((out.toSeq, grouped))
+    else None
   }
 
   // supportCompletePushDown and pushAggregation receive the same
   // Aggregation instance back-to-back, and translateAggs walks the stats
-  // sidecar (manifest + intersecting shards) for grouped queries — memoize
+  // sidecar (manifest + intersecting shards) — memoize
   // per instance so the planner pays that I/O once. The LAST evaluation —
   // MdioAggScan.planInputPartitions at execution — stays deliberate: it is
   // the loud staleness check against a writer racing the fixed plan.
@@ -761,16 +679,19 @@ final case class MdioValueRange(lo: Option[(BigDecimal, Boolean)],
   }
 }
 
-/** Metadata-only scan for completely-pushed COUNT(*)/MIN(dim)/MAX(dim) —
-  * one partition, one row, computed from the chunk grid and the clamped
-  * pushed ranges (dense-grid semantics make this exact: every in-domain
-  * cell exists, fill-materialized when its chunk file is absent) — and,
-  * with a generation-current FULL-coverage stats sidecar, MIN/MAX over a
-  * VALUE column ("vmin"/"vmax": the statsV1-attached-attributes use case,
+/** Metadata-only scan for a completely pushed aggregation: one partition
+  * of slab rows from [[MdioAggScan.slabRows]] — one row per slab tuple of
+  * a `GROUP BY FLOOR(dim/L)…`, and exactly one row (empty box included)
+  * for an ungrouped aggregate, its one slab. Dim ops come from the
+  * clamped chunk-grid bounds (dense-grid semantics make this exact:
+  * every in-domain cell exists, fill-materialized when its chunk file is
+  * absent); value ops from a generation-current stats sidecar covering
+  * the slab's chunks (the statsV1-attached-attributes use case,
   * mdio/stats.h — "what is the amplitude range of this 100 TB store"
-  * without opening a chunk file). Float semantics match both engines'
-  * NaN-is-greatest convention: MAX is NaN when any cell is NaN; MIN is
-  * the finite minimum unless no finite cell exists. */
+  * without opening a chunk file); percentile columns from the rank
+  * machinery. Float semantics match both engines' NaN-is-greatest
+  * convention: MAX is NaN when any cell is NaN; MIN is the finite minimum
+  * unless no finite cell exists. */
 final case class MdioAggScan(path: String, dims: Seq[String],
                              metas: Map[String, ZarrMeta.ArrayMeta],
                              ranges: Map[String, (Long, Long)],
@@ -806,225 +727,98 @@ final case class MdioAggScan(path: String, dims: Seq[String],
       group.map(gs => " group by " +
         gs.map { case (d, l) => s"$d/$l" }.mkString(",")).getOrElse("") + ")"
 
-  /** Exact MIN/MAX over a value column from the sidecar, scoped to the
-    * (chunk-aligned) slice's chunk box. The builder validated
-    * answerability; a writer racing between plan and execution could
-    * invalidate it, and that must fail LOUD (the plan is already fixed as
-    * metadata-only). */
-  private def statValue(op: String, v: String): Any = {
-    val m = metas(v)
-    val cells = dims.zipWithIndex.map { case (d, i) =>
-      val (lo, hi) = ranges.getOrElse(d, (0L, m.shape(i)))
-      math.min(hi, m.shape(i)) - math.max(lo, 0L)
-    }.product
-    val box = MdioAggScan.alignedChunkBox(m, dims, ranges).getOrElse(
-      throw new IllegalStateException(s"slice no longer chunk-aligned for '$v'"))
-    val all = MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
-        box.headOption.map(_._1).getOrElse(0L),
-        box.headOption.map(_._2 - 1).getOrElse(0L))
+  // Spark asks for the partitions more than once per execution; the
+  // sidecar re-check and the rank pass run once
+  @transient private lazy val partitions: Array[InputPartition] = {
+    val gs = group.getOrElse(Nil)
+    // the same call that accepted the plan, re-run: a writer racing
+    // between planning and execution must fail LOUD (the plan is fixed
+    // as metadata-only). Percentile columns fill in from the rank pass.
+    val stats = aggs.filterNot(_._1.startsWith("vpct"))
+    val rows0 = MdioAggScan.slabRows(path, dims, metas, ranges, stats, gs)
       .getOrElse(throw new IllegalStateException(
-        s"stats sidecar for '$v' went stale between planning and execution"))
-    val entries: Seq[MdioChunkStats.Entry] = MdioAggScan.boxKeys(box).map { k =>
-      all.getOrElse(k, throw new IllegalStateException(
-        s"stats sidecar for '$v' lost coverage of chunk $k between planning and execution"))
-    }.toSeq
-    val dt = MdioTableUtil.sparkTypeOf(m.dtype)
-    val isFloat = m.dtype.charAt(m.dtype.length - 2) == 'f'
-    MdioAggScan.answer(op, entries, dt, isFloat, cells).getOrElse(
-      throw new IllegalStateException(
-        s"stats sidecar for '$v' lost $op-answerability between planning and execution"))
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    group.foreach { gs =>
-      // one metadata row per slab tuple; a writer racing between planning
-      // and execution must fail LOUD (the plan is fixed as metadata-only).
-      // Percentile columns fill in from the batched grouped rank pass.
-      val nonPct = aggs.filterNot(_._1.startsWith("vpct"))
-      val rows0 = MdioAggScan.slabRows(path, dims, metas, ranges, nonPct, gs)
-        .getOrElse(throw new IllegalStateException(
-          s"per-slab stats for group by ${gs.mkString(",")} went stale between planning and execution"))
-      val rows =
-        if (nonPct.size == aggs.size) rows0
-        else {
-          val pct = groupedPctValues(gs)
-          rows0.map { r =>
-            val tuple: Seq[Long] = (0 until gs.size).map(i => r(i).asInstanceOf[Long])
-            var j = gs.size // cursor into rows0's non-pct agg values
-            val vals: Array[Any] = aggs.map {
-              case (op, v) if op.startsWith("vpct") =>
-                pct((op, v)).getOrElse(tuple,
-                  throw new IllegalStateException(
-                    s"grouped rank pass produced no value for slab $tuple"))
-              case _ => val x = r(j); j += 1; x
-            }.toArray
-            r.take(gs.size) ++ vals
-          }
+        s"${description()} went stale between planning and execution"))
+    val rows =
+      if (stats.size == aggs.size) rows0
+      else {
+        val pct = pctValues(gs)
+        rows0.map { r =>
+          val tuple: Seq[Long] = (0 until gs.size).map(i => r(i).asInstanceOf[Long])
+          var j = gs.size // cursor into rows0's non-pct agg values
+          val vals: Array[Any] = aggs.map {
+            case (op, v) if op.startsWith("vpct") =>
+              pct((op, v)).getOrElse(tuple,
+                throw new IllegalStateException(
+                  s"rank pass produced no value for slab $tuple"))
+            case _ => val x = r(j); j += 1; x
+          }.toArray
+          r.take(gs.size) ++ vals
         }
-      return Array(MdioAggRowsPartition(rows))
-    }
-    val shape = metas.values.head.shape
-    val bounds: Seq[(Long, Long)] = dims.zipWithIndex.map { case (d, i) =>
-      val (lo, hi) = ranges.getOrElse(d, (0L, shape(i)))
-      (math.max(lo, 0L), math.min(hi, shape(i)))
-    }
-    val empty = bounds.exists { case (lo, hi) => lo >= hi }
-    val values: Array[Any] = aggs.map {
-      case ("count", _) =>
-        if (empty) 0L else bounds.map { case (lo, hi) => hi - lo }.product
-      case ("min", d) => if (empty) null else bounds(dims.indexOf(d))._1
-      case ("max", d) => if (empty) null else bounds(dims.indexOf(d))._2 - 1
-      case ("dsum", d) =>
-        if (empty) null
-        else MdioAggScan.dimSumExact(metas.values.head, dims, ranges, d)
-          .getOrElse(throw new IllegalStateException(
-            s"closed-form SUM($d) no longer fits Long at execution"))
-      case ("dcnt", d) =>
-        if (empty) 0L else { val (lo, hi) = bounds(dims.indexOf(d)); hi - lo }
-      case (op @ ("vmin" | "vmax" | "vsum" | "vavg" |
-                  "vvarp" | "vvars" | "vstdp" | "vstds"), v) =>
-        if (empty) null else statValue(op, v)
-      case (op, v) if op.startsWith("vpct") =>
-        if (empty) null else pctValues((op, v))
-    }.toArray
-    Array(MdioAggPartition(values))
-  }
-
-  /** GROUPED pushed percentiles: all ranks of all of a query's percentile
-    * aggregates over one variable batch through ONE
-    * [[graft.operators.MdioStats.boxRanks]] pass — one bracket walk, one
-    * probe, one union-window scan for the whole slab × rank matrix. Each
-    * op contributes a CONSTANT two rank slots per group (a discrete
-    * percentile duplicates its single rank; a continuous one needs its
-    * two interpolation neighbours), so the label → slot mapping is static
-    * while the ranks themselves are per-group functions of n_g. Returns
-    * op → slab-tuple (pushed order) → value; O(slabs × slots) driver rows
-    * — the same order as the grouped result Spark materializes anyway. */
-  private def groupedPctValues(gs: Seq[(String, Long)])
-      : Map[(String, String), Map[Seq[Long], Any]] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val pct = aggs.filter(_._1.startsWith("vpct")).distinct
-    pct.groupBy(_._2).flatMap { case (v, ops) =>
-      MdioAggScan.retryStatsRace(s"grouped pushed percentile on '$v'") {
-      val answerable = // boxed when a dim slice was absorbed (r18)
-        if (ranges.isEmpty) MdioAggScan.rankAnswerable(path, v, metas(v))
-        else MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges)
-      if (!answerable)
-        throw new MdioAggScan.StatsRaceException(
-          s"rank answerability for '$v' went stale between planning and execution")
-      val m = metas(v)
-      val groupSizes = dims.zipWithIndex.map { case (d, i) =>
-        gs.find(_._1 == d).map(_._2).getOrElse(m.shape(i)) }
-      def pOf(op: String): Double = op.substring(op.indexOf(':') + 1).toDouble
-      // rank slots per op are CONSTANT across groups (a discrete
-      // percentile takes one; a continuous one its two interpolation
-      // neighbours — duplicated when the position lands on a rank, since
-      // the slot count may not vary with n_g), while the ranks themselves
-      // are per-group functions of n_g
-      def arity(op: String): Int = if (op.startsWith("vpctd")) 1 else 2
-      def ranksOf(op: String, n: Long): Seq[Long] =
-        if (op.startsWith("vpctd"))
-          Seq((BigDecimal(pOf(op)) * n)
-            .setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
-        else {
-          val position = pOf(op) * (n - 1) // PercentileBase: p × (count−1)
-          Seq(math.floor(position).toLong + 1, math.ceil(position).toLong + 1)
-        }
-      val offsets = ops.map(o => arity(o._1)).scanLeft(0)(_ + _)
-      val labels = (0 until offsets.last).map(_.toDouble)
-      // maxGroups re-asserts the plan-time cap: translateAggs counted the
-      // groups before accepting, so tripping it here means the store's
-      // geometry changed under the plan — loud, not a driver OOM
-      val q = graft.operators.MdioStats.boxRanks(spark, path, v, labels,
-        n => ops.flatMap(o => ranksOf(o._1, n)), groupSizes,
-        maxGroups = MdioAggScan.maxPushedGroups, ranges = ranges)
-      val schema = q.result.schema.fieldNames
-      val gIdx = gs.map { case (d, _) => schema.indexOf(s"g_$d") }
-      val lIdx = schema.indexOf("p")
-      val qIdx = schema.indexOf("q")
-      val nIdx = schema.indexOf("n")
-      val byKey = q.result.collect().groupBy(r => gIdx.map(r.getLong).toSeq)
-      ops.zip(offsets).map { case ((op, _), off) =>
-        val perSlab: Map[Seq[Long], Any] = byKey.map { case (key, rs) =>
-          val n = rs.head.getLong(nIdx)
-          val byLabel = rs.map(r => r.getDouble(lIdx) -> r.getDouble(qIdx)).toMap
-          val vLo = byLabel(off.toDouble)
-          val value: Any =
-            if (op.startsWith("vpctd")) vLo
-            else {
-              val position = pOf(op) * (n - 1)
-              val lower = math.floor(position).toLong
-              val higher = math.ceil(position).toLong
-              if (higher == lower) vLo
-              else vLo * (higher - position) +
-                byLabel((off + 1).toDouble) * (position - lower)
-            }
-          key -> value
-        }
-        (op, v) -> perSlab
       }
-      }
-    }
+    Array(MdioAggRowsPartition(rows))
   }
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
-  /** Pushed PERCENTILE_CONT/PERCENTILE_DISC values, computed LAZILY on
-    * first use and BATCHED per variable: all ranks a query's percentile
-    * aggregates need (a cont percentile needs its two interpolation
-    * neighbours) go through ONE
-    * [[graft.operators.MdioStats.valuesAtRanks]] call — one metadata
-    * bracket walk, one probe, one window scan for the whole vector,
-    * launched from the driver like a dynamic-pruning subquery — instead
-    * of per-rank kthSmallest jobs. The builder PROVED every cell finite
-    * at plan time (re-checked here — a racing writer must fail LOUD), so
-    * n is the dense-grid cell count and Spark's NaN-is-greatest ranking
-    * cannot diverge; the CONT interpolation replicates
-    * PercentileBase.getPercentile's exact double arithmetic
-    * (`lo·(⌈pos⌉−pos) + hi·(pos−⌊pos⌋)`) so the pushed answer is
-    * bit-identical to the unpushed one. */
-  private lazy val pctValues: Map[(String, String), Any] = {
+  /** Pushed PERCENTILE_CONT/PERCENTILE_DISC values, op → slab tuple
+    * (pushed order; the empty tuple ungrouped) → value. All ranks of all
+    * of a query's percentile aggregates over one variable batch into ONE
+    * rank pass, launched from the driver like a dynamic-pruning subquery:
+    * one metadata bracket walk, one probe, one window scan for the whole
+    * vector. Ungrouped, [[graft.operators.MdioStats.valuesAtRanks]] over
+    * the clamped box, whose n is its dense cell count (the builder PROVED
+    * every cell finite at plan time — re-checked here, a racing writer
+    * must fail LOUD — so Spark's NaN-is-greatest ranking cannot diverge).
+    * Grouped, [[graft.operators.MdioStats.boxRanks]] over the whole
+    * slab × rank matrix: each op takes a CONSTANT number of rank slots
+    * ([[MdioAggScan.pctRanks]]), so the label → slot mapping is static
+    * while the ranks themselves are per-group functions of n_g;
+    * O(slabs × slots) driver rows — the same order as the grouped result
+    * Spark materializes anyway. */
+  private def pctValues(gs: Seq[(String, Long)]): Map[(String, String), Map[Seq[Long], Any]] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val pct = aggs.filter(_._1.startsWith("vpct")).distinct
     pct.groupBy(_._2).flatMap { case (v, ops) =>
       MdioAggScan.retryStatsRace(s"pushed percentile on '$v'") {
-      val answerable = // boxed when a dim slice was absorbed (r18)
-        if (ranges.isEmpty) MdioAggScan.rankAnswerable(path, v, metas(v))
-        else MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges)
-      if (!answerable)
+      if (!MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges))
         throw new MdioAggScan.StatsRaceException(
           s"rank answerability for '$v' went stale between planning and execution")
-      // every in-box cell exists and is finite (proven above), so n is the
-      // clamped slice's dense cell count
-      val n = dims.zipWithIndex.map { case (d, i) =>
-        val (lo, hi) = ranges.getOrElse(d, (0L, metas(v).shape(i)))
-        math.min(hi, metas(v).shape(i)) - math.max(lo, 0L)
-      }.product
-      def pOf(op: String): Double = op.substring(op.indexOf(':') + 1).toDouble
-      def ranksOf(op: String): Seq[Long] =
-        if (op.startsWith("vpctd"))
-          // smallest value whose cume_dist ≥ p ⇔ the ⌈p·n⌉-th smallest
-          Seq((BigDecimal(pOf(op)) * n).setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
-        else {
-          val position = pOf(op) * (n - 1) // PercentileBase: p × (count−1)
-          val lower = math.floor(position).toLong
-          val higher = math.ceil(position).toLong
-          if (higher == lower) Seq(lower + 1) else Seq(lower + 1, higher + 1)
-        }
-      val ks = ops.flatMap(o => ranksOf(o._1)).distinct.sorted
-      val byK: Map[Long, Double] =
-        ks.zip(graft.operators.MdioStats.valuesAtRanks(spark, path, v, ks,
+      val m = metas(v)
+      if (gs.isEmpty) {
+        val n = dims.zipWithIndex.map { case (d, i) =>
+          val (lo, hi) = ranges.getOrElse(d, (0L, m.shape(i)))
+          math.min(hi, m.shape(i)) - math.max(lo, 0L)
+        }.product
+        val ks = ops.flatMap(o => MdioAggScan.pctRanks(o._1, n)).distinct.sorted
+        val byK = ks.zip(graft.operators.MdioStats.valuesAtRanks(spark, path, v, ks,
           ranges = ranges).values).toMap
-      ops.map { case (op, _) =>
-        val value: Any =
-          if (op.startsWith("vpctd")) byK(ranksOf(op).head)
-          else {
-            val position = pOf(op) * (n - 1)
-            val lower = math.floor(position).toLong
-            val higher = math.ceil(position).toLong
-            val vLo = byK(lower + 1)
-            if (higher == lower) vLo
-            else vLo * (higher - position) + byK(higher + 1) * (position - lower)
+        ops.map { case (op, _) =>
+          (op, v) -> Map(Seq.empty[Long] ->
+            (MdioAggScan.pctValue(op, n, MdioAggScan.pctRanks(op, n).map(byK)): Any))
+        }
+      } else {
+        val groupSizes = dims.zipWithIndex.map { case (d, i) =>
+          gs.find(_._1 == d).map(_._2).getOrElse(m.shape(i)) }
+        val offsets = ops.map(o => MdioAggScan.pctRanks(o._1, 1L).size).scanLeft(0)(_ + _)
+        val labels = (0 until offsets.last).map(_.toDouble)
+        // maxGroups re-asserts the plan-time cap: translateAggs counted the
+        // groups before accepting, so tripping it here means the store's
+        // geometry changed under the plan — loud, not a driver OOM
+        val q = graft.operators.MdioStats.boxRanks(spark, path, v, labels,
+          n => ops.flatMap(o => MdioAggScan.pctRanks(o._1, n)), groupSizes,
+          maxGroups = MdioAggScan.maxPushedGroups, ranges = ranges)
+        val schema = q.result.schema.fieldNames
+        val gIdx = gs.map { case (d, _) => schema.indexOf(s"g_$d") }
+        val (lIdx, qIdx, nIdx) =
+          (schema.indexOf("p"), schema.indexOf("q"), schema.indexOf("n"))
+        val byKey = q.result.collect().groupBy(r => gIdx.map(r.getLong).toSeq)
+        ops.zip(offsets).map { case ((op, _), off) =>
+          (op, v) -> byKey.map { case (key, rs) =>
+            val n = rs.head.getLong(nIdx)
+            val byLabel = rs.map(r => r.getDouble(lIdx) -> r.getDouble(qIdx)).toMap
+            key -> (MdioAggScan.pctValue(op, n,
+              MdioAggScan.pctRanks(op, n).indices.map(i => byLabel((off + i).toDouble))): Any)
           }
-        (op, v) -> value
+        }
       }
       }
     }
@@ -1136,62 +930,23 @@ object MdioAggScan {
     Some(out)
   }
 
-  /** Can a pushed global rank (percentile) be answered without changing
-    * Spark's semantics? Requires a generation-current sidecar (the rank
-    * machinery's pruning contract), and for float dtypes a PROOF from the
-    * manifest alone that every in-domain cell is finite (finite-cell
-    * counts equal the dense-grid capacity shard by shard) — Spark ranks
-    * NaN greatest while kthSmallest ranks finite cells only, so
-    * possible-NaN declines the pushdown. O(manifest) driver work for
-    * sharded sidecars; O(entries) for the legacy monolith, whose entries
-    * ARE the manifest. */
-  private[sources] def rankAnswerable(path: String, v: String,
-                                      m: ZarrMeta.ArrayMeta): Boolean = {
-    val varDir = ZarrMeta.path(path).resolve(v)
-    val isFloat = m.dtype.charAt(m.dtype.length - 2) == 'f'
-    MdioChunkStats.currentManifest(varDir).exists { man =>
-      !isFloat || {
-        val grid = m.chunkGrid
-        def capacity(cc: Seq[Long]): BigInt =
-          cc.indices.map { d =>
-            BigInt(math.min(m.chunks(d), m.shape(d) - cc(d) * m.chunks(d)))
-          }.product
-        man.legacy match {
-          case Some(es) =>
-            boxKeys(grid.map(g => (0L, g))).forall { k =>
-              es.get(k).exists(_.exists(b => !b.hasNaN && b.moments.exists(mo =>
-                BigInt(mo.cnt) == capacity(k.split("\\.").map(_.toLong).toSeq))))
-            }
-          case None =>
-            val trailCells = m.shape.drop(1).map(BigInt(_)).product
-            val chunksPerLead = grid.drop(1).product
-            val nShards = (grid.head + man.span - 1) / man.span
-            (0L until nShards).forall { sid =>
-              man.shards.get(sid).exists { sm =>
-                val leadLo = sid * man.span
-                val leadHi = math.min((sid + 1) * man.span, grid.head)
-                val cellsIn = BigInt(math.min(leadHi * m.chunks.head, m.shape.head) -
-                  leadLo * m.chunks.head) * trailCells
-                sm.count == (leadHi - leadLo) * chunksPerLead &&
-                  sm.cells.exists(BigInt(_) == cellsIn)
-              }
-            }
-        }
-      }
-    }
-  }
-
-  /** [[rankAnswerable]] restricted to a chunk-aligned dim-index BOX (r18
-    * — `median(v) WHERE depth BETWEEN a AND b`): the slice must cover
-    * whole chunks ([[alignedChunkBox]]), the sidecar must be
-    * generation-current, and for float dtypes the NaN-free proof need
-    * hold over the BOX only (a NaN outside the slice cannot change the
-    * slice's ranks). Shards fully inside a box that spans every trailing
-    * dim prove from their manifest summary alone (O(manifest), ≤2 partial
-    * end-shards open); a box that narrows a trailing dim must open every
-    * intersecting shard, so that path is accepted only under a bounded
-    * entry budget ([[maxPushedGroups]] entries) — past it the pushdown
-    * declines and Spark's distributed Percentile runs. */
+  /** Can a pushed rank (percentile) over the chunk-aligned dim-index BOX
+    * of `ranges` — the whole variable when none is pushed, or a slice
+    * (r18, `median(v) WHERE depth BETWEEN a AND b`) — be answered without
+    * changing Spark's semantics? The slice must cover whole chunks
+    * ([[alignedChunkBox]]), the sidecar must be generation-current (the
+    * rank machinery's pruning contract), and for float dtypes a PROOF is
+    * needed that every cell in the box is finite (finite-cell counts equal
+    * the dense-grid capacity): Spark ranks NaN greatest while the rank
+    * machinery ranks finite cells only, so possible-NaN declines, and a
+    * NaN outside the box cannot change its ranks. The legacy monolith
+    * proves from its entries, which ARE the manifest. Shards fully inside
+    * a box that spans every trailing dim prove from their manifest
+    * summary alone (O(manifest), ≤2 partial end-shards open); a box that
+    * narrows a trailing dim must open every intersecting shard, so that
+    * path is accepted only under a bounded entry budget
+    * ([[maxPushedGroups]] entries) — past it the pushdown declines and
+    * Spark's distributed Percentile runs. */
   private[sources] def boxRankAnswerable(path: String, v: String,
                                          m: ZarrMeta.ArrayMeta,
                                          dims: Seq[String],
@@ -1252,24 +1007,36 @@ object MdioAggScan {
     }
   }
 
-  /** Closed-form exact SUM over a dim-index column: Σ_{i∈[lo,hi)} i times
-    * the other dims' clamped cell counts, computed in BigInt; None when
-    * the range is empty-safe-undecided or the exact value cannot be
-    * carried in the Long Spark's Sum over a long column produces. */
-  def dimSumExact(m: ZarrMeta.ArrayMeta, dims: Seq[String],
-                  ranges: Map[String, (Long, Long)], d: String): Option[Long] = {
-    val bounds = dims.zipWithIndex.map { case (dd, i) =>
-      val (lo, hi) = ranges.getOrElse(dd, (0L, m.shape(i)))
-      (math.max(lo, 0L), math.min(hi, m.shape(i)))
+  /** The 1-based ranks a pushed percentile op (`vpctd:p` | `vpctc:p`)
+    * reads over n ranked cells, in PercentileBase's arithmetic: DISC the
+    * ⌈p·n⌉-th smallest (the smallest value whose cume_dist ≥ p); CONT the
+    * two interpolation neighbours of position p·(n−1), repeated when the
+    * position is whole, so each op's rank count is constant and the
+    * grouped rank pass can map ranks to static slots. */
+  private[sources] def pctRanks(op: String, n: Long): Seq[Long] =
+    if (op.startsWith("vpctd"))
+      Seq((BigDecimal(pOf(op)) * n).setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
+    else {
+      val position = pOf(op) * (n - 1)
+      Seq(math.floor(position).toLong + 1, math.ceil(position).toLong + 1)
     }
-    if (bounds.exists { case (lo, hi) => lo >= hi }) return Some(0L) // empty → caller nulls
-    val (lo, hi) = bounds(dims.indexOf(d))
-    val others = dims.indices.filter(_ != dims.indexOf(d))
-      .map(i => BigInt(bounds(i)._2 - bounds(i)._1)).product
-    val idxSum = (BigInt(lo) + BigInt(hi - 1)) * BigInt(hi - lo) / 2
-    val total = idxSum * others
-    if (total.isValidLong) Some(total.toLong) else None
-  }
+
+  private def pOf(op: String): Double = op.substring(op.indexOf(':') + 1).toDouble
+
+  /** A pushed percentile op's answer from the values at its [[pctRanks]],
+    * in order. The CONT interpolation replicates
+    * PercentileBase.getPercentile's exact double arithmetic
+    * (`lo·(⌈pos⌉−pos) + hi·(pos−⌊pos⌋)`), so the pushed answer is
+    * bit-identical to the unpushed one. */
+  private[sources] def pctValue(op: String, n: Long, at: Seq[Double]): Double =
+    if (op.startsWith("vpctd")) at.head
+    else {
+      val position = pOf(op) * (n - 1)
+      val lower = math.floor(position).toLong
+      val higher = math.ceil(position).toLong
+      if (higher == lower) at.head
+      else at.head * (higher - position) + at(1) * (position - lower)
+    }
 
   /** C-order chunk keys of a chunk-index box. */
   def boxKeys(box: Seq[(Long, Long)]): Iterator[String] =
@@ -1361,28 +1128,33 @@ object MdioAggScan {
     }
   }
 
-  /** Per-SLAB metadata aggregate rows for a pushed
+  /** Per-SLAB metadata aggregate rows for a pushed aggregation over
     * `GROUP BY FLOOR(dim1/L1)[, FLOOR(dim2/L2), …]` — the per-inline /
     * per-depth-slab / per-TILE QC pass (reference statsV1,
-    * mdio/stats.h:229-335, generalized along one or more axes) answered
-    * entirely from the stats sidecar: each group is an `L1×L2×…` box of
-    * indices, a whole number of chunks when every `Li % chunkSize(dimi)
-    * == 0`, so a slab's MIN/MAX/SUM/AVG/COUNT is the exact union of its
-    * chunks' entries — zero chunk files opened however large the store.
-    * Returns one row per slab tuple intersecting the (chunk-aligned)
-    * pushed ranges, group values first in pushed order; None when any
-    * precondition fails (misaligned slice, stale or partial stats, an Li
-    * not chunk-aligned, a duplicate grouped dim, a variable that is not
-    * a full-dimensional scalar, per-slab integral SUM overflow) — the
-    * caller then declines the pushdown and a real scan runs. */
+    * mdio/stats.h:229-335, generalized along one or more axes) — or, with
+    * no `groups`, the ungrouped aggregate as its one slab, answered
+    * entirely from metadata: each group is an `L1×L2×…` box of indices, a
+    * whole number of chunks when every `Li % chunkSize(dimi) == 0`, so a
+    * slab's value MIN/MAX/SUM/AVG/VAR is the exact union of its chunks'
+    * sidecar entries, and its COUNT, COUNT(DISTINCT dim) and dim
+    * MIN/MAX/SUM follow from the slab's clamped bounds — zero chunk files
+    * opened however large the store. Returns one row per slab tuple
+    * intersecting the pushed ranges, group values first in pushed order.
+    * A grouped aggregate over an empty box has no rows; an ungrouped one
+    * has exactly one (COUNT 0, dim extrema and sums NULL). None when any
+    * precondition fails (a value op over a misaligned or empty slice,
+    * stale or partial stats, an Li not chunk-aligned, a duplicate grouped
+    * dim, a variable that is not a full-dimensional scalar, a sum that
+    * leaves the Long range, more groups than the cap) — the caller then
+    * declines the pushdown and a real scan runs. */
   def slabRows(path: String, dims: Seq[String],
                metas: Map[String, ZarrMeta.ArrayMeta],
                ranges: Map[String, (Long, Long)],
                aggs: Seq[(String, String)],
                groups: Seq[(String, Long)]): Option[Seq[Array[Any]]] = {
     val dis = groups.map { case (d, _) => dims.indexOf(d) }
-    if (groups.isEmpty || dis.exists(_ < 0) || dis.distinct.size != dis.size ||
-        groups.exists(_._2 <= 0)) return None
+    if (dis.exists(_ < 0) || dis.distinct.size != dis.size || groups.exists(_._2 <= 0))
+      return None
     val anchor = metas.values.head
     // one driver row per slab rides planInputPartitions — the shared
     // group cap bounds it exactly like the grouped percentile's bracket
@@ -1394,9 +1166,10 @@ object MdioAggScan {
       val (lo, hi) = ranges.getOrElse(d, (0L, shape(i)))
       (math.max(lo, 0L), math.min(hi, shape(i)))
     }
-    if (bounds.exists { case (lo, hi) => lo >= hi }) return Some(Seq.empty)
+    val empty = bounds.exists { case (lo, hi) => lo >= hi }
+    if (empty && groups.nonEmpty) return Some(Seq.empty)
     // per-variable: every slab width must cover whole chunks and the stats
-    // must cover the (chunk-aligned) scan box, moments included for vsum
+    // must cover the (chunk-aligned, so non-empty) scan box
     val vars = aggs.collect { case (op, v) if op.startsWith("v") => v }.distinct
     val perVar: Map[String, Map[String, MdioChunkStats.Entry]] =
       vars.map { v =>
@@ -1414,39 +1187,38 @@ object MdioAggScan {
     val rows = MdioScan.cartesian(groups.zip(dis).map { case ((_, l), di) =>
       (bounds(di)._1 / l) to ((bounds(di)._2 - 1) / l)
     }).map { gs =>
-      // slab-clamped cell range per grouped dim
-      val slabbed = groups.zip(dis).zip(gs).foldLeft(ranges) {
-        case (r, (((d, l), di), g)) =>
-          val (dLo, dHi) = bounds(di)
-          r.updated(d, (math.max(dLo, g * l), math.min(dHi, (g + 1) * l)))
-      }
-      val slabCells = bounds.zipWithIndex.map { case ((lo, hi), i) =>
+      // the slab's clamped cell range per dim
+      val slab = bounds.zipWithIndex.map { case ((lo, hi), i) =>
         dis.indexOf(i) match {
-          case -1 => hi - lo
+          case -1 => (lo, hi)
           case k =>
-            val l = groups(k)._2
-            val g = gs(k)
-            math.min(hi, (g + 1) * l) - math.max(lo, g * l)
-        }
-      }.product
-      def slabEntries(v: String): Option[Seq[MdioChunkStats.Entry]] = {
-        val entries = perVar(v)
-        alignedChunkBox(metas(v), dims, slabbed).flatMap { box =>
-          val es = boxKeys(box).map(entries.get).toSeq
-          if (es.exists(_.isEmpty)) None else Some(es.map(_.get))
+            val (l, g) = (groups(k)._2, gs(k))
+            (math.max(lo, g * l), math.min(hi, (g + 1) * l))
         }
       }
+      val cells = if (empty) 0L else slab.map { case (lo, hi) => hi - lo }.product
+      def extent(d: String): (Long, Long) = slab(dims.indexOf(d))
       val values: Array[Any] = aggs.map {
-        case ("count", _) => slabCells
-        case (op @ ("vmin" | "vmax" | "vsum" | "vavg" |
-                    "vvarp" | "vvars" | "vstdp" | "vstds"), v) =>
+        case ("count", _) => cells
+        case ("dcnt", d) => if (empty) 0L else { val (lo, hi) = extent(d); hi - lo }
+        case ("min", d) => if (empty) null else extent(d)._1
+        case ("max", d) => if (empty) null else extent(d)._2 - 1
+        case ("dsum", d) =>
+          // Σ_{i∈[lo,hi)} i times the other dims' cell counts, exact in
+          // BigInt; past Long, Spark's own Sum over the scan answers
+          if (empty) null
+          else {
+            val (lo, hi) = extent(d)
+            val total = (BigInt(lo) + (hi - 1)) * (hi - lo) / 2 * (cells / (hi - lo))
+            if (total.isValidLong) total.toLong else return None
+          }
+        case (op, v) =>
           val m = metas(v)
-          val dt = MdioTableUtil.sparkTypeOf(m.dtype)
-          val isFloat = m.dtype.charAt(m.dtype.length - 2) == 'f'
-          slabEntries(v).flatMap(answer(op, _, dt, isFloat, slabCells))
-            .getOrElse(return None)
-        case other =>
-          throw new IllegalStateException(s"unsupported grouped agg $other")
+          val entries = perVar(v)
+          val box = alignedChunkBox(m, dims, dims.zip(slab).toMap).getOrElse(return None)
+          val es = boxKeys(box).map(k => entries.getOrElse(k, return None)).toSeq
+          answer(op, es, MdioTableUtil.sparkTypeOf(m.dtype),
+            m.dtype.charAt(m.dtype.length - 2) == 'f', cells).getOrElse(return None)
       }.toArray
       gs.map(g => g: Any).toArray ++ values
     }.toSeq
@@ -1454,17 +1226,14 @@ object MdioAggScan {
   }
 }
 
-final case class MdioAggPartition(values: Array[Any]) extends InputPartition
-
-/** Multi-row metadata partition: one row per chunk-aligned slab of a
-  * pushed GROUP BY (group value first, then the aggregates). */
+/** The metadata partition: one row per slab of a pushed aggregation
+  * (group values first, then the aggregates; one row ungrouped). */
 final case class MdioAggRowsPartition(rows: Seq[Array[Any]]) extends InputPartition
 
 final case class MdioAggReaderFactory() extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val it: Iterator[Array[Any]] = p match {
-        case MdioAggPartition(values) => Iterator.single(values)
         case MdioAggRowsPartition(rows) => rows.iterator
         case other => throw new IllegalStateException(s"unexpected partition $other")
       }
@@ -1712,25 +1481,14 @@ final case class MdioScan(path: String, dims: Seq[String],
     // cannot already prove them fully prunable — a selective value-only
     // predicate on a 100 TB store skips whole shards from the manifest's
     // per-shard bounds unions without opening them
-    // (MdioChunkStats.currentForPruning).
-    // an explicit chunkKeys allowlist bounds the sidecar read further: the
-    // scan plans only the listed chunks, so only the shards their LEADING
-    // indices touch can matter — a countInRange/kthSmallest boundary probe
-    // on a 100 TB store reads O(probed range) shard files, not every shard
-    // the value predicate intersects
-    val leadClamp: Option[(Long, Long)] = chunkKeys.collect {
-      case keys if keys.nonEmpty =>
-        val leads = keys.map(MdioChunkStats.leadIdx)
-        (leads.min, leads.max)
-    }
+    // (MdioChunkStats.currentForPruning). An explicit chunkKeys allowlist
+    // reads no sidecar: its callers triaged its chunks from the sidecar
+    // already, and pruning never decides correctness.
     val varStats: Map[String, (Long, Set[Long], Map[String, MdioChunkStats.Entry])] =
-      if (valueRanges.isEmpty) Map.empty
+      if (valueRanges.isEmpty || chunkKeys.isDefined) Map.empty
       else valueRanges.flatMap { case (v, range) =>
-        val lo0 = chunkLo.headOption.getOrElse(0L)
-        val hi0 = chunkHi.headOption.getOrElse(0L)
         MdioChunkStats.currentForPruning(ZarrMeta.path(path).resolve(v),
-          leadClamp.fold(lo0) { case (l, _) => math.max(lo0, l) },
-          leadClamp.fold(hi0) { case (_, h) => math.min(hi0, h) },
+          chunkLo.headOption.getOrElse(0L), chunkHi.headOption.getOrElse(0L),
           metas(v).chunkGrid, range.intersects).map(v -> _)
       }.toMap
     val statsActive = varStats.nonEmpty
@@ -1902,9 +1660,9 @@ final case class MdioScan(path: String, dims: Seq[String],
       // countInRange/kthSmallest boundary probes): plan EXACTLY the listed
       // chunks in ONE scan node, where a per-chunk union of dim-boxed scans
       // would carry one plan leg each. Enumerates from the keys, not the
-      // grid (O(keys) driver work, not O(box)); value-stat pruning and
-      // runtime IN-filters still apply conjunctively; keys outside the
-      // clamped bounds are skipped.
+      // grid (O(keys) driver work, not O(box)) and reads no sidecar for
+      // value-range pruning; static IN-filters still apply conjunctively;
+      // keys outside the clamped bounds are skipped.
       chunkKeys.get.iterator
         .map(k => Vector(k.split("\\.").map(_.toLong): _*))
         .filter(cc => cc.size == dims.size && cc.indices.forall(i =>

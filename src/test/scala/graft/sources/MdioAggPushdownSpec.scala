@@ -7,7 +7,9 @@ import java.nio.file.Files
 
 /** Aggregate pushdown: COUNT(*)/MIN(dim)/MAX(dim) answered entirely from
   * chunk-grid metadata — exact under dense-grid semantics, zero chunk
-  * files opened (the O(1) extents-of-a-100TB-store path). */
+  * files opened (the O(1) extents-of-a-100TB-store path) — and value
+  * aggregates from the stats sidecar, ungrouped as the one-slab case of
+  * the grouped answer. */
 class MdioAggPushdownSpec extends SparkSpec {
   import spark.implicits._
 
@@ -144,6 +146,61 @@ class MdioAggPushdownSpec extends SparkSpec {
     val s = df.agg(sum($"image"))
     assert(fmt(s).contains("vsum(image)"), fmt(s).take(400))
     assert(s.as[Double].head() == cells.map(_._3).sum)
+    MdioWriter.delete(dir)
+  }
+
+  test("MIN/MAX/SUM/AVG of one variable open each sidecar shard at most twice") {
+    val dir = create()
+    val cells = for { i <- 0L until 32L; x <- 0L until 8L } yield (i, x, (i * 8 + x).toDouble)
+    MdioWriter.writeVariable(spark,
+      cells.toDF("inline", "crossline", "image"), dir, "image")
+    // one lead chunk per shard: the 4 × 2 chunk grid files 4 shards
+    val varDir = graft.zarr.ZarrMeta.path(dir).resolve("image")
+    MdioChunkStats.write(varDir, MdioChunkStats.generation(varDir),
+      MdioChunkStats.current(varDir).get, span = 1)
+    // each intersecting shard opens once when the plan is proven and once
+    // when the execution re-checks it, however many aggregates share it
+    for ((slice, shards, in) <- Seq(
+        (lit(true), 4, cells),
+        ($"inline" >= 8 && $"inline" < 24, 2, cells.filter(c => c._1 >= 8 && c._1 < 24)))) {
+      val s0 = MdioChunkStats.shardReadCount.get()
+      val df = spark.read.format("mdio").load(dir).filter(slice)
+        .agg(min($"image"), max($"image"), sum($"image"), avg($"image"))
+      val r = df.collect().head
+      val opens = MdioChunkStats.shardReadCount.get() - s0
+      val vs = in.map(_._3)
+      assert((0 until 4).map(r.getDouble) == Seq(vs.min, vs.max, vs.sum, vs.sum / vs.size))
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.exists(_.isInstanceOf[MdioAggScan]), df.queryExecution.optimizedPlan)
+      assert(opens <= 2 * shards, s"$opens shard opens for $shards intersecting shards")
+    }
+    MdioWriter.delete(dir)
+  }
+
+  test("a NaN chunk answers SUM/AVG/VAR as NaN from a bounds-only sidecar, grouped or not") {
+    val dir = create()
+    val cells = for { i <- 0L until 32L; x <- 0L until 8L }
+      yield (i, x, if (i % 16 == 3 && x == 1) Double.NaN else (i + x).toDouble)
+    MdioWriter.writeVariable(spark,
+      cells.toDF("inline", "crossline", "image"), dir, "image")
+    // one NaN cell per 16-inline slab; strip every entry's moments (the
+    // pre-moments sidecar format): NaN poisons the answer whatever the
+    // moments would have said
+    val varDir = graft.zarr.ZarrMeta.path(dir).resolve("image")
+    MdioChunkStats.write(varDir, MdioChunkStats.generation(varDir),
+      MdioChunkStats.current(varDir).get.map { case (k, e) => k -> e.map(_.copy(moments = None)) })
+    val base = spark.read.format("mdio").load(dir)
+    for (df <- Seq(base.agg(sum($"image"), avg($"image"), var_pop($"image")),
+                   base.groupBy(floor($"inline" / 16)).agg(sum($"image"), avg($"image"),
+                     var_pop($"image")))) {
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+      }.exists(_.isInstanceOf[MdioAggScan]), df.queryExecution.optimizedPlan)
+      val rows = df.collect()
+      assert(rows.nonEmpty && rows.forall(r =>
+        (r.size - 3 until r.size).forall(i => r.getDouble(i).isNaN)), rows.toSeq)
+    }
     MdioWriter.delete(dir)
   }
 }

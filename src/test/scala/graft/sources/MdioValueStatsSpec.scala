@@ -388,10 +388,10 @@ class MdioValueStatsSpec extends SparkSpec {
     assert(r == MdioStats.CountInRange(21L, 2L, 5L, 1L, fallback = false), r)
     val opened = MdioChunkStats.shardReadCount.get() - before
     // shards 0-1 (unions inside [0,20]) count their manifest cells whole,
-    // 3-7 (disjoint) prove zero — only boundary shard 2 opens: once for
-    // the driver triage and once in the straddler scan's own pruning (the
-    // chunkKeys lead clamp bounds the scan's sidecar read to the probe)
-    assert(opened == 2, s"opened $opened shard files, want 2 (boundary shard only)")
+    // 3-7 (disjoint) prove zero — only boundary shard 2 opens, once, for
+    // the driver triage (the straddler scan's chunkKeys allowlist reads no
+    // sidecar)
+    assert(opened == 1, s"opened $opened shard files, want 1 (boundary shard only)")
     // whole-domain count: every shard answers from the manifest, zero opens
     val before2 = MdioChunkStats.shardReadCount.get()
     val rAll = MdioStats.countInRange(spark, dir, "v", 0.0, 63.0)
@@ -413,9 +413,9 @@ class MdioValueStatsSpec extends SparkSpec {
     val opened = MdioChunkStats.shardReadCount.get() - before
     // the coarse bracket over shard summaries alone lands on window
     // (15, 23]: shards 0-1 (below) and 3-7 (above) rank through their
-    // manifest `cells` and never open; shard 2 opens once for chunk-level
-    // refinement and once in the window scan's pruning
-    assert(opened == 2, s"opened $opened shard files, want 2 (window shard only)")
+    // manifest `cells` and never open; shard 2 opens once, for chunk-level
+    // refinement (the window scan's chunkKeys allowlist reads no sidecar)
+    assert(opened == 1, s"opened $opened shard files, want 1 (window shard only)")
     MdioWriter.delete(dir)
   }
 
@@ -653,9 +653,9 @@ class MdioValueStatsSpec extends SparkSpec {
     val before = MdioChunkStats.shardReadCount.get()
     val r2 = MdioStats.countInRangeByBox(spark, dir, "v", 4.0, 19.0, Seq(16L))
     assert(rows(r2) == rows(r) && r2.scannedChunks == 2, r2)
-    // 2 triage opens (straddling shards 0 and 2) + the straddler scan's
-    // own clamped sidecar read over its lead range [0, 2] (3 shards)
-    assert(MdioChunkStats.shardReadCount.get() - before <= 5,
+    // 2 triage opens (straddling shards 0 and 2); the straddler scan's
+    // chunkKeys allowlist reads no sidecar
+    assert(MdioChunkStats.shardReadCount.get() - before <= 2,
       "interior shards must decide from the manifest")
     // misaligned groups and stale stats: loud fallback, same rows
     val rMis = MdioStats.countInRangeByBox(spark, dir, "v", 4.0, 19.0, Seq(12L))

@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage =="
+echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage, one metadata-aggregate answer =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -39,10 +39,10 @@ else
   echo "one write route (no DataWriterFactory, BatchWrite, RequiresDistributionAndOrdering, spark.graft.sink.)"
 fi
 # every chunk scan plans MdioChunkRuns: no second chunk-reading partition
-# class beside the run and the two metadata-answer partitions, and coalesced
+# class beside the run and the one metadata-answer partition, and coalesced
 # ranges size by Spark's spark.sql.files.maxPartitionBytes, not a private knob
 parts=$(perl -0777 -ne 'while (/\b(?:class|object)\s+(\w+)(?:(?!\b(?:class|object)\b)[^{])*?\b(?:extends|with)\s+InputPartition\b/g) {
-  print "$ARGV: $1\n" unless $1 =~ /^(MdioChunkRun|MdioAggPartition|MdioAggRowsPartition)$/ }' \
+  print "$ARGV: $1\n" unless $1 =~ /^(MdioChunkRun|MdioAggRowsPartition)$/ }' \
   $(find src/main/scala/graft/sources -name '*.scala'))
 knob=$(grep -rn "spark\.graft\.scan\.targetPartitionBytes" src/main/)
 if [ -n "$parts$knob" ]; then
@@ -51,7 +51,7 @@ if [ -n "$parts$knob" ]; then
   [ -n "$knob" ] && echo "$knob"
   fail=1
 else
-  echo "one scan partition (MdioChunkRun beside MdioAggPartition, MdioAggRowsPartition; no spark.graft.scan.targetPartitionBytes)"
+  echo "one scan partition (MdioChunkRun beside MdioAggRowsPartition; no spark.graft.scan.targetPartitionBytes)"
 fi
 
 # the direct QC operators triage one item walk: sidecar shard files open
@@ -66,6 +66,17 @@ if [ "$reads" -gt 2 ] || [ -n "$single" ]; then
   fail=1
 else
   echo "one QC triage ($reads MdioChunkStats.readShard( calls in MdioStats.scala, no selectByRank)"
+fi
+
+# a pushed aggregate has one metadata answer, MdioAggScan.slabRows (an
+# ungrouped aggregate is its one slab): no per-op plan-time proof or
+# ungrouped value path beside it
+proofs=$(grep -rnE "def (stats|sum|avg|var|moments|rank)Answerable|def statValue" src/main/)
+if [ -n "$proofs" ]; then
+  echo "AGG ANSWER LINT RED: a second metadata-aggregate answer in src/main/:"; echo "$proofs"
+  fail=1
+else
+  echo "one metadata-aggregate answer (no *Answerable proofs beside boxRankAnswerable, no statValue)"
 fi
 
 echo "== 2/6 full test suite =="
