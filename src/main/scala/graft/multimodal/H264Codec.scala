@@ -53,7 +53,7 @@ import java.io.ByteArrayOutputStream
   * the multimodal_jpeg DC-only discipline, extended to AC (the GIF/JPEG
   * exact-by-construction rule).
   * Reference intent parity: mdio has no video layer; this serves the
-  * crawl-pipeline surface next to JpegCodec/Mp4Codec.
+  * crawl-pipeline surface next to Images/Mp4Codec.
   */
 object H264Codec {
 

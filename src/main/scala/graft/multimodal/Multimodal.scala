@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal (image/audio/video) column plumbing.
@@ -8,19 +8,17 @@ import org.apache.spark.sql.functions._
   * Media are opaque `binary` columns travelling next to a typed metadata
   * struct. The Spark-side contract — schema, partition sizing, batched
   * per-partition decode loop, feature schema — is real and tested, and
-  * the decode stage runs REAL parsers for `image/bmp` ([[BmpCodec]]:
-  * pure-JVM 24-bpp BMP), `image/png` ([[PngCodec]]: zlib + the five PNG
-  * row filters — a genuinely compressed format) and `audio/wav`
-  * ([[WavCodec]]: RIFF/PCM) and `image/jpeg` ([[JpegCodec]]: baseline
-  * sequential Huffman + dequant + IDCT — a genuine DCT format) payloads,
-  * no media library needed. `video/mp4` containers are parsed FOR REAL
-  * by [[Mp4Codec]] (ISO-BMFF box walk + full sample-table
-  * reconstruction — the distributed half of video ingest); only the
-  * per-sample PIXEL decode (H.264 et al. — video codecs absent in this
-  * container) falls back to [[StubDecoder.decode]], a clearly-marked
-  * deterministic fake; swapping in a real decoder (JNI ffmpeg or an
-  * Arrow-batched python worker) changes ONE match arm, none of the
-  * plumbing.
+  * the decode stage runs REAL decoders: still images (`image/bmp`,
+  * `image/png`, `image/gif`, `image/jpeg`) through the JDK's
+  * `javax.imageio` behind [[Images]], which keeps the loud-failure
+  * contract (malformed input throws `IllegalArgumentException`, never a
+  * silent answer); `audio/wav` through [[WavCodec]] (RIFF/PCM);
+  * `video/h264` intra pictures through [[H264Codec]]; `video/mp4`
+  * containers through [[Mp4Codec]] (ISO-BMFF box walk + full sample-table
+  * reconstruction), whose Motion-JPEG keyframes decode through [[Images]]
+  * again. Any other format falls back to [[StubDecoder.decode]], a
+  * clearly-marked deterministic fake; a real decoder for it changes ONE
+  * match arm, none of the plumbing.
   */
 object Multimodal {
 
@@ -73,159 +71,102 @@ object Multimodal {
       .unionByName(attachWavPayload(branch(4)))
   }
 
-  /** Attach a REAL encoded image payload: a deterministic grayscale
-    * image synthesized from the document's UTF-8 bytes (pixel i = byte
-    * i mod len), encoded as a standards-conforming 24-bpp BMP by
-    * [[BmpCodec]]. Unlike [[attachPayload]]'s opaque fake, these
-    * payloads decode through a real parser — the decode stage of the
-    * pipeline runs genuine image bytes end to end. */
-  def attachBmpPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(64)) + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(48)) + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val gray = new Array[Byte](w * h)
-        if (t.nonEmpty) {
-          var i = 0
-          while (i < gray.length) { gray(i) = t(i % t.length); i += 1 }
-        }
-        MediaRow(id, BmpCodec.encode(w, h, gray), "image/bmp", w, h)
+  /** doc_id, the text's UTF-8 bytes (empty for NULL) and the fixture
+    * geometry of every document. */
+  private def sized(docs: DataFrame, width: Column, height: Column): Dataset[(Long, Array[Byte], Int, Int)] = {
+    import docs.sparkSession.implicits._
+    wide(docs).select(col("doc_id"), coalesce(col("text"), lit("")).cast("binary"),
+        width.cast("int"), height.cast("int"))
+      .as[(Long, Array[Byte], Int, Int)]
+  }
+
+  /** Pixel i = text byte i mod len (all black for empty text): the image
+    * of the BMP, PNG and GIF fixtures. */
+  private def cycleGray(t: Array[Byte], w: Int, h: Int): Array[Byte] = {
+    val gray = new Array[Byte](w * h)
+    if (t.nonEmpty) {
+      var i = 0
+      while (i < gray.length) { gray(i) = t(i % t.length); i += 1 }
+    }
+    gray
+  }
+
+  /** Block-constant pixels: 8×8 block k = text byte (shift + k) mod len
+    * (all black for empty text): the image of the JPEG fixtures and, with
+    * a per-frame shift, of the MJPEG frames. */
+  private def blockGray(t: Array[Byte], w: Int, h: Int, shift: Int): Array[Byte] = {
+    val gray = new Array[Byte](w * h)
+    if (t.nonEmpty) {
+      val bw = w / 8
+      var i = 0
+      while (i < gray.length) {
+        gray(i) = t((shift + (i / w / 8) * bw + (i % w) / 8) % t.length)
+        i += 1
+      }
+    }
+    gray
+  }
+
+  /** `format` payloads of [[cycleGray]] images, w = doc_id % 64 + 16 and
+    * h = doc_id % 48 + 16, encoded by [[Images.encode]]. */
+  private def attachCycleGray(docs: DataFrame, format: String): DataFrame = {
+    import docs.sparkSession.implicits._
+    sized(docs, pmod(col("doc_id"), lit(64)) + 16, pmod(col("doc_id"), lit(48)) + 16)
+      .map { case (id, t, w, h) => MediaRow(id, Images.encode(format, w, h, cycleGray(t, w, h)), format, w, h) }
+      .toDF()
+  }
+
+  /** Attach a REAL encoded image payload: a deterministic grayscale image
+    * synthesized from the document's UTF-8 bytes ([[cycleGray]]), written
+    * as a 24-bpp BMP (b=g=r). Unlike [[attachPayload]]'s opaque fake,
+    * these payloads decode through a real parser end to end. */
+  def attachBmpPayload(docs: DataFrame): DataFrame = attachCycleGray(docs, "image/bmp")
+
+  /** The BMP fixture's pixels as a zlib-compressed, row-filtered 8-bit
+    * gray PNG. */
+  def attachPngPayload(docs: DataFrame): DataFrame = attachCycleGray(docs, "image/png")
+
+  /** The BMP fixture's pixels as single-frame LZW GIF89a over a 256-entry
+    * gray palette. */
+  def attachGifPayload(docs: DataFrame): DataFrame = attachCycleGray(docs, "image/gif")
+
+  /** [[blockGray]] images (shift 0; w = (doc_id % 8)·8 + 16, h =
+    * (doc_id % 6)·8 + 16) as gray JPEG at quality 1.0: block-constant
+    * content is DC-only and survives the lossy format EXACTLY under the
+    * all-ones quantization tables, so decoded pixel sums stay
+    * SQL-certifiable. */
+  private def attachBlockGray(docs: DataFrame, progressive: Boolean): DataFrame = {
+    import docs.sparkSession.implicits._
+    sized(docs, pmod(col("doc_id"), lit(8)) * 8 + 16, pmod(col("doc_id"), lit(6)) * 8 + 16)
+      .map { case (id, t, w, h) =>
+        MediaRow(id, Images.encode("image/jpeg", w, h, blockGray(t, w, h, 0), progressive),
+          "image/jpeg", w, h)
       }
       .toDF()
   }
 
-  /** Attach a REAL compressed image payload: the same deterministic
-    * grayscale image as [[attachBmpPayload]] (pixel i = UTF-8 byte i mod
-    * len), but encoded as a PNG by [[PngCodec]] — zlib-compressed with
-    * per-row filters, so the decode stage exercises a genuinely
-    * compressed format end to end. */
-  def attachPngPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(64)) + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(48)) + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val gray = new Array[Byte](w * h)
-        if (t.nonEmpty) {
-          var i = 0
-          while (i < gray.length) { gray(i) = t(i % t.length); i += 1 }
-        }
-        MediaRow(id, PngCodec.encode(w, h, gray), "image/png", w, h)
-      }
-      .toDF()
-  }
+  /** Baseline (SOF0) JPEG fixture: see [[attachBlockGray]]. */
+  def attachJpegPayload(docs: DataFrame): DataFrame = attachBlockGray(docs, progressive = false)
 
-  /** LZW twin of [[attachPngPayload]]: the SAME deterministic grayscale
-    * pixels (pixel i = UTF-8 byte i mod len) wire-encoded as single-frame
-    * GIF89a by [[GifCodec]] — variable-width LZW with the width-growth
-    * and table-full-clear rules, a 256-entry gray global palette. The
-    * decode stage exercises a third genuinely-compressed image format
-    * (after zlib/PNG and DCT/JPEG) end to end. */
-  def attachGifPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(64)) + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(48)) + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val gray = new Array[Byte](w * h)
-        if (t.nonEmpty) {
-          var i = 0
-          while (i < gray.length) { gray(i) = t(i % t.length); i += 1 }
-        }
-        MediaRow(id, GifCodec.encode(w, h, gray), "image/gif", w, h)
-      }
-      .toDF()
-  }
-
-  /** Attach a REAL DCT-compressed image payload: a deterministic
-    * BLOCK-CONSTANT grayscale image (every 8×8 block carries one UTF-8
-    * byte of the text: block k = byte k mod len; dims are multiples of 8)
-    * encoded as baseline JPEG by [[JpegCodec]]. Block-constant content
-    * survives the lossy wire format EXACTLY (DC-only blocks, all-ones
-    * quantization), so decoded pixel sums stay SQL-certifiable while the
-    * decode stage runs a genuine Huffman+IDCT parser end to end. */
-  def attachJpegPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(8)) * 8 + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(6)) * 8 + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val gray = new Array[Byte](w * h)
-        if (t.nonEmpty) {
-          val bw = w / 8
-          var i = 0
-          while (i < gray.length) {
-            val block = (i / w / 8) * bw + (i % w) / 8
-            gray(i) = t(block % t.length)
-            i += 1
-          }
-        }
-        MediaRow(id, JpegCodec.encode(w, h, gray), "image/jpeg", w, h)
-      }
-      .toDF()
-  }
-
-  /** Progressive twin of [[attachJpegPayload]]: the SAME deterministic
-    * block-constant images wire-encoded as four-scan progressive SOF2
-    * ([[JpegCodec.encodeProgressive]]: shifted DC first, two spectral AC
-    * bands as cross-block EOB runs, DC refinement bits). The decoded
+  /** Progressive (SOF2) twin of [[attachJpegPayload]]: the SAME images in
+    * the JDK writer's successive-approximation scan script. The decoded
     * pixels are identical to the baseline twin's, so the SAME oracle
-    * arithmetic certifies the successive-approximation decode path. */
-  def attachJpegProgressivePayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(8)) * 8 + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(6)) * 8 + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val gray = new Array[Byte](w * h)
-        if (t.nonEmpty) {
-          val bw = w / 8
-          var i = 0
-          while (i < gray.length) {
-            val block = (i / w / 8) * bw + (i % w) / 8
-            gray(i) = t(block % t.length)
-            i += 1
-          }
-        }
-        MediaRow(id, JpegCodec.encodeProgressive(w, h, gray), "image/jpeg", w, h)
-      }
-      .toDF()
-  }
+    * arithmetic certifies the progressive decode. */
+  def attachJpegProgressivePayload(docs: DataFrame): DataFrame = attachBlockGray(docs, progressive = true)
 
   /** Color twin of [[attachJpegPayload]]: a deterministic
     * MACROBLOCK-CONSTANT RGB image (every 16×16 macroblock k carries three
     * consecutive UTF-8 bytes of the text: R = byte 3k, G = byte 3k+1,
-    * B = byte 3k+2, each mod len; dims are multiples of 16) encoded as
-    * baseline 4:2:0 YCbCr JPEG by [[JpegCodec.encodeColor]]. Constant
+    * B = byte 3k+2, each mod len; dims are multiples of 16) written as
+    * baseline 4:2:0 YCbCr JPEG by [[Images.encodeJpegColor]]. Constant
     * macroblocks give constant Y/Cb/Cr blocks that survive the lossy
-    * format exactly, and the fixed-point luma ([[JpegCodec.lumaOf]]) is
+    * format exactly, and the fixed-point luma ([[Images.lumaOf]]) is
     * reproducible in SQL — so the oracle certifies the decoded mean luma
-    * of a COLOR image through the full interleaved-scan entropy decode. */
+    * of a COLOR image through the interleaved-scan decode. */
   def attachJpegColorPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(4)) * 16 + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(3)) * 16 + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
+    import docs.sparkSession.implicits._
+    sized(docs, pmod(col("doc_id"), lit(4)) * 16 + 16, pmod(col("doc_id"), lit(3)) * 16 + 16)
+      .map { case (id, t, w, h) =>
         val rgb = new Array[Byte](3 * w * h)
         if (t.nonEmpty) {
           val mbw = w / 16
@@ -238,7 +179,7 @@ object Multimodal {
             i += 1
           }
         }
-        MediaRow(id, JpegCodec.encodeColor(w, h, rgb), "image/jpeg", w, h)
+        MediaRow(id, Images.encodeJpegColor(w, h, rgb), "image/jpeg", w, h)
       }
       .toDF()
   }
@@ -302,31 +243,14 @@ object Multimodal {
     * index AND the pixels are real; [[decodeMjpegKeyframes]] closes the
     * video-pixel-decode loop for this codec class (inter-predicted codecs
     * like H.264 remain the [[StubDecoder]]'s honest out-of-scope). Frame
-    * fi is block-constant with 8×8 block k = text byte (fi·7 + k) mod len
-    * — FRAME-VARYING, so a demuxer that confuses samples cannot match the
-    * oracle. 8 frames per doc, keyframes at samples 0 and 4. */
+    * fi is [[blockGray]] with shift fi·7 — FRAME-VARYING, so a demuxer
+    * that confuses samples cannot match the oracle. 8 frames per doc,
+    * keyframes at samples 0 and 4. */
   def attachMjpegPayload(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    wide(docs).select(col("doc_id"), col("text"),
-      (pmod(col("doc_id"), lit(8)) * 8 + 16).cast("int").as("width"),
-      (pmod(col("doc_id"), lit(6)) * 8 + 16).cast("int").as("height"))
-      .as[(Long, String, Int, Int)]
-      .map { case (id, text, w, h) =>
-        val t = Option(text).getOrElse("").getBytes("UTF-8")
-        val bw = w / 8
-        val frames = Array.tabulate(8) { fi =>
-          val gray = new Array[Byte](w * h)
-          if (t.nonEmpty) {
-            var i = 0
-            while (i < gray.length) {
-              val block = (i / w / 8) * bw + (i % w) / 8
-              gray(i) = t((fi * 7 + block) % t.length)
-              i += 1
-            }
-          }
-          JpegCodec.encode(w, h, gray)
-        }
+    import docs.sparkSession.implicits._
+    sized(docs, pmod(col("doc_id"), lit(8)) * 8 + 16, pmod(col("doc_id"), lit(6)) * 8 + 16)
+      .map { case (id, t, w, h) =>
+        val frames = Array.tabulate(8)(fi => Images.encode("image/jpeg", w, h, blockGray(t, w, h, fi * 7)))
         MediaRow(id, Mp4Codec.mux(w, h, frames.map(_.length), i => frames(i)),
           "video/mjpeg", w, h)
       }
@@ -444,15 +368,16 @@ object Multimodal {
 
   /** REAL VIDEO PIXEL DECODE: demux each MJPEG container's sample table,
     * slice out the KEYFRAME samples (stss — the frames a sampling
-    * pipeline actually decodes), and run each through the pure-JVM
-    * [[JpegCodec]] entropy decode + dequant + IDCT. Per-partition
-    * streaming ([[extractFeatures]]'s discipline): one pass, no
-    * materialization, partition count bounds memory. */
+    * pipeline actually decodes), and decode each as a JPEG through
+    * [[Images]]. Per-partition streaming ([[extractFeatures]]'s
+    * discipline): one pass, one decoder context per partition, no
+    * materialization. */
   def decodeMjpegKeyframes(spark: SparkSession, media: DataFrame): Dataset[KeyframeLuma] = {
     import spark.implicits._
     media.select("doc_id", "payload", "format", "width", "height")
       .as[MediaRow]
       .mapPartitions { rows =>
+        val images = Images.decoder()
         rows.flatMap { r =>
           val tr = Mp4Codec.parse(r.payload)
           tr.keyframes.iterator.map { k =>
@@ -461,7 +386,7 @@ object Multimodal {
               s"mjpeg: sample $k overruns payload")
             val bytes = java.util.Arrays.copyOfRange(
               r.payload, off.toInt, off.toInt + tr.sizes(k))
-            val dec = JpegCodec.decode(bytes)
+            val dec = images.decode("image/jpeg", bytes)
             KeyframeLuma(r.doc_id, k, dec.meanLuma, dec.width, dec.height)
           }
         }
@@ -493,35 +418,20 @@ object Multimodal {
   }
 
   /** Batched per-partition decode/feature-extract — the Scala analog of
-    * `mapInPandas`: one decoder context per partition (real codecs are
-    * expensive to init), streaming iterator in/out, never materializing a
-    * partition in memory. Partition count (not row count) bounds peak
-    * memory, so at 100 TB the knob is `spark.sql.files.maxPartitionBytes`. */
+    * `mapInPandas`: one decoder context per partition (an [[Images]]
+    * decoder builds one JDK reader per still-image format on first use),
+    * streaming iterator in/out, never materializing a partition in
+    * memory. Partition count (not row count) bounds peak memory, so at
+    * 100 TB the knob is `spark.sql.files.maxPartitionBytes`. */
   def extractFeatures(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.select("doc_id", "payload", "format", "width", "height")
       .as[MediaRow]
       .mapPartitions { rows =>
-        // per-partition decoder init would happen here; routing by format,
-        // with image/bmp decoded FOR REAL (BmpCodec — pure JVM, no libs)
+        val images = Images.decoder()
         rows.map {
-          case r if r.format == "image/bmp" =>
-            val d = BmpCodec.decode(r.payload)
-            MediaFeatures(r.doc_id, r.payload.length.toLong,
-              content_hash = 0L, intensity = d.meanLuma,
-              dim1 = math.max(d.width / 2, 1), dim2 = math.max(d.height / 2, 1))
-          case r if r.format == "image/png" =>
-            val d = PngCodec.decode(r.payload)
-            MediaFeatures(r.doc_id, r.payload.length.toLong,
-              content_hash = 0L, intensity = d.meanLuma,
-              dim1 = math.max(d.width / 2, 1), dim2 = math.max(d.height / 2, 1))
-          case r if r.format == "image/jpeg" =>
-            val d = JpegCodec.decode(r.payload)
-            MediaFeatures(r.doc_id, r.payload.length.toLong,
-              content_hash = 0L, intensity = d.meanLuma,
-              dim1 = math.max(d.width / 2, 1), dim2 = math.max(d.height / 2, 1))
-          case r if r.format == "image/gif" =>
-            val d = GifCodec.decode(r.payload)
+          case r if Images.Formats(r.format) =>
+            val d = images.decode(r.format, r.payload)
             MediaFeatures(r.doc_id, r.payload.length.toLong,
               content_hash = 0L, intensity = d.meanLuma,
               dim1 = math.max(d.width / 2, 1), dim2 = math.max(d.height / 2, 1))

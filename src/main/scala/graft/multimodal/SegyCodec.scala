@@ -15,8 +15,8 @@ import java.nio.ByteBuffer
   * Teapot Dome `filt_mig.sgy`), so a from-scratch codec closes the
   * field-tape → store ingest edge of the pipeline.
   *
-  * Malformed-input posture matches the other media codecs
-  * ([[BmpCodec]]/[[PngCodec]]): every structural violation (short file,
+  * Malformed-input posture matches the other media decoders
+  * ([[Images]], [[WavCodec]]): every structural violation (short file,
   * unsupported format code, trace region not a whole number of traces,
   * per-trace sample count disagreeing with the file header) surfaces as
   * IllegalArgumentException, never as a silent partial parse.

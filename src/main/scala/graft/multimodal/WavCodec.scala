@@ -2,9 +2,8 @@ package graft.multimodal
 
 /** A REAL audio codec with zero dependencies: RIFF/WAVE with 16-bit
   * signed little-endian PCM (the uncompressed format every audio tool
-  * emits). Pure byte arithmetic — no audio library — the audio analog of
-  * [[BmpCodec]]: `audio/wav` payloads decode through a genuine parser in
-  * [[Multimodal.extractFeatures]].
+  * emits). Pure byte arithmetic — no audio library: `audio/wav` payloads
+  * decode through a genuine parser in [[Multimodal.extractFeatures]].
   */
 object WavCodec {
 

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.multimodal.{Mp4Codec, Multimodal}
+import graft.multimodal.{Images, Mp4Codec, Multimodal}
 
 /** MP4 container-index queries — the video arm of the multimodal family.
   *
@@ -140,7 +140,7 @@ object Media {
   case class PHashRow(doc_id: Long, hi: Long, lo: Long)
 
   /** IMAGE NEAR-DUP via perceptual average-hash (aHash): decode each BMP
-    * to real pixels, sample an 8×8 grid, threshold each sample against
+    * to real gray pixels (through [[Images]]), sample an 8×8 grid, threshold each sample against
     * the image's global mean → a 64-bit fingerprint; images agreeing on
     * every bit land in one hash bucket (the pixel-domain sibling of
     * dedup_simhash). Scale shape: decode + hash is map-only per
@@ -157,25 +157,29 @@ object Media {
         documents(s, d).filter(length(col("text")) > 0))
       .select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val (w, h, gray) = graft.multimodal.BmpCodec.decodeGray(bytes)
-        val n = w.toLong * h
-        var pixSum = 0L
-        var i = 0
-        while (i < gray.length) { pixSum += gray(i) & 0xff; i += 1 }
-        var hi = 0L; var lo = 0L
-        var j = 0
-        while (j < 64) {
-          val y = (j / 8) * h / 8
-          val x = (j % 8) * w / 8
-          val p = gray(y * w + x) & 0xff
-          if (p * n > pixSum) {
-            if (j < 32) hi |= 1L << j else lo |= 1L << (j - 32)
+      .mapPartitions { rows =>
+        val images = Images.decoder()
+        rows.map { case (id, bytes) =>
+          val d = images.decode("image/bmp", bytes)
+          val (w, h, gray) = (d.width, d.height, d.gray)
+          val n = w.toLong * h
+          var pixSum = 0L
+          var i = 0
+          while (i < gray.length) { pixSum += gray(i) & 0xff; i += 1 }
+          var hi = 0L; var lo = 0L
+          var j = 0
+          while (j < 64) {
+            val y = (j / 8) * h / 8
+            val x = (j % 8) * w / 8
+            val p = gray(y * w + x) & 0xff
+            if (p * n > pixSum) {
+              if (j < 32) hi |= 1L << j else lo |= 1L << (j - 32)
+            }
+            j += 1
           }
-          j += 1
+          PHashRow(id, hi, lo)
         }
-        PHashRow(id, hi, lo)
-      })
+      }
       .toDF()
   }
 
@@ -394,8 +398,8 @@ object Media {
   /** REAL VIDEO PIXEL DECODE on the oracle: Motion-JPEG in MP4 — every
     * sample a complete baseline-JPEG frame ([[Multimodal
     * .attachMjpegPayload]]), keyframes demuxed from the stss table and
-    * decoded through the full pure-JVM JPEG path (entropy decode +
-    * dequant + IDCT). Frame content varies per sample (block k of frame
+    * decoded through [[Images]] (the JDK's entropy decode + dequant +
+    * IDCT, the Y plane read raw). Frame content varies per sample (block k of frame
     * fi = byte (fi·7+k) mod len), so the oracle's cycle arithmetic over
     * the ROTATED byte list only matches if the demuxer sliced the right
     * sample bytes AND the codec reconstructed the right frame's pixels —

@@ -1529,8 +1529,9 @@ object Pipeline {
     FROM documents"""
 
   /** Feature extraction over the MIXED-FORMAT corpus: doc_id % 5 routes
-    * each document through a different REAL pure-JVM codec (BMP / PNG /
-    * GIF / JPEG / WAV) inside one extractFeatures pass — certifying the
+    * each document through a different REAL decoder (BMP / PNG / GIF /
+    * JPEG through the JDK's ImageIO behind `Images`, WAV through
+    * `WavCodec`) inside one extractFeatures pass — certifying the
     * per-row format dispatch itself, which the single-format twins never
     * exercise. The StubDecoder is UNREACHABLE from every oracle query
     * (pinned by StubUnreachabilitySpec); DuckDB recomputes each branch's

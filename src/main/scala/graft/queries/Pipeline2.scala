@@ -860,10 +860,10 @@ object Pipeline2 {
 
   /** REAL image decode on the oracle: documents render to deterministic
     * grayscale 24-bpp BMPs (pixel i = UTF-8 byte i mod len), the pipeline
-    * decodes them with the pure-JVM [[graft.multimodal.BmpCodec]] parser
-    * (headers, bottom-up rows, padding — no image library), and DuckDB
-    * certifies the decoded features: file size from BMP geometry, mean
-    * luma from cycle arithmetic (full-cycles × byte-sum + prefix). */
+    * decodes them through [[graft.multimodal.Images]] (the JDK's ImageIO
+    * reader behind the loud-failure contract), and DuckDB certifies the
+    * decoded features: file size from BMP geometry, mean luma from cycle
+    * arithmetic (full-cycles × byte-sum + prefix). */
   val qMultimodalBmp: Q = (s, d) =>
     graft.multimodal.Multimodal.extractFeatures(s,
       graft.multimodal.Multimodal.attachBmpPayload(documents(s, d)))
@@ -905,8 +905,8 @@ object Pipeline2 {
 
   /** REAL compressed-image decode on the oracle: the same deterministic
     * grayscale pixels as the BMP twin, but PNG-encoded (zlib + per-row
-    * filters cycling through all five types) and decoded by the pure-JVM
-    * [[graft.multimodal.PngCodec]] (chunk CRCs, inflate, unfilter). The
+    * filters) and decoded through [[graft.multimodal.Images]] (inflate,
+    * unfilter — the JDK's ImageIO reader, loud on malformed input). The
     * file size is compression-dependent, so the oracle certifies the
     * decoded pixels (mean luma via cycle arithmetic) and geometry — which
     * only match if inflate + all five unfilters are byte-exact. */
@@ -949,8 +949,9 @@ object Pipeline2 {
   /** REAL LZW-image decode on the oracle: the same deterministic grayscale
     * pixels as the PNG twin, but GIF89a-encoded (variable-width LZW with
     * width growth, table-full clears, and the KwKwK special case — run-heavy
-    * document text hits it constantly) and decoded by the pure-JVM
-    * [[graft.multimodal.GifCodec]]. File size is compression-dependent, so
+    * document text hits it constantly) and decoded through
+    * [[graft.multimodal.Images]], which reads the raw palette indices and
+    * rejects one outside the table. File size is compression-dependent, so
     * the oracle certifies decoded pixels (mean luma via cycle arithmetic)
     * and geometry — exact only if every LZW code expands byte-exactly. */
   val qMultimodalGif: Q = (s, d) =>
@@ -966,8 +967,9 @@ object Pipeline2 {
 
   /** REAL DCT-image decode on the oracle: block-constant grayscale images
     * (8×8 block k = UTF-8 byte k mod len; dims are multiples of 8) encoded
-    * as baseline JPEG and decoded by the pure-JVM
-    * [[graft.multimodal.JpegCodec]] (canonical Huffman, dequant, IDCT).
+    * as baseline JPEG at quality 1.0 and decoded through
+    * [[graft.multimodal.Images]] (the JDK's Huffman decode, dequant, IDCT;
+    * the Y plane read raw).
     * Block-constant content is DC-only and survives the LOSSY format
     * exactly under all-ones quantization, so DuckDB certifies the decoded
     * mean luma with cycle arithmetic over blocks — which only matches if
@@ -1009,11 +1011,11 @@ object Pipeline2 {
     FROM e"""
 
   /** PROGRESSIVE DCT decode on the oracle: the same block-constant images
-    * as `multimodal_jpeg`, wire-encoded as four-scan progressive SOF2
-    * (shifted DC first scan, two spectral AC bands carried as cross-block
-    * EOB runs, DC refinement bits) and decoded through the full
-    * successive-approximation path — coefficients accumulate across
-    * scans, reconstruction happens at EOI. Decoded pixels are identical
+    * as `multimodal_jpeg`, wire-encoded as progressive SOF2 (the JDK
+    * writer's scan script: spectral selection plus successive
+    * approximation) and decoded through the full successive-approximation
+    * path, after [[graft.multimodal.Images]] has checked that the scans
+    * refine every coefficient to Al = 0. Decoded pixels are identical
     * to the baseline twin's, so the SAME cycle arithmetic certifies the
     * progressive protocol end to end. */
   val qMultimodalJpegProgressive: Q = (s, d) =>
@@ -1030,10 +1032,10 @@ object Pipeline2 {
   /** COLOR DCT round-trip on the oracle: macroblock-constant RGB images
     * (16×16 macroblock k carries text bytes 3k/3k+1/3k+2 as R/G/B) encoded
     * as baseline 4:2:0 YCbCr JPEG by
-    * [[graft.multimodal.JpegCodec.encodeColor]] and decoded through the
+    * [[graft.multimodal.Images.encodeJpegColor]] and decoded through the
     * full interleaved-scan path (4 luma + 2 chroma blocks per MCU, three
     * DC predictors). The fixed-point luma conversion
-    * ([[graft.multimodal.JpegCodec.lumaOf]]) is reproduced digit-for-digit
+    * ([[graft.multimodal.Images.lumaOf]]) is reproduced digit-for-digit
     * in SQL, so DuckDB certifies the decoded mean luma of a color image
     * over the lossy wire format — which only matches if chroma blocks are
     * entropy-decoded in exact sync and every Y block reconstructs. */

@@ -1141,8 +1141,9 @@ object MdioAggScan {
     * opened however large the store. Returns one row per slab tuple
     * intersecting the pushed ranges, group values first in pushed order.
     * A grouped aggregate over an empty box has no rows; an ungrouped one
-    * has exactly one (COUNT 0, dim extrema and sums NULL). None when any
-    * precondition fails (a value op over a misaligned or empty slice,
+    * has exactly one, read from nothing (COUNT 0, COUNT(DISTINCT) 0, every
+    * other op NULL, as Spark answers over zero rows). None when any
+    * precondition fails (a value op over a misaligned slice,
     * stale or partial stats, an Li not chunk-aligned, a duplicate grouped
     * dim, a variable that is not a full-dimensional scalar, a sum that
     * leaves the Long range, more groups than the cap) — the caller then
@@ -1169,7 +1170,7 @@ object MdioAggScan {
     val empty = bounds.exists { case (lo, hi) => lo >= hi }
     if (empty && groups.nonEmpty) return Some(Seq.empty)
     // per-variable: every slab width must cover whole chunks and the stats
-    // must cover the (chunk-aligned, so non-empty) scan box
+    // must cover the chunk-aligned scan box; an empty box reads nothing
     val vars = aggs.collect { case (op, v) if op.startsWith("v") => v }.distinct
     val perVar: Map[String, Map[String, MdioChunkStats.Entry]] =
       vars.map { v =>
@@ -1177,11 +1178,14 @@ object MdioAggScan {
         if (m.shape != shape || m.fields.nonEmpty) return None
         if (groups.zip(dis).exists { case ((_, l), di) => l % m.chunks(di) != 0 })
           return None
-        val box = alignedChunkBox(m, dims, ranges).getOrElse(return None)
-        val entries = MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
-          box.head._1, box.head._2 - 1).getOrElse(return None)
-        if (!boxKeys(box).forall(entries.contains)) return None
-        v -> entries
+        if (empty) v -> Map.empty[String, MdioChunkStats.Entry]
+        else {
+          val box = alignedChunkBox(m, dims, ranges).getOrElse(return None)
+          val entries = MdioChunkStats.currentFor(ZarrMeta.path(path).resolve(v),
+            box.head._1, box.head._2 - 1).getOrElse(return None)
+          if (!boxKeys(box).forall(entries.contains)) return None
+          v -> entries
+        }
       }.toMap
     // enumerate slab tuples in pushed-group order (C-order nesting)
     val rows = MdioScan.cartesian(groups.zip(dis).map { case ((_, l), di) =>
@@ -1201,17 +1205,15 @@ object MdioAggScan {
       val values: Array[Any] = aggs.map {
         case ("count", _) => cells
         case ("dcnt", d) => if (empty) 0L else { val (lo, hi) = extent(d); hi - lo }
-        case ("min", d) => if (empty) null else extent(d)._1
-        case ("max", d) => if (empty) null else extent(d)._2 - 1
+        case _ if empty => null
+        case ("min", d) => extent(d)._1
+        case ("max", d) => extent(d)._2 - 1
         case ("dsum", d) =>
           // Σ_{i∈[lo,hi)} i times the other dims' cell counts, exact in
           // BigInt; past Long, Spark's own Sum over the scan answers
-          if (empty) null
-          else {
-            val (lo, hi) = extent(d)
-            val total = (BigInt(lo) + (hi - 1)) * (hi - lo) / 2 * (cells / (hi - lo))
-            if (total.isValidLong) total.toLong else return None
-          }
+          val (lo, hi) = extent(d)
+          val total = (BigInt(lo) + (hi - 1)) * (hi - lo) / 2 * (cells / (hi - lo))
+          if (total.isValidLong) total.toLong else return None
         case (op, v) =>
           val m = metas(v)
           val entries = perVar(v)

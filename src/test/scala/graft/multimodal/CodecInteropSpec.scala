@@ -2,13 +2,13 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-implementation validation of the pure-JVM media codecs against
-  * the JDK's own INDEPENDENT implementations — javax.imageio for PNG/BMP
-  * and javax.sound.sampled for WAV. Two codebases, one wire format, both
-  * directions: whatever graft encodes, the JDK must decode to identical
-  * pixels/samples, and whatever the JDK encodes, graft must decode to
-  * identical features. (The same discipline as the python blosc interop
-  * loop — no self-roundtrip blind spots.) */
+/** Wire-format checks of the media paths against direct JDK reads —
+  * plain javax.imageio for the still images [[Images]] writes and decodes,
+  * javax.sound.sampled for [[WavCodec]]. Both directions: whatever graft
+  * writes, a plain JDK read must see as the intended pixels/samples (the
+  * fixtures' oracle rests on that), and whatever the JDK writes, graft
+  * must decode to the format's luma rule exactly; malformed and partial
+  * streams reject loud. ("graft" in test names is the engine's path.) */
 class CodecInteropSpec extends AnyFunSuite {
 
   private def gray(w: Int, h: Int, seed: Int): Array[Byte] = {
@@ -16,11 +16,14 @@ class CodecInteropSpec extends AnyFunSuite {
     Array.fill(w * h)(rnd.nextInt(256).toByte)
   }
 
+  private val images = Images.decoder()
+  private def decode(format: String, bytes: Array[Byte]) = images.decode(format, bytes)
+
   test("PNG: ImageIO decodes graft-encoded images pixel-exact") {
     for ((w, h, seed) <- Seq((17, 17, 1), (64, 48, 2), (1, 7, 3))) {
       val px = gray(w, h, seed)
       val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(PngCodec.encode(w, h, px)))
+        new java.io.ByteArrayInputStream(Images.encode("image/png", w, h, px)))
       assert(img.getWidth == w && img.getHeight == h)
       // raw raster samples: getRGB would run the JDK's gray->sRGB color
       // transform and report gamma-shifted values
@@ -40,7 +43,7 @@ class CodecInteropSpec extends AnyFunSuite {
       img.getRaster.setSample(x, y, 0, px(y * w + x) & 0xff)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "png", bos), "JDK PNG writer unavailable")
-    val d = PngCodec.decode(bos.toByteArray)
+    val d = decode("image/png", bos.toByteArray)
     assert(d.width == w && d.height == h)
     val want = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
     assert(d.meanLuma == want, s"ImageIO-written PNG decoded luma ${d.meanLuma} != $want")
@@ -57,7 +60,7 @@ class CodecInteropSpec extends AnyFunSuite {
       (128, 96, gray(128, 96, 23)))                               // forces table-full clear
     for ((w, h, px) <- cases) {
       val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(GifCodec.encode(w, h, px)))
+        new java.io.ByteArrayInputStream(Images.encode("image/gif", w, h, px)))
       assert(img != null, "JDK GIF reader unavailable")
       assert(img.getWidth == w && img.getHeight == h)
       for (y <- 0 until h; x <- 0 until w) {
@@ -80,7 +83,7 @@ class CodecInteropSpec extends AnyFunSuite {
       img.getRaster.setSample(x, y, 0, px(y * w + x) & 0xff)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "gif", bos), "JDK GIF writer unavailable")
-    val d = GifCodec.decode(bos.toByteArray)
+    val d = decode("image/gif", bos.toByteArray)
     assert(d.width == w && d.height == h)
     val want = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
     assert(d.meanLuma == want, s"ImageIO-written GIF decoded luma ${d.meanLuma} != $want")
@@ -90,7 +93,7 @@ class CodecInteropSpec extends AnyFunSuite {
     val (w, h) = (17, 17)
     val px = gray(w, h, 9)
     val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(BmpCodec.encode(w, h, px)))
+      new java.io.ByteArrayInputStream(Images.encode("image/bmp", w, h, px)))
     assert(img.getWidth == w && img.getHeight == h)
     for (y <- 0 until h; x <- 0 until w) {
       val v = px(y * w + x) & 0xff
@@ -108,7 +111,7 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w)
       px(y * w + x) = blockVal((y / 8) * (w / 8) + x / 8)
     val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(JpegCodec.encode(w, h, px)))
+      new java.io.ByteArrayInputStream(Images.encode("image/jpeg", w, h, px)))
     assert(img.getWidth == w && img.getHeight == h)
     for (y <- 0 until h; x <- 0 until w) {
       val got = img.getRaster.getSample(x, y, 0)
@@ -131,10 +134,10 @@ class CodecInteropSpec extends AnyFunSuite {
       val p = (y * w + x) * 3
       rgb(p) = r.toByte; rgb(p + 1) = g.toByte; rgb(p + 2) = b.toByte
     }
-    val enc = JpegCodec.encodeColor(w, h, rgb)
-    val d = JpegCodec.decode(enc)
+    val enc = Images.encodeJpegColor(w, h, rgb)
+    val d = decode("image/jpeg", enc)
     assert(d.width == w && d.height == h)
-    val wantLuma = mbs.map { case (r, g, b) => JpegCodec.lumaOf(r, g, b) }
+    val wantLuma = mbs.map { case (r, g, b) => Images.lumaOf(r, g, b) }
       .map(_.toLong).sum.toDouble / mbs.length / 255.0
     assert(d.meanLuma == wantLuma, s"graft ${d.meanLuma} vs exact $wantLuma")
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(enc))
@@ -162,12 +165,12 @@ class CodecInteropSpec extends AnyFunSuite {
       rgb(p + 1) = ((x + y * 7) % 256).toByte
       rgb(p + 2) = ((x * 2 + y * 3) % 256).toByte
     }
-    val d = JpegCodec.decode(JpegCodec.encodeColor(w, h, rgb))
+    val d = decode("image/jpeg", Images.encodeJpegColor(w, h, rgb))
     assert(d.width == w && d.height == h)
     var src = 0L
     for (y <- 0 until h; x <- 0 until w) {
       val p = (y * w + x) * 3
-      src += JpegCodec.lumaOf(rgb(p) & 0xff, rgb(p + 1) & 0xff, rgb(p + 2) & 0xff)
+      src += Images.lumaOf(rgb(p) & 0xff, rgb(p + 1) & 0xff, rgb(p + 2) & 0xff)
     }
     val srcLuma = src.toDouble / (w * h) / 255.0
     assert(math.abs(d.meanLuma - srcLuma) < 1.5 / 255.0,
@@ -179,11 +182,11 @@ class CodecInteropSpec extends AnyFunSuite {
     // spec's IDCT tolerance (±1 per sample)
     val (w, h) = (24, 16)
     val px = gray(w, h, 21)
-    val enc = JpegCodec.encode(w, h, px)
+    val enc = Images.encode("image/jpeg", w, h, px)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(enc))
     var sumJdk = 0L
     for (y <- 0 until h; x <- 0 until w) sumJdk += img.getRaster.getSample(x, y, 0)
-    val d = JpegCodec.decode(enc)
+    val d = decode("image/jpeg", enc)
     assert(d.width == w && d.height == h)
     val jdkLuma = sumJdk.toDouble / (w * h) / 255.0
     assert(math.abs(d.meanLuma - jdkLuma) < 1.5 / 255.0,
@@ -204,7 +207,7 @@ class CodecInteropSpec extends AnyFunSuite {
       img.getRaster.setSample(x, y, 0, px(y * w + x) & 0xff)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, "jpg", bos), "JDK JPEG writer unavailable")
-    val d = JpegCodec.decode(bos.toByteArray)
+    val d = decode("image/jpeg", bos.toByteArray)
     assert(d.width == w && d.height == h)
     val srcLuma = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
     assert(math.abs(d.meanLuma - srcLuma) < 0.02,
@@ -215,7 +218,7 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w) cimg.setRGB(x, y, 0x507090)
     val cbos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(cimg, "jpg", cbos))
-    val dc = JpegCodec.decode(cbos.toByteArray)
+    val dc = decode("image/jpeg", cbos.toByteArray)
     assert(dc.width == w && dc.height == h)
     val wantY = (0.299 * 0x50 + 0.587 * 0x70 + 0.114 * 0x90) / 255.0
     assert(math.abs(dc.meanLuma - wantY) < 0.02,
@@ -250,7 +253,7 @@ class CodecInteropSpec extends AnyFunSuite {
     } else {
       for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
         val rgb = img.getRGB(x, y)
-        sum += JpegCodec.lumaOf((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+        sum += Images.lumaOf((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
       }
     }
     sum.toDouble / (img.getWidth.toLong * img.getHeight) / 255.0
@@ -265,7 +268,7 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w)
       img.getRaster.setSample(x, y, 0, px(y * w + x) & 0xff)
     val bytes = writeProgressive(img)
-    val d = JpegCodec.decode(bytes)
+    val d = decode("image/jpeg", bytes)
     assert(d.width == w && d.height == h)
     // two independent decoders of the SAME lossy stream: IDCT rounding only
     assert(math.abs(d.meanLuma - imageIoMeanLuma(bytes)) < 0.005,
@@ -282,7 +285,7 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w)
       cimg.setRGB(x, y, ((40 + x * 3) << 16) | ((60 + y * 4) << 8) | 0x70)
     val bytes = writeProgressive(cimg)
-    val d = JpegCodec.decode(bytes)
+    val d = decode("image/jpeg", bytes)
     assert(d.width == w && d.height == h)
     assert(math.abs(d.meanLuma - imageIoMeanLuma(bytes)) < 0.005,
       s"graft ${d.meanLuma} vs ImageIO ${imageIoMeanLuma(bytes)}")
@@ -293,11 +296,11 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until 16; x <- 0 until 24) img.getRaster.setSample(x, y, 0, (x * 7 + y) % 256)
     val bytes = writeProgressive(img)
     // cut mid-entropy-stream: the EOI-time truncation guard must fire
-    intercept[IllegalArgumentException](JpegCodec.decode(bytes.take(bytes.length / 2)))
+    intercept[IllegalArgumentException](decode("image/jpeg", bytes.take(bytes.length / 2)))
     // SOF2 header with EOI and no scan at all
     val soi = bytes.takeWhile(_ != 0xda.toByte) // keep everything before first SOS...
     intercept[IllegalArgumentException] {
-      JpegCodec.decode(Array(0xff, 0xd8, 0xff, 0xc2, 0, 8, 8, 0, 8, 0, 8, 1,
+      decode("image/jpeg", Array(0xff, 0xd8, 0xff, 0xc2, 0, 8, 8, 0, 8, 0, 8, 1,
         1, 0x11, 0, 0xff, 0xd9).map(_.toByte))
     }
     assert(soi.nonEmpty) // silence the unused warning, keep the derivation
@@ -315,27 +318,27 @@ class CodecInteropSpec extends AnyFunSuite {
     val eoi = Array(0xff.toByte, 0xd9.toByte)
     // DC-first scan only: every AC coefficient is "never scanned"
     val dcOnly = bytes.take(sosOffsets(1)) ++ eoi
-    val e1 = intercept[IllegalArgumentException](JpegCodec.decode(dcOnly))
+    val e1 = intercept[IllegalArgumentException](decode("image/jpeg", dcOnly))
     assert(e1.getMessage.contains("incomplete progression"), e1.getMessage)
     // all but the final scan: some band is left above Al=0 (or unscanned)
     val noLast = bytes.take(sosOffsets.last) ++ eoi
-    val e2 = intercept[IllegalArgumentException](JpegCodec.decode(noLast))
+    val e2 = intercept[IllegalArgumentException](decode("image/jpeg", noLast))
     assert(e2.getMessage.contains("incomplete progression"), e2.getMessage)
   }
 
   test("JPEG progressive: graft-encoded SOF2 round-trips exactly; ImageIO agrees pixel-exact") {
-    // block-constant content → DC-only blocks → the four-scan progressive
-    // wire format is lossless; BOTH decoders must recover every pixel
+    // block-constant content → DC-only blocks → the progressive wire
+    // format is lossless at quality 1.0; BOTH reads must recover every pixel
     val (w, h) = (40, 24)
     val px = new Array[Byte](w * h)
     val rnd = new scala.util.Random(41)
     val blockVal = Array.fill((w / 8) * (h / 8))(rnd.nextInt(256).toByte)
     for (y <- 0 until h; x <- 0 until w)
       px(y * w + x) = blockVal((y / 8) * (w / 8) + x / 8)
-    val enc = JpegCodec.encodeProgressive(w, h, px)
+    val enc = Images.encode("image/jpeg", w, h, px, progressive = true)
     assert(enc.sliding(2).exists(s => (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc2),
       "encoder must emit SOF2")
-    val d = JpegCodec.decode(enc)
+    val d = decode("image/jpeg", enc)
     assert(d.width == w && d.height == h)
     val want = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
     assert(d.meanLuma == want, s"graft ${d.meanLuma} vs exact $want")
@@ -343,9 +346,6 @@ class CodecInteropSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w)
       assert(img.getRaster.getSample(x, y, 0) == (px(y * w + x) & 0xff),
         s"ImageIO pixel ($x,$y)")
-    // non-constant blocks must reject loud, never encode wrong
-    val grad = Array.tabulate(w * h)(i => (i % 251).toByte)
-    intercept[IllegalArgumentException](JpegCodec.encodeProgressive(w, h, grad))
   }
 
   test("JPEG progressive: restart markers inside every scan kind decode exactly") {
@@ -355,11 +355,36 @@ class CodecInteropSpec extends AnyFunSuite {
     val blockVal = Array.fill((w / 8) * (h / 8))(rnd.nextInt(256).toByte)
     for (y <- 0 until h; x <- 0 until w)
       px(y * w + x) = blockVal((y / 8) * (w / 8) + x / 8)
-    val enc = JpegCodec.encodeProgressive(w, h, px, restartInterval = 4)
+    // the JDK writer's progressive script at quality 1.0, with a DRI
+    // segment (restart interval 4) added to its default metadata
+    val img0 = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    img0.getRaster.setSamples(0, 0, w, h, 0, px.map(_ & 0xff))
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
+    val p = writer.getDefaultWriteParam
+    p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+    p.setCompressionQuality(1.0f)
+    val md = writer.getDefaultImageMetadata(new javax.imageio.ImageTypeSpecifier(img0), p)
+    val fmt = md.getNativeMetadataFormatName
+    val tree = md.getAsTree(fmt).asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
+    val seq = tree.getElementsByTagName("markerSequence").item(0)
+    val dri = new javax.imageio.metadata.IIOMetadataNode("dri")
+    dri.setAttribute("interval", "4")
+    seq.insertBefore(dri, seq.getFirstChild)
+    md.setFromTree(fmt, tree)
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    writer.setOutput(ios)
+    writer.write(null, new javax.imageio.IIOImage(img0, null, md), p)
+    writer.dispose()
+    ios.close()
+    val enc = bos.toByteArray
+    assert(enc.sliding(2).exists(s => (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc2),
+      "writer must emit SOF2")
     assert(enc.sliding(2).count(s =>
       (s(0) & 0xff) == 0xff && (s(1) & 0xff) >= 0xd0 && (s(1) & 0xff) <= 0xd7) >= 8,
-      "expected RSTn markers across the four scans")
-    val d = JpegCodec.decode(enc)
+      "expected RSTn markers across the scans")
+    val d = decode("image/jpeg", enc)
     val want = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
     assert(d.meanLuma == want, s"graft ${d.meanLuma} vs exact $want")
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(enc))
@@ -369,17 +394,32 @@ class CodecInteropSpec extends AnyFunSuite {
   }
 
   test("JPEG: malformed and unsupported flavors reject loud") {
-    intercept[IllegalArgumentException](JpegCodec.decode("nope".getBytes))
+    intercept[IllegalArgumentException](decode("image/jpeg", "nope".getBytes))
     // arithmetic-coded sequential: SOI + SOF9
     intercept[IllegalArgumentException] {
-      JpegCodec.decode(Array(0xff, 0xd8, 0xff, 0xc9, 0, 5, 8, 0, 8).map(_.toByte))
+      decode("image/jpeg", Array(0xff, 0xd8, 0xff, 0xc9, 0, 5, 8, 0, 8).map(_.toByte))
     }
     // truncation mid-entropy-stream
-    val ok = JpegCodec.encode(16, 16, Array.fill(256)(77.toByte))
-    intercept[IllegalArgumentException](JpegCodec.decode(ok.take(ok.length - 20)))
+    val ok = Images.encode("image/jpeg", 16, 16, Array.fill(256)(77.toByte))
+    intercept[IllegalArgumentException](decode("image/jpeg", ok.take(ok.length - 20)))
+    // a 64x48 gray JPEG cut to 2/3 of its bytes: the JDK reader returns a
+    // full raster and only warns, so the warning must fail the decode
+    val whole = Images.encode("image/jpeg", 64, 48, gray(64, 48, 17))
+    val cut = intercept[IllegalArgumentException](
+      decode("image/jpeg", whole.take(whole.length * 2 / 3)))
+    assert(cut.getMessage.contains("Corrupt JPEG data") || cut.getMessage.contains("Truncated"),
+      cut.getMessage)
+    // a valid small JPEG with its SOF width and height patched to 65535:
+    // the geometry cap rejects it before any raster is allocated
+    val huge = ok.clone()
+    val sof = (0 until huge.length - 1).find(i =>
+      (huge(i) & 0xff) == 0xff && (huge(i + 1) & 0xff) == 0xc0).get
+    for (k <- 5 to 8) huge(sof + k) = 0xff.toByte
+    val cap = intercept[IllegalArgumentException](decode("image/jpeg", huge))
+    assert(cap.getMessage.contains("unsupported geometry 65535x65535"), cap.getMessage)
     // geometry bomb: hand-built SOF0 with absurd dimensions
     intercept[IllegalArgumentException] {
-      JpegCodec.decode(Array(0xff, 0xd8, 0xff, 0xc0, 0, 11, 8,
+      decode("image/jpeg", Array(0xff, 0xd8, 0xff, 0xc0, 0, 11, 8,
         0xff, 0xff, 0xff, 0xff, 1, 1, 0x11, 0).map(_.toByte))
     }
   }

@@ -2,12 +2,12 @@ package graft.multimodal
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Mutation fuzzing for the round-8 codecs: random corruptions of VALID
-  * streams must either decode (mutations in don't-care bytes) or reject
-  * with the codec's IllegalArgumentException — never hang, never throw
-  * an uncontrolled error (ArrayIndexOutOfBounds, NegativeArraySize, OOM),
-  * never return a silently-impossible geometry. The LzFuzzSpec posture,
-  * pointed at the bitstream parsers. */
+/** Mutation fuzzing for the H.264 codec and the GIF path through
+  * [[Images]]: random corruptions of VALID streams must either decode
+  * (mutations in don't-care bytes) or reject with IllegalArgumentException
+  * — never hang, never throw an uncontrolled error (ArrayIndexOutOfBounds,
+  * NegativeArraySize, OOM), never return a silently-impossible geometry.
+  * The LzFuzzSpec posture, pointed at the bitstream parsers. */
 class CodecMutationFuzzSpec extends AnyFunSuite {
 
   private def mutate(rnd: scala.util.Random, base: Array[Byte]): Array[Byte] = {
@@ -45,14 +45,34 @@ class CodecMutationFuzzSpec extends AnyFunSuite {
   test("GIF: 300 random mutations never escape the validator") {
     val rnd = new scala.util.Random(2027)
     val px = Array.tabulate(48 * 32)(i => ((i / 13) % 26 * 9).toByte)
-    val base = GifCodec.encode(48, 32, px)
+    val base = Images.encode("image/gif", 48, 32, px)
+    val images = Images.decoder()
     var decoded = 0; var rejected = 0
     for (_ <- 1 to 300) {
-      try { GifCodec.decode(mutate(rnd, base)); decoded += 1 }
+      try { images.decode("image/gif", mutate(rnd, base)); decoded += 1 }
       catch { case _: IllegalArgumentException => rejected += 1 }
     }
     assert(rejected > 0)
     assert(decoded + rejected == 300)
+  }
+
+  test("JPEG, PNG, BMP: 300 random mutations each never escape the validator") {
+    // the JPEG marker walk, the BMP offset check and the JDK readers'
+    // exception mapping all sit between these bytes and a raster
+    val rnd = new scala.util.Random(2028)
+    val px = Array.tabulate(48 * 32)(i => ((i / 13) % 26 * 9).toByte)
+    val images = Images.decoder()
+    for ((format, progressive) <- Seq(("image/jpeg", false), ("image/jpeg", true),
+                                      ("image/png", false), ("image/bmp", false))) {
+      val base = Images.encode(format, 48, 32, px, progressive)
+      var decoded = 0; var rejected = 0
+      for (_ <- 1 to 300) {
+        try { images.decode(format, mutate(rnd, base)); decoded += 1 }
+        catch { case _: IllegalArgumentException => rejected += 1 }
+      }
+      assert(rejected > 0, s"$format progressive=$progressive")
+      assert(decoded + rejected == 300)
+    }
   }
 
   test("GIF: randomized ImageIO differential across 40 seeds") {
@@ -63,7 +83,7 @@ class CodecMutationFuzzSpec extends AnyFunSuite {
       val w = 1 + rnd.nextInt(40); val h = 1 + rnd.nextInt(30)
       val px = Array.fill(w * h)(rnd.nextInt(256).toByte)
       val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(GifCodec.encode(w, h, px)))
+        new java.io.ByteArrayInputStream(Images.encode("image/gif", w, h, px)))
       assert(img.getWidth == w && img.getHeight == h, s"seed $seed")
       var ok = true
       for (y <- 0 until h; x <- 0 until w)
@@ -79,7 +99,7 @@ class CodecMutationFuzzSpec extends AnyFunSuite {
         src.getRaster.setSample(x, y, 0, px(y * w + x) & 0xff)
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(src, "gif", bos)
-      val d = GifCodec.decode(bos.toByteArray)
+      val d = Images.decoder().decode("image/gif", bos.toByteArray)
       val want = px.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
       assert(d.meanLuma == want, s"seed $seed: graft disagrees with JDK-written GIF")
     }

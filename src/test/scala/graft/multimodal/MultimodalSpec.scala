@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  private val images = Images.decoder()
+  private def bmp(w: Int, h: Int, px: Array[Byte]) = Images.encode("image/bmp", w, h, px)
+
   private def media = Multimodal.attachPayload(
     Seq((1L, "abcd"), (2L, ""), (3L, "hello world")).toDF("doc_id", "text"))
 
@@ -27,7 +30,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("BmpCodec: golden 2x2 image encodes to exact BMP bytes and decodes back") {
     // pixels (top-down): 0, 64, 128, 255
-    val bmp = BmpCodec.encode(2, 2, Array[Byte](0, 64, 128.toByte, 255.toByte))
+    val bmp = this.bmp(2, 2, Array[Byte](0, 64, 128.toByte, 255.toByte))
     assert(bmp.length == 54 + 2 * (6 + 2)) // 2 rows of 6 pixel bytes + 2 pad
     assert(bmp(0) == 'B' && bmp(1) == 'M')
     assert((bmp(18) & 0xff) == 2 && (bmp(22) & 0xff) == 2) // width, height
@@ -35,16 +38,16 @@ class MultimodalSpec extends SparkSpec {
     // bottom row first: pixels 128, 255 as BGR triples
     assert((bmp(54) & 0xff) == 128 && (bmp(55) & 0xff) == 128 && (bmp(56) & 0xff) == 128)
     assert((bmp(57) & 0xff) == 255)
-    val d = BmpCodec.decode(bmp)
+    val d = images.decode("image/bmp", bmp)
     assert(d.width == 2 && d.height == 2)
     assert(d.meanLuma == (0 + 64 + 128 + 255).toDouble / 4 / 255.0)
   }
 
   test("BmpCodec rejects non-BMP and unsupported flavors loudly") {
-    intercept[IllegalArgumentException] { BmpCodec.decode("not a bitmap at all, just text".getBytes) }
-    val bmp = BmpCodec.encode(2, 2, Array[Byte](1, 2, 3, 4))
+    intercept[IllegalArgumentException] { images.decode("image/bmp", "not a bitmap at all, just text".getBytes) }
+    val bmp = this.bmp(2, 2, Array[Byte](1, 2, 3, 4))
     bmp(28) = 8 // claim 8 bpp
-    intercept[IllegalArgumentException] { BmpCodec.decode(bmp) }
+    intercept[IllegalArgumentException] { images.decode("image/bmp", bmp) }
   }
 
   test("extractFeatures decodes real BMP payloads end to end") {
@@ -103,16 +106,16 @@ class MultimodalSpec extends SparkSpec {
 
       // BMP: hostile width ~2^30 used to overflow the Int size product
       // past the truncation require (advice finding) — now bounded first
-      val wide = BmpCodec.encode(2, 2, Array[Byte](1, 2, 3, 4))
+      val wide = bmp(2, 2, Array[Byte](1, 2, 3, 4))
       wide(21) = 0x40.toByte // width = 0x40000002
-      intercept[IllegalArgumentException] { BmpCodec.decode(wide) }
+      intercept[IllegalArgumentException] { images.decode("image/bmp", wide) }
       // negative / tiny pixel-data offset
-      val negOff = BmpCodec.encode(2, 2, Array[Byte](1, 2, 3, 4))
+      val negOff = bmp(2, 2, Array[Byte](1, 2, 3, 4))
       negOff(13) = 0x80.toByte // dataOffset sign bit
-      intercept[IllegalArgumentException] { BmpCodec.decode(negOff) }
-      val zeroOff = BmpCodec.encode(2, 2, Array[Byte](1, 2, 3, 4))
+      intercept[IllegalArgumentException] { images.decode("image/bmp", negOff) }
+      val zeroOff = bmp(2, 2, Array[Byte](1, 2, 3, 4))
       zeroOff(10) = 0 // dataOffset = 0 < 54
-      intercept[IllegalArgumentException] { BmpCodec.decode(zeroOff) }
+      intercept[IllegalArgumentException] { images.decode("image/bmp", zeroOff) }
     }
   }
 
@@ -130,7 +133,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   // build a PNG by hand (signature + CRC'd chunks around a given zlib
-  // payload) so decode paths my encoder never emits are reachable
+  // payload) so decode paths the fixture encoder never emits are reachable
   private def handPng(width: Int, height: Int, colorType: Int,
                       filtered: Array[Byte]): Array[Byte] = {
     import java.util.zip.{CRC32, Deflater}
@@ -158,14 +161,14 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("PngCodec: encode/decode round-trips exactly through all five filters") {
-    // height 7 >= 5 rows: the encoder cycles filter types 0..4, so exact
-    // luma recovery proves every unfilter path (none/sub/up/avg/paeth)
+    // random content: the JDK writer picks its row filters adaptively, so
+    // exact luma recovery runs the unfilter paths it chose
     val rnd = new scala.util.Random(5)
     for ((w, h) <- Seq((3, 7), (16, 16), (31, 9), (1, 6))) {
       val gray = Array.fill(w * h)(rnd.nextInt(256).toByte)
-      val png = PngCodec.encode(w, h, gray)
+      val png = Images.encode("image/png", w, h, gray)
       assert((png(0) & 0xff) == 137 && png(1) == 'P' && png(2) == 'N' && png(3) == 'G')
-      val d = PngCodec.decode(png)
+      val d = images.decode("image/png", png)
       assert(d.width == w && d.height == h)
       val want = gray.map(_ & 0xff).map(_.toLong).sum.toDouble / (w * h) / 255.0
       assert(d.meanLuma == want, s"${w}x$h luma mismatch")
@@ -177,35 +180,35 @@ class MultimodalSpec extends SparkSpec {
     // 2x2 RGB, filter 0 rows: pixels (r,g,b) = (10,20,30),(40,50,60) / (70,80,90),(100,110,120)
     val filtered = Array[Byte](0, 10, 20, 30, 40, 50, 60, 0, 70, 80, 90, 100, 110, 120)
     val png = handPng(2, 2, colorType = 2, filtered)
-    val d = PngCodec.decode(png)
+    val d = images.decode("image/png", png)
     assert(d.width == 2 && d.height == 2)
     assert(d.meanLuma == (10 + 20 + 30 + 40 + 50 + 60 + 70 + 80 + 90 + 100 + 110 + 120).toDouble / 3 / 4 / 255.0)
   }
 
   test("PngCodec rejects malformed and adversarial payloads loudly") {
-    intercept[IllegalArgumentException] { PngCodec.decode("just some text, no png here".getBytes) }
-    val good = PngCodec.encode(4, 6, Array.fill(24)(7.toByte))
-    // corrupt one IDAT byte -> CRC must catch it
+    intercept[IllegalArgumentException] { images.decode("image/png", "just some text, no png here".getBytes) }
+    val good = Images.encode("image/png", 4, 6, Array.fill(24)(7.toByte))
+    // corrupt one byte of the IDAT chunk header (its type) -> loud
     val corrupt = good.clone()
     corrupt(40) = (corrupt(40) ^ 0x55).toByte
-    intercept[IllegalArgumentException] { PngCodec.decode(corrupt) }
+    intercept[IllegalArgumentException] { images.decode("image/png", corrupt) }
     // truncated payload
-    intercept[IllegalArgumentException] { PngCodec.decode(good.take(30)) }
+    intercept[IllegalArgumentException] { images.decode("image/png", good.take(30)) }
     // hostile chunk length (negative) must throw, not loop or allocate
     val hostile = good.clone()
     hostile(8) = 0xff.toByte // IHDR length 0xff...... -> negative int
-    intercept[IllegalArgumentException] { PngCodec.decode(hostile) }
-    // 16-bit depth / palette color / interlace all rejected via handPng headers
+    intercept[IllegalArgumentException] { images.decode("image/png", hostile) }
+    // palette color with no PLTE chunk rejected via a handPng header
     intercept[IllegalArgumentException] {
-      PngCodec.decode(handPng(2, 2, colorType = 3, Array[Byte](0, 1, 2, 0, 3, 4)))
+      images.decode("image/png", handPng(2, 2, colorType = 3, Array[Byte](0, 1, 2, 0, 3, 4)))
     }
     // unknown filter type inside a structurally valid stream
     intercept[IllegalArgumentException] {
-      PngCodec.decode(handPng(2, 2, colorType = 0, Array[Byte](9, 1, 2, 0, 3, 4)))
+      images.decode("image/png", handPng(2, 2, colorType = 0, Array[Byte](9, 1, 2, 0, 3, 4)))
     }
     // declared geometry larger than the inflated stream
     intercept[IllegalArgumentException] {
-      PngCodec.decode(handPng(4, 4, colorType = 0, Array[Byte](0, 1, 2, 0, 3, 4)))
+      images.decode("image/png", handPng(4, 4, colorType = 0, Array[Byte](0, 1, 2, 0, 3, 4)))
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.multimodal.BmpCodec
+import graft.multimodal.Images
 
 /** Pins the round-6 filter batch: FIR bandpass tap semantics, median
   * despike behavior on a synthetic spike, and the perceptual-hash
@@ -40,9 +40,9 @@ class SeismicFilterSpec extends SparkSpec {
   test("decodeGray inverts encode exactly, top-down") {
     val w = 5; val h = 3
     val gray = Array.tabulate(w * h)(i => (i * 17 % 256).toByte)
-    val (dw, dh, got) = BmpCodec.decodeGray(BmpCodec.encode(w, h, gray))
-    assert(dw == w && dh == h)
-    assert(got.toSeq == gray.toSeq, "pixel order or values drifted")
+    val d = Images.decoder().decode("image/bmp", Images.encode("image/bmp", w, h, gray))
+    assert(d.width == w && d.height == h)
+    assert(d.gray.toSeq == gray.toSeq, "pixel order or values drifted")
   }
 
   test("image_phash: identical pixel content collides, cluster math is consistent") {
@@ -55,10 +55,11 @@ class SeismicFilterSpec extends SparkSpec {
     // identical gray content must produce identical hashes regardless of
     // geometry match: hash two copies directly
     val gray = Array.tabulate(32 * 20)(i => ((i * 31) % 256).toByte)
-    val b1 = BmpCodec.encode(32, 20, gray)
-    val b2 = BmpCodec.encode(32, 20, gray.clone())
+    val b1 = Images.encode("image/bmp", 32, 20, gray)
+    val b2 = Images.encode("image/bmp", 32, 20, gray.clone())
     def hash(bytes: Array[Byte]): (Long, Long) = {
-      val (w, h, g) = BmpCodec.decodeGray(bytes)
+      val d = Images.decoder().decode("image/bmp", bytes)
+      val (w, h, g) = (d.width, d.height, d.gray)
       val n = w.toLong * h
       val pixSum = g.map(_ & 0xff).map(_.toLong).sum
       var hi = 0L; var lo = 0L

@@ -202,13 +202,13 @@ class MdioAggParitySpec extends SparkSpec {
     |int-empty grouped max(x) pushed=false rows=
     |int-empty ungrouped sum(x) pushed=true rows=(null)
     |int-empty grouped sum(x) pushed=false rows=
-    |int-empty ungrouped min(v) pushed=false rows=(null)
+    |int-empty ungrouped min(v) pushed=true rows=(null)
     |int-empty grouped min(v) pushed=true rows=
-    |int-empty ungrouped max(v) pushed=false rows=(null)
+    |int-empty ungrouped max(v) pushed=true rows=(null)
     |int-empty grouped max(v) pushed=true rows=
-    |int-empty ungrouped sum(v) pushed=false rows=(null)
+    |int-empty ungrouped sum(v) pushed=true rows=(null)
     |int-empty grouped sum(v) pushed=true rows=
-    |int-empty ungrouped avg(v) pushed=false rows=(null)
+    |int-empty ungrouped avg(v) pushed=true rows=(null)
     |int-empty grouped avg(v) pushed=true rows=
     |int-empty ungrouped var_pop(v) pushed=false rows=(null)
     |int-empty grouped var_pop(v) pushed=false rows=
@@ -222,7 +222,7 @@ class MdioAggParitySpec extends SparkSpec {
     |int-empty grouped median(v) pushed=false rows=
     |int-empty ungrouped percentile_disc(0.25) pushed=false rows=(null)
     |int-empty grouped percentile_disc(0.25) pushed=false rows=
-    |int-empty ungrouped stats pushed=false rows=(0,null,null,null,null)
+    |int-empty ungrouped stats pushed=true rows=(0,null,null,null,null)
     |int-empty grouped stats pushed=true rows=
     |int-empty ungrouped median+max pushed=false rows=(null,null)
     |int-empty grouped median+max pushed=false rows=

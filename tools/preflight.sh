@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage, one metadata-aggregate answer =="
+echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage, one metadata-aggregate answer, one still-image path =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -77,6 +77,25 @@ if [ -n "$proofs" ]; then
   fail=1
 else
   echo "one metadata-aggregate answer (no *Answerable proofs beside boxRankAnswerable, no statValue)"
+fi
+
+# every still-image decode and fixture encode goes through the JDK's
+# javax.imageio behind graft.multimodal.Images: no hand-written still-image
+# codec, no javax.imageio import elsewhere in src/main, no ImageIO.read(
+# (its InputStream route skips the adapter's checks) and no toggling of
+# the JVM-global ImageIO.setUseCache
+images=src/main/scala/graft/multimodal/Images.scala
+codecs=$(ls src/main/scala/graft/multimodal/{Bmp,Png,Gif,Jpeg}Codec.scala 2>/dev/null)
+imports=$(grep -rlE "javax\.imageio\.[A-Za-z]" src/main | grep -vx "$images")
+calls=$(grep -rnE "ImageIO\.(read\(|setUseCache)" src/main)
+if [ -n "$codecs$imports$calls" ]; then
+  echo "STILL-IMAGE LINT RED: a second still-image path in src/main/:"
+  [ -n "$codecs" ] && echo "$codecs"
+  [ -n "$imports" ] && echo "$imports"
+  [ -n "$calls" ] && echo "$calls"
+  fail=1
+else
+  echo "one still-image path (javax.imageio only in Images.scala; no Bmp/Png/Gif/JpegCodec, ImageIO.read( or ImageIO.setUseCache)"
 fi
 
 echo "== 2/6 full test suite =="
