@@ -619,15 +619,15 @@ object Bench {
     "zarr_median_by_tile" -> 1.0,
     // comparator: zarr_kth_smallest (same bracket + probe + window shape,
     // shared across three ranks; the per-rank selections hit the cached
-    // grouped counts)
-    "zarr_quantiles" -> 1.0, // multi-rank selection: 2 cached-count jobs
+    // per-(rank, value) counts)
+    "zarr_quantiles" -> 1.0, // keyed driver pick: 2 jobs over the cached counts
     // comparator: zarr_median_by_slab (same slab brackets and single
-    // union-window scan, two ranks per slab through the bucketed
-    // two-stage pick; suite band 0.83–1.12 s across r17 runs)
+    // union-window scan, two ranks per slab through the keyed driver
+    // pick; suite band 0.83–1.12 s across r17 runs)
     "zarr_quantiles_by_slab" -> 1.3,
     // comparator: zarr_quantiles (the pushed median + discrete p90 batch
-    // their three ranks through ONE valuesAtRanks bracket/probe/window
-    // pass; 3-rep idle floor 0.76 s; first budget r17)
+    // their three ranks through ONE boxRanks bracket/probe/window pass
+    // over one group; 3-rep idle floor 0.76 s; first budget r17)
     "zarr_median_pushdown" -> 1.2,
     // comparator: zarr_median_pushdown (same one-pass bracket/probe/
     // window batch over a 2-lead-chunk box plus the boxed answerability's

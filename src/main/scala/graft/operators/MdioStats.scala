@@ -304,7 +304,7 @@ object MdioStats {
         s"variable '$variable' carries no dimension names"))
     require(!dims.contains(variable),
       s"'$variable' is a dimension coordinate — $coordHint")
-    private val isFloat = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
+    val isFloat: Boolean = meta.dtype.charAt(meta.dtype.length - 2) == 'f'
     /** The window applied to a frame: the single slice's dim filters push
       * into the scan; a union pushes its hull and refines with the exact
       * OR, so every fallback scan prunes too. */
@@ -366,6 +366,17 @@ object MdioStats {
     val cols: Seq[Column] = t.dims.zip(sizes).zip(names).map {
       case ((dn, gs), gn) => floor(col(dn) / gs).cast("long").as(gn)
     }
+    /** Per-(group, value) cell counts of `df`'s `variable` (`v`, `c`).
+      * A whole-extent size makes its ordinal the constant 0, which joins
+      * after the aggregate rather than as a key: an ungrouped count
+      * aggregates by value alone. */
+    def counts(df: DataFrame, variable: String): DataFrame = {
+      val keyed = t.dims.indices.filter(i => sizes(i) < t.meta.shape(i))
+      df.groupBy(keyed.map(cols) :+ col(variable).as("v"): _*).agg(count(lit(1L)).as("c"))
+        .select(names.indices.map(i =>
+          if (keyed.contains(i)) col(names(i)) else lit(0L).as(names(i))) ++
+          Seq(col("v"), col("c")): _*)
+    }
     /** The `g_<dim>` output columns. */
     def out: Seq[Column] = names.zip(t.dims).map { case (gn, d) => col(gn).as(s"g_$d") }
     def fields: Seq[StructField] = t.dims.map(d => StructField(s"g_$d", LongType, nullable = false))
@@ -390,6 +401,13 @@ object MdioStats {
     def inBox(cc: Seq[Long]): Boolean =
       boxes.exists(b => cc.indices.forall(i => cc(i) >= b(i)._1 && cc(i) < b(i)._2))
     def groupOf(cc: Seq[Long]): Seq[Long] = cc.zip(cpg).map { case (c, n) => c / n }
+    /** In-domain cells of chunk `cc` (a ragged last chunk holds fewer). */
+    def capacity(cc: Seq[Long]): Long = cc.indices.map(d =>
+      math.min(meta.chunks(d), meta.shape(d) - cc(d) * meta.chunks(d))).product
+    /** In-domain cells of shard `sid`'s whole lead range. */
+    def shardCells(sid: Long, span: Long): Long =
+      (math.min((sid + 1) * span * meta.chunks.head, meta.shape.head) -
+        sid * span * meta.chunks.head) * meta.shape.tail.product
     /** Groups the window touches: the O(groups) driver state a grouped
       * operator caps (past the cap its distributed scan is the right plan). */
     def nGroups: BigInt = boxes.map(b => grid.indices.map(d =>
@@ -655,10 +673,15 @@ object MdioStats {
     case other => throw new IllegalStateException(s"unrankable value $other")
   }
 
-  /** Buckets per rank in [[selectByRankMulti]]: bounds the driver collect
-    * at one Long per non-empty bucket and each rank's final sort at one
-    * bucket's distinct values. */
+  /** Buckets per rank request in the rank pick: bounds each request's
+    * final sort at one bucket's distinct values. */
   private val RankBuckets = 1024
+
+  /** The driver-side pick's bound: while requests × [[RankBuckets]] fits
+    * it, [[selectByRankMulti]] collects every request's bucket histogram
+    * (≤ this many rows) and locates the buckets on the driver; past it
+    * [[pickByRankBucketed]] locates them distributed, nothing collected. */
+  private val RankPickRows = 1 << 20
 
   /** The EXACT binary value of a double as BigDecimal — scala's
     * `BigDecimal(d)` routes through `valueOf` (shortest decimal string),
@@ -776,88 +799,61 @@ object MdioStats {
     throw new IllegalArgumentException(s"rank $rank exceeds $before cells")
   }
 
-  /** One rank request for [[selectByRankMulti]]: select the `residual`-th
-    * smallest value among `byV` rows with `x0 < v ≤ x1` (x0 None ⇒ no
-    * lower edge). The edges are COLUMNS (built with [[edgeLit]]) so the
-    * window membership compares in the value's native type — a u64 edge
-    * past 2^53 must not round through double. `lo`/`hi` are approximate
-    * double covers for the bucket span (buckets only need determinism,
-    * not exactness: values outside clamp into the edge buckets). */
-  private[graft] final case class RankReq(x0: Option[Column],
-                                          x1: Column,
-                                          lo: Double, hi: Double,
-                                          residual: Long)
+  /** A rank request's bucket over columns `v` (any numeric), `blo`/`bw`
+    * (doubles: the request's bucket origin and width — only determinism
+    * matters, values outside clamp into the edge buckets). `coalesce`
+    * makes it provably NON-NULL: a join on it would otherwise let the
+    * optimizer infer an isnotnull constraint into ONE of two occurrences
+    * of the same frame, and exchange reuse across them silently dies. */
+  private def rankBucket: Column =
+    coalesce(when(col("bw") <= 0, lit(0L)).otherwise(
+      least(greatest(floor((col("v").cast("double") - col("blo")) / col("bw")),
+        lit(0.0)), lit((RankBuckets - 1).toDouble)).cast("long")), lit(0L))
 
-  /** Exact rank selection over DISTINCT-VALUE counts (`byV`: `v` any
-    * numeric, `c` Long) with Long ranks end-to-end — the replacement for
+  /** Exact rank selection over per-(request, value) counts (`byR`: `_r`
+    * the Int request id, `v` any numeric, `c` Long, `blo`/`bw` the
+    * request's bucket parameters) with Long ranks end-to-end —
+    * `residuals(r)` is request r's 1-based rank — the replacement for
     * `ORDER BY v OFFSET rank-1 LIMIT 1`, whose Int-typed offset silently
     * wraps past 2³¹ and whose global sort funnels every row through one
-    * partition — for MANY ranks (each with its own window) in TWO jobs
-    * total: the requests ride the plan as an exploded literal array — no
-    * join, no per-rank action — so job one collects every rank's
-    * ≤[[RankBuckets]]-row bucket histogram at once and job two picks
-    * every rank's value from its located bucket with a cumulative-count
-    * window PARTITIONED BY RANK (each partition sorts one bucket's
-    * distinct values). Buckets are a pure function of the value (no
-    * sampling), so re-evaluation cannot move rows across buckets; persist
-    * `byV` when it derives from a scan. Driver round-trips stop scaling
-    * with the rank count — the p01/p50/p99 readout pays the same two
-    * cached-frame jobs as one median. */
-  private[graft] def selectByRankMulti(byV: DataFrame,
-                                       reqs: Seq[RankReq],
-                                       et: DataType)
-      : Seq[Double] = {
+    * partition. TWO jobs for every request at once: job one collects each
+    * request's ≤[[RankBuckets]]-row bucket histogram, the driver locates
+    * each rank's bucket ([[bucketForRank]]), and job two picks every
+    * value from its located bucket — passed back as literal arrays
+    * indexed by `_r`, no join — with a cumulative-count window
+    * PARTITIONED BY REQUEST (each partition sorts one bucket's distinct
+    * values). Buckets are a pure function of the value (no sampling), so
+    * re-evaluation cannot move rows across buckets; persist `byR` when it
+    * derives from a scan. Returns the values in request order. */
+  private[graft] def selectByRankMulti(byR: DataFrame, residuals: IndexedSeq[Long])
+      : IndexedSeq[Double] = {
     import org.apache.spark.sql.expressions.Window
-    if (reqs.isEmpty) return Seq.empty
-    def reqArr(extra: Seq[(Int, Long, Long)] = Nil) = explode(array(
-      reqs.zipWithIndex.map { case (r, i) =>
-        val width = (r.hi - r.lo) / RankBuckets
-        val more = extra.find(_._1 == i).map { case (_, b, need) =>
-          Seq(lit(b).as("cb"), lit(need).as("need")) }.getOrElse(Nil)
-        struct(Seq(lit(i).as("id"),
-          r.x0.getOrElse(lit(null)).cast(et).as("x0"),
-          r.x1.cast(et).as("x1"), lit(r.lo).as("blo"),
-          lit(width).as("bw")) ++ more: _*)
-      }: _*))
-    def windowed(extra: Seq[(Int, Long, Long)]) = {
-      val df = byV.withColumn("r", reqArr(extra)).select(col("v"), col("c"), col("r.*"))
-        .filter((col("x0").isNull || col("v") > col("x0")) && col("v") <= col("x1"))
-      val bucket = when(col("bw") <= 0, lit(0L)).otherwise(
-        least(greatest(floor((col("v").cast("double") - col("blo")) / col("bw")),
-          lit(0.0)), lit((RankBuckets - 1).toDouble)).cast("long"))
-      (df, bucket)
+    val hist = byR.groupBy(col("_r"), rankBucket.as("_b")).agg(sum(col("c")))
+      .collect().groupBy(_.getInt(0))
+    val located = residuals.indices.map { r =>
+      val (b, before) = bucketForRank(
+        hist.getOrElse(r, Array.empty[Row]).map(x => (x.getLong(1), x.getLong(2))).toSeq,
+        residuals(r))
+      (b, residuals(r) - before)
     }
-    // job 1: every rank's bucket histogram at once
-    val (hist, bucket1) = windowed(Nil)
-    val per = hist.groupBy(col("id"), bucket1.as("b")).agg(sum(col("c")).as("bc"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (id, rows) => id -> rows.map(r => (r.getLong(1), r.getLong(2))).toSeq }
-    val located = reqs.indices.map { i =>
-      val (b, before) = bucketForRank(per.getOrElse(i, Seq.empty), reqs(i).residual)
-      (i, b, reqs(i).residual - before)
-    }
-    // job 2: every rank picks from its located bucket; the cum window
-    // partitions by rank, so each partition holds ONE bucket's values
-    val (pick, bucket2) = windowed(located)
-    val cum = Window.partitionBy(col("id")).orderBy(col("v"))
+    val need = typedLit(located.map(_._2).toArray).getItem(col("_r"))
+    val cum = Window.partitionBy(col("_r")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = pick.filter(bucket2 === col("cb"))
-      .withColumn("cum", sum(col("c")).over(cum))
-      .filter(col("cum") >= col("need") && col("cum") - col("c") < col("need"))
-      .select(col("id"), col("v"))
+    val out = byR.filter(rankBucket === typedLit(located.map(_._1).toArray).getItem(col("_r")))
+      .withColumn("_cum", sum(col("c")).over(cum))
+      .filter(col("_cum") >= need && col("_cum") - col("c") < need)
+      .select(col("_r"), col("v"))
       .collect().map(r => r.getInt(0) -> anyToDouble(r.get(1))).toMap
-    reqs.indices.map(i => out.getOrElse(i,
-      throw new IllegalStateException(s"rank request $i selected no value")))
+    residuals.indices.map(r => out.getOrElse(r,
+      throw new IllegalStateException(s"rank request $r selected no value")))
   }
 
   /** DISTRIBUTED bucketed rank pick over grouped distinct-value counts —
-    * the per-group twin of [[selectByRankMulti]], with NOTHING collected:
-    * `byKV` carries one row per (key-group, value) with columns `keys`*,
-    * `v` (any numeric), `c` (Long count), `residual` (the 1-based rank to
-    * select within the group, constant per group), and `blo`/`bw`
-    * (doubles: the group's bucket origin and per-bucket width — only
-    * determinism matters, values outside clamp into the edge buckets).
+    * the twin of [[selectByRankMulti]] past [[RankPickRows]], with
+    * NOTHING collected: `byKV` carries one row per (key-group, value)
+    * with columns `keys`*, `v` (any numeric), `c` (Long count),
+    * `residual` (the 1-based rank to select within the group, constant
+    * per group), and `blo`/`bw` ([[rankBucket]]'s parameters).
     * Stage 1 aggregates per-(group, bucket) counts (≤[[RankBuckets]] rows
     * per group) and locates each group's rank-holding bucket with a
     * cumulative window ORDERED BY BUCKET — ≤1024 rows per window
@@ -878,15 +874,7 @@ object MdioStats {
                                         keys: Seq[String])
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // coalesce makes _bkt provably NON-NULL: otherwise the join on _bkt
-    // below lets the optimizer infer an isnotnull(_bkt) constraint into
-    // ONE of the two byKV occurrences, the subtrees stop canonicalizing
-    // equal, and exchange reuse (the mechanism that executes the shared
-    // scan once) silently dies
-    val bkt = coalesce(when(col("bw") <= 0, lit(0L)).otherwise(
-      least(greatest(floor((col("v").cast("double") - col("blo")) / col("bw")),
-        lit(0.0)), lit((RankBuckets - 1).toDouble)).cast("long")), lit(0L))
-    val withB = byKV.withColumn("_bkt", bkt)
+    val withB = byKV.withColumn("_bkt", rankBucket)
     val perB = withB
       .groupBy((keys :+ "residual").map(col) :+ col("_bkt"): _*)
       .agg(sum(col("c")).as("_bc"))
@@ -914,7 +902,9 @@ object MdioStats {
     * a shard rides coarse only when [[Geometry.shardGroup]] maps it whole
     * into one group; anything partial opens into fine items. `moments`
     * says whether items need finite-cell counts (ranks and group sizes
-    * do; locating an extremum needs bounds only). `usable` drops on any
+    * do; locating an extremum needs bounds only); `integral` cells are
+    * never NaN, so their count is the in-domain capacity even where the
+    * sidecar omits moments (exact sums that overflowed at write). `usable` drops on any
     * cell unaccounted for (missing entry, missing moments where needed,
     * torn shard) or when the walk or a refinement exceeds `entryBudget`
     * driver-side entries — callers then take their exact scan instead of
@@ -922,28 +912,32 @@ object MdioStats {
     * shards the caller's predicate picks open into fine items. */
   private final class RankItems(varDir: VPath, man: MdioChunkStats.Manifest,
                                 geo: Geometry, entryBudget: Long,
-                                moments: Boolean = true) {
+                                moments: Boolean = true, integral: Boolean = false) {
     private type Bounds = MdioChunkStats.Bounds
     private val fine = mutable.Map.empty[Seq[Long], mutable.ArrayBuffer[(Seq[Long], Bounds)]]
     // group -> sid -> (lo, hi, cells), sids ascending
     private val coarse = mutable.Map
       .empty[Seq[Long], mutable.SortedMap[Long, (BigDecimal, BigDecimal, Long)]]
     var usable = true
+    /** A chunk's finite-cell count, when known. */
+    def cellsOf(cc: Seq[Long], b: Bounds): Option[Long] =
+      b.moments.map(_.cnt).orElse(if (integral) Some(geo.capacity(cc)) else None)
     private def intake(cc: Seq[Long], eOpt: Option[MdioChunkStats.Entry]): Unit =
       if (geo.inBox(cc)) eOpt match {
-        case Some(Some(b)) if !moments || b.moments.isDefined =>
+        case Some(Some(b)) if !moments || cellsOf(cc, b).isDefined =>
           fine.getOrElseUpdate(geo.groupOf(cc), mutable.ArrayBuffer.empty) += ((cc, b))
         case Some(None) => () // all-NaN chunk: never ranks or wins
         case _ => usable = false
       }
     if (!walkShards(varDir, man, geo, entryBudget) { (sid, sm) =>
-      (!moments || sm.cells.isDefined) && geo.shardGroup(sid, man.span).exists { g =>
+      val cells = sm.cells.orElse(if (integral) Some(geo.shardCells(sid, man.span)) else None)
+      (!moments || cells.isDefined) && geo.shardGroup(sid, man.span).exists { g =>
         (sm.lo, sm.hi) match {
           case (Some(l), Some(h)) =>
             coarse.getOrElseUpdate(g, mutable.SortedMap.empty)
-              .update(sid, (l, h, sm.cells.getOrElse(0L)))
+              .update(sid, (l, h, cells.getOrElse(0L)))
             true
-          case _ => sm.cells.contains(0L) // all-NaN shard: proven no finite cell
+          case _ => cells.contains(0L) // all-NaN shard: proven no finite cell
         }
       }
     }(intake)) usable = false
@@ -959,8 +953,8 @@ object MdioStats {
       * carrying a finite-cell count (0 where moments were not asked for),
       * exactly what [[bracketItems]] consumes. */
     def items(g: Seq[Long]): IndexedSeq[(BigDecimal, BigDecimal, Long)] =
-      (coarseOf(g).iterator ++ fineOf(g).iterator.map { case (_, b) =>
-        (b.min, b.max, b.moments.fold(0L)(_.cnt)) }).toIndexedSeq
+      (coarseOf(g).iterator ++ fineOf(g).iterator.map { case (cc, b) =>
+        (b.min, b.max, cellsOf(cc, b).getOrElse(0L)) }).toIndexedSeq
 
     /** Open every coarse shard `touches(group, lo, hi)` picks into fine
       * items, groups ascending, shards ascending. The refinement shares
@@ -1070,15 +1064,13 @@ object MdioStats {
     * straddling the bracket's lower edge. Ties are handled exactly: the
     * result equals `ORDER BY v LIMIT 1 OFFSET k-1` in any engine, with a
     * Long rank, never an Int-typed OFFSET. This is [[valuesAtRanks]] at
-    * one rank. */
+    * one rank: the one rank pass ([[rankPass]]) over one group. */
   def kthSmallest(spark: SparkSession, path: String, variable: String,
                   k: Long, maxProbeChunks: Int = 512,
                   ranges: Map[String, (Long, Long)] = Map.empty,
                   windows: Seq[Map[String, (Long, Long)]] = Nil): KthSmallest = {
     require(k >= 1, s"rank $k out of range")
-    val q = rankVector(spark, path, variable, { n =>
-      require(k <= n, s"rank $k exceeds $n finite cells"); Seq(k)
-    }, maxProbeChunks, ranges, windows)
+    val q = wholeRanks(spark, path, variable, 1, _ => Seq(k), maxProbeChunks, ranges, windows)
     KthSmallest(q.values.head, q.jobs, q.scannedChunks, q.fallback)
   }
 
@@ -1094,167 +1086,73 @@ object MdioStats {
 
   /** EXACT quantile VECTOR in one boundary-window pass — the amplitude
     * clip-level readout (p01/p50/p99 of a survey for display gain/clip
-    * QC; reference statsV1 QC anchor, mdio/stats.h:229-335) computed the
-    * way [[kthSmallest]] computes one rank — the same pass — sharing every
-    * stage across ALL requested quantiles: ONE metadata bracket per rank over
-    * the same hierarchical items (whole-shard manifest summaries +
-    * per-chunk [min,max,cnt]; shards open only when they intersect SOME
-    * rank's window), ONE `chunkKeys` probe scan recounting every
-    * bracket's lower edge together (one conditional-count column per
-    * distinct edge), and ONE window scan over the UNION of the rank
-    * windows whose cached grouped counts answer every rank via
-    * [[selectByRankMulti]] (Long ranks; the selections re-read the
-    * cached frame, not the store). Chunk I/O for the whole vector is the
-    * union of the boundary windows — reading the store once per quantile,
-    * or sorting it, would cost p×more or shuffle the corpus. `ks(i) =
-    * ⌈ps(i)·n⌉` evaluates in BigDecimal (a median at the 100 TB envelope
-    * is k ≈ 10¹² — past double-exact integer territory is still years
-    * off, but the ceil must not wobble on the boundary). Stale/absent
-    * stats or more than `maxProbeChunks` total straddlers fall back
-    * loudly to the exact full-scan grouped-rank form over one scan.
-    * `ranges` (r18) restricts the vector to a dim-index box, exactly as
-    * [[valuesAtRanks]]. */
+    * QC; reference statsV1 QC anchor, mdio/stats.h:229-335): the one rank
+    * pass ([[rankPass]]) over one group, sharing every stage across ALL
+    * requested quantiles: ONE metadata bracket per rank over the same
+    * hierarchical items (whole-shard manifest summaries + per-chunk
+    * [min,max,cnt]; shards open only when they intersect SOME rank's
+    * window), ONE `chunkKeys` probe scan recounting every bracket's lower
+    * edge together (one conditional-count column per distinct edge), and
+    * ONE window scan over the UNION of the rank windows whose cached
+    * per-(rank, value) counts answer every rank via [[selectByRankMulti]]
+    * (Long ranks; the selections re-read the cached frame, not the
+    * store). Chunk I/O for the whole vector is the union of the boundary
+    * windows — reading the store once per quantile, or sorting it, would
+    * cost p×more or shuffle the corpus. `ks(i) = ⌈ps(i)·n⌉` evaluates in
+    * BigDecimal (a median at the 100 TB envelope is k ≈ 10¹² — past
+    * double-exact integer territory is still years off, but the ceil
+    * must not wobble on the boundary). Stale/absent stats or more than
+    * `maxProbeChunks` total straddlers fall back loudly to the exact
+    * full-scan grouped-rank form over one scan. `ranges` (r18) restricts
+    * the vector to a dim-index box, exactly as [[valuesAtRanks]]. */
   def quantilesOf(spark: SparkSession, path: String, variable: String,
                   ps: Seq[Double], maxProbeChunks: Int = 512,
                   ranges: Map[String, (Long, Long)] = Map.empty,
                   windows: Seq[Map[String, (Long, Long)]] = Nil): Quantiles = {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0),
       s"quantiles $ps must lie in (0, 1]")
-    rankVector(spark, path, variable, n => ps.map(p =>
-      (BigDecimal(p) * n).setScale(0, BigDecimal.RoundingMode.CEILING).toLong),
+    wholeRanks(spark, path, variable, ps.size, ceilRanks(ps),
       maxProbeChunks, ranges, windows)
   }
 
-  /** EXACT values at EXPLICIT 1-based ranks, sharing [[quantilesOf]]'s
-    * one-bracket / one-probe / one-window pass — the batched entry the
-    * percentile aggregate pushdown routes through: a pushed `median` +
-    * `percentile_disc` pair needs 2–3 ranks of one variable, and per-rank
-    * calls would pay the bracket walk and the bounded scan jobs once per
-    * rank instead of once per vector. `ranges`
-    * restricts the ranking to a dim-index BOX (`dim -> [lo, hi)`; r18 —
-    * the depth-window median): a chunk-aligned box rides the same bracket
-    * machinery over its own chunks only (disjoint shards never read), a
-    * misaligned one answers exactly through the sliced full-scan
-    * fallback. */
+  /** EXACT values at EXPLICIT 1-based ranks through [[quantilesOf]]'s
+    * one-bracket / one-probe / one-window pass, so several ranks of one
+    * variable pay the bracket walk and the bounded scan jobs once per
+    * vector, not once per rank. `ranges` restricts the ranking to a
+    * dim-index BOX (`dim -> [lo, hi)`; r18 — the depth-window median): a
+    * chunk-aligned box rides the same bracket machinery over its own
+    * chunks only (disjoint shards never read), a misaligned one answers
+    * exactly through the sliced full-scan fallback, whose residuals are
+    * these ranks as literals. */
   def valuesAtRanks(spark: SparkSession, path: String, variable: String,
                     ks: Seq[Long], maxProbeChunks: Int = 512,
                     ranges: Map[String, (Long, Long)] = Map.empty,
                     windows: Seq[Map[String, (Long, Long)]] = Nil): Quantiles = {
     require(ks.nonEmpty && ks.forall(_ >= 1), s"ranks $ks must be ≥ 1")
-    rankVector(spark, path, variable, { n =>
-      require(ks.forall(_ <= n), s"ranks $ks exceed $n finite cells")
-      ks
-    }, maxProbeChunks, ranges, windows)
+    wholeRanks(spark, path, variable, ks.size, _ => ks, maxProbeChunks, ranges, windows)
   }
 
-  private def rankVector(spark: SparkSession, path: String, variable: String,
-                         mkKs: Long => Seq[Long], maxProbeChunks: Int,
+  /** `⌈p·n⌉` per quantile in BigDecimal: exact at any n, and the same
+    * number in the pruned pass and in either fallback. */
+  private def ceilRanks(ps: Seq[Double]): Long => Seq[Long] = n =>
+    ps.map(p => (BigDecimal(p) * n).setScale(0, BigDecimal.RoundingMode.CEILING).toLong)
+
+  /** The ungrouped operators' reading of [[rankPass]] over ONE group
+    * (every group size the whole extent): `slots` rank slots labelled by
+    * their index, one result row per slot; no row means no finite cell. */
+  private def wholeRanks(spark: SparkSession, path: String, variable: String,
+                         slots: Int, mkKs: Long => Seq[Long], maxProbeChunks: Int,
                          ranges: Map[String, (Long, Long)],
                          windows: Seq[Map[String, (Long, Long)]]): Quantiles = {
-    // optional dim-index slice (r18) or UNION of disjoint slices (r19):
-    // ranks are computed over the window cells only
-    val t = new QcVar(spark, path, variable, "rank vector",
-      "rank its index range instead", ranges, windows)
-    def scanFallback(): Quantiles = {
-      val byV = t.finite(t.sliced(t.base)).groupBy(col(variable).as("v"))
-        .agg(count(lit(1L)).as("c")).persist()
-      try {
-        val mm = byV.agg(min(col("v").cast("double")), max(col("v").cast("double")),
-          sum(col("c")), max(col("v"))).head
-        val total = if (mm.isNullAt(2)) 0L else mm.getLong(2)
-        require(total >= 1, s"no finite cells to rank in '$variable'")
-        val ks = mkKs(total)
-        require(ks.forall(_ <= total), s"ranks $ks exceed $total finite cells")
-        val reqs = ks.map(k =>
-          RankReq(None, lit(mm.get(3)), mm.getDouble(0), mm.getDouble(1), k))
-        Quantiles(selectByRankMulti(byV, reqs, edgeType(t.vt)),
-          ks, total, 0, 0L, fallback = true)
-      } finally byV.unpersist()
-    }
-    val (man, geo) = t.plan() match {
-      case Right(p) => p
-      case Left(_) => return scanFallback()
-    }
-    // hierarchical rank items over the window's own chunks (disjoint
-    // shards are never even read)
-    val ri = new RankItems(t.varDir, man, geo, qcEntryBudget)
-    if (!ri.usable) return scanFallback()
-    val g = geo.whole
-    val n = ri.items(g).iterator.map(_._3).sum
-    require(n >= 1, s"no finite cells to rank in '$variable'")
-    val ks = mkKs(n)
-    require(ks.forall(_ <= n), s"ranks $ks exceed $n finite cells")
-    val brackets = ri.brackets(Seq(g -> ks)).getOrElse(return scanFallback())(g)
-    val fine = ri.fineOf(g)
-    val vt = t.vt
-
-    var scanned = 0L
-    var jobs = 0
-    // ONE probe scan recounts EVERY bracket's lower edge (a remaining
-    // coarse shard can never straddle one: a union crossing it would
-    // intersect that rank's window, so the shard is open): the chunkKeys
-    // allowlist is the union of all edges' straddlers, and one aggregate
-    // row carries a conditional count per distinct edge
-    val edges = brackets.flatMap(_._1).distinct.sorted
-    val probeChunks = edges.flatMap(e =>
-      fine.collect { case (cc, b) if b.min <= e && b.max > e => cc }).distinct
-    if (probeChunks.size > maxProbeChunks) {
-      log.warn(s"rank vector($path, $variable): ${probeChunks.size} " +
-        s"chunks straddle bracket edges (cap $maxProbeChunks) — falling " +
-        "back to the exact full-scan grouped-rank selection")
-      return scanFallback()
-    }
-    val exactAtEdge: Map[BigDecimal, Long] =
-      if (probeChunks.isEmpty) Map.empty
-      else {
-        scanned += probeChunks.size
-        jobs += 1
-        val aggs = edges.indices.map(i =>
-          count(when(col(variable) <= edgeLit(edges(i), vt), 1L)).as(s"e$i"))
-        val row = t.chunks(probeChunks).agg(aggs.head, aggs.tail: _*).head
-        // row(i) = cells ≤ edge(i) over ALL probed chunks (a probed chunk
-        // fully below/above a FOREIGN edge counts whole/zero there, which
-        // is exact); belowAt pairs this with metadata counts over the
-        // UNPROBED items only, so nothing double-counts
-        edges.zipWithIndex.map { case (e, i) => e -> row.getLong(i) }.toMap
-      }
-
-    // exact rank below each edge: metadata certain-below over UNPROBED
-    // items + the probe's conditional count over probed chunks. A probed
-    // chunk (straddler of some edge) may be fully below/above ANOTHER
-    // edge — its cells are in the probe count for that edge too, so the
-    // metadata side must exclude every probed chunk to avoid double count.
-    val probedSet = probeChunks.toSet
-    def belowAt(e: BigDecimal): Long =
-      ri.coarseOf(g).iterator.collect { case (_, h, c) if h <= e => c }.sum +
-        fine.iterator.collect {
-          case (cc, b) if !probedSet.contains(cc) && b.max <= e => b.moments.get.cnt
-        }.sum +
-        exactAtEdge.getOrElse(e, 0L)
-
-    // ONE window scan over the UNION of the rank windows; the cached
-    // grouped counts answer every rank (selectByRankMulti re-reads the cache)
-    val windowChunks = fine.collect {
-      case (cc, b) if brackets.exists(inWindow(b.min, b.max, _)) => cc
-    }.toSeq
-    scanned += windowChunks.size
-    jobs += 1
-    val unionPred = brackets.map { case (x0, x1) =>
-      x0.fold(lit(true))(col(variable) > edgeLit(_, vt)) && col(variable) <= edgeLit(x1, vt)
-    }.reduce(_ || _)
-    val byV = t.chunks(windowChunks).filter(unionPred)
-      .groupBy(col(variable).as("v")).agg(count(lit(1L)).as("c")).persist()
-    val lo0 = ri.items(g).iterator.map(_._1).min
-    val reqs = ks.zip(brackets).map { case (k, (x0, x1)) =>
-      val residual = k - x0.map(belowAt).getOrElse(0L)
-      require(residual >= 1, s"rank window inconsistency: residual $residual")
-      RankReq(x0.map(edgeLit(_, vt)), edgeLit(x1, vt),
-        x0.getOrElse(lo0).toDouble, x1.toDouble, residual)
-    }
-    val values =
-      try selectByRankMulti(byV, reqs, edgeType(vt))
-      finally byV.unpersist()
-    Quantiles(values, ks, n, jobs, scanned, fallback = false)
+    val labels = (0 until slots).map(_.toDouble)
+    val r = rankPass(spark, path, variable, "rank vector", labels, mkKs, None,
+      maxProbeChunks, Int.MaxValue, fallbackOk = true, ranges, windows)
+    val rows = r.collect()
+    require(rows.nonEmpty, s"no finite cells to rank in '$variable'")
+    val n = rows.head.getLong(r.schema.fieldIndex("n"))
+    val (p, q) = (r.schema.fieldIndex("p"), r.schema.fieldIndex("q"))
+    val byLabel = rows.map(x => x.getDouble(p) -> x.getDouble(q)).toMap
+    Quantiles(labels.map(byLabel), mkKs(n), n, r.jobs, r.scannedChunks, r.fallback)
   }
 
   /** [[extremaLocation]] result: `result` is one row — `v_min`, the
@@ -1743,38 +1641,21 @@ object MdioStats {
     * geometry; reference statsV1 QC anchor, mdio/stats.h:229-335). Group
     * `d`'s ordinal is `⌊index_d / groupSizes(d)⌋` over ABSOLUTE dim
     * indices; each group's rank `⌈p·n_g⌉` is selected exactly for every
-    * requested `p`, sharing every stage across ALL groups AND all
-    * quantiles: the brackets run DRIVER-SIDE from the stats sidecar
-    * (hierarchical items — whole-shard manifest summaries ride as one
-    * [lo,hi]×cells interval while their lead range sits inside one group,
-    * opening only when they intersect one of their group's rank windows;
-    * [[bracketItems]], Long ranks throughout), then at most TWO scan jobs
-    * finish everything: ONE `chunkKeys` allowlist scan recounting every
-    * (group, rank) bracket's lower edge (per-(group, p) edges applied
-    * through a broadcast join), and ONE allowlist scan over the union of
-    * all rank windows whose per-(group, p, value) counts select every
-    * residual rank through [[pickByRankBucketed]] — the two-stage bucketed
-    * pick, so no window partition ever sorts more than ~1/[[RankBuckets]]
-    * of a group's distinct values even when every chunk interval overlaps
-    * (zero-centered amplitudes, the degenerate case). Chunk I/O is
-    * Σ(per-group boundary windows) — each box pays its boundary surface,
-    * never its volume, and the plan carries no per-chunk or per-group
-    * node. Requirements: every `groupSizes(d)` positive and a multiple of
-    * dim `d`'s chunk size or ≥ the extent; distinct `ps` in (0, 1];
-    * generation-current full-coverage stats with moments. Anything less —
-    * or straddlers past `maxProbeChunks`, or more than `maxGroups` boxes
-    * (the driver holds per-group bracket state and broadcasts one bounds
-    * row per (group, p): slab/tile heat maps are small, but a
+    * requested `p` by the one rank pass ([[rankPass]]), sharing every
+    * stage across ALL groups AND all quantiles. Requirements: every
+    * `groupSizes(d)` positive and a multiple of dim `d`'s chunk size or
+    * ≥ the extent; distinct `ps` in (0, 1]; generation-current
+    * full-coverage stats with moments. Anything less — or straddlers past
+    * `maxProbeChunks`, or more than `maxGroups` boxes (the driver holds
+    * per-group bracket state: slab/tile heat maps are small, but a
     * per-chunk-tile geometry at the 100 TB envelope is ~1.6 M groups) —
     * falls back LOUDLY to one exact full-scan grouped-rank selection
-    * (`fallback = true`): fully distributed, nothing driver-held, the
-    * same bucketed two-stage pick, residuals `⌈p·n⌉` computed in decimal
-    * so ranks past 2^53 never wobble. `ranges` (r18) restricts the
-    * ranking to a dim-index box (`dim -> [lo, hi)`): group ids stay
-    * ABSOLUTE and each surviving slab ranks its in-box cells only — the
-    * per-slab clip heat-map of a cropped survey; the box must be
-    * chunk-aligned or the sliced fallback answers, and the group cap
-    * counts only the slabs the slice touches. */
+    * (`fallback = true`). `ranges` (r18) restricts the ranking to a
+    * dim-index box (`dim -> [lo, hi)`): group ids stay ABSOLUTE and each
+    * surviving slab ranks its in-box cells only — the per-slab clip
+    * heat-map of a cropped survey; the box must be chunk-aligned or the
+    * sliced fallback answers, and the group cap counts only the slabs the
+    * slice touches. */
   def quantilesByBox(spark: SparkSession, path: String, variable: String,
                      ps: Seq[Double], groupSizes: Seq[Long],
                      maxProbeChunks: Int = 512,
@@ -1783,62 +1664,153 @@ object MdioStats {
     require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0),
       s"quantiles $ps must lie in (0, 1]")
     require(ps.distinct == ps, s"duplicate quantiles in $ps")
-    boxRankVector(spark, path, variable, ps, n => ps.map(p =>
-      (BigDecimal(p) * n).setScale(0, BigDecimal.RoundingMode.CEILING).toLong),
-      groupSizes, maxProbeChunks, maxGroups, fallbackOk = true, ranges)
+    rankPass(spark, path, variable, "quantilesByBox", ps, ceilRanks(ps), Some(groupSizes),
+      maxProbeChunks, maxGroups, fallbackOk = true, ranges, Nil).grouped(spark)
   }
 
   /** Per-box values at EXPLICIT per-group ranks — `mkKs(n_g)` names each
     * group's rank list (constant arity; `labels` are the output `p`
-    * column, one per rank slot) — the grouped twin of [[valuesAtRanks]],
-    * the seam the GROUPED percentile aggregate pushdown batches through.
-    * Pruned path ONLY: the caller proved answerability (alignment,
-    * current sidecar, NaN-free) at plan time, so any fallback condition
-    * here is a plan/execution race and throws loudly instead of running
-    * the label-agnostic quantile fallback with the wrong ranks. */
+    * column, one per rank slot) — the seam the percentile aggregate
+    * pushdown batches through, grouped and ungrouped alike (ungrouped,
+    * `groupSizes` is the variable's shape: one group). Pruned path ONLY:
+    * the caller proved answerability (alignment, current sidecar,
+    * NaN-free) at plan time, so any fallback condition here is a
+    * plan/execution race and throws loudly — a stats race as the
+    * retryable [[graft.sources.MdioAggScan.StatsRaceException]] —
+    * instead of answering from a scan the plan did not choose. */
   private[graft] def boxRanks(spark: SparkSession, path: String, variable: String,
                               labels: Seq[Double], mkKs: Long => Seq[Long],
                               groupSizes: Seq[Long],
                               maxProbeChunks: Int = 512,
                               maxGroups: Int = Int.MaxValue,
-                              ranges: Map[String, (Long, Long)] = Map.empty): GroupedQuantiles = {
+                              ranges: Map[String, (Long, Long)] = Map.empty): RankAnswer = {
     require(labels.nonEmpty && labels.distinct == labels, s"bad rank labels $labels")
-    boxRankVector(spark, path, variable, labels, mkKs, groupSizes,
-      maxProbeChunks, maxGroups, fallbackOk = false, ranges)
+    rankPass(spark, path, variable, "boxRanks", labels, mkKs, Some(groupSizes),
+      maxProbeChunks, maxGroups, fallbackOk = false, ranges, Nil)
   }
 
-  private def boxRankVector(spark: SparkSession, path: String, variable: String,
-                            ps: Seq[Double], mkKs: Long => Seq[Long],
-                            groupSizes: Seq[Long], maxProbeChunks: Int,
-                            maxGroups: Int, fallbackOk: Boolean,
-                            ranges: Map[String, (Long, Long)]): GroupedQuantiles = {
-    // optional dim-index slice (r18): per-group ranks are computed over
-    // the BOX's cells only — group ids stay ABSOLUTE (FLOOR(dim/L)), so a
-    // slab clipped by the slice ranks exactly its surviving cells
-    val t = new QcVar(spark, path, variable, "quantilesByBox",
-      "slice its index range instead", ranges, Nil)
-    val gs = new QcGroups(t, groupSizes)
-    val pKeys = gs.names :+ "p"
-    // the shared tail: bucketed two-stage pick over per-(group, p, value)
-    // counts, then the output shape
-    def finish(byKV: DataFrame): DataFrame =
-      pickByRankBucketed(byKV, pKeys)
-        .select(gs.out ++ Seq(col("p"), col("v").cast("double").as("q"), col("n")): _*)
-    // exact one-scan fallback, fully DISTRIBUTED (nothing driver-held —
-    // this is also the >maxGroups escape hatch): per-(group, value)
-    // counts, per-group totals/extents by aggregation (never a whole-group
-    // window), the quantile requests riding the plan as an exploded
-    // literal array, residual = ⌈p·n⌉ in decimal (shortest-decimal p,
-    // the same number the pruned path's mkKs uses — exact past 2^53),
-    // then the same bucketed pick
-    // `race = true` marks the manifest-side triggers (pinned manifest
-    // vanished, shards read as torn) — the ONLY failures a fresh manifest
-    // can heal, so under fallbackOk=false only they wear the retryable
-    // StatsRaceException; geometry re-asserts (alignment, group cap)
-    // throw plain and stay loud on first throw (r19, ADVICE)
-    def scanFallback(race: Boolean): GroupedQuantiles = {
-      if (!fallbackOk) { // boxRanks: answerability was PROVEN at plan time
-        val msg = s"rank-by-box for '$variable' lost " +
+  /** One (group, slot) request of [[rankPass]]: the `residual`-th
+    * smallest of group `g`'s finite cells in the window (x0, x1] (None =
+    * no edge on that side), labelled `p`; `n` is the group's finite-cell
+    * count, `blo`/`bw` the request's [[rankBucket]] parameters. Edges are
+    * plain values of [[edgeType]], so window membership compares in the
+    * value's native type — a u64 edge past 2^53 never rounds through
+    * double. */
+  /** [[rankPass]]'s answer: result rows (`g_<dim>`…, `p`, `q`, `n`) —
+    * on the driver when the pick ran there, else the distributed pick's
+    * frame — and the pass's counters. */
+  private[graft] final case class RankAnswer(rows: Either[DataFrame, Seq[Row]],
+                                             schema: StructType, jobs: Int,
+                                             scannedChunks: Long, fallback: Boolean) {
+    def collect(): Seq[Row] = rows.fold(_.collect().toSeq, identity)
+    def grouped(spark: SparkSession): GroupedQuantiles = GroupedQuantiles(
+      rows.fold(identity, rs => spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)),
+      jobs, scannedChunks, fallback)
+  }
+
+  private final case class RankSlot(g: Seq[Long], p: Double, x0: Option[Any], x1: Option[Any],
+                                    residual: Long, n: Long, blo: Double, bw: Double)
+
+  /** THE rank pass behind every rank operator — [[kthSmallest]],
+    * [[quantilesOf]] and [[valuesAtRanks]] as ONE group (every size the
+    * whole extent), [[quantilesByBox]], [[medianByBox]], [[medianByLead]]
+    * and [[boxRanks]] (the pushed percentile) per box. Result rows are
+    * (`g_<dim>`…, `p` = the slot's label, `q`, `n`); groups without a
+    * finite cell emit none.
+    *
+    * Pruned path: the brackets run DRIVER-SIDE from the stats sidecar
+    * (hierarchical items — whole-shard manifest summaries ride as one
+    * [lo,hi]×cells interval while their lead range sits inside one
+    * group, opening only when they intersect one of their group's rank
+    * windows; [[bracketItems]], Long ranks throughout), then at most TWO
+    * scan jobs finish everything: ONE `chunkKeys` allowlist scan
+    * recounting every (group, rank) bracket's lower edge — one
+    * conditional-count column per edge over one group, a broadcast join
+    * of the per-group edges over several — and ONE allowlist scan over
+    * the union of all rank windows, aggregated to per-(group, value)
+    * counts before each group's slot requests attach (a literal array
+    * over one group, a broadcast join over several). The pick then runs
+    * on those per-(request, value) counts: [[selectByRankMulti]]'s two
+    * jobs over the persisted frame with every bucket located on the
+    * driver while requests × [[RankBuckets]] fits [[RankPickRows]], the
+    * distributed [[pickByRankBucketed]] past it — either way no window
+    * partition sorts more than ~1/[[RankBuckets]] of a request's
+    * distinct values, even when every chunk interval overlaps
+    * (zero-centered amplitudes, the degenerate case). Chunk I/O is
+    * Σ(per-group boundary windows) — each box pays its boundary surface,
+    * never its volume, and the plan carries no per-chunk or per-group
+    * node.
+    *
+    * Fallback (`fallbackOk`; otherwise it throws): one exact full scan of
+    * the window's finite cells into per-(group, value) counts; per-group
+    * totals and extents reach the driver while the window's groups fit
+    * `maxGroups` — the pruned path's own O(groups) envelope — so ranks
+    * enter as literal residuals and rank-past-n stays a driver-side
+    * `IllegalArgumentException`; past it, `mkKs` runs inside the plan and
+    * nothing is driver-held. `race = true` marks the manifest-side
+    * triggers (pinned manifest vanished, shards read as torn) — the ONLY
+    * failures a fresh manifest can heal, so without `fallbackOk` only
+    * they wear the retryable StatsRaceException; geometry re-asserts
+    * (alignment, group cap) throw plain and stay loud on first throw
+    * (r19, ADVICE). */
+  private def rankPass(spark: SparkSession, path: String, variable: String, op: String,
+                       labels: Seq[Double], mkKs: Long => Seq[Long],
+                       groupSizes: Option[Seq[Long]], maxProbeChunks: Int,
+                       maxGroups: Int, fallbackOk: Boolean,
+                       ranges: Map[String, (Long, Long)],
+                       windows: Seq[Map[String, (Long, Long)]]): RankAnswer = {
+    val t = new QcVar(spark, path, variable, op,
+      "slice its index range instead", ranges, windows)
+    val sizes = groupSizes.getOrElse(t.meta.shape)
+    val gs = new QcGroups(t, sizes)
+    lazy val vt = t.vt
+    val out = gs.out ++ Seq(col("p"), col("v").cast("double").as("q"), col("n"))
+    val schema = StructType(gs.fields ++ Seq(StructField("p", DoubleType, nullable = false),
+      StructField("q", DoubleType, nullable = false),
+      StructField("n", LongType, nullable = false)))
+    def ranksOf(n: Long): Seq[Long] = {
+      val ks = mkKs(n)
+      require(ks.forall(k => k >= 1 && k <= n), s"ranks $ks exceed $n finite cells")
+      ks
+    }
+
+    // the shared tail: attach each group's slot requests to its
+    // per-(group, value) counts, then the one pick
+    def finish(byGV: DataFrame, reqs: IndexedSeq[RankSlot]): Either[DataFrame, Seq[Row]] = {
+      val et = edgeType(vt)
+      def edge(x: Option[Any]) = x.fold(lit(null).cast(et))(lit(_).cast(et))
+      val withReq =
+        if (reqs.map(_.g).distinct.size == 1)
+          byGV.withColumn("_q", explode(array(reqs.zipWithIndex.map { case (r, i) =>
+            struct(lit(i).as("_r"), lit(r.p).as("p"), edge(r.x0).as("x0"),
+              edge(r.x1).as("x1"), lit(r.residual).as("residual"), lit(r.n).as("n"),
+              lit(r.blo).as("blo"), lit(r.bw).as("bw"))
+          }: _*))).select(col("*"), col("_q.*")).drop("_q")
+        else byGV.join(broadcast(gs.frame(spark,
+          reqs.zipWithIndex.map { case (r, i) =>
+            Row.fromSeq(r.g ++ Seq[Any](i, r.p, r.x0.orNull, r.x1.orNull, r.residual, r.n, r.blo, r.bw))
+          },
+          Seq(StructField("_r", IntegerType, nullable = false),
+            StructField("p", DoubleType, nullable = false),
+            StructField("x0", et, nullable = true), StructField("x1", et, nullable = true),
+            StructField("residual", LongType, nullable = false),
+            StructField("n", LongType, nullable = false),
+            StructField("blo", DoubleType, nullable = false),
+            StructField("bw", DoubleType, nullable = false)))), gs.names)
+      val byR = withReq.filter((col("x0").isNull || col("v") > col("x0")) &&
+        (col("x1").isNull || col("v") <= col("x1")))
+      if (reqs.size.toLong * RankBuckets > RankPickRows)
+        Left(pickByRankBucketed(byR, gs.names :+ "p").select(out: _*))
+      else {
+        val picked = byR.select("_r", "v", "c", "blo", "bw").persist()
+        val qs = try selectByRankMulti(picked, reqs.map(_.residual)) finally picked.unpersist()
+        Right(reqs.indices.map(i => Row.fromSeq(reqs(i).g ++ Seq[Any](reqs(i).p, qs(i), reqs(i).n))))
+      }
+    }
+
+    def scanFallback(race: Boolean): RankAnswer = {
+      if (!fallbackOk) {
+        val msg = s"$op for '$variable' lost " +
           "its pruned-path preconditions between planning and execution"
         if (race) throw new MdioAggScan.StatsRaceException(msg)
         else throw new IllegalStateException(msg)
@@ -1849,27 +1821,44 @@ object MdioStats {
       // subtree and kill the exchange reuse that executes it once
       val full = t.sliced(spark.read.format("mdio")
         .option("runtimeFiltering", "false").load(path))
-      val byGV = t.finite(full).select(gs.cols :+ col(variable).as("v"): _*)
-        .groupBy(gs.names.map(col) :+ col("v"): _*).agg(count(lit(1L)).as("c"))
+      val byGV = gs.counts(t.finite(full), variable)
       val stats = byGV.groupBy(gs.names.map(col): _*)
         .agg(sum(col("c")).as("n"),
           min(col("v").cast("double")).as("blo"),
           max(col("v").cast("double")).as("_vhi"))
-      val req = explode(array(ps.map(p => struct(lit(p).as("p"),
-        lit(BigDecimal(p).underlying).as("pd"))): _*))
-      val withR = byGV.join(stats, gs.names)
-        .withColumn("_r", req)
-        .withColumn("p", col("_r.p"))
-        .withColumn("residual", ceil(col("_r.pd") * col("n")).cast("long"))
-        .withColumn("bw", (col("_vhi") - col("blo")) / lit(RankBuckets.toDouble))
-        .drop("_r", "_vhi")
-      GroupedQuantiles(finish(withR), 0, 0L, fallback = true)
+      val groupsUpTo = (if (windows.nonEmpty) windows else Seq(ranges)).map(w =>
+        t.dims.indices.map { d =>
+          val (lo, hi) = w.getOrElse(t.dims(d), (0L, t.meta.shape(d)))
+          val (l, h) = (math.max(lo, 0L), math.min(hi, t.meta.shape(d)))
+          if (l >= h) BigInt(0) else BigInt((h - 1) / sizes(d) - l / sizes(d) + 1)
+        }.product).sum
+      val result =
+        if (groupsUpTo <= maxGroups) {
+          byGV.persist()
+          try {
+            val reqs = stats.collect().toIndexedSeq.flatMap { r =>
+              val k = gs.names.size
+              val (n, blo, hi) = (r.getLong(k), r.getDouble(k + 1), r.getDouble(k + 2))
+              labels.zip(ranksOf(n)).map { case (p, rank) =>
+                RankSlot(gs.names.indices.map(r.getLong), p, None, None, rank, n,
+                  blo, (hi - blo) / RankBuckets)
+              }
+            }
+            if (reqs.isEmpty) Right(Nil) else finish(byGV, reqs)
+          } finally byGV.unpersist()
+        } else {
+          val ranks = udf((n: Long) => mkKs(n))
+          val reqs = stats.select(gs.names.map(col) ++ Seq(col("n"), col("blo"),
+              ((col("_vhi") - col("blo")) / lit(RankBuckets.toDouble)).as("bw"),
+              posexplode(ranks(col("n")))): _*)
+            .withColumn("p", typedLit(labels.toArray).getItem(col("pos")))
+            .withColumnRenamed("col", "residual")
+          Left(pickByRankBucketed(byGV.join(reqs, gs.names), gs.names :+ "p").select(out: _*))
+        }
+      RankAnswer(result, schema, 0, 0L, fallback = true)
     }
 
-    // the explicit O(groups) driver contract: bracket state and the
-    // broadcast bounds are one row per (group, p) — past `maxGroups`, the
-    // distributed fallback is the RIGHT plan, not a degraded one
-    val (man, geo) = t.plan(groupSizes, maxGroups) match {
+    val (man, geo) = t.plan(sizes, maxGroups) match {
       case Right(p) => p
       case Left(race) => return scanFallback(race)
     }
@@ -1880,36 +1869,25 @@ object MdioStats {
     // answer, not start declining mid-execution. So unusable items here
     // are a torn shard whenever they can throw.
     val ri = new RankItems(t.varDir, man, geo,
-      if (fallbackOk) qcEntryBudget else Long.MaxValue)
+      if (fallbackOk) qcEntryBudget else Long.MaxValue, integral = !t.isFloat)
     if (!ri.usable) return scanFallback(race = true)
-    // per-group rank list (quantilesByBox: ⌈ps(i)·n⌉ in BigDecimal —
-    // exact boundary ceil at any n, the lower median is p = 0.5;
-    // boxRanks: the caller's explicit ranks); all-NaN boxes emit no rows
     val states = ri.groups.flatMap { g =>
       val n = ri.items(g).iterator.map(_._3).sum
-      if (n == 0) None else Some((g, n, mkKs(n)))
+      if (n == 0) None else Some((g, n, ranksOf(n)))
     }
-    if (states.isEmpty) // every box all-NaN: proven-empty result
-      return GroupedQuantiles(spark.createDataFrame(
-        java.util.Collections.emptyList[Row](),
-        StructType(gs.fields ++ Seq(StructField("p", DoubleType, nullable = false),
-          StructField("q", DoubleType, nullable = false),
-          StructField("n", LongType, nullable = false)))),
-        0, 0L, fallback = false)
+    if (states.isEmpty) return RankAnswer(Right(Nil), schema, 0, 0L, fallback = false)
     val brs = ri.brackets(states.map { case (g, _, ks) => g -> ks })
       .getOrElse(return scanFallback(race = true))
-    val vt = t.vt
 
     var scanned = 0L
     var jobs = 0
-    // exact below-edge counts for ALL (group, p) edges in ONE allowlist
+    // exact below-edge counts for ALL (group, edge) pairs in ONE allowlist
     // scan: each group's straddler set is the union over its ranks' lower
     // edges (a remaining coarse shard can never straddle one — it would
-    // intersect that rank's window and be open). Every probed row of a
-    // group joins to EVERY edge row of that group, so the count per
-    // (group, p) covers the whole probed set — and the metadata side
-    // below excludes probed chunks entirely, so nothing double-counts
-    // (a chunk probed for one edge may sit fully below another).
+    // intersect that rank's window and be open). Every edge of a probed
+    // group counts over ALL of its probed chunks, and the metadata side
+    // below excludes probed chunks entirely, so nothing double-counts (a
+    // chunk probed for one edge may sit fully below another).
     val straddlersOf: Map[Seq[Long], Seq[Seq[Long]]] = states.iterator.map { case (g, _, _) =>
       g -> brs(g).flatMap(_._1).distinct.flatMap { b0 =>
         ri.fineOf(g).collect { case (cc, b) if b.min <= b0 && b.max > b0 => cc }
@@ -1917,79 +1895,70 @@ object MdioStats {
     }.toMap
     val probeChunks = straddlersOf.valuesIterator.flatten.toSeq.distinct
     if (probeChunks.size > maxProbeChunks) {
-      log.warn(s"quantilesByBox($path, $variable): ${probeChunks.size} " +
-        s"chunks straddle group bracket edges (cap $maxProbeChunks) — " +
+      log.warn(s"$op($path, $variable): ${probeChunks.size} " +
+        s"chunks straddle bracket edges (cap $maxProbeChunks) — " +
         "falling back to the exact full-scan grouped-rank selection")
       return scanFallback(race = false)
     }
-    val exactBelow: Map[(Seq[Long], Double), Long] =
+    val edges = states.flatMap { case (g, _, _) =>
+      if (straddlersOf(g).isEmpty) Nil else brs(g).flatMap(_._1).distinct.map(g -> _)
+    }
+    val exactBelow: Map[(Seq[Long], BigDecimal), Long] =
       if (probeChunks.isEmpty) Map.empty
       else {
         scanned += probeChunks.size
         jobs += 1
-        val edges = gs.frame(spark,
-          states.filter { case (g, _, _) => straddlersOf(g).nonEmpty }.flatMap { case (g, _, _) =>
-            ps.zip(brs(g)).collect { case (p, (Some(b0), _)) =>
-              Row.fromSeq(g ++ Seq(p, edgeValue(b0, vt)))
-            }
-          },
-          Seq(StructField("p", DoubleType, nullable = false),
-            StructField("x0", edgeType(vt), nullable = false)))
-        t.chunks(probeChunks)
-          .select(gs.cols :+ col(variable).as("v"): _*)
-          .join(broadcast(edges), gs.names)
-          .filter(col("v") <= col("x0"))
-          .groupBy(pKeys.map(col): _*).agg(count(lit(1L)).as("c"))
-          .collect()
-          .map(r => (gs.names.indices.map(r.getLong(_)).toSeq,
-            r.getDouble(gs.names.size)) -> r.getLong(gs.names.size + 1)).toMap
+        val probe = t.chunks(probeChunks)
+        if (edges.map(_._1).distinct.size == 1) {
+          val aggs = edges.map { case (_, e) => count(when(col(variable) <= edgeLit(e, vt), 1L)) }
+          val row = probe.agg(aggs.head, aggs.tail: _*).head
+          edges.indices.map(i => edges(i) -> row.getLong(i)).toMap
+        } else {
+          val ef = gs.frame(spark,
+            edges.indices.map(i => Row.fromSeq(edges(i)._1 ++ Seq[Any](i, edgeValue(edges(i)._2, vt)))),
+            Seq(StructField("_e", IntegerType, nullable = false),
+              StructField("x0", edgeType(vt), nullable = false)))
+          probe.select(gs.cols :+ col(variable).as("v"): _*)
+            .join(broadcast(ef), gs.names)
+            .filter(col("v") <= col("x0"))
+            .groupBy(col("_e")).agg(count(lit(1L)))
+            .collect().map(r => edges(r.getInt(0)) -> r.getLong(1)).toMap
+        }
       }
 
-    // residual ranks + window bounds + bucket params, broadcast once (one
-    // row per (group, p)); ONE allowlist scan over the union of every
-    // rank's window chunks answers everything together through the
-    // two-stage bucketed pick
-    val boundsRows = states.flatMap { case (g, n, ks) =>
-      val probed = straddlersOf.getOrElse(g, Seq.empty).toSet
+    // one request per (group, slot): the residual rank inside its window
+    val reqs = states.flatMap { case (g, n, ks) =>
+      val probed = straddlersOf(g).toSet
       val lo0 = ri.items(g).iterator.map(_._1).min
-      ps.lazyZip(ks).lazyZip(brs(g)).map { case (p, k, (x0, x1)) =>
-        val below = x0.map { b0 =>
-          ri.coarseOf(g).iterator.collect { case (_, h, c) if h <= b0 => c }.sum +
-            ri.fineOf(g).iterator.collect {
-              case (cc, b) if !probed.contains(cc) && b.max <= b0 => b.moments.get.cnt
-            }.sum +
-            exactBelow.getOrElse((g, p), 0L)
-        }.getOrElse(0L)
-        val residual = k - below
+      def belowAt(e: BigDecimal): Long =
+        ri.coarseOf(g).iterator.collect { case (_, h, c) if h <= e => c }.sum +
+          ri.fineOf(g).iterator.collect {
+            case (cc, b) if !probed.contains(cc) && b.max <= e => ri.cellsOf(cc, b).get
+          }.sum +
+          exactBelow.getOrElse((g, e), 0L)
+      labels.lazyZip(ks).lazyZip(brs(g)).map { case (p, k, (x0, x1)) =>
+        val residual = k - x0.fold(0L)(belowAt)
         require(residual >= 1,
           s"rank window inconsistency in group $g: residual $residual")
         val blo = x0.getOrElse(lo0).toDouble
-        val bw = (x1.toDouble - blo) / RankBuckets
-        Row.fromSeq(g ++ Seq(p, x0.map(edgeValue(_, vt)).orNull,
-          edgeValue(x1, vt), residual, n, blo, bw))
+        RankSlot(g, p, x0.map(edgeValue(_, vt)), Some(edgeValue(x1, vt)), residual, n,
+          blo, (x1.toDouble - blo) / RankBuckets)
       }
-    }
-    val bounds = gs.frame(spark, boundsRows,
-      Seq(StructField("p", DoubleType, nullable = false),
-        StructField("x0", edgeType(vt), nullable = true),
-        StructField("x1", edgeType(vt), nullable = false),
-        StructField("residual", LongType, nullable = false),
-        StructField("n", LongType, nullable = false),
-        StructField("blo", DoubleType, nullable = false),
-        StructField("bw", DoubleType, nullable = false)))
+    }.toIndexedSeq
+    // ONE allowlist scan over the union of every rank's window chunks;
+    // over one group only cells inside some window reach the aggregation
     val windowChunks = states.flatMap { case (g, _, _) =>
       ri.fineOf(g).collect { case (cc, b) if brs(g).exists(inWindow(b.min, b.max, _)) => cc }
     }
     scanned += windowChunks.size
     jobs += 1
-    val byKV = t.chunks(windowChunks)
-      .select(gs.cols :+ col(variable).as("v"): _*)
-      .join(broadcast(bounds), gs.names)
-      .filter((col("x0").isNull || col("v") > col("x0")) && col("v") <= col("x1"))
-      .groupBy(pKeys.map(col) ++
-        Seq(col("v"), col("residual"), col("n"), col("blo"), col("bw")): _*)
-      .agg(count(lit(1L)).as("c"))
-    GroupedQuantiles(finish(byKV), jobs, scanned, fallback = false)
+    val inAny =
+      if (states.size > 1) lit(true)
+      else brs(states.head._1).distinct.map { case (x0, x1) =>
+        x0.fold(lit(true))(col(variable) > edgeLit(_, vt)) && col(variable) <= edgeLit(x1, vt)
+      }.reduce(_ || _)
+    val byGV = gs.counts(t.chunks(windowChunks).filter(inAny), variable)
+    RankAnswer(finish(byGV, reqs), schema, jobs, scanned, fallback = false)
   }
 
   /** EXACT per-box lower median (`k = ⌈n/2⌉` per group, equal to
@@ -1998,7 +1967,7 @@ object MdioStats {
     * gives depth slabs and (chunkLead, chunkTrail) the per-tile heat-map.
     * This IS [[quantilesByBox]] at `ps = [0.5]` (⌈n/2⌉ = (n+1)/2 for
     * every n) — one metadata bracket per group, at most two scan jobs for
-    * all groups, the bucketed two-stage pick, and the same loud fallbacks
+    * all groups, the same bucketed pick, and the same loud fallbacks
     * — reshaped to the median readout (`med` instead of (p, q) rows). */
   def medianByBox(spark: SparkSession, path: String, variable: String,
                   groupSizes: Seq[Long],

@@ -810,7 +810,8 @@ object Mdio {
     * METADATA-ONLY search over the chunk boundary values (certain rank
     * bounds L/U from per-chunk [min,max,cnt]) and finishes with at most
     * two scan jobs over the bracket's boundary chunks — the median of a
-    * 100 TB store without a global sort. k = 128 over the fixed 256-cell
+    * 100 TB store without a global sort; it is the one rank pass every
+    * rank operator shares, over one group. k = 128 over the fixed 256-cell
     * grid; the oracle is the definitionally-identical ORDER BY … OFFSET
     * form. REQUIRES the pruning path in-query. */
   val qZarrKthSmallest: Q = (s, d) => {
@@ -949,7 +950,8 @@ object Mdio {
     * [[graft.operators.MdioStats.quantilesOf]] brackets every rank from
     * the same metadata items, recounts ALL bracket edges in one probe
     * scan (a conditional-count column per edge), and answers every rank
-    * from ONE union-window scan's cached grouped counts — three exact
+    * from ONE union-window scan's cached per-(rank, value) counts, the
+    * rank-holding buckets located on the driver — three exact
     * quantiles for at most two chunk-scan jobs, where three kthSmallest
     * calls would pay the bracket I/O thrice and a sort would shuffle the
     * corpus. The oracle is the definitionally-identical ROW_NUMBER pick
@@ -992,8 +994,8 @@ object Mdio {
     * geometry, [[graft.operators.MdioStats.quantilesByBox]]. Every
     * (slab, p) rank brackets from the SAME hierarchical metadata items,
     * all lower edges recount in at most one probe scan, and one
-    * union-window scan answers every rank through the bucketed two-stage
-    * pick (no window partition ever sorts more than ~1/1024 of a slab's
+    * union-window scan answers every rank through the bucketed pick,
+    * buckets located on the driver (no window partition ever sorts more than ~1/1024 of a slab's
     * distinct values — the r17 fix for the r16 single-partition grouped
     * sort). Oracle: the definitionally-identical per-slab ROW_NUMBER pick
     * at each ⌈p·n⌉. REQUIRES the pruning path and ≤2 scan jobs in-query. */
@@ -1031,8 +1033,9 @@ object Mdio {
     * writes `median(weight)` (or a WITHIN-GROUP percentile) gets the rank
     * family's quantile-by-pruning automatically — the aggregate pushes
     * COMPLETELY into the scan (`vpctc`/`vpctd` ops on `MdioAggScan`,
-    * answered at execution by [[graft.operators.MdioStats.valuesAtRanks]]
-    * — the bracket machinery: O(manifest) metadata + boundary-window scans),
+    * answered at execution by [[graft.operators.MdioStats.boxRanks]] over
+    * one group — the one rank pass: O(manifest) metadata +
+    * boundary-window scans),
     * so the optimized plan carries NO Spark-side Aggregate and the corpus
     * never shuffles into a Percentile buffer. The CONT interpolation is
     * bit-identical to Spark's PercentileBase (pinned in
@@ -1070,8 +1073,8 @@ object Mdio {
     * dim window (`inline ∈ [8, 24)`, chunks of 8) — pushes COMPLETELY:
     * the absorbed dim range routes the ranks into the same bracket
     * machinery restricted to the BOX
-    * ([[graft.operators.MdioStats.valuesAtRanks]] over in-box chunks
-    * only; disjoint shards never read; NaN-freeness proven over the box
+    * ([[graft.operators.MdioStats.boxRanks]] over in-box chunks only, one
+    * group; disjoint shards never read; NaN-freeness proven over the box
     * alone), mixed with the closed-form COUNT. The optimized plan carries
     * NO Spark-side Aggregate — a misaligned window would decline to
     * Spark's distributed Percentile instead (pinned in

@@ -356,81 +356,6 @@ object Relational5 {
     FROM events GROUP BY 1 ORDER BY 1"""
 
   // ---------------------------------------------------------------------
-  // K-CORE DECOMPOSITION (k=3) of one nation's co-purchase supplier
-  // graph — iterative peeling: drop every node of degree < 3, recompute
-  // degrees on the surviving subgraph, repeat. Five rounds suffice at
-  // this scale (peeling is monotone; the fixpoint is reached when a
-  // round removes nothing) and each round is one degree agg + one
-  // semi-join, lineage-cut like every iterative op here. The oracle
-  // unrolls the same five peels as chained CTEs. The 3-core is the
-  // "stable trading community" — nodes with at least 3 surviving
-  // partners inside the core.
-  // ---------------------------------------------------------------------
-
-  // NOT registered: superseded in the registry by the scale-free anchored
-  // k-core in Relational8 (r8). Kept as the fixed 3-core reference
-  // implementation exercised by AnalyticsSpec's fixpoint property test.
-  val qGraphKcore: Q = (s, d) => {
-    val supp = supplier(s, d)
-      .join(broadcast(nation(s, d).filter(col("n_name") === "NATION_3")),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey").as("sk"))
-    val li = lineitem(s, d).join(broadcast(supp), col("l_suppkey") === col("sk"))
-      .select(col("l_orderkey").as("o"), col("l_suppkey").as("n"))
-    var edges = li.as("x").join(li.as("y"),
-        col("x.o") === col("y.o") && col("x.n") < col("y.n"))
-      .select(col("x.n").as("a"), col("y.n").as("b")).distinct()
-      .lineageCut
-    for (_ <- 1 to 5) {
-      val deg = edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("dg"))
-      val core = deg.filter(col("dg") >= 3).select(col("v"))
-      edges = edges
-        .join(core.select(col("v").as("a")), Seq("a"), "left_semi")
-        .join(core.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .lineageCut
-    }
-    val nodes = edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v"))).distinct()
-    nodes.agg(count(lit(1)).as("n_core_nodes"), sum(col("v")).as("sum_node_ids"))
-      .crossJoin(broadcast(edges.agg(count(lit(1)).as("n_core_edges"))))
-      .select(col("n_core_nodes"), col("n_core_edges"), col("sum_node_ids"))
-  }
-
-  val qGraphKcoreSql: String = {
-    // five unrolled peel rounds, each one CTE pair (degrees, surviving edges)
-    // every peel CTE is MATERIALIZED: each level references its
-    // predecessor three times, and inlining would expand the base scan
-    // 3^5-fold (fd exhaustion, not just wasted work)
-    val peel = (1 to 5).map { i =>
-      val prev = if (i == 1) "e0" else s"e${i - 1}"
-      s"""d$i AS MATERIALIZED (
-        SELECT v, COUNT(*) AS dg FROM (
-          SELECT a AS v FROM $prev UNION ALL SELECT b AS v FROM $prev) GROUP BY 1),
-      c$i AS MATERIALIZED (SELECT v FROM d$i WHERE dg >= 3),
-      e$i AS MATERIALIZED (
-        SELECT a, b FROM $prev
-        WHERE a IN (SELECT v FROM c$i) AND b IN (SELECT v FROM c$i))"""
-    }.mkString(",\n      ")
-    s"""
-    WITH supp AS MATERIALIZED (
-      SELECT s_suppkey AS sk FROM supplier
-      JOIN nation ON s_nationkey = n_nationkey AND n_name = 'NATION_3'),
-    li AS MATERIALIZED (
-      SELECT l_orderkey AS o, l_suppkey AS n FROM lineitem
-      WHERE l_suppkey IN (SELECT sk FROM supp)),
-    e0 AS MATERIALIZED (
-      SELECT DISTINCT x.n AS a, y.n AS b
-      FROM li x JOIN li y ON x.o = y.o AND x.n < y.n),
-    $peel,
-    nodes AS (SELECT DISTINCT v FROM (
-      SELECT a AS v FROM e5 UNION ALL SELECT b AS v FROM e5))
-    SELECT CAST((SELECT COUNT(*) FROM nodes) AS BIGINT) AS n_core_nodes,
-           CAST((SELECT COUNT(*) FROM e5) AS BIGINT) AS n_core_edges,
-           CAST((SELECT SUM(v) FROM nodes) AS BIGINT) AS sum_node_ids"""
-  }
-
-  // ---------------------------------------------------------------------
   // POSITIONAL INVERTED INDEX: the retrieval-side build (text_bm25 ranks
   // with it; this materializes it) — per term: document frequency,
   // collection frequency, the position mass (sum of 0-based token

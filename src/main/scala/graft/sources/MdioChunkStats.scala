@@ -131,9 +131,9 @@ object MdioChunkStats {
     * live consumers are [[graft.operators.MdioStats.countInRange]] (a
     * shard whose union lies inside the count range contributes `cells`
     * matching cells without being opened) and the rank family's shared
-    * item walk (`MdioStats.RankItems`: the rank bounds L(x)/U(x) of
-    * [[graft.operators.MdioStats.valuesAtRanks]] — which the percentile
-    * pushdown and `kthSmallest` call — and of the per-box ranks
+    * item walk (`MdioStats.RankItems`: the rank bounds L(x)/U(x) of the
+    * one rank pass — behind `kthSmallest`, `quantilesOf`,
+    * `valuesAtRanks`, the per-box ranks and the percentile pushdown —
     * accumulate whole shards as one [lo,hi]×cells interval, opening only
     * the shards intersecting the final bracket window) — O(manifest)
     * driver bytes for a 100 TB store's median instead of O(chunk

@@ -402,20 +402,31 @@ final class MdioScanBuilder(path: String, dims: Seq[String],
       // statsV1 moments carry exact Σx AND Σx² (the reference's stats.h
       // keeps sumSquares for precisely this), so the centered second
       // moment is exact and rounds once — the RMS/QC readout of a 100 TB
-      // store answered from metadata alone
+      // store answered from metadata alone. Spark wraps an integral
+      // column in a cast to double first; that cast is exact on the
+      // moments' side, so it pushes too
       case g: connector_expressions.aggregate.GeneralAggregateFunc
           if MdioScanBuilder.VarOps.contains(g.name()) && !g.isDistinct &&
             g.children().length == 1 =>
+        val column = g.children()(0) match {
+          case c: connector_expressions.Cast if c.dataType == DoubleType &&
+              (c.expressionDataType match {
+                case ByteType | ShortType | IntegerType | LongType => true
+                case d: DecimalType => d.scale == 0
+                case _ => false
+              }) => c.expression
+          case e => e
+        }
         (MdioScanBuilder.VarOps(g.name()),
-          named(g.children()(0)).flatMap(statVar).getOrElse(return None))
+          named(column).flatMap(statVar).getOrElse(return None))
       // PERCENTILE_CONT / PERCENTILE_DISC over a value column (Spark's
       // `median(v)` analyzes to percentile_cont 0.5): complete pushdown
-      // routes the ranks into the quantile-by-pruning machinery
-      // ([[graft.operators.MdioStats.valuesAtRanks]], grouped:
-      // [[graft.operators.MdioStats.boxRanks]]) at execution —
-      // O(manifest) metadata + at most two boundary-window scans instead
-      // of Spark shuffling the corpus into its own Percentile buffer.
-      // Accepted over the full variable or (ungrouped) a CHUNK-ALIGNED
+      // routes the ranks into the one rank pass at execution
+      // ([[graft.operators.MdioStats.boxRanks]], ungrouped as its one
+      // group) — O(manifest) metadata + at most two boundary-window
+      // scans instead of Spark shuffling the corpus into its own
+      // Percentile buffer; a stats race retries once, grouped or not.
+      // Accepted over the full variable or a CHUNK-ALIGNED
       // dim slice — the depth-window median rides the same bracket
       // machinery restricted to the box; misaligned slices decline (a
       // straddling chunk's stats interval mixes in- and out-of-box
@@ -764,38 +775,26 @@ final case class MdioAggScan(path: String, dims: Seq[String],
     * of a query's percentile aggregates over one variable batch into ONE
     * rank pass, launched from the driver like a dynamic-pruning subquery:
     * one metadata bracket walk, one probe, one window scan for the whole
-    * vector. Ungrouped, [[graft.operators.MdioStats.valuesAtRanks]] over
-    * the clamped box, whose n is its dense cell count (the builder PROVED
-    * every cell finite at plan time — re-checked here, a racing writer
-    * must fail LOUD — so Spark's NaN-is-greatest ranking cannot diverge).
-    * Grouped, [[graft.operators.MdioStats.boxRanks]] over the whole
-    * slab × rank matrix: each op takes a CONSTANT number of rank slots
-    * ([[MdioAggScan.pctRanks]]), so the label → slot mapping is static
-    * while the ranks themselves are per-group functions of n_g;
+    * slab × rank matrix — [[graft.operators.MdioStats.boxRanks]] over the
+    * clamped box, ungrouped as its one group (the variable's shape as the
+    * group sizes). The scan builder PROVED every ranked cell finite at plan
+    * time — re-checked here, a racing writer must fail LOUD — so each
+    * group's n is its dense cell count and Spark's NaN-is-greatest
+    * ranking cannot diverge. Each op takes a CONSTANT number of rank
+    * slots ([[MdioAggScan.pctRanks]]), so the label → slot mapping is
+    * static while the ranks themselves are per-group functions of n_g;
     * O(slabs × slots) driver rows — the same order as the grouped result
-    * Spark materializes anyway. */
+    * Spark materializes anyway. A stats race throws the retryable
+    * [[MdioAggScan.StatsRaceException]], grouped or not. */
   private def pctValues(gs: Seq[(String, Long)]): Map[(String, String), Map[Seq[Long], Any]] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val pct = aggs.filter(_._1.startsWith("vpct")).distinct
     pct.groupBy(_._2).flatMap { case (v, ops) =>
       MdioAggScan.retryStatsRace(s"pushed percentile on '$v'") {
-      if (!MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges))
-        throw new MdioAggScan.StatsRaceException(
-          s"rank answerability for '$v' went stale between planning and execution")
-      val m = metas(v)
-      if (gs.isEmpty) {
-        val n = dims.zipWithIndex.map { case (d, i) =>
-          val (lo, hi) = ranges.getOrElse(d, (0L, m.shape(i)))
-          math.min(hi, m.shape(i)) - math.max(lo, 0L)
-        }.product
-        val ks = ops.flatMap(o => MdioAggScan.pctRanks(o._1, n)).distinct.sorted
-        val byK = ks.zip(graft.operators.MdioStats.valuesAtRanks(spark, path, v, ks,
-          ranges = ranges).values).toMap
-        ops.map { case (op, _) =>
-          (op, v) -> Map(Seq.empty[Long] ->
-            (MdioAggScan.pctValue(op, n, MdioAggScan.pctRanks(op, n).map(byK)): Any))
-        }
-      } else {
+        if (!MdioAggScan.boxRankAnswerable(path, v, metas(v), dims, ranges))
+          throw new MdioAggScan.StatsRaceException(
+            s"rank answerability for '$v' went stale between planning and execution")
+        val m = metas(v)
         val groupSizes = dims.zipWithIndex.map { case (d, i) =>
           gs.find(_._1 == d).map(_._2).getOrElse(m.shape(i)) }
         val offsets = ops.map(o => MdioAggScan.pctRanks(o._1, 1L).size).scanLeft(0)(_ + _)
@@ -806,11 +805,11 @@ final case class MdioAggScan(path: String, dims: Seq[String],
         val q = graft.operators.MdioStats.boxRanks(spark, path, v, labels,
           n => ops.flatMap(o => MdioAggScan.pctRanks(o._1, n)), groupSizes,
           maxGroups = MdioAggScan.maxPushedGroups, ranges = ranges)
-        val schema = q.result.schema.fieldNames
+        val schema = q.schema.fieldNames
         val gIdx = gs.map { case (d, _) => schema.indexOf(s"g_$d") }
         val (lIdx, qIdx, nIdx) =
           (schema.indexOf("p"), schema.indexOf("q"), schema.indexOf("n"))
-        val byKey = q.result.collect().groupBy(r => gIdx.map(r.getLong).toSeq)
+        val byKey = q.collect().groupBy(r => gIdx.map(r.getLong).toSeq)
         ops.zip(offsets).map { case ((op, _), off) =>
           (op, v) -> byKey.map { case (key, rs) =>
             val n = rs.head.getLong(nIdx)
@@ -819,7 +818,6 @@ final case class MdioAggScan(path: String, dims: Seq[String],
               MdioAggScan.pctRanks(op, n).indices.map(i => byLabel((off + i).toDouble))): Any)
           }
         }
-      }
       }
     }
   }

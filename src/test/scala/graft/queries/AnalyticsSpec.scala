@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins the round-6 analytics additions: incremental-merge losslessness,
-  * k-core fixpoint properties, inverted-index positional math, and
+  * the k-core cascade's fixpoint property, inverted-index positional math, and
   * cross-correlation pick determinism. */
 class AnalyticsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,13 +21,22 @@ class AnalyticsSpec extends SparkSpec {
     assert(merged == full, "merge algebra must be lossless")
   }
 
-  test("graph_kcore: the 3-core is a fixpoint (every core node keeps degree >= 3)") {
-    val r = Relational5.qGraphKcore(spark, sf).head()
-    val (nodes, edges) = (r.getLong(0), r.getLong(1))
-    if (nodes > 0) {
-      // handshake bound: every surviving node has >= 3 core neighbors
-      assert(2 * edges >= 3 * nodes, s"core of $nodes nodes needs >= ${3 * nodes} endpoints, got ${2 * edges}")
-    }
+  test("graph_kcore: a stable cascade keeps every core node at degree >= k") {
+    // the registered cascade's k: 1.5x the lower-median degree of the
+    // bipartite customer<->supplier trade graph, recomputed here
+    val e0 = graft.Tables.lineitem(spark, sf)
+      .join(graft.Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
+      .select((col("o_custkey") * 2).as("a"), (col("l_suppkey") * 2 + 1).as("b")).distinct()
+    val degrees = e0.select(col("a")).unionAll(e0.select(col("b")))
+      .groupBy(col("a")).count().as[(Long, Long)].collect().map(_._2).sorted
+    val k = 15 * degrees((degrees.length + 1) / 2 - 1) / 10
+    val rows = Relational8.qGraphKcore(spark, sf).as[(Long, Long, Long)].collect().sortBy(_._1)
+    val (_, nodes, edges) = rows.last
+    // a round that removes no node is the fixpoint: the cascade pads the
+    // rest with it, so the last two rounds agree
+    assert(rows(rows.length - 2)._2 == nodes, s"no fixpoint within 8 rounds: ${rows.toSeq}")
+    // handshake bound: every surviving node has >= k core neighbors
+    assert(2 * edges >= k * nodes, s"core of $nodes nodes needs >= ${k * nodes} endpoints, got ${2 * edges}")
     assert(edges >= 0 && nodes >= 0)
   }
 

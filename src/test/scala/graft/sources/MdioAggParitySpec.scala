@@ -174,14 +174,14 @@ class MdioAggParitySpec extends SparkSpec {
     |int grouped sum(v) pushed=true rows=(0,757)(1,767)
     |int ungrouped avg(v) pushed=true rows=(5.953125)
     |int grouped avg(v) pushed=true rows=(0,5.9140625)(1,5.9921875)
-    |int ungrouped var_pop(v) pushed=false rows=(44.05249023437499)
-    |int grouped var_pop(v) pushed=false rows=(0,44.000427246093736)(1,44.10150146484374)
-    |int ungrouped var_samp(v) pushed=false rows=(44.22524509803921)
-    |int grouped var_samp(v) pushed=false rows=(0,44.34688730314959)(1,44.448757381889756)
-    |int ungrouped stddev_pop(v) pushed=false rows=(6.63720500168369)
-    |int grouped stddev_pop(v) pushed=false rows=(0,6.633281785518669)(1,6.640896134170729)
-    |int ungrouped stddev_samp(v) pushed=false rows=(6.650206395145884)
-    |int grouped stddev_samp(v) pushed=false rows=(0,6.659345861505437)(1,6.666990129127968)
+    |int ungrouped var_pop(v) pushed=true rows=(44.052490234375)
+    |int grouped var_pop(v) pushed=true rows=(0,44.00042724609375)(1,44.10150146484375)
+    |int ungrouped var_samp(v) pushed=true rows=(44.22524509803922)
+    |int grouped var_samp(v) pushed=true rows=(0,44.34688730314961)(1,44.44875738188976)
+    |int ungrouped stddev_pop(v) pushed=true rows=(6.63720500168369)
+    |int grouped stddev_pop(v) pushed=true rows=(0,6.63328178551867)(1,6.64089613417073)
+    |int ungrouped stddev_samp(v) pushed=true rows=(6.650206395145884)
+    |int grouped stddev_samp(v) pushed=true rows=(0,6.659345861505439)(1,6.666990129127968)
     |int ungrouped median(v) pushed=true rows=(6.0)
     |int grouped median(v) pushed=true rows=(0,6.0)(1,6.0)
     |int ungrouped percentile_disc(0.25) pushed=true rows=(0.0)
@@ -210,14 +210,14 @@ class MdioAggParitySpec extends SparkSpec {
     |int-empty grouped sum(v) pushed=true rows=
     |int-empty ungrouped avg(v) pushed=true rows=(null)
     |int-empty grouped avg(v) pushed=true rows=
-    |int-empty ungrouped var_pop(v) pushed=false rows=(null)
-    |int-empty grouped var_pop(v) pushed=false rows=
-    |int-empty ungrouped var_samp(v) pushed=false rows=(null)
-    |int-empty grouped var_samp(v) pushed=false rows=
-    |int-empty ungrouped stddev_pop(v) pushed=false rows=(null)
-    |int-empty grouped stddev_pop(v) pushed=false rows=
-    |int-empty ungrouped stddev_samp(v) pushed=false rows=(null)
-    |int-empty grouped stddev_samp(v) pushed=false rows=
+    |int-empty ungrouped var_pop(v) pushed=true rows=(null)
+    |int-empty grouped var_pop(v) pushed=true rows=
+    |int-empty ungrouped var_samp(v) pushed=true rows=(null)
+    |int-empty grouped var_samp(v) pushed=true rows=
+    |int-empty ungrouped stddev_pop(v) pushed=true rows=(null)
+    |int-empty grouped stddev_pop(v) pushed=true rows=
+    |int-empty ungrouped stddev_samp(v) pushed=true rows=(null)
+    |int-empty grouped stddev_samp(v) pushed=true rows=
     |int-empty ungrouped median(v) pushed=false rows=(null)
     |int-empty grouped median(v) pushed=false rows=
     |int-empty ungrouped percentile_disc(0.25) pushed=false rows=(null)
@@ -246,14 +246,14 @@ class MdioAggParitySpec extends SparkSpec {
     |int-aligned grouped sum(v) pushed=true rows=(0,374)(1,388)
     |int-aligned ungrouped avg(v) pushed=true rows=(5.953125)
     |int-aligned grouped avg(v) pushed=true rows=(0,5.84375)(1,6.0625)
-    |int-aligned ungrouped var_pop(v) pushed=false rows=(43.982177734375)
-    |int-aligned grouped var_pop(v) pushed=false rows=(0,43.0380859375)(1,44.90234375)
-    |int-aligned ungrouped var_samp(v) pushed=false rows=(44.32849409448819)
-    |int-aligned grouped var_samp(v) pushed=false rows=(0,43.72123015873016)(1,45.61507936507937)
-    |int-aligned ungrouped stddev_pop(v) pushed=false rows=(6.631906040828308)
-    |int-aligned grouped stddev_pop(v) pushed=false rows=(0,6.560341907057894)(1,6.700921112056163)
-    |int-aligned ungrouped stddev_samp(v) pushed=false rows=(6.657964711117669)
-    |int-aligned grouped stddev_samp(v) pushed=false rows=(0,6.612203124430628)(1,6.7538936447859)
+    |int-aligned ungrouped var_pop(v) pushed=true rows=(43.982177734375)
+    |int-aligned grouped var_pop(v) pushed=true rows=(0,43.0380859375)(1,44.90234375)
+    |int-aligned ungrouped var_samp(v) pushed=true rows=(44.32849409448819)
+    |int-aligned grouped var_samp(v) pushed=true rows=(0,43.72123015873016)(1,45.61507936507937)
+    |int-aligned ungrouped stddev_pop(v) pushed=true rows=(6.631906040828308)
+    |int-aligned grouped stddev_pop(v) pushed=true rows=(0,6.560341907057894)(1,6.700921112056163)
+    |int-aligned ungrouped stddev_samp(v) pushed=true rows=(6.657964711117669)
+    |int-aligned grouped stddev_samp(v) pushed=true rows=(0,6.612203124430628)(1,6.7538936447859)
     |int-aligned ungrouped median(v) pushed=true rows=(6.0)
     |int-aligned grouped median(v) pushed=true rows=(0,6.0)(1,6.0)
     |int-aligned ungrouped percentile_disc(0.25) pushed=true rows=(0.0)
@@ -498,14 +498,14 @@ class MdioAggParitySpec extends SparkSpec {
     |legacy grouped sum(v) pushed=true rows=(0,757)(1,767)
     |legacy ungrouped avg(v) pushed=true rows=(5.953125)
     |legacy grouped avg(v) pushed=true rows=(0,5.9140625)(1,5.9921875)
-    |legacy ungrouped var_pop(v) pushed=false rows=(44.05249023437499)
-    |legacy grouped var_pop(v) pushed=false rows=(0,44.000427246093736)(1,44.10150146484374)
-    |legacy ungrouped var_samp(v) pushed=false rows=(44.22524509803921)
-    |legacy grouped var_samp(v) pushed=false rows=(0,44.34688730314959)(1,44.448757381889756)
-    |legacy ungrouped stddev_pop(v) pushed=false rows=(6.63720500168369)
-    |legacy grouped stddev_pop(v) pushed=false rows=(0,6.633281785518669)(1,6.640896134170729)
-    |legacy ungrouped stddev_samp(v) pushed=false rows=(6.650206395145884)
-    |legacy grouped stddev_samp(v) pushed=false rows=(0,6.659345861505437)(1,6.666990129127968)
+    |legacy ungrouped var_pop(v) pushed=true rows=(44.052490234375)
+    |legacy grouped var_pop(v) pushed=true rows=(0,44.00042724609375)(1,44.10150146484375)
+    |legacy ungrouped var_samp(v) pushed=true rows=(44.22524509803922)
+    |legacy grouped var_samp(v) pushed=true rows=(0,44.34688730314961)(1,44.44875738188976)
+    |legacy ungrouped stddev_pop(v) pushed=true rows=(6.63720500168369)
+    |legacy grouped stddev_pop(v) pushed=true rows=(0,6.63328178551867)(1,6.64089613417073)
+    |legacy ungrouped stddev_samp(v) pushed=true rows=(6.650206395145884)
+    |legacy grouped stddev_samp(v) pushed=true rows=(0,6.659345861505439)(1,6.666990129127968)
     |legacy ungrouped median(v) pushed=true rows=(6.0)
     |legacy grouped median(v) pushed=true rows=(0,6.0)(1,6.0)
     |legacy ungrouped percentile_disc(0.25) pushed=true rows=(0.0)
@@ -534,14 +534,14 @@ class MdioAggParitySpec extends SparkSpec {
     |legacy-aligned grouped sum(v) pushed=true rows=(0,374)(1,388)
     |legacy-aligned ungrouped avg(v) pushed=true rows=(5.953125)
     |legacy-aligned grouped avg(v) pushed=true rows=(0,5.84375)(1,6.0625)
-    |legacy-aligned ungrouped var_pop(v) pushed=false rows=(43.982177734375)
-    |legacy-aligned grouped var_pop(v) pushed=false rows=(0,43.0380859375)(1,44.90234375)
-    |legacy-aligned ungrouped var_samp(v) pushed=false rows=(44.32849409448819)
-    |legacy-aligned grouped var_samp(v) pushed=false rows=(0,43.72123015873016)(1,45.61507936507937)
-    |legacy-aligned ungrouped stddev_pop(v) pushed=false rows=(6.631906040828308)
-    |legacy-aligned grouped stddev_pop(v) pushed=false rows=(0,6.560341907057894)(1,6.700921112056163)
-    |legacy-aligned ungrouped stddev_samp(v) pushed=false rows=(6.657964711117669)
-    |legacy-aligned grouped stddev_samp(v) pushed=false rows=(0,6.612203124430628)(1,6.7538936447859)
+    |legacy-aligned ungrouped var_pop(v) pushed=true rows=(43.982177734375)
+    |legacy-aligned grouped var_pop(v) pushed=true rows=(0,43.0380859375)(1,44.90234375)
+    |legacy-aligned ungrouped var_samp(v) pushed=true rows=(44.32849409448819)
+    |legacy-aligned grouped var_samp(v) pushed=true rows=(0,43.72123015873016)(1,45.61507936507937)
+    |legacy-aligned ungrouped stddev_pop(v) pushed=true rows=(6.631906040828308)
+    |legacy-aligned grouped stddev_pop(v) pushed=true rows=(0,6.560341907057894)(1,6.700921112056163)
+    |legacy-aligned ungrouped stddev_samp(v) pushed=true rows=(6.657964711117669)
+    |legacy-aligned grouped stddev_samp(v) pushed=true rows=(0,6.612203124430628)(1,6.7538936447859)
     |legacy-aligned ungrouped median(v) pushed=true rows=(6.0)
     |legacy-aligned grouped median(v) pushed=true rows=(0,6.0)(1,6.0)
     |legacy-aligned ungrouped percentile_disc(0.25) pushed=true rows=(0.0)

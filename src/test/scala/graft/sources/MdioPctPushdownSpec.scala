@@ -372,14 +372,16 @@ class MdioPctPushdownSpec extends SparkSpec {
       assert(MdioAggScan.statsRaceRetries.get == before + 1,
         "the grouped rank path did not retry against the fresh manifest")
     } finally graft.operators.MdioStats.manifestRaceHook = () => ()
-    // the ungrouped path absorbs the same race through its exact sliced
-    // fallback (no retry needed — the answer must simply stay right)
+    // the ungrouped path is the same rank pass over one group: the same
+    // race throws and retries once against the fresh manifest
     armRace()
     try {
       val df = base.agg(median($"v").as("med"))
       assert(pushed(df), df.queryExecution.optimizedPlan.toString)
       assert(df.head.getDouble(0) ==
         vals.toDF("v").agg(median($"v")).head.getDouble(0))
+      assert(MdioAggScan.statsRaceRetries.get == before + 2,
+        "the ungrouped rank path did not retry against the fresh manifest")
     } finally graft.operators.MdioStats.manifestRaceHook = () => ()
     MdioWriter.delete(dir)
   }

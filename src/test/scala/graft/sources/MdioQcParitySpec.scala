@@ -185,43 +185,43 @@ class MdioQcParitySpec extends SparkSpec {
     |clean extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
     |clean extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,15.0,15,16)(1,16.0,16,31.0,31,16)(2,32.0,32,47.0,47,16)(3,48.0,48,63.0,63,16) scanned=8 fallback=false shards=1 scans=1
     |clean countInRangeByBox g_x,cnt,n (0,12,16)(1,4,16)(2,0,16)(3,0,16) meta=1 outside=5 scanned=2 fallback=false shards=1 scans=1
-    |clean quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=1 scans=2
+    |clean quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=1 scans=1
     |nan kth KthSmallest(21.0,1,1,false)
     |nan ranks Quantiles(Vector(21.0),List(21),63,1,1,false) shards=1 scans=1
     |nan extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
     |nan extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,15.0,15,15)(1,16.0,16,31.0,31,16)(2,32.0,32,47.0,47,16)(3,48.0,48,63.0,63,16) scanned=8 fallback=false shards=1 scans=1
     |nan countInRangeByBox g_x,cnt,n (0,11,15)(1,4,16)(2,0,16)(3,0,16) meta=1 outside=5 scanned=2 fallback=false shards=1 scans=1
-    |nan quantilesByBox g_x,p,q,n (0,0.25,3.0,15)(0,0.5,7.0,15)(0,1.0,15.0,15)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=1 scans=2
+    |nan quantilesByBox g_x,p,q,n (0,0.25,3.0,15)(0,0.5,7.0,15)(0,1.0,15.0,15)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=1 scans=1
     |stale kth KthSmallest(20.0,0,0,true)
     |stale ranks Quantiles(Vector(20.0),List(21),64,0,0,true) shards=0 scans=1
     |stale extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=0 fallback=true shards=0 scans=2
     |stale extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,15.0,15,16)(1,16.0,16,31.0,31,16)(2,32.0,32,47.0,47,16)(3,48.0,48,63.0,63,16) scanned=0 fallback=true shards=0 scans=2
     |stale countInRangeByBox g_x,cnt,n (0,12,16)(1,4,16)(2,0,16)(3,0,16) meta=0 outside=0 scanned=0 fallback=true shards=0 scans=1
-    |stale quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=0 scanned=0 fallback=true shards=0 scans=4
+    |stale quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=0 scanned=0 fallback=true shards=0 scans=1
     |span1 kth KthSmallest(20.0,1,1,false)
     |span1 ranks Quantiles(Vector(20.0),List(21),64,1,1,false) shards=1 scans=1
     |span1 extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=2 scans=1
     |span1 extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,15.0,15,16)(1,16.0,16,31.0,31,16)(2,32.0,32,47.0,47,16)(3,48.0,48,63.0,63,16) scanned=8 fallback=false shards=8 scans=1
     |span1 countInRangeByBox g_x,cnt,n (0,12,16)(1,4,16)(2,0,16)(3,0,16) meta=1 outside=5 scanned=2 fallback=false shards=2 scans=1
-    |span1 quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=8 scans=2
+    |span1 quantilesByBox g_x,p,q,n (0,0.25,3.0,16)(0,0.5,7.0,16)(0,1.0,15.0,16)(1,0.25,19.0,16)(1,0.5,23.0,16)(1,1.0,31.0,16)(2,0.25,35.0,16)(2,0.5,39.0,16)(2,1.0,47.0,16)(3,0.25,51.0,16)(3,0.5,55.0,16)(3,1.0,63.0,16) jobs=1 scanned=8 fallback=false shards=8 scans=1
     |transposed kth KthSmallest(20.0,2,10,false)
     |transposed ranks Quantiles(Vector(20.0),List(21),64,2,10,false) shards=1 scans=2
     |transposed extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
     |transposed extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,57.0,15,16)(1,2.0,16,59.0,31,16)(2,4.0,32,61.0,47,16)(3,6.0,48,63.0,63,16) scanned=8 fallback=false shards=1 scans=1
     |transposed countInRangeByBox g_x,cnt,n (0,9,16)(1,10,16)(2,10,16)(3,10,16) meta=0 outside=0 scanned=8 fallback=false shards=1 scans=1
-    |transposed quantilesByBox g_x,p,q,n (0,0.25,9.0,16)(0,0.5,25.0,16)(0,1.0,57.0,16)(1,0.25,11.0,16)(1,0.5,27.0,16)(1,1.0,59.0,16)(2,0.25,13.0,16)(2,0.5,29.0,16)(2,1.0,61.0,16)(3,0.25,15.0,16)(3,0.5,31.0,16)(3,1.0,63.0,16) jobs=2 scanned=12 fallback=false shards=1 scans=3
+    |transposed quantilesByBox g_x,p,q,n (0,0.25,9.0,16)(0,0.5,25.0,16)(0,1.0,57.0,16)(1,0.25,11.0,16)(1,0.5,27.0,16)(1,1.0,59.0,16)(2,0.25,13.0,16)(2,0.5,29.0,16)(2,1.0,61.0,16)(3,0.25,15.0,16)(3,0.5,31.0,16)(3,1.0,63.0,16) jobs=2 scanned=12 fallback=false shards=1 scans=2
     |aligned kth KthSmallest(2.0,1,4,false)
     |aligned ranks Quantiles(Vector(2.0),List(5),32,1,4,false) shards=1 scans=1
     |aligned extremaLocation v_min,min_x,v_max,max_x (0.0,23,22.0,25) scanned=3 fallback=false shards=1 scans=1
     |aligned extremaByBox g_x,v_min,min_x,v_max,max_x,n (1,0.0,23,22.0,25,16)(2,0.0,46,18.0,33,16) scanned=4 fallback=false shards=1 scans=1
     |aligned countInRangeByBox g_x,cnt,n (1,8,16)(2,8,16) meta=0 outside=0 scanned=4 fallback=false shards=1 scans=1
-    |aligned quantilesByBox g_x,p,q,n (1,0.25,3.0,16)(1,0.5,11.0,16)(1,1.0,22.0,16)(2,0.25,3.0,16)(2,0.5,7.0,16)(2,1.0,18.0,16) jobs=2 scanned=6 fallback=false shards=1 scans=3
+    |aligned quantilesByBox g_x,p,q,n (1,0.25,3.0,16)(1,0.5,11.0,16)(1,1.0,22.0,16)(2,0.25,3.0,16)(2,0.5,7.0,16)(2,1.0,18.0,16) jobs=2 scanned=6 fallback=false shards=1 scans=2
     |misaligned kth KthSmallest(2.0,0,0,true)
     |misaligned ranks Quantiles(Vector(2.0),List(5),35,0,0,true) shards=0 scans=1
     |misaligned extremaLocation v_min,min_x,v_max,max_x (0.0,23,22.0,25) scanned=0 fallback=true shards=0 scans=2
     |misaligned extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,4.0,15,16.0,14,3)(1,0.0,23,22.0,25,16)(2,0.0,46,18.0,33,16) scanned=0 fallback=true shards=0 scans=2
     |misaligned countInRangeByBox g_x,cnt,n (0,1,3)(1,8,16)(2,8,16) meta=0 outside=0 scanned=0 fallback=true shards=0 scans=1
-    |misaligned quantilesByBox g_x,p,q,n (0,0.25,4.0,3)(0,0.5,5.0,3)(0,1.0,16.0,3)(1,0.25,3.0,16)(1,0.5,11.0,16)(1,1.0,22.0,16)(2,0.25,3.0,16)(2,0.5,7.0,16)(2,1.0,18.0,16) jobs=0 scanned=0 fallback=true shards=0 scans=4
+    |misaligned quantilesByBox g_x,p,q,n (0,0.25,4.0,3)(0,0.5,5.0,3)(0,1.0,16.0,3)(1,0.25,3.0,16)(1,0.5,11.0,16)(1,1.0,22.0,16)(2,0.25,3.0,16)(2,0.5,7.0,16)(2,1.0,18.0,16) jobs=0 scanned=0 fallback=true shards=0 scans=1
     |union kth KthSmallest(4.0,1,4,false)
     |union ranks Quantiles(Vector(4.0),List(5),32,1,4,false) shards=1 scans=1
     |union extremaLocation v_min,min_x,v_max,max_x (0.0,0,27.0,11) scanned=3 fallback=false shards=1 scans=1
@@ -230,13 +230,13 @@ class MdioQcParitySpec extends SparkSpec {
     |misgrouped extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
     |misgrouped extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,11.0,11,12)(1,12.0,12,23.0,23,12)(2,24.0,24,35.0,35,12)(3,36.0,36,47.0,47,12)(4,48.0,48,59.0,59,12)(5,60.0,60,63.0,63,4) scanned=0 fallback=true shards=0 scans=2
     |misgrouped countInRangeByBox g_x,cnt,n (0,8,12)(1,8,12)(2,0,12)(3,0,12)(4,0,12)(5,0,4) meta=0 outside=0 scanned=0 fallback=true shards=0 scans=1
-    |misgrouped quantilesByBox g_x,p,q,n (0,0.25,2.0,12)(0,0.5,5.0,12)(0,1.0,11.0,12)(1,0.25,14.0,12)(1,0.5,17.0,12)(1,1.0,23.0,12)(2,0.25,26.0,12)(2,0.5,29.0,12)(2,1.0,35.0,12)(3,0.25,38.0,12)(3,0.5,41.0,12)(3,1.0,47.0,12)(4,0.25,50.0,12)(4,0.5,53.0,12)(4,1.0,59.0,12)(5,0.25,60.0,4)(5,0.5,61.0,4)(5,1.0,63.0,4) jobs=0 scanned=0 fallback=true shards=0 scans=4
+    |misgrouped quantilesByBox g_x,p,q,n (0,0.25,2.0,12)(0,0.5,5.0,12)(0,1.0,11.0,12)(1,0.25,14.0,12)(1,0.5,17.0,12)(1,1.0,23.0,12)(2,0.25,26.0,12)(2,0.5,29.0,12)(2,1.0,35.0,12)(3,0.25,38.0,12)(3,0.5,41.0,12)(3,1.0,47.0,12)(4,0.25,50.0,12)(4,0.5,53.0,12)(4,1.0,59.0,12)(5,0.25,60.0,4)(5,0.5,61.0,4)(5,1.0,63.0,4) jobs=0 scanned=0 fallback=true shards=0 scans=1
     |probecap kth KthSmallest(20.0,0,0,true)
     |probecap ranks Quantiles(Vector(20.0),List(21),64,0,0,true) shards=1 scans=1
     |probecap extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
     |probecap extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,0.0,0,57.0,15,16)(1,2.0,16,59.0,31,16)(2,4.0,32,61.0,47,16)(3,6.0,48,63.0,63,16) scanned=0 fallback=true shards=1 scans=2
     |probecap countInRangeByBox g_x,cnt,n (0,9,16)(1,10,16)(2,10,16)(3,10,16) meta=0 outside=0 scanned=0 fallback=true shards=1 scans=1
-    |probecap quantilesByBox g_x,p,q,n (0,0.25,9.0,16)(0,0.5,25.0,16)(0,1.0,57.0,16)(1,0.25,11.0,16)(1,0.5,27.0,16)(1,1.0,59.0,16)(2,0.25,13.0,16)(2,0.5,29.0,16)(2,1.0,61.0,16)(3,0.25,15.0,16)(3,0.5,31.0,16)(3,1.0,63.0,16) jobs=0 scanned=0 fallback=true shards=1 scans=4
+    |probecap quantilesByBox g_x,p,q,n (0,0.25,9.0,16)(0,0.5,25.0,16)(0,1.0,57.0,16)(1,0.25,11.0,16)(1,0.5,27.0,16)(1,1.0,59.0,16)(2,0.25,13.0,16)(2,0.5,29.0,16)(2,1.0,61.0,16)(3,0.25,15.0,16)(3,0.5,31.0,16)(3,1.0,63.0,16) jobs=0 scanned=0 fallback=true shards=1 scans=1
     |groupcap kth KthSmallest(20.0,1,1,false)
     |groupcap ranks Quantiles(Vector(20.0),List(21),64,1,1,false) shards=1 scans=1
     |groupcap extremaLocation v_min,min_x,v_max,max_x (0.0,0,63.0,63) scanned=2 fallback=false shards=1 scans=1
@@ -248,11 +248,11 @@ class MdioQcParitySpec extends SparkSpec {
     |walkbudget extremaLocation v_min,min_x,min_y,v_max,max_x,max_y (0.0,0,0,22.0,2,4) scanned=0 fallback=true shards=0 scans=2
     |walkbudget extremaByBox g_x,g_y,v_min,min_x,min_y,v_max,max_x,max_y,n (0,0,0.0,0,0,22.0,2,4,128)(1,0,0.0,17,4,22.0,18,1,128)(2,0,0.0,33,1,22.0,32,7,128)(3,0,0.0,50,5,22.0,48,4,128) scanned=0 fallback=true shards=0 scans=2
     |walkbudget countInRangeByBox g_x,g_y,cnt,n (0,0,61,128)(1,0,61,128)(2,0,60,128)(3,0,61,128) meta=0 outside=0 scanned=0 fallback=true shards=0 scans=1
-    |walkbudget quantilesByBox g_x,g_y,p,q,n (0,0,0.25,5.0,128)(0,0,0.5,11.0,128)(0,0,1.0,22.0,128)(1,0,0.25,5.0,128)(1,0,0.5,11.0,128)(1,0,1.0,22.0,128)(2,0,0.25,5.0,128)(2,0,0.5,11.0,128)(2,0,1.0,22.0,128)(3,0,0.25,5.0,128)(3,0,0.5,11.0,128)(3,0,1.0,22.0,128) jobs=0 scanned=0 fallback=true shards=0 scans=4
+    |walkbudget quantilesByBox g_x,g_y,p,q,n (0,0,0.25,5.0,128)(0,0,0.5,11.0,128)(0,0,1.0,22.0,128)(1,0,0.25,5.0,128)(1,0,0.5,11.0,128)(1,0,1.0,22.0,128)(2,0,0.25,5.0,128)(2,0,0.5,11.0,128)(2,0,1.0,22.0,128)(3,0,0.25,5.0,128)(3,0,0.5,11.0,128)(3,0,1.0,22.0,128) jobs=0 scanned=0 fallback=true shards=0 scans=1
     |refinebudget kth KthSmallest(7.5,0,0,true)
     |refinebudget ranks Quantiles(Vector(7.5),List(5),64,0,0,true) shards=4 scans=1
     |refinebudget extremaLocation v_min,min_x,v_max,max_x (7.5,0,7.5,0) scanned=0 fallback=true shards=4 scans=2
     |refinebudget extremaByBox g_x,v_min,min_x,v_max,max_x,n (0,7.5,0,7.5,0,64) scanned=0 fallback=true shards=4 scans=2
     |refinebudget countInRangeByBox g_x,cnt,n (0,64,64) meta=8 outside=0 scanned=0 fallback=false shards=0 scans=0
-    |refinebudget quantilesByBox g_x,p,q,n (0,0.25,7.5,64)(0,0.5,7.5,64)(0,1.0,7.5,64) jobs=0 scanned=0 fallback=true shards=4 scans=4""".stripMargin
+    |refinebudget quantilesByBox g_x,p,q,n (0,0.25,7.5,64)(0,0.5,7.5,64)(0,1.0,7.5,64) jobs=0 scanned=0 fallback=true shards=4 scans=1""".stripMargin
 }

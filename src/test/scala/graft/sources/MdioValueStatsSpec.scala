@@ -3,7 +3,12 @@ package graft.sources
 import graft.SparkSpec
 import graft.spec.MdioSpec
 import graft.zarr.ZarrMeta
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.nio.file.Files
@@ -18,6 +23,37 @@ import java.nio.file.Files
   * contract), and never change answers either way. */
 class MdioValueStatsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `body`'s value and the executed plans (every node, adaptive stages
+    * expanded) of the queries it ran, in order; waits until the listener
+    * has seen a plan `last` picks — the body's final query. */
+  private def withPlans[T](last: Seq[SparkPlan] => Boolean)(body: => T)
+      : (T, Seq[Seq[SparkPlan]]) = {
+    def expand(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
+      case q: QueryStageExec => p +: expand(q.plan)
+      case m: InMemoryTableScanExec => p +: expand(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(expand)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(expand(qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.toArray.exists(p => last(p.asInstanceOf[Seq[SparkPlan]])) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      (out, seen.toArray.toSeq.map(_.asInstanceOf[Seq[SparkPlan]]))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The keyed pick's in-bucket selection: a window over request ids. */
+  private def isPick(p: Seq[SparkPlan]): Boolean =
+    p.exists { case w: WindowExec => w.partitionSpec.exists(_.toString.contains("_r")); case _ => false }
 
   /** 1-D store, no data yet: dim x (size 64, chunks of 8 → 8 chunks),
     * float variable v of `dataType`. */
@@ -425,25 +461,25 @@ class MdioValueStatsSpec extends SparkSpec {
     // slabs of 16 indices (2 chunks each, disjoint intervals): slab g's
     // lower median (k = 8 of 16) is 16g+7 — the FIRST chunk's last cell,
     // so only 4 of 8 chunks are window chunks and no probe fires
-    val r = MdioStats.medianByLead(spark, dir, "v", 16L)
-    assert(!r.fallback && r.jobs == 1 && r.scannedChunks == 4, r)
     // ALL slabs answered by ONE window scan's worth of I/O — never a
-    // per-slab or per-chunk plan leg, and although the bucketed two-stage
-    // pick references the scan subtree twice (bucket histogram + in-bucket
-    // pick), exchange reuse must execute it ONCE: each of the 4 window
-    // chunks opens exactly once
+    // per-slab or per-chunk plan leg, and although the pick reads the
+    // scanned counts twice (bucket histogram + in-bucket pick), the
+    // persisted frame executes the scan ONCE: each of the 4 window chunks
+    // opens exactly once, inside the call where the pick runs
     val beforeReads = MdioColumnarReader.chunkReads.get()
+    val (r, plans) = withPlans(isPick)(MdioStats.medianByLead(spark, dir, "v", 16L))
+    assert(MdioColumnarReader.chunkReads.get() - beforeReads == 4L,
+      "grouped median must read each window chunk once (persisted counts)")
+    assert(!r.fallback && r.jobs == 1 && r.scannedChunks == 4, r)
     val rows = r.result.orderBy("slab").collect()
     assert(rows.map(x => (x.getLong(0), x.getDouble(1), x.getLong(2))).toSeq ==
       (0L to 3L).map(g => (g, 16.0 * g + 7, 16L)))
-    assert(MdioColumnarReader.chunkReads.get() - beforeReads == 4L,
-      "grouped median must read each window chunk once (reused exchange)")
     // the bounds join must stay BROADCAST: a sort-merge regression would
     // shuffle the window rows once for the join and again for the
     // cumulative window — at 100 TB that doubles the selection's exchange
-    val plan = r.result.queryExecution.executedPlan.toString
+    val plan = plans.flatten.map(_.nodeName)
     assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
-      s"bounds join regressed from broadcast:\n${plan.take(900)}")
+      s"bounds join regressed from broadcast: ${plan.distinct}")
     // NaN cells never rank: dropping cell 0 shifts slab 0's median to 8
     val dirN = createFloat(x => if (x == 0) Double.NaN else x.toDouble)
     val rN = MdioStats.medianByLead(spark, dirN, "v", 16L)
@@ -759,9 +795,6 @@ class MdioValueStatsSpec extends SparkSpec {
 
   test("grouped pick is bucket-bounded on an all-overlap store (no whole-group sort)") {
     import graft.operators.MdioStats
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     // chunk c holds {-28 + 8j + c}: every chunk interval overlaps every
     // other — the degenerate zero-centered-amplitude case where the
     // bracket window cannot prune. The r16 plan sorted each slab's ENTIRE
@@ -770,16 +803,15 @@ class MdioValueStatsSpec extends SparkSpec {
     // pick must feed the final order-by-value window only the chosen
     // buckets' rows.
     val dir = createFloat(x => (-28 + (x % 8) * 8 + x / 8).toDouble)
-    val r = MdioStats.medianByLead(spark, dir, "v", 16L)
-    assert(!r.fallback && r.jobs == 1, r)
-    val df = r.result
+    // every slab's window is ALL its chunks here; each still reads ONCE,
+    // inside the call where the pick runs — the pick's two jobs read the
+    // persisted counts, not the store
     val beforeReads = MdioColumnarReader.chunkReads.get()
-    val rows = df.collect()
-    // every slab's window is ALL its chunks here; each still reads ONCE —
-    // the two plan paths over the shared scan aggregation must reuse its
-    // exchange, not re-scan
+    val (r, plans) = withPlans(isPick)(MdioStats.medianByLead(spark, dir, "v", 16L))
     assert(MdioColumnarReader.chunkReads.get() - beforeReads == 8L,
       "all-overlap store: each window chunk must be read exactly once")
+    assert(!r.fallback && r.jobs == 1, r)
+    val rows = r.result.collect()
     val vals = (0 until 64).map(x => (-28 + (x % 8) * 8 + x / 8).toDouble)
     val want = (0 until 4).map { g =>
       val cells = vals.slice(16 * g, 16 * (g + 1)).sorted
@@ -787,19 +819,14 @@ class MdioValueStatsSpec extends SparkSpec {
     }
     assert(rows.map(x => (x.getLong(0), x.getDouble(1), x.getLong(2)))
       .toSeq.sortBy(_._1) == want)
-    // partition-input pin: the join feeding the final pick window passes
-    // only the chosen-bucket rows — ~one value per slab at this bucket
-    // width, never the slab's 16-value distinct set (64 rows unbucketed)
-    def expand(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
-      case q: QueryStageExec => p +: expand(q.plan)
-      case _ => p +: p.children.flatMap(expand)
-    }
-    val nodes = expand(df.queryExecution.executedPlan)
-    val pickJoin = nodes.collectFirst {
-      case j: BroadcastHashJoinExec if j.leftKeys.exists(_.toString.contains("_bkt")) => j
-    }.getOrElse(fail("no bucket-pick join in the executed plan"))
-    val fed = pickJoin.metrics("numOutputRows").value
+    // partition-input pin: the bucket filter feeding the final pick
+    // window passes only the chosen-bucket rows — ~one value per slab at
+    // this bucket width, never the slab's 16-value distinct set (64 rows
+    // unbucketed)
+    val pickFilter = plans.filter(isPick).flatten.collectFirst {
+      case f: FilterExec if f.condition.references.exists(_.name == "bw") => f
+    }.getOrElse(fail("no bucket filter in the pick's executed plan"))
+    val fed = pickFilter.metrics("numOutputRows").value
     assert(fed >= 4 && fed <= 8,
       s"pick window fed $fed rows — bucket bounding regressed")
     MdioWriter.delete(dir)
@@ -858,13 +885,13 @@ class MdioValueStatsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       MdioStats.bucketForRank(Seq((0L, 10L)), 11L)
     }
-    // the full selection plan at a >2^31 rank over grouped counts: value
-    // 2.0 holds ranks (3e9, 5e9] — offset((rank-1).toInt) would wrap
-    val byV = Seq((1.0, 3000000000L), (2.0, 2000000000L)).toDF("v", "c")
-    val reqs = Seq(4000000000L, 3000000000L, 1L).map(rank =>
-      MdioStats.RankReq(None, lit(2.0), 1.0, 2.0, rank))
-    assert(MdioStats.selectByRankMulti(byV, reqs,
-      org.apache.spark.sql.types.DoubleType) == Seq(2.0, 1.0, 1.0))
+    // the full keyed selection plan at a >2^31 rank over grouped counts:
+    // value 2.0 holds ranks (3e9, 5e9] — offset((rank-1).toInt) would wrap
+    val byR = Seq((1.0, 3000000000L), (2.0, 2000000000L)).toDF("v", "c")
+      .crossJoin(Seq(0, 1, 2).toDF("_r"))
+      .withColumn("blo", lit(1.0)).withColumn("bw", lit(1.0 / 1024))
+    assert(MdioStats.selectByRankMulti(byR,
+      IndexedSeq(4000000000L, 3000000000L, 1L)) == Seq(2.0, 1.0, 1.0))
   }
 
   test("MIN/MAX over a value column answers from metadata with full coverage") {

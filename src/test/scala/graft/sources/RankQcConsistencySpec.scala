@@ -127,15 +127,16 @@ class RankQcConsistencySpec extends SparkSpec {
       val qps = Seq(0.25, 0.75, 1.0)
       val qb = MdioStats.quantilesByBox(spark, dir, "v", qps, Seq(16L))
       assert(!qb.fallback, s"[$label] quantilesByBox fell back")
-      val wantQ = (0 until 4).flatMap { g =>
-        val cells = finite(vs.slice(16 * g, 16 * (g + 1))).sorted
+      def wantQuantiles(size: Int, ps: Seq[Double]) = (0 until 64 / size).flatMap { g =>
+        val cells = finite(vs.slice(size * g, size * (g + 1))).sorted
         if (cells.isEmpty) Nil
-        else qps.map { p =>
+        else ps.map { p =>
           val k = (BigDecimal(p) * cells.size)
             .setScale(0, BigDecimal.RoundingMode.CEILING).toInt
           (g.toLong, p, cells(k - 1), cells.size.toLong)
         }
       }
+      val wantQ = wantQuantiles(16, qps)
       def qRows(r: MdioStats.GroupedQuantiles) =
         r.result.orderBy("g_x", "p").collect()
           .map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2), x.getLong(3))).toSeq
@@ -145,6 +146,13 @@ class RankQcConsistencySpec extends SparkSpec {
       val qf = MdioStats.quantilesByBox(spark, dir, "v", qps, Seq(16L), maxGroups = 1)
       assert(qf.fallback, s"[$label] maxGroups cap did not fire")
       assert(qRows(qf) == wantQ, s"[$label] capped quantilesByBox mismatch")
+      // 8 one-chunk groups × 129 ranks: past the driver pick's bound
+      // (requests × 1024 buckets > 2^20 rows) the pruned pass picks
+      // distributed, and must agree exactly as well
+      val many = (1 to 129).map(_ / 129.0)
+      val qm = MdioStats.quantilesByBox(spark, dir, "v", many, Seq(8L))
+      assert(!qm.fallback, s"[$label] quantilesByBox over 8 groups fell back")
+      assert(qRows(qm) == wantQuantiles(8, many), s"[$label] distributed-pick quantilesByBox mismatch")
 
       // countInRangeByBox on the same slabs
       val box = MdioStats.countInRangeByBox(spark, dir, "v", 1.0, 4.0, Seq(16L))

@@ -11,7 +11,7 @@ SF="${1:-/root/testdata/sf0.01}"
 OUT=$(mktemp -d /tmp/preflight.XXXXXX)
 fail=0
 
-echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage, one metadata-aggregate answer, one still-image path =="
+echo "== 1/6 one session builder, one owner partitioner, one write route, one scan partition, one QC triage, one rank pass, one metadata-aggregate answer, one still-image path =="
 # every engine session comes from graft.GraftSession.builder(cpus)
 stray=$(grep -rl "SparkSession.builder" src | grep -vx "src/main/scala/graft/GraftSession.scala")
 if [ -n "$stray" ]; then
@@ -56,7 +56,7 @@ fi
 
 # the direct QC operators triage one item walk: sidecar shard files open
 # in walkShards and in RankItems' refinement only, and the single-rank
-# selection stays folded into the rank vector (selectByRankMulti)
+# selection stays folded into the one rank pass (kthSmallest is one rank)
 qc=src/main/scala/graft/operators/MdioStats.scala
 reads=$(grep -o "MdioChunkStats\.readShard(" "$qc" | wc -l)
 single=$(grep -n "def selectByRank(" "$qc")
@@ -66,6 +66,22 @@ if [ "$reads" -gt 2 ] || [ -n "$single" ]; then
   fail=1
 else
   echo "one QC triage ($reads MdioChunkStats.readShard( calls in MdioStats.scala, no selectByRank)"
+fi
+
+# every rank operator runs through one pass, MdioStats.rankPass (the
+# ungrouped operators and the ungrouped pushed percentile are its one
+# group): no second rank vector or literal-array rank request beside it,
+# and the pushdown ranks through boxRanks only
+twopass=$(grep -nE "def rankVector\(|RankReq" "$qc")
+ds=src/main/scala/graft/sources/MdioDataSource.scala
+ungrouped=$(grep -n "valuesAtRanks(" "$ds")
+if [ -n "$twopass$ungrouped" ]; then
+  echo "RANK PASS LINT RED: a second rank pass:"
+  [ -n "$twopass" ] && echo "$twopass"
+  [ -n "$ungrouped" ] && echo "$ds: $ungrouped"
+  fail=1
+else
+  echo "one rank pass (no rankVector or RankReq in MdioStats.scala, no valuesAtRanks( in MdioDataSource.scala)"
 fi
 
 # a pushed aggregate has one metadata answer, MdioAggScan.slabRows (an
